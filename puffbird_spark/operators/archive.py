@@ -10,21 +10,19 @@ smuggle), entry payloads are decompressed (stored or deflate — the
 only two methods that matter in practice) and VERIFIED against the
 recorded CRC32 and uncompressed size.
 
-Scale shape: ``zip_stats`` is the qoi_stats Arrow ``mapInPandas``
-shape — row-local, zero shuffle, embarrassingly parallel over
-archives. Reference: PKWARE APPNOTE.TXT 4.3 (public spec).
+Every ``*_stats`` stage here is a row function run through
+``multimodal.map_blobs`` — the media stage shape and its skip contract.
+Reference: PKWARE APPNOTE.TXT 4.3 (public spec).
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from .multimodal import DECODE_ERRORS
+from .multimodal import map_blobs
 
 __all__ = [
     "list_zip_entries", "encode_zip", "zip_stats",
@@ -164,44 +162,21 @@ def zip_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-ENTRY statistics over ZIP blobs (the ``ico_stats``
-    container shape): Arrow ``mapInPandas``, zero shuffle;
-    undecodable ARCHIVES skip whole (an archive whose directory or
-    CRCs lie cannot be trusted — the DECODE_ERRORS contract).
-    ``byte_sum`` hash-checks the EOCD scan-back, directory walk,
-    local cross-validation, and both decompression methods."""
+    container shape); undecodable ARCHIVES skip whole (an archive
+    whose directory or CRCs lie cannot be trusted). ``byte_sum``
+    hash-checks the EOCD scan-back, directory walk, local
+    cross-validation, and both decompression methods."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        ents = list_zip_entries(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    for idx, (name, method, csize, payload) in \
-                            enumerate(ents):
-                        rows.append({
-                            "path": path, "entry_idx": idx,
-                            "name": name, "method": method,
-                            "comp_size": csize,
-                            "uncomp_size": len(payload),
-                            "byte_sum": sum(payload),
-                        })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "entry_idx", "name", "method",
-                    "comp_size", "uncomp_size", "byte_sum"])
+    def rows(blob: bytes):
+        return [
+            (idx, name, method, csize, len(payload), sum(payload))
+            for idx, (name, method, csize, payload)
+            in enumerate(list_zip_entries(blob))
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, ZIP_STATS_SCHEMA)
+    return map_blobs(df, rows, ZIP_STATS_SCHEMA, content_col, path_col)
 
 
 def list_tar_entries(blob: bytes) -> list[tuple[str, int, int, bytes]]:
@@ -315,44 +290,23 @@ def targz_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-entry statistics over .tar.gz blobs — COMPOSES the gzip
     member walk (CRC-verified inflate) with the ustar walk
     (checksum-verified headers), the genuine two-layer ingest every
-    dataset tarball needs; same Arrow container shape and
-    DECODE_ERRORS whole-file skip as ``zip_stats``."""
+    dataset tarball needs; same container shape and whole-file skip
+    as ``zip_stats``."""
     from .warc import split_gzip_members
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        stream = b"".join(
-                            split_gzip_members(bytes(blob)))
-                        ents = list_tar_entries(stream)
-                    except DECODE_ERRORS:
-                        continue
-                    for idx, (name, tf, size, payload) in \
-                            enumerate(ents):
-                        rows.append({
-                            "path": path, "entry_idx": idx,
-                            "name": name, "typeflag": tf,
-                            "size": size, "byte_sum": sum(payload),
-                        })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "entry_idx", "name", "typeflag", "size",
-                    "byte_sum"])
+    def rows(blob: bytes):
+        stream = b"".join(split_gzip_members(blob))
+        return [
+            (idx, name, tf, size, sum(payload))
+            for idx, (name, tf, size, payload)
+            in enumerate(list_tar_entries(stream))
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, TAR_STATS_SCHEMA)
+    return map_blobs(df, rows, TAR_STATS_SCHEMA, content_col, path_col)
 
 
 #: CRC-32C (Castagnoli, reflected poly 0x82F63B78) lookup table —
@@ -445,39 +399,20 @@ def tfrecord_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-record statistics over TFRecord streams: both masked
     CRC-32C checksums verified per record, one row per record in
     stream order; undecodable STREAMS skip whole (a framing break
-    poisons everything after it — the DECODE_ERRORS contract). Same
-    Arrow container shape as ``zip_stats``."""
+    poisons everything after it). Same container shape as
+    ``zip_stats``."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        recs = list_tfrecords(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    for idx, payload in enumerate(recs):
-                        rows.append({
-                            "path": path, "rec_idx": idx,
-                            "length": len(payload),
-                            "byte_sum": sum(payload),
-                        })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "rec_idx", "length", "byte_sum"])
+    def rows(blob: bytes):
+        return [
+            (idx, len(payload), sum(payload))
+            for idx, payload in enumerate(list_tfrecords(blob))
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, TFRECORD_STATS_SCHEMA)
+    return map_blobs(df, rows, TFRECORD_STATS_SCHEMA, content_col, path_col)
 
 
 def parse_proto_fields(blob: bytes) -> list[tuple[int, int, int, bytes]]:
@@ -584,49 +519,25 @@ def proto_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-message structural statistics over protobuf wire-format
     blobs: one row per message summarizing the field walk —
     ``varint_sum`` hash-checks multi-byte continuation decoding,
-    ``len_bytes_sum`` the length-delimited framing. Same Arrow
-    shape and DECODE_ERRORS skip as the other record walkers."""
+    ``len_bytes_sum`` the length-delimited framing."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        fields = parse_proto_fields(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    rows.append({
-                        "path": path, "n_fields": len(fields),
-                        "max_field_no": max(
-                            (f for f, _, _, _ in fields), default=0),
-                        "n_varint": sum(
-                            1 for _, w, _, _ in fields if w == 0),
-                        "n_len": sum(
-                            1 for _, w, _, _ in fields if w == 2),
-                        "n_fixed": sum(
-                            1 for _, w, _, _ in fields if w in (1, 5)),
-                        "varint_sum": sum(
-                            v for _, w, v, _ in fields if w == 0),
-                        "len_bytes_sum": sum(
-                            sum(p) for _, w, _, p in fields if w == 2),
-                    })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "n_fields", "max_field_no", "n_varint",
-                    "n_len", "n_fixed", "varint_sum", "len_bytes_sum"])
+    def rows(blob: bytes):
+        fields = parse_proto_fields(blob)
+        return [(
+            len(fields),
+            max((f for f, _, _, _ in fields), default=0),
+            sum(1 for _, w, _, _ in fields if w == 0),
+            sum(1 for _, w, _, _ in fields if w == 2),
+            sum(1 for _, w, _, _ in fields if w in (1, 5)),
+            sum(v for _, w, v, _ in fields if w == 0),
+            sum(sum(p) for _, w, _, p in fields if w == 2),
+        )]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, PROTO_STATS_SCHEMA)
+    return map_blobs(df, rows, PROTO_STATS_SCHEMA, content_col, path_col)
 
 
 def _avro_zigzag(b: bytes, at: int) -> tuple[int, int]:
@@ -757,43 +668,22 @@ def avro_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-BLOCK statistics over Avro OCF blobs: the container walk
     (metadata map, codec dispatch, per-block sync verification) with
-    one row per data block; undecodable files skip whole (the
-    DECODE_ERRORS contract). ``byte_sum`` hash-checks zigzag counts,
-    framing, and the deflate path together."""
+    one row per data block; undecodable files skip whole.
+    ``byte_sum`` hash-checks zigzag counts, framing, and the deflate
+    path together."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        meta, blocks = list_avro_blocks(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    codec = meta.get("avro.codec", b"null").decode(
-                        "ascii", "replace")
-                    for idx, (n_rec, payload) in enumerate(blocks):
-                        rows.append({
-                            "path": path, "block_idx": idx,
-                            "codec": codec, "n_records": n_rec,
-                            "payload_len": len(payload),
-                            "byte_sum": sum(payload),
-                        })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "block_idx", "codec", "n_records",
-                    "payload_len", "byte_sum"])
+    def rows(blob: bytes):
+        meta, blocks = list_avro_blocks(blob)
+        codec = meta.get("avro.codec", b"null").decode("ascii", "replace")
+        return [
+            (idx, codec, n_rec, len(payload), sum(payload))
+            for idx, (n_rec, payload) in enumerate(blocks)
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, AVRO_STATS_SCHEMA)
+    return map_blobs(df, rows, AVRO_STATS_SCHEMA, content_col, path_col)
 
 
 def parse_msgpack(blob: bytes, max_depth: int = 32):
@@ -1003,35 +893,13 @@ def msgpack_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-blob structural census over MessagePack objects — the
-    :func:`proto_stats` shape: Arrow ``mapInPandas``, zero shuffle,
-    corrupt blobs skipped via the shared DECODE_ERRORS contract."""
+    :func:`proto_stats` shape."""
+    cols = [c.split()[0] for c in MSGPACK_STATS_SCHEMA.split(", ")][1:]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "path", "n_items", "n_ints", "int_sum", "n_strs",
-            "str_bytes_sum", "n_bins", "bin_bytes_sum", "n_floats",
-            "n_bools", "n_nils", "n_exts", "n_arrays", "n_maps",
-            "depth"]
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        st = parse_msgpack(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    st = dict(st)
-                    st["path"] = path
-                    rows.append(st)
-                yield pd.DataFrame(rows, columns=cols)
+    def rows(blob: bytes):
+        st = parse_msgpack(blob)
+        return [tuple(st[c] for c in cols)]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, MSGPACK_STATS_SCHEMA)
+    return map_blobs(df, rows, MSGPACK_STATS_SCHEMA, content_col, path_col)

@@ -367,86 +367,8 @@ def minhash_candidate_pairs(
     """
     if threshold is not None:
         bands, _ = lsh_banding_config(threshold, num_hashes)
-    if bands <= 0 or num_hashes % bands:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes})")
-    rows_per_band = num_hashes // bands
-    # staged selects: shingles -> their hashes -> mod-reduced hashes ->
-    # signature. Each stage's result is a bound column, so nothing
-    # expensive is re-inlined per permutation (measured 40x slower when the
-    # shingle construction collapsed into the per-hash transforms; string
-    # shingles + one xxhash64 each beats hashing token slots directly).
-    # The empty-shingle filter runs BEFORE the signature so the pushed-down
-    # predicate never re-evaluates the expensive expression, and the final
-    # signature is packed behind a one-element explode — a Generate is an
-    # optimizer fence, so the banding projections downstream reference the
-    # sig ATTRIBUTE instead of re-inlining 32 transforms into each band.
-    # Empty-shingle filter as the CHEAP precondition (>= n tokens is one
-    # split at the scan) rather than size(hs) > 0 after the projections:
-    # the pushed-down deterministic predicate re-evaluated the ENTIRE
-    # shingle+sort+distinct+hash expression in a Filter below the Project
-    # (the guide §4.4 duplication hazard, Column form — seen as a second
-    # full shingle tree in the r14 before-plan). Row set is identical:
-    # shingles are non-empty exactly when the doc has >= n tokens.
-    sh = widen_parallelism(df).filter(
-        F.size(tokens(text_col)) >= n
-    ).select(
-        F.col(id_col).alias("id"),
-        shingles(tokens(text_col), n=n).alias("sh"),
-    )
-    hashed = sh.select("id", shingle_hashes(F.col("sh"), hasher).alias("hs"))
-    # signature: batch-size-gated kernel (same trade as the cosine scorer,
-    # similarity.py). Big corpora take the vectorized Arrow/numpy kernel —
-    # HOF expressions are interpreted, outside codegen; the numpy batch
-    # multiply-mod is ~10x warm on this stage. Small corpora take the
-    # native Column formulation: it skips the ~0.5s/worker Python spin-up
-    # the first Arrow stage of a session pays (10-20s at local[32] —
-    # measured as the r2->r3 cold regression on this very pipeline). Both
-    # are element-for-element equal (tested), so the md5 variant REMAINS
-    # oracle-checkable end-to-end either way. Fencing: the ArrowEvalPython
-    # node is its own optimizer fence; the Column path needs plans.fence()
-    # or each of the `bands` band projections would re-inline the whole
-    # 32-permutation signature expression.
-    if use_arrow is None:
-        from .similarity import _est_rows
-
-        # ~320 B/doc on disk for the synthetic corpus; threshold ~20k docs
-        # is where interpreted signature work outgrows worker spin-up
-        use_arrow = _est_rows(df, 320) >= 20_000
-    from ..telemetry import record_kernel
-
-    record_kernel("minhash_signature", "arrow" if use_arrow else "column")
-    filtered = hashed  # scan-side token-count filter above
-    if use_arrow:
-        sig = filtered.select(
-            "id", _signature_arrow_udf(num_hashes)(F.col("hs")).alias("sig")
-        )
-    else:
-        from ..plans import fence
-
-        sig = fence(
-            filtered, ["id"],
-            sig=minhash_signature(F.col("hs"), num_hashes, pre_hashed=True),
-        ).select("id", "sig")
-
-    def band_hash(b: int) -> Column:
-        joined = F.array_join(
-            F.transform(
-                F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        )
-        if hasher == "md5":
-            return F.md5(joined.cast("binary"))
-        return F.xxhash64(joined).cast("string")
-
-    banded = sig.select(
-        "id", "sig",
-        F.posexplode(
-            F.array(*[band_hash(b) for b in range(bands)])
-        ).alias("band", "band_hash"),
-    )
+    banded = minhash_banded(
+        df, text_col, id_col, num_hashes, bands, n, hasher, use_arrow)
     # pair WITHIN buckets instead of a banded self-join: one groupBy shuffle,
     # no double computation of the shingle/signature pipeline, and the
     # quadratic work is bounded per bucket (a bucket is a duplicate cluster)
@@ -856,20 +778,32 @@ def minhash_banded(
     """The reusable first half of the LSH pipeline: per-doc MinHash
     signature exploded into ``bands`` rows of
     ``(id, sig, band, band_hash)`` — the exact representation the
-    banding bucket join keys on, and the STATE an incremental fuzzy
-    dedup persists between batches. Same staged plan as
-    :func:`minhash_candidate_pairs` (bound columns per stage, Generate
-    fence before banding, size-gated signature kernel); docs with no
-    shingles (< n tokens) produce no rows."""
+    banding bucket join of :func:`minhash_candidate_pairs` keys on, and
+    the STATE an incremental fuzzy dedup persists between batches; docs
+    with no shingles (< n tokens) produce no rows."""
     if bands <= 0 or num_hashes % bands:
         # silently dropping the trailing num_hashes % bands signature
         # entries would weaken candidate recall with no warning
         raise ValueError(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes})")
     rows_per_band = num_hashes // bands
-    # cheap >= n tokens precondition, not size(hs) > 0 — see
-    # minhash_candidate_pairs: the pushed-down predicate otherwise
-    # re-evaluates the whole shingle+hash tree below the projection
+    # staged selects: shingles -> their hashes -> mod-reduced hashes ->
+    # signature. Each stage's result is a bound column, so nothing
+    # expensive is re-inlined per permutation (measured 40x slower when the
+    # shingle construction collapsed into the per-hash transforms; string
+    # shingles + one xxhash64 each beats hashing token slots directly).
+    # The empty-shingle filter runs BEFORE the signature so the pushed-down
+    # predicate never re-evaluates the expensive expression, and the final
+    # signature is packed behind a one-element explode — a Generate is an
+    # optimizer fence, so the banding projections downstream reference the
+    # sig ATTRIBUTE instead of re-inlining 32 transforms into each band.
+    # Empty-shingle filter as the CHEAP precondition (>= n tokens is one
+    # split at the scan) rather than size(hs) > 0 after the projections:
+    # the pushed-down deterministic predicate re-evaluated the ENTIRE
+    # shingle+sort+distinct+hash expression in a Filter below the Project
+    # (the guide §4.4 duplication hazard, Column form — seen as a second
+    # full shingle tree in the r14 before-plan). Row set is identical:
+    # shingles are non-empty exactly when the doc has >= n tokens.
     sh = widen_parallelism(df).filter(
         F.size(tokens(text_col)) >= n
     ).select(
@@ -877,23 +811,36 @@ def minhash_banded(
         shingles(tokens(text_col), n=n).alias("sh"),
     )
     hashed = sh.select("id", shingle_hashes(F.col("sh"), hasher).alias("hs"))
+    # signature: batch-size-gated kernel (same trade as the cosine scorer,
+    # similarity.py). Big corpora take the vectorized Arrow/numpy kernel —
+    # HOF expressions are interpreted, outside codegen; the numpy batch
+    # multiply-mod is ~10x warm on this stage. Small corpora take the
+    # native Column formulation: it skips the ~0.5s/worker Python spin-up
+    # the first Arrow stage of a session pays (10-20s at local[32] —
+    # measured as the r2->r3 cold regression on this very pipeline). Both
+    # are element-for-element equal (tested), so the md5 variant REMAINS
+    # oracle-checkable end-to-end either way. Fencing: the ArrowEvalPython
+    # node is its own optimizer fence; the Column path needs plans.fence()
+    # or each of the `bands` band projections would re-inline the whole
+    # 32-permutation signature expression.
     if use_arrow is None:
         from .similarity import _est_rows
 
+        # ~320 B/doc on disk for the synthetic corpus; threshold ~20k docs
+        # is where interpreted signature work outgrows worker spin-up
         use_arrow = _est_rows(df, 320) >= 20_000
     from ..telemetry import record_kernel
 
     record_kernel("minhash_signature", "arrow" if use_arrow else "column")
-    filtered = hashed  # scan-side token-count filter above
     if use_arrow:
-        sig = filtered.select(
+        sig = hashed.select(
             "id", _signature_arrow_udf(num_hashes)(F.col("hs")).alias("sig")
         )
     else:
         from ..plans import fence
 
         sig = fence(
-            filtered, ["id"],
+            hashed, ["id"],
             sig=minhash_signature(F.col("hs"), num_hashes, pre_hashed=True),
         ).select("id", "sig")
 

@@ -147,125 +147,11 @@ def connected_components(
     return labels.select(F.col("v").alias("vertex"), F.col("comp").alias("component"))
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm; no equivalent in the reference, which has no graph surface).
-
-    Per round, every vertex u with neighborhood Γ(u) and
-    ``m = min(Γ(u) ∪ {u})``:
-
-    - large-star: re-attach every STRICTLY LARGER neighbor to m —
-      edges {(v, m) : v ∈ Γ(u), v > u};
-    - small-star: re-attach every smaller-or-equal neighbor and u itself
-      to m — edges {(v, m) : v ∈ Γ(u), v ≤ u} ∪ {(u, m)}.
-
-    Both operations preserve connectivity and never increase the edge
-    count; at fixpoint the edge set is a star forest (v, component-min).
-    The draw over min-label propagation: the EDGE LIST ITSELF CONTRACTS
-    each round — a k-clique collapses toward k-1 star edges after one
-    alternation — so later rounds join shrinking inputs, where min-label
-    re-joins the full original edge list every round. On the near-clique
-    graphs dedup actually produces that is the dominant cost term.
-    Fixpoint test is edge-set stability (one anti-join on the contracted
-    list per round). Differentially tested bit-equal to
-    :func:`connected_components` (tests/test_operators.py)."""
-    edges = pairs.select(
-        F.least(F.col(src), F.col(dst)).alias("a"),
-        F.greatest(F.col(src), F.col(dst)).alias("b"),
-    ).filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=True)
-    vertices = (
-        edges.select(F.explode(F.array("a", "b")).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def star_pass(e: DataFrame, large: bool) -> DataFrame:
-        adj = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("u"), F.col("b").alias("w")),
-                    F.struct(F.col("b").alias("u"), F.col("a").alias("w")),
-                )
-            ).alias("__e")
-        ).select("__e.u", "__e.w")
-        mins = adj.groupBy("u").agg(F.min("w").alias("__mn")).select(
-            "u", F.least(F.col("__mn"), F.col("u")).alias("m"))
-        j = adj.join(mins, "u")
-        if large:
-            out = j.filter(F.col("w") > F.col("u")).select(
-                F.col("w").alias("x"), F.col("m").alias("y"))
-        else:
-            out = j.filter(F.col("w") <= F.col("u")).select(
-                F.col("w").alias("x"), F.col("m").alias("y")
-            ).unionByName(
-                mins.select(F.col("u").alias("x"), F.col("m").alias("y"))
-            )
-        return (
-            out.filter(F.col("x") != F.col("y"))
-            .select(
-                F.least(F.col("x"), F.col("y")).alias("a"),
-                F.greatest(F.col("x"), F.col("y")).alias("b"),
-            )
-            .distinct()
-        )
-
-    if stats is not None:
-        stats["edges"] = edges.count()
-        stats["rounds"] = 0
-        stats["edges_per_round"] = []
-    converged = False
-    for _ in range(max_iter):
-        new_edges = star_pass(star_pass(edges, large=True), large=False)
-        new_edges = new_edges.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["rounds"] += 1
-            stats["edges_per_round"].append(new_edges.count())
-        grew = new_edges.join(
-            edges, ["a", "b"], "left_anti").limit(1).count()
-        shrank = edges.join(
-            new_edges, ["a", "b"], "left_anti").limit(1).count()
-        edges = new_edges
-        if grew == 0 and shrank == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components_star: no fixpoint after max_iter="
-            f"{max_iter} rounds — labels may split one component into "
-            "several; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # star forest: every edge is (component-min a, member b); vertices
-    # absent from the b side are component minima labeling themselves.
-    # The groupBy-min keeps the output one-row-per-vertex even when the
-    # budget was exhausted mid-contraction (a non-fixpoint edge set can
-    # hold two (smaller, b) edges for one b — without the fold the
-    # vertex would surface twice with conflicting labels).
-    member = (
-        edges.select(F.col("b").alias("vertex"), F.col("a").alias("component"))
-        .groupBy("vertex")
-        .agg(F.min("component").alias("component"))
-    )
-    roots = vertices.join(
-        edges.select(F.col("b").alias("v")), "v", "left_anti"
-    ).select(F.col("v").alias("vertex"), F.col("v").alias("component"))
-    return member.unionByName(roots)
-
-
 def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Candidate pairs → (doc_id, cluster_id, is_canonical): the keep/drop
     decision of a fuzzy-dedup pipeline. ``cluster_id`` is the minimum
@@ -273,21 +159,9 @@ def dedup_clusters(
 
     LSH candidate pairs are unique with id_a < id_b by construction
     (``minhash_candidate_pairs`` ends in dropDuplicates), so the CC edge
-    list skips its dedup shuffle.
-
-    ``algorithm``: ``minlabel`` (default — fewest Spark jobs per round,
-    wins on the shallow near-clique graphs dedup produces at gate SF) or
-    ``star`` (edge-contracting alternation — the round-count/edge-volume
-    numbers for both are in NOTES.md round 5; star's contraction pays off
-    as cluster sizes and diameters grow). Both produce identical output
-    under differential test."""
-    if algorithm == "star":
-        comp = connected_components_star(pairs, id_a, id_b, max_iter)
-    elif algorithm == "minlabel":
-        comp = connected_components(pairs, id_a, id_b, max_iter,
-                                    assume_distinct=True)
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
+    list skips its dedup shuffle."""
+    comp = connected_components(pairs, id_a, id_b, max_iter,
+                                assume_distinct=True)
     return comp.select(
         F.col("vertex").alias("doc_id"),
         F.col("component").alias("cluster_id"),

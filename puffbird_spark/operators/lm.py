@@ -27,8 +27,7 @@ and partitioning/order independent (the ``embedding_centroids`` policy);
 the final average is rounded to 6 dp.
 
 At 100 TB: the bigram table is vocabulary-bounded, not corpus-bounded —
-for real text it plateaus around |V|·k rows and can be broadcast when it
-fits (pass ``broadcast_counts=True``); otherwise the scoring joins are
+for real text it plateaus around |V|·k rows, and the scoring joins are
 plain co-keyed shuffle joins that AQE handles. No collect anywhere; the
 vocabulary scalar rides a broadcast cross-join.
 """
@@ -101,7 +100,6 @@ def perplexity_score(
     text_col: str,
     id_col: str,
     alpha: float = 0.5,
-    broadcast_counts: bool = False,
     drop_empty: bool = False,
 ) -> DataFrame:
     """Score every document of ``docs`` (with >= 2 tokens) under the
@@ -111,8 +109,6 @@ def perplexity_score(
     ``exp(avg_neg_logp)`` — monotone, so filters threshold this score
     directly)."""
     bi, ctx, voc = bigram_counts(train, text_col, drop_empty=drop_empty)
-    if broadcast_counts:
-        bi, ctx = F.broadcast(bi), F.broadcast(ctx)
     bg = _bigrams(docs, text_col, [F.col(id_col)], drop_empty=drop_empty)
     lp = F.round(
         F.log(
@@ -144,7 +140,6 @@ def kneser_ney_score(
     id_col: str,
     discount: float = 0.75,
     alpha: float = 0.5,
-    broadcast_counts: bool = False,
     drop_empty: bool = False,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram scoring (Kneser & Ney 1995; the
@@ -167,8 +162,8 @@ def kneser_ney_score(
     Scale shape identical to the add-alpha path plus two more
     vocabulary-bounded tables (per-context distinct-continuation
     counts, per-word distinct-context counts) — all derive from the
-    ONE materialized bigram table, all broadcastable via
-    ``broadcast_counts``; scalars ride one-row broadcast cross joins.
+    ONE materialized bigram table; scalars ride one-row broadcast cross
+    joins.
     """
     if not (0.0 < discount < 1.0):
         raise ValueError("discount must be in (0, 1)")
@@ -178,8 +173,6 @@ def kneser_ney_score(
     t1p = bi.groupBy("p").agg(F.count(F.lit(1)).alias("t1p"))
     cw = bi.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
     tot = bi.agg(F.count(F.lit(1)).alias("n1p"))
-    if broadcast_counts:
-        bi, ctx, t1p, cw = (F.broadcast(x) for x in (bi, ctx, t1p, cw))
     bg = _bigrams(docs, text_col, [F.col(id_col)], drop_empty=drop_empty)
     pcont = (
         (F.coalesce(F.col("cw"), F.lit(0)) + F.lit(alpha))

@@ -26,13 +26,25 @@ featurizer for undecodable formats is the deterministic byte
 histogram. Swapping in PIL/ffmpeg touches only
 :func:`decode_image_gray`/:func:`_byte_histogram` — the Spark plumbing
 never changes.
+
+Stage shape. Every per-blob stage here, in ``archive.py`` and in
+``warc.py``, runs through :func:`map_blobs`: one ``mapInPandas`` over
+``(path, content)``, each Arrow batch cut into frames of
+``BLOB_CHUNK_ROWS`` rows (one batch of large blobs cannot blow worker
+memory), rows out may outnumber rows in (a frame or window table), and
+nothing shuffles — decode is embarrassingly parallel over files. The
+skip contract: a NULL blob emits no row, and a blob whose decode OR
+post-decode arithmetic raises one of ``DECODE_ERRORS``, or that yields an
+integer too wide for its column, is dropped whole (none of its rows are
+emitted); count skips with a left anti join on ``path``. Each stage is then only its row function: decode one blob,
+return its output rows.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -67,8 +79,8 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 #: zlib.error from a cut IDAT inflate, struct.error from a short header
 #: unpack, IndexError from a cut AVI chunk walk, KeyError from a
 #: poisoned LZW/huffman table, plus the deliberate NotImplementedError /
-#: ValueError contract raises). Corpus-facing kernels catch this tuple
-#: per blob and SKIP the row — a curation pass over scraped bytes must
+#: ValueError contract raises). :func:`map_blobs` catches this tuple
+#: per blob and SKIPS the blob — a curation pass over scraped bytes must
 #: not die on one bad file (the narrow (NotImplementedError, ValueError)
 #: nets let zlib/struct/Index errors kill the whole job). The decoder
 #: FUNCTIONS themselves still raise — callers that want loud failure
@@ -77,6 +89,69 @@ DECODE_ERRORS = (
     NotImplementedError, ValueError, struct.error, zlib.error,
     IndexError, KeyError, EOFError, OverflowError, ZeroDivisionError,
 )
+
+#: rows per pandas frame a media stage decodes and emits at a time
+BLOB_CHUNK_ROWS = 64
+
+#: pandas dtype per Spark column type; nullable ints/booleans keep a
+#: NULL field NULL, and anything unlisted (strings, arrays) is object —
+#: an empty chunk then still Arrow-converts to list<...>
+_PANDAS_DTYPES = {
+    T.ByteType: "Int8", T.ShortType: "Int16", T.IntegerType: "Int32",
+    T.LongType: "Int64", T.BooleanType: "boolean",
+    T.FloatType: "float32", T.DoubleType: "float64",
+}
+
+#: value bound of each integer column type, |v| < 2**(bits - 1)
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
+             T.LongType: 64}
+
+
+def map_blobs(
+    df: DataFrame,
+    row_fn: Callable[[bytes], Iterable[tuple]],
+    schema: str,
+    content_col: str = "content",
+    path_col: str = "path",
+) -> DataFrame:
+    """The media stage shape (module docstring): ``row_fn(blob)``
+    returns one blob's output rows, each a tuple of the columns after
+    ``path`` in the DDL ``schema``; this prepends the blob's path, skips
+    NULL blobs, and drops a blob whole when ``row_fn`` raises one of
+    ``DECODE_ERRORS`` or returns an integer its column type cannot hold
+    (a garbage header field, e.g. a 3e9-pixel width)."""
+    fields = T.DataType.fromDDL(schema).fields
+    dtypes = [_PANDAS_DTYPES.get(type(f.dataType), object) for f in fields]
+    bounds = [(i, 1 << (_INT_BITS[type(f.dataType)] - 1))
+              for i, f in enumerate(fields)
+              if type(f.dataType) in _INT_BITS]
+
+    def fits(row: tuple) -> bool:
+        return all(row[i] is None or -lim <= row[i] < lim
+                   for i, lim in bounds)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for start in range(0, len(pdf), BLOB_CHUNK_ROWS):
+                chunk = pdf.iloc[start:start + BLOB_CHUNK_ROWS]
+                rows = []
+                for path, blob in zip(
+                    chunk[path_col].astype(str), chunk[content_col]
+                ):
+                    if blob is None:
+                        continue
+                    try:
+                        out = [(path, *r) for r in row_fn(bytes(blob))]
+                    except DECODE_ERRORS:
+                        continue
+                    if all(map(fits, out)):
+                        rows += out
+                yield pd.DataFrame({
+                    f.name: pd.Series([r[i] for r in rows], dtype=dt)
+                    for i, (f, dt) in enumerate(zip(fields, dtypes))
+                })
+
+    return df.select(path_col, content_col).mapInPandas(kernel, schema)
 
 
 # ------------------------------------------------------------------ #
@@ -207,20 +282,18 @@ def decode_features(
     content_col: str = "content",
     path_col: str = "path",
     dim: int = 8,
-    batch_size: int = 64,
 ) -> DataFrame:
-    """mapInPandas decode stage: Arrow-batched, one Python worker per
-    partition, bounded batch size so a partition of large blobs doesn't
-    blow worker memory. Emits REAL header-decoded (format, width, height)
-    via :func:`parse_image_header` plus digest and a histogram feature.
-    This is the real 100 TB shape: decode is embarrassingly parallel and
-    never shuffles."""
+    """Header decode stage: REAL (format, width, height) via
+    :func:`parse_image_header` plus digest and a histogram feature. The
+    one stage outside :func:`map_blobs`: it emits a row for every input
+    row, a NULL blob included, so its kernel stays column-vectorised
+    (same ``BLOB_CHUNK_ROWS`` chunks, no shuffle)."""
     import hashlib
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
+            for start in range(0, len(pdf), BLOB_CHUNK_ROWS):
+                chunk = pdf.iloc[start:start + BLOB_CHUNK_ROWS]
                 headers = chunk[content_col].map(parse_image_header)
                 yield pd.DataFrame({
                     "path": chunk[path_col].astype(str),
@@ -254,7 +327,6 @@ def sample_frames(
     frame_bytes: int = 64,
     stride: int = 2,
     max_frames: int = 4,
-    batch_size: int = 64,
     codec: str = "auto",
 ) -> DataFrame:
     """Frame sampling over video-standing binary columns — the
@@ -287,79 +359,39 @@ def sample_frames(
       forces this path.
 
     Sampling is every ``stride``-th frame up to ``max_frames`` on both
-    paths. Everything around the codec is the real 100 TB shape: Arrow-
-    batched ``mapInPandas`` with bounded batches (one oversized blob
-    cannot blow worker memory), a fan-out schema (rows out > rows in —
-    the frame table), no shuffle anywhere, and per-frame digests ready
-    for the exact-dedup operator downstream. A further real codec
-    (e.g. MJPEG) slots into the same dispatch, exactly like
-    :func:`decode_image_gray` on the image side.
+    paths; per-frame digests are ready for the exact-dedup operator
+    downstream. A further real codec slots into the same dispatch,
+    exactly like :func:`decode_image_gray` on the image side.
     """
     import hashlib
 
     if codec not in ("auto", "bytes"):
         raise ValueError(f"codec must be auto|bytes, got {codec!r}")
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {
-                    "path": [], "frame_idx": [], "offset": [],
-                    "frame_bytes": [], "digest": [],
-                }
+    def rows(blob: bytes):
+        if codec == "auto" and (
+            blob[:6] in (b"GIF87a", b"GIF89a")
+            or blob[:9] == b"YUV4MPEG2"
+            or (blob[:4] == b"RIFF" and blob[8:12] == b"AVI ")
+        ):
+            decoded = _video_frames(blob)
+            for n in range(max_frames):
+                idx = n * stride
+                if idx >= len(decoded):
+                    break
+                off, _w, _h, px = decoded[idx]
+                csv = ",".join(str(v) for v in px)
+                yield idx, off, len(px), hashlib.md5(csv.encode()).hexdigest()
+            return
+        for n in range(max_frames):
+            idx = n * stride
+            off = idx * frame_bytes
+            if off >= len(blob):
+                break
+            frame = blob[off:off + frame_bytes]
+            yield idx, off, len(frame), hashlib.md5(frame).hexdigest()
 
-                def emit(path, idx, off, size, digest):
-                    out["path"].append(path)
-                    out["frame_idx"].append(idx)
-                    out["offset"].append(off)
-                    out["frame_bytes"].append(size)
-                    out["digest"].append(digest)
-
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    blob = bytes(blob)
-                    if codec == "auto" and (
-                        blob[:6] in (b"GIF87a", b"GIF89a")
-                        or blob[:9] == b"YUV4MPEG2"
-                        or (blob[:4] == b"RIFF" and blob[8:12] == b"AVI ")
-                    ):
-                        try:
-                            if blob[:1] == b"G":
-                                decoded = decode_gif_frames(blob)
-                            elif blob[:1] == b"Y":
-                                decoded = decode_y4m_frames(blob)
-                            else:
-                                decoded = decode_avi_frames(blob)
-                        except DECODE_ERRORS:
-                            continue
-                        for n in range(max_frames):
-                            idx = n * stride
-                            if idx >= len(decoded):
-                                break
-                            off, w, h, px = decoded[idx]
-                            csv = ",".join(str(v) for v in px)
-                            emit(path, idx, off, len(px),
-                                 hashlib.md5(csv.encode()).hexdigest())
-                        continue
-                    for n in range(max_frames):
-                        idx = n * stride
-                        off = idx * frame_bytes
-                        if off >= len(blob):
-                            break
-                        frame = blob[off:off + frame_bytes]
-                        emit(path, idx, off, len(frame),
-                             hashlib.md5(frame).hexdigest())
-                yield pd.DataFrame(out).astype({
-                    "frame_idx": "int32", "offset": "int64",
-                    "frame_bytes": "int32",
-                })
-
-    return df.select(path_col, content_col).mapInPandas(
-        frames, FRAME_SCHEMA)
+    return map_blobs(df, rows, FRAME_SCHEMA, content_col, path_col)
 
 
 def decode_png_gray(blob: bytes) -> tuple[int, int, bytes]:
@@ -411,13 +443,10 @@ def resize_images(
     out_h: int,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
-    """REAL image resize (nearest neighbor) in the standard media-stage
-    shape: Arrow-batched ``mapInPandas``, bounded batches, zero shuffle.
-    Decodes each blob by magic bytes — PNG via :func:`decode_png_gray`,
-    GIF via :func:`decode_gif_gray` (both full pure-stdlib pixel
-    decoders) — samples
+    """REAL image resize (nearest neighbor). Decodes each blob by magic
+    bytes through :func:`decode_image_gray` (full pure-stdlib pixel
+    decoders), samples
     ``out[y][x] = px[floor(y*h/out_h)][floor(x*w/out_w)]``, and emits
     the resized raster as an md5 over its comma-joined pixel values —
     an engine-portable digest (the oracle recomputes the same pixels
@@ -425,41 +454,16 @@ def resize_images(
     resized tensor column."""
     import hashlib
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "src_w", "src_h", "out_w", "out_h",
-                    "pix_csv_digest")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        w, h, px = decode_image_gray(bytes(blob))
-                        vals = [
-                            px[(y * h // out_h) * w + (x * w // out_w)]
-                            for y in range(out_h) for x in range(out_w)
-                        ]
-                    except DECODE_ERRORS:
-                        continue
-                    csv = ",".join(str(v) for v in vals)
-                    out["path"].append(path)
-                    out["src_w"].append(w)
-                    out["src_h"].append(h)
-                    out["out_w"].append(out_w)
-                    out["out_h"].append(out_h)
-                    out["pix_csv_digest"].append(
-                        hashlib.md5(csv.encode()).hexdigest())
-                yield pd.DataFrame(out).astype({
-                    "src_w": "int32", "src_h": "int32",
-                    "out_w": "int32", "out_h": "int32",
-                })
+    def rows(blob: bytes):
+        w, h, px = decode_image_gray(blob)
+        vals = [
+            px[(y * h // out_h) * w + (x * w // out_w)]
+            for y in range(out_h) for x in range(out_w)
+        ]
+        csv = ",".join(str(v) for v in vals)
+        return [(w, h, out_w, out_h, hashlib.md5(csv.encode()).hexdigest())]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, RESIZED_SCHEMA)
+    return map_blobs(df, rows, RESIZED_SCHEMA, content_col, path_col)
 
 
 # ------------------------------------------------------------------ #
@@ -720,8 +724,8 @@ def decode_image_gray(blob: bytes) -> tuple[int, int, bytes]:
     """Per-format grayscale pixel decode, dispatched on magic bytes:
     PNG -> :func:`decode_png_gray`, GIF -> :func:`decode_gif_gray`.
     This is the codec interface the media stages call — adding a format
-    means adding one real decoder here; the Spark plumbing (Arrow
-    mapInPandas, bounded batches, digest columns) never changes."""
+    means adding one real decoder here; the Spark plumbing
+    (:func:`map_blobs`, digest columns) never changes."""
     if blob.startswith(_PNG_SIG):
         return decode_png_gray(blob)
     if blob[:6] in (b"GIF87a", b"GIF89a"):
@@ -962,7 +966,6 @@ def audio_stats(
     path_col: str = "path",
     window: int = 64,
     dp: int = 6,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-window audio feature extraction over WAV-standing binary
     columns — the audio twin of :func:`sample_frames`: one huge blob
@@ -974,58 +977,24 @@ def audio_stats(
     (exact int over the mono fold) and ``rms = round(sqrt(sum(s^2)/n),
     dp)`` — integer sums, so the value is engine-replayable (rounding
     is the HALF_UP replay, the `vectors.cosine_rounded_arrow`
-    convention, not Python's half-even ``round``).
-
-    Same 100 TB shape as every media stage: Arrow ``mapInPandas``,
-    bounded batches, fan-out schema, zero shuffle; decode is
-    embarrassingly parallel."""
+    convention, not Python's half-even ``round``)."""
     import math as _math
 
     scale = float(10 ** dp)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "sample_rate", "n_channels", "n_frames",
-                    "duration_ms", "window_idx", "n_in_window", "peak",
-                    "rms")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        rate, n_ch, _bits, frames = decode_wav_pcm(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    mono = _mono_fold(frames)
-                    n = len(mono)
-                    dur = n * 1000 // rate
-                    for w_idx in range(0, (n + window - 1) // window):
-                        seg = mono[w_idx * window:(w_idx + 1) * window]
-                        ss = sum(v * v for v in seg)
-                        out["path"].append(path)
-                        out["sample_rate"].append(rate)
-                        out["n_channels"].append(n_ch)
-                        out["n_frames"].append(n)
-                        out["duration_ms"].append(dur)
-                        out["window_idx"].append(w_idx)
-                        out["n_in_window"].append(len(seg))
-                        out["peak"].append(max(abs(v) for v in seg))
-                        rms = _math.sqrt(ss / len(seg))
-                        out["rms"].append(
-                            _math.floor(rms * scale + 0.5) / scale)
-                yield pd.DataFrame(out).astype({
-                    "sample_rate": "int32", "n_channels": "int32",
-                    "n_frames": "int64", "duration_ms": "int64",
-                    "window_idx": "int32", "n_in_window": "int32",
-                    "peak": "int32",
-                })
+    def rows(blob: bytes):
+        rate, n_ch, _bits, frames = decode_wav_pcm(blob)
+        mono = _mono_fold(frames)
+        n = len(mono)
+        dur = n * 1000 // rate
+        for w_idx in range(0, (n + window - 1) // window):
+            seg = mono[w_idx * window:(w_idx + 1) * window]
+            rms = _math.sqrt(sum(v * v for v in seg) / len(seg))
+            yield (rate, n_ch, n, dur, w_idx, len(seg),
+                   max(abs(v) for v in seg),
+                   _math.floor(rms * scale + 0.5) / scale)
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, AUDIO_STATS_SCHEMA)
+    return map_blobs(df, rows, AUDIO_STATS_SCHEMA, content_col, path_col)
 
 
 RESAMPLED_AUDIO_SCHEMA = (
@@ -1039,7 +1008,6 @@ def resample_audio(
     dst_rate: int,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """REAL linear-interpolation resampling of WAV blobs to ``dst_rate``
     — the sample-rate normalization step before any batched audio
@@ -1055,60 +1023,28 @@ def resample_audio(
     make every weight an exact dyadic/rational double, so results
     replay bit-for-bit across engines (the audio-resample gate's
     oracle recomputes every output sample closed-form). Stereo folds
-    to mono first (:func:`_mono_fold`). Same Arrow mapInPandas shape
-    as every media stage; zero shuffle."""
+    to mono first (:func:`_mono_fold`)."""
     if dst_rate <= 0:
         raise ValueError("dst_rate must be positive")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "src_rate", "dst_rate", "n_frames", "n_out",
-                    "samples")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        src, _n_ch, _bits, frames = decode_wav_pcm(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    mono = _mono_fold(frames)
-                    n = len(mono)
-                    n_out = n * dst_rate // src
-                    vals = []
-                    for j in range(n_out):
-                        num = j * src
-                        idx = num // dst_rate
-                        rem = num % dst_rate
-                        if rem == 0 or idx + 1 >= n:
-                            vals.append(float(mono[min(idx, n - 1)]))
-                        else:
-                            vals.append(
-                                mono[idx]
-                                + (mono[idx + 1] - mono[idx])
-                                * (rem / dst_rate))
-                    out["path"].append(path)
-                    out["src_rate"].append(src)
-                    out["dst_rate"].append(dst_rate)
-                    out["n_frames"].append(n)
-                    out["n_out"].append(n_out)
-                    out["samples"].append(vals)
-                frame = pd.DataFrame(out).astype({
-                    "src_rate": "int32", "dst_rate": "int32",
-                    "n_frames": "int64", "n_out": "int64",
-                })
-                # an all-skipped batch leaves the list column as an
-                # empty float64 Series, which Arrow cannot convert to
-                # list<double> (probe batch 6) — pin object dtype
-                frame["samples"] = frame["samples"].astype("object")
-                yield frame
+    def rows(blob: bytes):
+        src, _n_ch, _bits, frames = decode_wav_pcm(blob)
+        mono = _mono_fold(frames)
+        n = len(mono)
+        n_out = n * dst_rate // src
+        vals = []
+        for j in range(n_out):
+            num = j * src
+            idx = num // dst_rate
+            rem = num % dst_rate
+            if rem == 0 or idx + 1 >= n:
+                vals.append(float(mono[min(idx, n - 1)]))
+            else:
+                vals.append(
+                    mono[idx] + (mono[idx + 1] - mono[idx]) * (rem / dst_rate))
+        return [(src, dst_rate, n, n_out, vals)]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, RESAMPLED_AUDIO_SCHEMA)
+    return map_blobs(df, rows, RESAMPLED_AUDIO_SCHEMA, content_col, path_col)
 
 
 # ------------------------------------------------------------------ #
@@ -1216,7 +1152,6 @@ def image_pixel_stats(
     content_col: str = "content",
     path_col: str = "path",
     dp: int = 6,
-    batch_size: int = 64,
 ) -> DataFrame:
     """PIXEL-LEVEL feature extraction over image blobs: full decode via
     :func:`decode_image_gray` (PNG / GIF / JPEG incl. color and
@@ -1225,56 +1160,23 @@ def image_pixel_stats(
     overexposure detection, brightness balance), where
     :func:`decode_features`'s byte histogram is the decode-free
     approximation. Integer pixel sums make the mean engine-replayable
-    (HALF_UP rounded at ``dp``). Same Arrow mapInPandas shape as every
-    media stage; undecodable blobs are skipped (emit no row), zero
-    shuffle."""
+    (HALF_UP rounded at ``dp``)."""
     import math as _math
 
     scale = float(10 ** dp)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "format", "width", "height", "n_pixels",
-                    "min_gray", "max_gray", "mean_gray")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    blob = bytes(blob)
-                    fmt, _, _ = parse_image_header(blob)
-                    try:
-                        w, h, px = decode_image_gray(blob)
-                    except DECODE_ERRORS:
-                        continue
-                    # a structurally-valid blob can still declare 0x0
-                    # dimensions (empty zlib IDAT decodes fine) — no
-                    # pixels means no stats row, same skip contract as
-                    # an undecodable blob (ADVICE r11)
-                    if not px:
-                        continue
-                    total = sum(px)
-                    mean = total / len(px)
-                    out["path"].append(path)
-                    out["format"].append(fmt)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_pixels"].append(len(px))
-                    out["min_gray"].append(min(px))
-                    out["max_gray"].append(max(px))
-                    out["mean_gray"].append(
-                        _math.floor(mean * scale + 0.5) / scale)
-                yield pd.DataFrame(out).astype({
-                    "width": "int32", "height": "int32",
-                    "n_pixels": "int32", "min_gray": "int32",
-                    "max_gray": "int32",
-                })
+    def rows(blob: bytes):
+        fmt, _, _ = parse_image_header(blob)
+        w, h, px = decode_image_gray(blob)
+        # a structurally-valid blob can still declare 0x0 dimensions
+        # (empty zlib IDAT decodes fine) — no pixels means no stats row
+        if not px:
+            return []
+        mean = sum(px) / len(px)
+        return [(fmt, w, h, len(px), min(px), max(px),
+                 _math.floor(mean * scale + 0.5) / scale)]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, IMAGE_STATS_SCHEMA)
+    return map_blobs(df, rows, IMAGE_STATS_SCHEMA, content_col, path_col)
 
 
 # ------------------------------------------------------------------ #
@@ -1563,7 +1465,6 @@ def image_content_digest(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """CONTENT-keyed image identity: full pixel decode via
     :func:`decode_image_gray` (all four codecs), then the md5 of the
@@ -1572,39 +1473,16 @@ def image_content_digest(
     PNG, GIF, or BMP digest identically, so byte-level exact dedup
     (which sees three different blobs) composes into true
     cross-format duplicate resolution downstream (`dedup.exact_dedup`
-    on ``pix_digest``). Same Arrow mapInPandas shape as every media
-    stage; undecodable blobs emit no row; zero shuffle."""
+    on ``pix_digest``)."""
     import hashlib
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "format", "width", "height", "pix_digest")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    blob = bytes(blob)
-                    fmt, _, _ = parse_image_header(blob)
-                    try:
-                        w, h, px = decode_image_gray(blob)
-                    except DECODE_ERRORS:
-                        continue
-                    csv = ",".join(str(v) for v in px)
-                    out["path"].append(path)
-                    out["format"].append(fmt)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["pix_digest"].append(
-                        hashlib.md5(csv.encode()).hexdigest())
-                yield pd.DataFrame(out).astype({
-                    "width": "int32", "height": "int32"})
+    def rows(blob: bytes):
+        fmt, _, _ = parse_image_header(blob)
+        w, h, px = decode_image_gray(blob)
+        csv = ",".join(str(v) for v in px)
+        return [(fmt, w, h, hashlib.md5(csv.encode()).hexdigest())]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, IMAGE_DIGEST_SCHEMA)
+    return map_blobs(df, rows, IMAGE_DIGEST_SCHEMA, content_col, path_col)
 
 
 #: the 8 sequency probes of the audio WHT fingerprint: DC, the 5 dyadic
@@ -1624,7 +1502,6 @@ def audio_wht(
     content_col: str = "content",
     path_col: str = "path",
     window: int = 64,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Walsh-Hadamard sequency fingerprint per audio window — the
     EXACT-arithmetic spectral feature (audio hashing / perceptual
@@ -1634,10 +1511,7 @@ def audio_wht(
     & k)`` — pure integer sums, bit-identical on every engine (a
     float DFT's libm cos differs in the last ulp across engines; the
     WHT has no such seam), plus the exact sequency energy
-    ``sum(c_k^2)``.
-
-    Same 100 TB shape as every media stage: Arrow ``mapInPandas``,
-    bounded batches, fan-out rows per window, zero shuffle."""
+    ``sum(c_k^2)``. One row per window."""
     import numpy as np
 
     if window & (window - 1):
@@ -1647,46 +1521,19 @@ def audio_wht(
         for n in range(window):
             signs[r, n] = -1 if bin(n & k).count("1") % 2 else 1
 
-    cols = ["path", "n_frames", "window_idx", "n_in_window"] + [
-        f"c{i}" for i in range(len(WHT_BINS))
-    ] + ["energy"]
+    def rows(blob: bytes):
+        _rate, _n_ch, _bits, frames = decode_wav_pcm(blob)
+        mono = _mono_fold(frames)
+        n = len(mono)
+        for w_idx in range((n + window - 1) // window):
+            seg = mono[w_idx * window:(w_idx + 1) * window]
+            x = np.zeros(window, dtype=np.int64)
+            x[:len(seg)] = seg
+            coeffs = signs @ x
+            yield (n, w_idx, len(seg), *(int(c) for c in coeffs),
+                   int((coeffs * coeffs).sum()))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in cols}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        _rate, _n_ch, _bits, frames = decode_wav_pcm(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    mono = _mono_fold(frames)
-                    n = len(mono)
-                    for w_idx in range((n + window - 1) // window):
-                        seg = mono[w_idx * window:(w_idx + 1) * window]
-                        n_in = len(seg)
-                        x = np.zeros(window, dtype=np.int64)
-                        x[:n_in] = seg
-                        coeffs = signs @ x
-                        out["path"].append(path)
-                        out["n_frames"].append(n)
-                        out["window_idx"].append(w_idx)
-                        out["n_in_window"].append(n_in)
-                        for i, c in enumerate(coeffs):
-                            out[f"c{i}"].append(int(c))
-                        out["energy"].append(int((coeffs * coeffs).sum()))
-                yield pd.DataFrame(out).astype({
-                    "n_frames": "int64", "window_idx": "int32",
-                    "n_in_window": "int32",
-                })
-
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, AUDIO_WHT_SCHEMA)
+    return map_blobs(df, rows, AUDIO_WHT_SCHEMA, content_col, path_col)
 
 
 IMAGE_PHASH_SCHEMA = (
@@ -1745,7 +1592,6 @@ def image_phash(
     content_col: str = "content",
     path_col: str = "path",
     grid: int = 8,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Perceptual image hash — the NEAR-dup companion of
     :func:`image_content_digest` (which keys exact pixels): decode to
@@ -1758,41 +1604,18 @@ def image_phash(
     float percentile). Byte-level recompressions, format changes, and
     pixel tweaks that wash out in a block mean all map to the SAME
     63-bit integer; Hamming-near hashes band-join exactly like SimHash
-    (operators/dedup.py). Standard media shape: Arrow mapInPandas,
-    bounded batches, zero shuffle; undecodable blobs emit no row."""
+    (operators/dedup.py). Images smaller than ``grid`` emit no row."""
     if grid & (grid - 1) or grid < 2:
         raise ValueError(f"grid must be a power of 2 >= 2, got {grid}")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "format", "width", "height", "phash")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    blob = bytes(blob)
-                    fmt, _, _ = parse_image_header(blob)
-                    try:
-                        w, h, pix = decode_image_gray(blob)
-                    except DECODE_ERRORS:
-                        continue
-                    if w < grid or h < grid:
-                        continue
-                    out["path"].append(path)
-                    out["format"].append(fmt)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["phash"].append(phash_pixels(w, h, pix, grid))
-                yield pd.DataFrame(out).astype({
-                    "width": "int32", "height": "int32", "phash": "int64",
-                })
+    def rows(blob: bytes):
+        fmt, _, _ = parse_image_header(blob)
+        w, h, pix = decode_image_gray(blob)
+        if w < grid or h < grid:
+            return []
+        return [(fmt, w, h, phash_pixels(w, h, pix, grid))]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, IMAGE_PHASH_SCHEMA)
+    return map_blobs(df, rows, IMAGE_PHASH_SCHEMA, content_col, path_col)
 
 
 SCENE_CUTS_SCHEMA = (
@@ -1801,12 +1624,24 @@ SCENE_CUTS_SCHEMA = (
 )
 
 
+def _video_frames(blob: bytes) -> list[tuple[int, int, int, bytes]]:
+    """``(offset, w, h, gray)`` frames of a Y4M / animated GIF /
+    AVI-MJPEG blob, dispatched on magic bytes like :func:`sample_frames`;
+    anything else raises ``NotImplementedError``."""
+    if blob.startswith(b"YUV4MPEG2"):
+        return decode_y4m_frames(blob)
+    if blob[:6] in (b"GIF87a", b"GIF89a"):
+        return decode_gif_frames(blob)
+    if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
+        return decode_avi_frames(blob)
+    raise NotImplementedError(f"no frame decoder for magic {blob[:9]!r}")
+
+
 def video_scene_cuts(
     df: DataFrame,
     threshold: float = 40.0,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
     dp: int = 6,
 ) -> DataFrame:
     """Scene-change detection over video blobs — the segmentation step
@@ -1817,74 +1652,33 @@ def video_scene_cuts(
     rounded at ``dp``), a cut flag at ``MAD >= threshold``, and the
     running ``scene_id`` (cut count so far — frame 0 opens scene 0).
 
-    Decodes through the REAL codecs (Y4M / animated GIF / AVI-MJPEG,
-    dispatched on magic bytes like :func:`sample_frames`); everything
+    Decodes through the REAL codecs (:func:`_video_frames`); everything
     downstream of decode is integer arithmetic, so a SQL oracle
-    replays it closed-form. Standard media shape: Arrow mapInPandas,
-    bounded batches, zero shuffle (scene ids are per-file running
-    counts computed inside the kernel — no window)."""
-    import numpy as np
+    replays it closed-form. Scene ids are per-file running counts
+    computed inside the row function — no window."""
+    import math as _math
 
-    def _frames(blob: bytes):
-        if blob.startswith(b"YUV4MPEG2"):
-            return decode_y4m_frames(blob)
-        if blob[:6] in (b"GIF87a", b"GIF89a"):
-            return decode_gif_frames(blob)
-        if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-            return decode_avi_frames(blob)
-        raise NotImplementedError(
-            f"no frame decoder for magic {blob[:9]!r}")
+    import numpy as np
 
     scale = float(10 ** dp)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "frame_idx", "n_pixels", "sad", "mad",
-                    "is_cut", "scene_id")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        frames = _frames(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    prev = None
-                    scene = 0
-                    for f_idx, (_, w, h, pix) in enumerate(frames):
-                        cur = np.frombuffer(pix, dtype=np.uint8).astype(
-                            np.int64)
-                        if prev is not None:
-                            sad = int(np.abs(cur - prev).sum())
-                            n_px = int(cur.size)
-                            # the audio_stats HALF_UP convention: round
-                            # the double quotient, matching SQL round()
-                            import math as _math
+    def rows(blob: bytes):
+        prev = None
+        scene = 0
+        for f_idx, (_, _w, _h, pix) in enumerate(_video_frames(blob)):
+            cur = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
+            if prev is not None:
+                sad = int(np.abs(cur - prev).sum())
+                n_px = int(cur.size)
+                # the audio_stats HALF_UP convention: round the double
+                # quotient, matching SQL round()
+                mad = _math.floor((sad / n_px) * scale + 0.5) / scale
+                cut = mad >= threshold
+                scene += cut
+                yield f_idx, n_px, sad, mad, cut, scene
+            prev = cur
 
-                            mad = _math.floor(
-                                (sad / n_px) * scale + 0.5) / scale
-                            cut = mad >= threshold
-                            if cut:
-                                scene += 1
-                            out["path"].append(path)
-                            out["frame_idx"].append(f_idx)
-                            out["n_pixels"].append(n_px)
-                            out["sad"].append(sad)
-                            out["mad"].append(mad)
-                            out["is_cut"].append(cut)
-                            out["scene_id"].append(scene)
-                        prev = cur
-                yield pd.DataFrame(out).astype({
-                    "frame_idx": "int32", "n_pixels": "int32",
-                    "sad": "int64", "scene_id": "int32",
-                })
-
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, SCENE_CUTS_SCHEMA)
+    return map_blobs(df, rows, SCENE_CUTS_SCHEMA, content_col, path_col)
 
 
 def phash_hamming_pairs(
@@ -1950,75 +1744,43 @@ def audio_activity_segments(
     window: int = 50,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Activity segmentation (the VAD-shaped silence trimmer audio
     curation runs before transcription/training): windows whose RMS
     clears ``rms_threshold`` are active; consecutive active windows
-    merge into segments (run-length, computed in-kernel per file —
-    zero shuffle). Emits one row per segment: window count, frame
-    span, and the segment's peak amplitude. RMS uses the exact
+    merge into segments (run-length, computed per file in the row
+    function — zero shuffle). Emits one row per segment: window count,
+    frame span, and the segment's peak amplitude. RMS uses the exact
     integer sum-of-squares with the audio_stats HALF_UP rounding, so
     the active/silent decision replays in SQL."""
     import math as _math
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "segment_id", "n_windows", "start_frame",
-                    "end_frame", "peak")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        _r, _nc, _b, frames = decode_wav_pcm(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    mono = _mono_fold(frames)
-                    n = len(mono)
-                    seg = None  # (first_w, last_w, peak)
-                    seg_id = 0
-                    for w_idx in range((n + window - 1) // window):
-                        s = mono[w_idx * window:(w_idx + 1) * window]
-                        rms = _math.floor(
-                            _math.sqrt(sum(v * v for v in s) / len(s))
-                            * 1e6 + 0.5) / 1e6
-                        if rms >= rms_threshold:
-                            pk = max(abs(v) for v in s)
-                            if seg is None:
-                                seg = [w_idx, w_idx, pk]
-                            else:
-                                seg[1] = w_idx
-                                seg[2] = max(seg[2], pk)
-                        elif seg is not None:
-                            out["path"].append(path)
-                            out["segment_id"].append(seg_id)
-                            out["n_windows"].append(seg[1] - seg[0] + 1)
-                            out["start_frame"].append(seg[0] * window)
-                            out["end_frame"].append(
-                                min((seg[1] + 1) * window, n))
-                            out["peak"].append(seg[2])
-                            seg_id += 1
-                            seg = None
-                    if seg is not None:
-                        out["path"].append(path)
-                        out["segment_id"].append(seg_id)
-                        out["n_windows"].append(seg[1] - seg[0] + 1)
-                        out["start_frame"].append(seg[0] * window)
-                        out["end_frame"].append(min((seg[1] + 1) * window, n))
-                        out["peak"].append(seg[2])
-                yield pd.DataFrame(out).astype({
-                    "segment_id": "int32", "n_windows": "int32",
-                    "start_frame": "int64", "end_frame": "int64",
-                    "peak": "int32",
-                })
+    def rows(blob: bytes):
+        _r, _nc, _b, frames = decode_wav_pcm(blob)
+        mono = _mono_fold(frames)
+        n = len(mono)
+        segs = []  # [first_w, last_w, peak] per run of active windows
+        prev_active = False
+        for w_idx in range((n + window - 1) // window):
+            s = mono[w_idx * window:(w_idx + 1) * window]
+            rms = _math.floor(
+                _math.sqrt(sum(v * v for v in s) / len(s)) * 1e6 + 0.5) / 1e6
+            active = rms >= rms_threshold
+            if active:
+                pk = max(abs(v) for v in s)
+                if prev_active:
+                    segs[-1][1] = w_idx
+                    segs[-1][2] = max(segs[-1][2], pk)
+                else:
+                    segs.append([w_idx, w_idx, pk])
+            prev_active = active
+        return [
+            (seg_id, last - first + 1, first * window,
+             min((last + 1) * window, n), peak)
+            for seg_id, (first, last, peak) in enumerate(segs)
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, AUDIO_SEGMENTS_SCHEMA)
+    return map_blobs(df, rows, AUDIO_SEGMENTS_SCHEMA, content_col, path_col)
 
 
 IMAGE_PATCHES_SCHEMA = (
@@ -2032,7 +1794,6 @@ def image_patches(
     patch: int = 4,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """ViT-style patch extraction: decode to grayscale and emit one row
     per non-overlapping ``patch x patch`` tile (ragged right/bottom
@@ -2040,53 +1801,24 @@ def image_patches(
     survive) with the tile's md5 pixel digest and exact HALF_UP mean.
     The patch grid is what patch-token models train on; the digest
     column makes tile-level dedup (sprite/logo detection) a plain
-    groupBy downstream. Arrow mapInPandas, zero shuffle."""
+    groupBy downstream."""
     import hashlib
     import math as _math
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "patch_row", "patch_col", "width", "height",
-                    "patch_digest", "patch_mean")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        w, h, pix = decode_image_gray(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    for pr in range(h // patch):
-                        for pc in range(w // patch):
-                            vals = [
-                                pix[(pr * patch + dy) * w
-                                    + pc * patch + dx]
-                                for dy in range(patch)
-                                for dx in range(patch)
-                            ]
-                            digest = hashlib.md5(
-                                ",".join(map(str, vals)).encode()
-                            ).hexdigest()
-                            mean = _math.floor(
-                                sum(vals) / len(vals) * 1e6 + 0.5) / 1e6
-                            out["path"].append(path)
-                            out["patch_row"].append(pr)
-                            out["patch_col"].append(pc)
-                            out["width"].append(w)
-                            out["height"].append(h)
-                            out["patch_digest"].append(digest)
-                            out["patch_mean"].append(mean)
-                yield pd.DataFrame(out).astype({
-                    "patch_row": "int32", "patch_col": "int32",
-                    "width": "int32", "height": "int32",
-                })
+    def rows(blob: bytes):
+        w, h, pix = decode_image_gray(blob)
+        for pr in range(h // patch):
+            for pc in range(w // patch):
+                vals = [
+                    pix[(pr * patch + dy) * w + pc * patch + dx]
+                    for dy in range(patch) for dx in range(patch)
+                ]
+                digest = hashlib.md5(
+                    ",".join(map(str, vals)).encode()).hexdigest()
+                mean = _math.floor(sum(vals) / len(vals) * 1e6 + 0.5) / 1e6
+                yield pr, pc, w, h, digest, mean
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, IMAGE_PATCHES_SCHEMA)
+    return map_blobs(df, rows, IMAGE_PATCHES_SCHEMA, content_col, path_col)
 
 
 IMAGE_AUGMENT_SCHEMA = (
@@ -2099,7 +1831,6 @@ def augment_images(
     augs: tuple[str, ...] = ("flip_h", "rot90", "center_crop"),
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Deterministic train-time augmentation as a Spark stage: decode
     to grayscale and emit one row per (image, augmentation) with the
@@ -2111,7 +1842,7 @@ def augment_images(
     property makes augmented-set dedup exact (digest groupBy).
     Stochastic augs (random crop/jitter) belong on the training
     loader; the CORPUS-side augs a pipeline materializes are exactly
-    these deterministic ones. Arrow mapInPandas, zero shuffle."""
+    these deterministic ones."""
     import hashlib
 
     import numpy as np
@@ -2121,46 +1852,25 @@ def augment_images(
     if bad:
         raise ValueError(f"unknown augs: {sorted(bad)}")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "aug", "width", "height", "aug_digest")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        w, h, pix = decode_image_gray(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    img = np.frombuffer(pix, dtype=np.uint8).reshape(h, w)
-                    for aug in augs:
-                        if aug == "flip_h":
-                            t = img[:, ::-1]
-                        elif aug == "rot90":
-                            t = np.rot90(img, k=-1)  # clockwise
-                        else:  # center_crop to the middle half
-                            if w < 4 or h < 4:
-                                continue
-                            y0, x0 = h // 4, w // 4
-                            t = img[y0:y0 + h // 2, x0:x0 + w // 2]
-                        th, tw = t.shape
-                        digest = hashlib.md5(
-                            ",".join(map(str, t.flatten().tolist()))
-                            .encode()).hexdigest()
-                        out["path"].append(path)
-                        out["aug"].append(aug)
-                        out["width"].append(tw)
-                        out["height"].append(th)
-                        out["aug_digest"].append(digest)
-                yield pd.DataFrame(out).astype({
-                    "width": "int32", "height": "int32"})
+    def rows(blob: bytes):
+        w, h, pix = decode_image_gray(blob)
+        img = np.frombuffer(pix, dtype=np.uint8).reshape(h, w)
+        for aug in augs:
+            if aug == "flip_h":
+                t = img[:, ::-1]
+            elif aug == "rot90":
+                t = np.rot90(img, k=-1)  # clockwise
+            else:  # center_crop to the middle half
+                if w < 4 or h < 4:
+                    continue
+                y0, x0 = h // 4, w // 4
+                t = img[y0:y0 + h // 2, x0:x0 + w // 2]
+            th, tw = t.shape
+            digest = hashlib.md5(
+                ",".join(map(str, t.flatten().tolist())).encode()).hexdigest()
+            yield aug, tw, th, digest
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, IMAGE_AUGMENT_SCHEMA)
+    return map_blobs(df, rows, IMAGE_AUGMENT_SCHEMA, content_col, path_col)
 
 
 VIDEO_THUMBNAIL_SCHEMA = (
@@ -2173,71 +1883,35 @@ def video_thumbnail(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Thumbnail selection — the highest-variance frame (flat/black
     frames score 0; the busiest frame is the conventional poster
-    pick): per video, decode all frames, score each with the EXACT
+    pick): per video, decode all frames (:func:`_video_frames`), score
+    each with the EXACT
     integer ``n^2 * var = n * sum(x^2) - sum(x)^2``-like quantity
     (here ``n*sumsq - sum^2``, constant n per video, so the argmax is
     var's argmax with no division), choose the max with lowest-index
     tie-break, emit its md5 pixel digest. Exact integers end to end —
-    the oracle replays score, argmax, and digest closed-form. Arrow
-    mapInPandas, zero shuffle."""
+    the oracle replays score, argmax, and digest closed-form."""
     import hashlib
 
     import numpy as np
 
-    def _frames(blob: bytes):
-        if blob.startswith(b"YUV4MPEG2"):
-            return decode_y4m_frames(blob)
-        if blob[:6] in (b"GIF87a", b"GIF89a"):
-            return decode_gif_frames(blob)
-        if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-            return decode_avi_frames(blob)
-        raise NotImplementedError(
-            f"no frame decoder for magic {blob[:9]!r}")
+    def rows(blob: bytes):
+        frames = _video_frames(blob)
+        best = None
+        for idx, (_, _w, _h, pix) in enumerate(frames):
+            x = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
+            score = int(x.size * (x * x).sum() - int(x.sum()) ** 2)
+            if best is None or score > best[0]:
+                best = (score, idx, pix)
+        if best is None:
+            return []
+        score, idx, pix = best
+        digest = hashlib.md5(",".join(str(v) for v in pix).encode())
+        return [(len(frames), idx, score, digest.hexdigest())]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "n_frames", "chosen_idx", "variance_x16",
-                    "thumb_digest")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        frames = _frames(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    if not frames:
-                        continue
-                    best = None
-                    for idx, (_, w, h, pix) in enumerate(frames):
-                        x = np.frombuffer(pix, dtype=np.uint8).astype(
-                            np.int64)
-                        score = int(x.size * (x * x).sum()
-                                    - int(x.sum()) ** 2)
-                        if best is None or score > best[0]:
-                            best = (score, idx, pix)
-                    score, idx, pix = best
-                    out["path"].append(path)
-                    out["n_frames"].append(len(frames))
-                    out["chosen_idx"].append(idx)
-                    out["variance_x16"].append(score)
-                    out["thumb_digest"].append(
-                        hashlib.md5(",".join(
-                            str(v) for v in pix).encode()).hexdigest())
-                yield pd.DataFrame(out).astype({
-                    "n_frames": "int32", "chosen_idx": "int32",
-                    "variance_x16": "int64"})
-
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, VIDEO_THUMBNAIL_SCHEMA)
+    return map_blobs(df, rows, VIDEO_THUMBNAIL_SCHEMA, content_col, path_col)
 
 
 AUDIO_SPECTRAL_SCHEMA = (
@@ -2252,7 +1926,6 @@ def audio_spectral_probe(
     path_col: str = "path",
     window: int = 64,
     dp: int = 6,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-window EXACT-ARITHMETIC spectral probes over WAV-standing
     blobs — the frequency-domain companion of :func:`audio_stats`'s
@@ -2273,9 +1946,7 @@ def audio_spectral_probe(
     - ``hf_ratio`` — m_fs2_sq / (N·energy), the released high-frequency
       fraction (NULL on an all-zero window: 0/0), 6-dp.
 
-    ``window`` must be a multiple of 4 (the bin-index arithmetic).
-    Same 100 TB shape as every media stage: Arrow ``mapInPandas``,
-    bounded batches, zero shuffle; undecodable blobs skip."""
+    ``window`` must be a multiple of 4 (the bin-index arithmetic)."""
     if window < 4 or window % 4:
         raise ValueError(f"window must be a positive multiple of 4, "
                          f"got {window}")
@@ -2283,56 +1954,24 @@ def audio_spectral_probe(
 
     scale = float(10 ** dp)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                out: dict[str, list] = {k: [] for k in (
-                    "path", "window_idx", "n_in_window", "dc",
-                    "energy", "m_fs4_sq", "m_fs2_sq", "hf_ratio")}
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        _rate, _n_ch, _bits, frames = decode_wav_pcm(
-                            bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    mono = _mono_fold(frames)
-                    n = len(mono)
-                    for w_idx in range(0, (n + window - 1) // window):
-                        seg = mono[w_idx * window:(w_idx + 1) * window]
-                        m = len(seg)
-                        dc = sum(seg)
-                        energy = sum(v * v for v in seg)
-                        re4 = sum(seg[i] for i in range(0, m, 4)) \
-                            - sum(seg[i] for i in range(2, m, 4))
-                        im4 = -(sum(seg[i] for i in range(1, m, 4))
-                                - sum(seg[i] for i in range(3, m, 4)))
-                        m4 = re4 * re4 + im4 * im4
-                        alt = sum(v if i % 2 == 0 else -v
-                                  for i, v in enumerate(seg))
-                        m2 = alt * alt
-                        hf = (None if energy == 0 else _math.floor(
-                            m2 / (m * energy) * scale + 0.5) / scale)
-                        out["path"].append(path)
-                        out["window_idx"].append(w_idx)
-                        out["n_in_window"].append(m)
-                        out["dc"].append(dc)
-                        out["energy"].append(energy)
-                        out["m_fs4_sq"].append(m4)
-                        out["m_fs2_sq"].append(m2)
-                        out["hf_ratio"].append(hf)
-                yield pd.DataFrame(out).astype({
-                    "window_idx": "int32", "n_in_window": "int32",
-                    "dc": "int64", "energy": "int64",
-                    "m_fs4_sq": "int64", "m_fs2_sq": "int64",
-                }).astype({"hf_ratio": "float64"})
+    def rows(blob: bytes):
+        _rate, _n_ch, _bits, frames = decode_wav_pcm(blob)
+        mono = _mono_fold(frames)
+        n = len(mono)
+        for w_idx in range(0, (n + window - 1) // window):
+            seg = mono[w_idx * window:(w_idx + 1) * window]
+            m = len(seg)
+            energy = sum(v * v for v in seg)
+            re4 = sum(seg[0::4]) - sum(seg[2::4])
+            im4 = -(sum(seg[1::4]) - sum(seg[3::4]))
+            alt = sum(seg[0::2]) - sum(seg[1::2])
+            m2 = alt * alt
+            hf = (None if energy == 0 else _math.floor(
+                m2 / (m * energy) * scale + 0.5) / scale)
+            yield (w_idx, m, sum(seg), energy, re4 * re4 + im4 * im4, m2,
+                   hf)
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, AUDIO_SPECTRAL_SCHEMA)
+    return map_blobs(df, rows, AUDIO_SPECTRAL_SCHEMA, content_col, path_col)
 
 
 def encode_tiff_exif(seed: int = 0, byte_order: str = "II") -> bytes:
@@ -2479,7 +2118,7 @@ def decode_tiff_exif(blob: bytes) -> dict[str, object]:
     """REAL TIFF/EXIF metadata walk (no image decode): header
     byte-order + magic-42 validation, IFD0 entry walk, EXIF sub-IFD
     follow via tag 34665. Raises ValueError on a non-TIFF blob —
-    callers (the mapInPandas stage) skip those rows."""
+    :func:`exif_metadata` skips those blobs."""
     e, ifd_at = _tiff_header(blob)
     bom = blob[:2]
     ifd0 = _tiff_ifd(blob, e, ifd_at)
@@ -2524,41 +2163,20 @@ def exif_metadata(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 256,
 ) -> DataFrame:
     """Image-metadata extraction over TIFF/EXIF-standing binary blobs
     — the multimodal-curation stage that routes/filters a photo corpus
     by camera, orientation, exposure, and capture time WITHOUT
     decoding pixels (IFD walks touch a few hundred bytes per file).
     Real parser: both byte orders, magic validation, inline-vs-offset
-    values, ASCII/SHORT/LONG/RATIONAL types, EXIF sub-IFD pointer.
+    values, ASCII/SHORT/LONG/RATIONAL types, EXIF sub-IFD pointer."""
+    cols = [c.split()[0] for c in EXIF_SCHEMA.split(", ")][1:]
 
-    Same 100 TB shape as every media stage: Arrow ``mapInPandas``,
-    bounded batches, zero shuffle, scan-local; undecodable blobs skip
-    (count them with a left anti join on path if needed)."""
+    def rows(blob: bytes):
+        meta = decode_tiff_exif(blob)
+        return [tuple(meta[c] for c in cols)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in EXIF_SCHEMA.split(", ")]
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows: list[dict] = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        meta = decode_tiff_exif(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    meta["path"] = path
-                    rows.append(meta)
-                out = pd.DataFrame(rows, columns=cols)
-                yield out
-
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, EXIF_SCHEMA)
+    return map_blobs(df, rows, EXIF_SCHEMA, content_col, path_col)
 
 
 def encode_qoi(width: int, height: int, seed: int = 0) -> bytes:
@@ -2719,42 +2337,19 @@ def qoi_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-file pixel statistics over QOI-standing binary blobs — the
     decode-verification stage for the QOI gate (channel sums replay
     closed-form from the fixture formula, so the header walk, all five
     chunk ops, the running index, AND the run-length expansion must be
-    exactly right). Arrow ``mapInPandas``, bounded batches, zero
-    shuffle; undecodable blobs skip."""
+    exactly right)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        w, h, ch, rgba = decode_qoi(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    rows.append({
-                        "path": path, "width": w, "height": h,
-                        "channels": ch, "n_px": w * h,
-                        "sum_r": sum(rgba[0::4]),
-                        "sum_g": sum(rgba[1::4]),
-                        "sum_b": sum(rgba[2::4]),
-                    })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "width", "height", "channels", "n_px",
-                    "sum_r", "sum_g", "sum_b"])
+    def rows(blob: bytes):
+        w, h, ch, rgba = decode_qoi(blob)
+        return [(w, h, ch, w * h,
+                 sum(rgba[0::4]), sum(rgba[1::4]), sum(rgba[2::4]))]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, QOI_STATS_SCHEMA)
+    return map_blobs(df, rows, QOI_STATS_SCHEMA, content_col, path_col)
 
 
 # ------------------------------------------------------------------ #
@@ -2904,41 +2499,18 @@ def pnm_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-file sample statistics over PNM-standing binary blobs (the
-    ``qoi_stats`` shape): Arrow ``mapInPandas``, bounded batches, zero
-    shuffle; undecodable blobs skip (the DECODE_ERRORS contract).
-    ``sum_v`` totals every sample across channels, so the header
-    grammar, raster width math, byte order, and maxval branch all
-    hash-check against the closed-form fixture oracle."""
+    ``qoi_stats`` shape). ``sum_v`` totals every sample across
+    channels, so the header grammar, raster width math, byte order,
+    and maxval branch all hash-check against the closed-form fixture
+    oracle."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        fmt, w, h, mv, ch, samples = decode_pnm(
-                            bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    rows.append({
-                        "path": path, "format": fmt, "width": w,
-                        "height": h, "maxval": mv, "channels": ch,
-                        "n_px": w * h, "sum_v": sum(samples),
-                    })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "format", "width", "height", "maxval",
-                    "channels", "n_px", "sum_v"])
+    def rows(blob: bytes):
+        fmt, w, h, mv, ch, samples = decode_pnm(blob)
+        return [(fmt, w, h, mv, ch, w * h, sum(samples))]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, PNM_STATS_SCHEMA)
+    return map_blobs(df, rows, PNM_STATS_SCHEMA, content_col, path_col)
 
 
 # ------------------------------------------------------------------ #
@@ -3102,49 +2674,23 @@ def tga_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-file pixel statistics over TGA-standing blobs (the
     ``qoi_stats`` shape): channel sums PLUS the normalized top-left
     pixel — sums alone are origin-agnostic, so ``first_*`` is what
-    makes the bottom-up row flip and BGR swap hash-detectable.
-    Arrow ``mapInPandas``, bounded batches, zero shuffle,
-    DECODE_ERRORS skip."""
+    makes the bottom-up row flip and BGR swap hash-detectable. A
+    gray (1-channel) raster reports its one channel as r, g and b."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        w, h, ch, rle, sm = decode_tga(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    step = ch if ch >= 3 else 1
-                    rows.append({
-                        "path": path, "width": w, "height": h,
-                        "channels": ch, "rle": rle, "n_px": w * h,
-                        "sum_r": sum(sm[0::step]),
-                        "sum_g": sum(sm[1::step]) if ch >= 3
-                        else sum(sm),
-                        "sum_b": sum(sm[2::step]) if ch >= 3
-                        else sum(sm),
-                        "first_r": sm[0],
-                        "first_g": sm[1] if ch >= 3 else sm[0],
-                        "first_b": sm[2] if ch >= 3 else sm[0],
-                    })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "width", "height", "channels", "rle",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                    "first_r", "first_g", "first_b"])
+    def rows(blob: bytes):
+        w, h, ch, rle, sm = decode_tga(blob)
+        if ch >= 3:
+            r, g, b = sm[0::ch], sm[1::ch], sm[2::ch]
+        else:
+            r = g = b = sm
+        return [(w, h, ch, rle, w * h, sum(r), sum(g), sum(b),
+                 r[0], g[0], b[0])]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, TGA_STATS_SCHEMA)
+    return map_blobs(df, rows, TGA_STATS_SCHEMA, content_col, path_col)
 
 
 # ------------------------------------------------------------------ #
@@ -3335,44 +2881,22 @@ def ico_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-ENTRY statistics over ICO-standing binary blobs (the
-    ``pnm_stats`` shape, exploded across the container): Arrow
-    ``mapInPandas``, bounded batches, zero shuffle; undecodable blobs
-    skip whole (the DECODE_ERRORS contract — a container is one
-    trust unit). ``sum_v`` totals the grayscale pixels and
+    ``pnm_stats`` shape, exploded across the container; a container
+    that fails to decode skips whole — it is one trust unit).
+    ``sum_v`` totals the grayscale pixels and
     ``n_masked`` counts AND-mask transparent pixels, so the directory
     walk, PNG delegation, DIB rebuild, doubled-height split, and mask
     stride must all hash-check against the closed-form fixture."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        ents = decode_ico(bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    for idx, (storage, w, h, px, nm) in enumerate(ents):
-                        rows.append({
-                            "path": path, "entry_idx": idx,
-                            "storage": storage, "width": w,
-                            "height": h, "n_px": w * h,
-                            "sum_v": sum(px), "n_masked": nm,
-                        })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "entry_idx", "storage", "width", "height",
-                    "n_px", "sum_v", "n_masked"])
+    def rows(blob: bytes):
+        return [
+            (idx, storage, w, h, w * h, sum(px), nm)
+            for idx, (storage, w, h, px, nm) in enumerate(decode_ico(blob))
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, ICO_STATS_SCHEMA)
+    return map_blobs(df, rows, ICO_STATS_SCHEMA, content_col, path_col)
 
 
 def _tiff_tag_array(blob: bytes, e: str, at: int, tag: int):
@@ -3561,39 +3085,14 @@ def tiff_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 128,
 ) -> DataFrame:
     """Per-file raster statistics over TIFF blobs (the ``pnm_stats``
-    shape): Arrow ``mapInPandas``, bounded batches, zero shuffle;
-    undecodable blobs skip (the DECODE_ERRORS contract). ``sum_v``
-    and the released first pixel hash-check strip assembly, sample
-    byte order, and photometric normalization against the
-    closed-form fixture."""
+    shape). ``sum_v`` and the released first pixel hash-check strip
+    assembly, sample byte order, and photometric normalization against
+    the closed-form fixture."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        bo, w, h, bits, ns, sm = decode_tiff_gray(
-                            bytes(blob))
-                    except DECODE_ERRORS:
-                        continue
-                    rows.append({
-                        "path": path, "byte_order": bo, "width": w,
-                        "height": h, "bits": bits, "n_strips": ns,
-                        "n_px": w * h, "sum_v": sum(sm),
-                        "first_v": sm[0],
-                    })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "byte_order", "width", "height", "bits",
-                    "n_strips", "n_px", "sum_v", "first_v"])
+    def rows(blob: bytes):
+        bo, w, h, bits, ns, sm = decode_tiff_gray(blob)
+        return [(bo, w, h, bits, ns, w * h, sum(sm), sm[0])]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, TIFF_STATS_SCHEMA)
+    return map_blobs(df, rows, TIFF_STATS_SCHEMA, content_col, path_col)

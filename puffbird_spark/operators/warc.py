@@ -14,9 +14,8 @@ operator's job, the entropy coder is the library's); the WARC walk
 parses the version line and header grammar and enforces the
 Content-Length framing. Reference: RFC 1952 (gzip), ISO 28500 (WARC).
 
-Scale shape: ``warc_stats`` is the qoi_stats Arrow ``mapInPandas``
-shape — row-local, zero shuffle; a 100 TB crawl ingest is
-embarrassingly parallel over files, and partition sizing is
+``warc_stats`` is a row function run through ``multimodal.map_blobs``
+— the media stage shape and its skip contract; partition sizing is
 ``spark.sql.files.maxPartitionBytes``'s job.
 """
 
@@ -24,12 +23,10 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from .multimodal import DECODE_ERRORS
+from .multimodal import map_blobs
 
 __all__ = [
     "split_gzip_members", "parse_warc_record", "encode_warc_gz",
@@ -180,43 +177,21 @@ def warc_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Per-RECORD statistics over crawl-layout blobs: gzip members
     walked and CRC-verified, each member's WARC record parsed, one
     row per record in stream order (the ``ico_stats`` container
     shape). Undecodable FILES skip whole — a stream whose framing is
-    broken cannot be trusted past the break (the DECODE_ERRORS
-    contract). ``block_sum`` hash-checks the member boundaries,
-    inflate, Content-Length framing, and header grammar together."""
+    broken cannot be trusted past the break. ``block_sum`` hash-checks
+    the member boundaries, inflate, Content-Length framing, and header
+    grammar together."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start:start + batch_size]
-                rows = []
-                for path, blob in zip(
-                    chunk[path_col].astype(str), chunk[content_col]
-                ):
-                    if blob is None:
-                        continue
-                    try:
-                        recs = [parse_warc_record(p)
-                                for p in split_gzip_members(bytes(blob))]
-                    except DECODE_ERRORS:
-                        continue
-                    for idx, (hdr, block) in enumerate(recs):
-                        rows.append({
-                            "path": path, "rec_idx": idx,
-                            "warc_type": hdr.get("warc-type"),
-                            "target_uri": hdr.get("warc-target-uri"),
-                            "content_length": len(block),
-                            "block_sum": sum(block),
-                            "n_headers": len(hdr),
-                        })
-                yield pd.DataFrame(rows, columns=[
-                    "path", "rec_idx", "warc_type", "target_uri",
-                    "content_length", "block_sum", "n_headers"])
+    def rows(blob: bytes):
+        return [
+            (idx, hdr.get("warc-type"), hdr.get("warc-target-uri"),
+             len(block), sum(block), len(hdr))
+            for idx, (hdr, block) in enumerate(
+                parse_warc_record(p) for p in split_gzip_members(blob))
+        ]
 
-    return df.select(path_col, content_col).mapInPandas(
-        kernel, WARC_STATS_SCHEMA)
+    return map_blobs(df, rows, WARC_STATS_SCHEMA, content_col, path_col)

@@ -698,63 +698,61 @@ def test_merge_duplicate_and_null_update_keys(spark):
 
 
 def test_connected_components_empty_input(spark):
-    from puffbird_spark.operators.graph import (
-        connected_components, connected_components_star)
+    from puffbird_spark.operators.graph import connected_components
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(empty).count() == 0
-    assert connected_components_star(empty).count() == 0
 
 
-def test_star_cc_matches_minlabel_on_shapes(spark):
-    """Large-star/small-star must label chain, triangle, lone pair, and a
-    chain longer than one alternation identically to min-label."""
-    from puffbird_spark.operators.graph import (
-        connected_components, connected_components_star)
+def _union_find_components(edges):
+    """Reference labels: {(vertex, min vertex of its component)} from a
+    plain Python union-find over the same edge list."""
+    parent = {}
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4),
-         (10, 11), (11, 12), (10, 12),
-         (20, 21)] + [(100 + i, 101 + i) for i in range(32)],
-        ["id_a", "id_b"],
-    )
-    ml = {(r["vertex"], r["component"])
-          for r in connected_components(pairs).collect()}
-    st_ = {(r["vertex"], r["component"])
-           for r in connected_components_star(pairs).collect()}
-    assert st_ == ml
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
 
-
-def test_star_cc_budget_exhaustion_warns(spark):
-    """Like min-label, an exhausted star budget must WARN, not silently
-    split components (a path graph needs >1 alternation)."""
-    from puffbird_spark.operators.graph import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(16)], ["id_a", "id_b"])
-    with pytest.warns(RuntimeWarning, match="no fixpoint"):
-        connected_components_star(pairs, max_iter=1).collect()
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in list(parent)}
 
 
-def test_star_cc_matches_minlabel_random_graphs(spark):
+def test_minlabel_cc_matches_union_find_on_shapes(spark):
+    """Min-label must label chain, triangle, lone pair, and a 33-vertex
+    path (many propagation rounds) with each component's minimum."""
+    from puffbird_spark.operators.graph import connected_components
+
+    edges = ([(1, 2), (2, 3), (3, 4),
+              (10, 11), (11, 12), (10, 12),
+              (20, 21)] + [(100 + i, 101 + i) for i in range(32)])
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    got = {(r["vertex"], r["component"])
+           for r in connected_components(pairs).collect()}
+    assert got == _union_find_components(edges)
+
+
+def test_minlabel_cc_matches_union_find_random_graphs(spark):
     """Differential: seeded random graphs (sparse, duplicate edges, both
-    orientations, self-loops) — the star alternation must produce the
-    exact (vertex, component) set of min-label."""
+    orientations) — min-label must produce the exact (vertex, component)
+    set of a Python union-find."""
     import random
 
-    from puffbird_spark.operators.graph import (
-        connected_components, connected_components_star)
+    from puffbird_spark.operators.graph import connected_components
 
     for seed, n, m in [(7, 60, 45), (11, 80, 120), (13, 50, 200)]:
         rng = random.Random(seed)
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        pairs = spark.createDataFrame(edges, ["id_a", "id_b"]).filter(
-            F.col("id_a") != F.col("id_b"))
-        ml = {(r["vertex"], r["component"])
-              for r in connected_components(pairs).collect()}
-        st_ = {(r["vertex"], r["component"])
-               for r in connected_components_star(pairs).collect()}
-        assert st_ == ml, f"seed={seed}"
+        edges = [(a, b) for a, b in edges if a != b]
+        pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+        got = {(r["vertex"], r["component"])
+               for r in connected_components(pairs).collect()}
+        assert got == _union_find_components(edges), f"seed={seed}"
 
 
 def test_incremental_dedup_replays_to_full_dedup(spark, sf_dir):
@@ -8241,6 +8239,73 @@ def test_isotonic_calibration_hand_cases(spark):
     nrows = isotonic_calibration(nan, "p", "y", n_bins=5).collect()
     assert len(nrows) == 1 and nrows[0]["bin"] == 0
     assert nrows[0]["n"] == 1
+
+
+def test_tga_stats_matches_closed_form(spark):
+    """tga_stats over the four fixture families the multimodal_tga
+    oracle replays (gray, RLE, alpha, right-to-left): channel sums and
+    the normalized top-left pixel equal the closed-form fixture
+    formula. A NULL blob and a truncated blob emit no row."""
+    from puffbird_spark.operators.multimodal import encode_tga, tga_stats
+
+    cases = {
+        "gray": dict(width=7, height=5, seed=3, gray=True),
+        "rle": dict(width=9, height=4, seed=11, rle=True),
+        "alpha": dict(width=6, height=6, seed=250, alpha=True,
+                      top_down=True),
+        "rtl": dict(width=5, height=7, seed=42, right_to_left=True),
+    }
+
+    def expect(width, height, seed, gray=False, rle=False, alpha=False,
+               **_):
+        xy = [(x, y) for y in range(height) for x in range(width)]
+        if gray:
+            r = g = b = [(seed + 3 * x + 7 * y) % 256 for x, y in xy]
+        else:
+            r = [(seed + x + y) % 256 for x, y in xy]
+            g = [(2 * seed + 2 * x + y) % 256 for x, y in xy]
+            b = [(3 * seed + x + 2 * y) % 256 for x, y in xy]
+        channels = 1 if gray else (4 if alpha else 3)
+        return (width, height, channels, rle, width * height,
+                sum(r), sum(g), sum(b), r[0], g[0], b[0])
+
+    cut = encode_tga(6, 6, seed=2)[:30]
+    rows = [(p, bytearray(encode_tga(**kw))) for p, kw in cases.items()]
+    rows += [("null", None), ("cut", bytearray(cut))]
+    df = spark.createDataFrame(rows, "path string, content binary")
+    got = {r["path"]: tuple(r)[1:] for r in tga_stats(df).collect()}
+    assert got == {p: expect(**kw) for p, kw in cases.items()}
+
+
+def test_media_stage_skips_overwide_header_fields(spark):
+    """A structurally valid PNG declaring a 3e9-pixel width and zero
+    height decodes to an empty raster; the released width cannot fit
+    the stage's int column, so the blob is skipped like an undecodable
+    one instead of wrapping or failing the job."""
+    import struct as _struct
+    import zlib as _zlib
+
+    from puffbird_spark.operators.multimodal import (
+        augment_images, encode_png, image_content_digest)
+
+    def _chunk(tag, payload):
+        crc = _zlib.crc32(tag + payload) & 0xFFFFFFFF
+        return (_struct.pack(">I", len(payload)) + tag + payload
+                + _struct.pack(">I", crc))
+
+    wide = (b"\x89PNG\r\n\x1a\n"
+            + _chunk(b"IHDR", _struct.pack(
+                ">IIBBBBB", 3_000_000_000, 0, 8, 0, 0, 0, 0))
+            + _chunk(b"IDAT", _zlib.compress(b""))
+            + _chunk(b"IEND", b""))
+    img = spark.createDataFrame(
+        [("good.png", bytearray(encode_png(8, 8, seed=1))),
+         ("wide.png", bytearray(wide))],
+        "path string, content binary")
+    assert [r["path"] for r in image_content_digest(img).collect()] \
+        == ["good.png"]
+    assert {r["path"] for r in augment_images(img).collect()} \
+        == {"good.png"}
 
 
 def test_tga_codec_robustness():

@@ -8,7 +8,9 @@ windows, all-pairs joins in disguise, interpreted HOF folds over 1e8
 pairs, prefix-filter collapse, JVM OOM, zipf hot types). This runner
 formalizes the ad-hoc scripts: cold + warm wall-clock per gate, row
 count, kernel telemetry, and a nonzero exit if any gate exceeds
-``--wall`` seconds (so a rehearsal can gate a commit).
+``--wall`` seconds (so a rehearsal can gate a commit). The session is
+``local[$SPARK_GRAFT_CPUS]`` (default: every CPU of the host), shuffle
+partitions 2x that — the ``bench.py`` convention.
 
 Usage:
     python tools/rehearse.py gate_a gate_b ...          # named gates
@@ -39,7 +41,6 @@ def main() -> int:
     ap.add_argument("--sf-dir", default="/tmp/pbs_sf1")
     ap.add_argument("--wall", type=float, default=300.0,
                     help="per-gate cold wall-clock budget in seconds")
-    ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--skip", nargs="*", default=[],
                     help="gate names to exclude (e.g. documented "
                          "quadratic-by-design verifiers)")
@@ -64,10 +65,11 @@ def main() -> int:
     if not names:
         ap.error("no gates: pass names, --all, or --window")
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
     spark = get_spark(
         app_name="puffbird-rehearse",
-        master=f"local[{args.cpus}]",
-        shuffle_partitions=args.cpus * 2,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus * 2,
     )
     walls: list[str] = []
     for name in names:
