@@ -1,35 +1,88 @@
-"""Connected components over candidate-pair edges — the cluster-resolution
-stage of a fuzzy-dedup pipeline (MinHash/SimHash pairs in, one canonical
-cluster id per document out).
+"""Graph operators over edge-list DataFrames: connected components (the
+cluster-resolution stage of a fuzzy-dedup pipeline), PageRank, HITS,
+label propagation, BFS and weighted shortest paths, k-core peeling,
+triangles, link prediction and community scores.
 
-Algorithm: iterative min-label propagation. Every vertex starts labeled
-with itself; each round a vertex takes the minimum of its own label and its
-neighbors' labels; at fixpoint the label is the component's minimum vertex
-id. Rounds needed = graph diameter (duplicate clusters are near-cliques, so
-2-3 rounds in practice; ``max_iter`` bounds pathological chains).
+Edges. The undirected operators read their edge list through one of two
+normalizers, each materialized once: :func:`_symmetric_edges` (both
+directions, self-loops dropped, distinct) for neighbor walks and
+:func:`_canonical_edges` (each edge once as ``least``/``greatest``) for
+counting. PageRank and HITS read :func:`_directed_edges`. Both directions
+come from ONE explode, never a self-union: a union's two branches each
+re-evaluate the whole upstream pipeline (for LSH candidate pairs that
+doubled the MinHash stage, 14 s → 8 s end-to-end at 100k docs/1M pairs),
+while the explode doubles rows in a single pass over one evaluation.
 
-Scale design:
-- each round is ONE join (edges ⋈ labels, both keyed) + one groupBy min —
-  no all-pairs step, partitioning stable on the vertex key across rounds;
-- ``localCheckpoint`` after every round truncates the lineage — without it
-  the plan doubles per iteration and the job dies on planning time long
-  before data size matters;
-- convergence is detected with a count of changed labels (one cheap action
-  per round on the already-materialized checkpoint).
-
-Each round ends with a path-halving shortcut (relabel through the label
-table itself: ``comp ← label(comp)``), so convergence is O(log diameter)
-rather than O(diameter) — 20 rounds cover any graph a dedup pipeline can
-produce. If the budget is still exhausted without a fixpoint the operator
-warns instead of returning silently split components (ADVICE r2).
+Rounds. Every iterative operator runs its rounds through
+:func:`puffbird_spark.plans.iterate`: each round's state is materialized
+by a local checkpoint (truncating the lineage, which otherwise doubles
+per round), the round it supersedes is released as soon as it is, and a
+converging operator counts its changed rows in the same job that
+materializes the round. Everything is keyed joins and aggregations on
+vertex ids; nothing is all-pairs.
 """
 
 from __future__ import annotations
 
+import math
 import warnings
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..plans import iterate
+
+
+def _both_ways(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Every edge in both directions as ``(a, b)``, from one explode."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+            )
+        ).alias("__e")
+    ).select("__e.a", "__e.b")
+
+
+def _symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct ``(a, b)`` in both directions, self-loops dropped."""
+    return (
+        _both_ways(edges, src, dst)
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Each undirected edge once as distinct ``(a, b)`` with ``a < b``."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _directed_edges(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """Distinct directed ``(src, dst)`` edges and their ``(vertex)`` set,
+    every source or target."""
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    verts = (
+        e.select(F.explode(F.array("src", "dst")).alias("vertex"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, verts
 
 
 def connected_components(
@@ -47,25 +100,26 @@ def connected_components(
     returned (isolated docs are their own cluster by definition — join
     back with a coalesce if the full corpus mapping is needed).
 
+    Algorithm: iterative min-label propagation. Every vertex starts
+    labeled with itself; each round a vertex takes the minimum of its own
+    label and its neighbors' labels; at fixpoint the label is the
+    component's minimum vertex id. Each round is keyed joins and one
+    groupBy min, ending with a path-halving shortcut (relabel through the
+    label table itself: ``comp ← label(comp)``), so convergence is
+    O(log diameter) rather than O(diameter) — 20 rounds cover any graph a
+    dedup pipeline can produce. If the budget is still exhausted without
+    a fixpoint the operator warns instead of returning silently split
+    components (ADVICE r2).
+
     ``assume_distinct``: skip the edge-dedup shuffle when the caller
     guarantees unique (src, dst) pairs with src != dst — true for LSH
     candidate pairs, which end in ``dropDuplicates`` with ``id_a < id_b``.
     Duplicate edges would not corrupt results (min is idempotent), only
     inflate the per-round join, so this is a pure optimization knob.
     """
-    # both directions via ONE explode, not a self-union: a union's two
-    # branches each re-evaluate the whole upstream pipeline (for LSH
-    # candidate pairs that doubled the MinHash stage — measured 14s → 8s
-    # end-to-end at 100k docs/1M pairs), while the explode doubles rows in
-    # a single pass over one evaluation.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
-                F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
-            )
-        ).alias("__e")
-    ).select("__e.s", "__e.d")
+    # self-loops stay: a vertex whose only edge is a self-loop is still
+    # its own component
+    edges = _both_ways(pairs, src, dst)
     if not assume_distinct:
         edges = edges.distinct()
     edges = edges.localCheckpoint(eager=True)
@@ -82,25 +136,25 @@ def connected_components(
     # min-label fixpoint is unique and the loop still runs to
     # changed == 0, so results are identical by construction.
     labels = (
-        edges.groupBy("s")
-        .agg(F.least(F.col("s"), F.min("d")).alias("comp"))
-        .select(F.col("s").alias("v"), "comp")
+        edges.groupBy("a")
+        .agg(F.least(F.col("a"), F.min("b")).alias("comp"))
+        .select(F.col("a").alias("v"), "comp")
         .localCheckpoint(eager=True)
     )
     if stats is not None:
         stats["edges"] = edges.count()
         stats["rounds"] = 0
-    changed = 0
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame, k: int) -> DataFrame:
         if stats is not None:
-            stats["rounds"] += 1
+            stats["rounds"] = k
         neighbor_min = (
-            edges.join(labels, edges.d == labels.v)
-            .groupBy("s")
+            edges.join(labels, edges.b == labels.v)
+            .groupBy("a")
             .agg(F.min("comp").alias("nmin"))
         )
         propagated = labels.join(
-            neighbor_min, labels.v == neighbor_min.s, "left"
+            neighbor_min, labels.v == neighbor_min.a, "left"
         ).select(
             "v",
             F.col("comp").alias("__old"),
@@ -114,36 +168,17 @@ def connected_components(
         relabel = propagated.select(
             F.col("v").alias("__cv"), F.col("comp").alias("__cc")
         )
-        new_labels = (
-            propagated.join(relabel, propagated.comp == relabel.__cv, "left")
-            .select(
-                "v",
-                "__old",
-                F.coalesce(F.col("__cc"), F.col("comp")).alias("comp"),
-            )
-            .localCheckpoint(eager=False)
+        return propagated.join(
+            relabel, propagated.comp == relabel.__cv, "left"
+        ).select(
+            "v",
+            "__old",
+            F.coalesce(F.col("__cc"), F.col("comp")).alias("comp"),
         )
-        # labels only decrease, so "comp < __old" IS the change set.
-        # LAZY checkpoint + full count: the count computes every
-        # partition of the marked RDD, so ONE job materializes the
-        # round's labels (persisting blocks + truncating lineage,
-        # exactly like the eager form) AND returns the convergence
-        # signal — the r13 shape paid a checkpoint job plus a separate
-        # count job per round (guide §1.2: at bench SF the iterative
-        # operators are driver-job-bound, not data-bound).
-        changed = new_labels.filter(
-            F.col("comp") < F.col("__old")).count()
-        labels = new_labels.drop("__old")
-        if changed == 0:
-            break
-    if changed != 0:
-        warnings.warn(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
-            "rounds — labels may split one component into several; raise "
-            "max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+
+    # labels only decrease, so "comp < __old" IS the change set
+    labels = iterate(labels, step, max_iter,
+                     until=F.col("comp") < F.col("__old"))
     return labels.select(F.col("v").alias("vertex"), F.col("comp").alias("component"))
 
 
@@ -323,24 +358,14 @@ def pagerank(
     Scale shape: per round ONE join (contributions = ranks ⋈ edges on
     the source key) + one groupBy sum on the target key — partitioning
     alternates between the two vertex keys, nothing is ever all-pairs;
-    the dangling total and N ride one-row broadcast cross joins;
-    ``localCheckpoint`` per round truncates the lineage (the
-    connected-components lesson — planning time, not data, kills
-    un-checkpointed iteration). Returns ``(vertex, rank)``.
+    the dangling total and N ride one-row broadcast cross joins.
+    Returns ``(vertex, rank)``.
     """
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
     if not (0.0 < damping < 1.0):
         raise ValueError("damping must be in (0, 1)")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _directed_edges(edges, src, dst)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # vertex table carries outdeg once (0 = dangling). The r13 shape
     # materialized base, then base+tel, then base+rank as THREE
@@ -375,7 +400,6 @@ def pagerank(
     base = base.select(
         "vertex", "outdeg", "tel", F.round("tel", dp).alias("rank")
     ).localCheckpoint(eager=True)
-    ranks = base
     # Order-free sums via 1e12-scaled LONG arithmetic (ADVICE r8 #4):
     # each term snaps to the nearest integer multiple of 1e-12 BEFORE the
     # keyed sum, so addition is exact integer math — partial-agg-order
@@ -386,7 +410,8 @@ def pagerank(
     # bounded by the TOTAL rank mass ≈ 1, i.e. ≤ ~1e12 after scaling,
     # independent of graph size.
     scale = F.lit(float(10 ** 12))
-    for _ in range(n_iter):
+
+    def step(ranks: DataFrame, _k: int) -> DataFrame:
         dangling = (
             ranks.filter(F.col("outdeg") == 0)
             .agg((F.coalesce(
@@ -403,7 +428,7 @@ def pagerank(
             .groupBy("vertex")
             .agg((F.sum("c") / scale).alias("inflow"))
         )
-        ranks = (
+        return (
             base.join(contrib, "vertex", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -413,9 +438,9 @@ def pagerank(
                     + damping * (F.coalesce("inflow", F.lit(0.0))
                                  + F.col("dangling") * F.col("tel")),
                     dp).alias("rank"))
-            .localCheckpoint(eager=True)
         )
-    return ranks.select("vertex", "rank")
+
+    return iterate(base, step, n_iter).select("vertex", "rank")
 
 
 def label_propagation(
@@ -437,34 +462,20 @@ def label_propagation(
     :func:`connected_components`); self-loops are dropped. Pure
     integer arithmetic — no float policy needed anywhere.
 
-    Scale shape: edges symmetrize once (distinct, checkpointed); each
-    round is one labels ⋈ edges join + one (vertex, label) count + one
-    per-vertex top-1 window — all keyed on vertex ids, nothing
-    all-pairs; ``localCheckpoint`` per round truncates lineage (the
-    iterative-operator rule). Fixed ``n_iter`` rounds: synchronous LPA
+    Scale shape: each round is one labels ⋈ edges join + one (vertex,
+    label) count + one per-vertex top-1 window — all keyed on vertex
+    ids, nothing all-pairs. Fixed ``n_iter`` rounds: synchronous LPA
     can oscillate on bipartite structures, so callers pick the round
     budget and read the labels as "communities after k rounds" —
     deterministic, not a fixpoint claim. Returns ``(vertex, label)``.
     """
-    from pyspark.sql.window import Window
-
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        und.select(F.col("a").alias("vertex")).distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
+    und = _symmetric_edges(edges, src, dst)
     w = Window.partitionBy("vertex").orderBy(
         F.desc("n"), F.asc("label"))
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame, _k: int) -> DataFrame:
         neigh = (
             und.join(labels, und.b == labels.vertex)
             .select(F.col("a").alias("vertex"), "label")
@@ -474,13 +485,12 @@ def label_propagation(
             .filter(F.col("__rn") == 1)
             .select("vertex", F.col("label").alias("__new"))
         )
-        labels = (
-            labels.join(neigh, "vertex", "left")
-            .select("vertex",
-                    F.coalesce("__new", "label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-    return labels
+        return labels.join(neigh, "vertex", "left").select(
+            "vertex", F.coalesce("__new", "label").alias("label"))
+
+    labels = und.select(
+        F.col("a").alias("vertex"), F.col("a").alias("label")).distinct()
+    return iterate(labels, step, n_iter)
 
 
 def hits(
@@ -508,20 +518,12 @@ def hits(
     replays value-for-value. Returns ``(vertex, hub, authority)``.
 
     Scale shape: two keyed join+sum passes per round (alternating
-    partitioning between the two vertex keys), the two normalizers
-    ride one-row broadcast cross joins, ``localCheckpoint`` per round
-    truncates lineage. Nothing all-pairs, nothing collected."""
+    partitioning between the two vertex keys), each its own
+    materialized half-round; the two normalizers ride one-row broadcast
+    cross joins. Nothing all-pairs, nothing collected."""
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _directed_edges(edges, src, dst)
     n = verts.agg(F.count(F.lit(1)).alias("n"))
     scores = (
         verts.crossJoin(F.broadcast(n))
@@ -530,50 +532,37 @@ def hits(
                 F.round(F.lit(1.0) / F.col("n"), dp).alias("auth"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(n_iter):
+    dec0 = F.lit(0).cast("decimal(18,12)")
+
+    def step(scores: DataFrame, k: int) -> DataFrame:
+        # odd half-rounds update authorities from hubs along u→v, even
+        # ones hubs from authorities against it
+        frm, to, old, new = (
+            ("src", "dst", "hub", "auth") if k % 2 else
+            ("dst", "src", "auth", "hub"))
         # 12-dp decimal snap before every order-free sum (the pagerank
         # portability rule, ADVICE r8 #4): the summed scores are 9-dp
         # rounded doubles, so the snap is exact and the sums engine-free
-        a_raw = (
-            scores.join(e, scores.vertex == e.src)
-            .groupBy("dst").agg(
-                F.sum(F.col("hub").cast("decimal(18,12)")).alias("ar"))
-            .select(F.col("dst").alias("vertex"), "ar")
+        raw = (
+            scores.join(e, scores.vertex == e[frm])
+            .groupBy(to).agg(
+                F.sum(F.col(old).cast("decimal(18,12)")).alias("__raw"))
+            .select(F.col(to).alias("vertex"), "__raw")
         )
-        a_tot = a_raw.agg(F.sum("ar").alias("at"))
-        dec0 = F.lit(0).cast("decimal(18,12)")
-        auth = (
-            scores.select("vertex", "hub")
-            .join(a_raw, "vertex", "left")
-            .crossJoin(F.broadcast(a_tot))
+        tot = raw.agg(F.sum("__raw").alias("__tot"))
+        return (
+            scores.select("vertex", old)
+            .join(raw, "vertex", "left")
+            .crossJoin(F.broadcast(tot))
             .select(
-                "vertex", "hub",
+                "vertex", old,
                 F.round(
-                    F.coalesce(F.col("ar"), dec0).cast("double")
-                    / F.col("at").cast("double"), dp
-                ).alias("auth"))
-            .localCheckpoint(eager=True)
+                    F.coalesce(F.col("__raw"), dec0).cast("double")
+                    / F.col("__tot").cast("double"), dp
+                ).alias(new))
         )
-        h_raw = (
-            auth.join(e, auth.vertex == e.dst)
-            .groupBy("src").agg(
-                F.sum(F.col("auth").cast("decimal(18,12)")).alias("hr"))
-            .select(F.col("src").alias("vertex"), "hr")
-        )
-        h_tot = h_raw.agg(F.sum("hr").alias("ht"))
-        scores = (
-            auth.select("vertex", "auth")
-            .join(h_raw, "vertex", "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "vertex",
-                F.round(
-                    F.coalesce(F.col("hr"), dec0).cast("double")
-                    / F.col("ht").cast("double"), dp
-                ).alias("hub"),
-                "auth")
-            .localCheckpoint(eager=True)
-        )
+
+    scores = iterate(scores, step, 2 * n_iter)
     return scores.select("vertex", "hub", F.col("auth").alias("authority"))
 
 
@@ -599,14 +588,37 @@ def triangle_count(
     one explode-and-count; everything equi-keyed, nothing cartesian.
     Returns ``(vertex, n_triangles)`` for every vertex incident to at
     least one edge (0 rows included via the vertex table)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return _triangles(_canonical_edges(edges, src, dst)).select(
+        "vertex", "n_triangles")
+
+
+def clustering_coefficient(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    dp: int = 6,
+) -> DataFrame:
+    """Local clustering coefficient — ``2·T(v) / (d(v)·(d(v)−1))``,
+    the fraction of a vertex's neighbor pairs that are themselves
+    connected (Watts-Strogatz): the per-vertex ratio form of
+    :func:`triangle_count`, and the standard link-farm/organic-
+    neighborhood discriminator (farms interlink densely; organic
+    hubs do not). Vertices with degree < 2 read 0 (no wedge to
+    close). Exact integer counts, one ``dp``-rounded division.
+    Returns ``(vertex, degree, n_triangles, coefficient)``."""
+    return _triangles(_canonical_edges(edges, src, dst)).select(
+        "vertex", "degree", "n_triangles",
+        F.when(
+            F.col("degree") >= 2,
+            F.round(
+                2.0 * F.col("n_triangles")
+                / (F.col("degree") * (F.col("degree") - 1)), dp))
+        .otherwise(F.lit(0.0)).alias("coefficient"))
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """``(vertex, degree, n_triangles)`` over canonical edges, by the
+    degree orientation :func:`triangle_count` describes."""
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("v"))
         .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
@@ -642,52 +654,13 @@ def triangle_count(
         tris.select(F.explode(F.array("c", "x", "y")).alias("vertex"))
         .groupBy("vertex").agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    verts = deg.select(F.col("v").alias("vertex"))
     return (
-        verts.join(per_vertex, "vertex", "left")
+        deg.select(F.col("v").alias("vertex"), F.col("d").alias("degree"))
+        .join(per_vertex, "vertex", "left")
         .select(
-            "vertex",
+            "vertex", "degree",
             F.coalesce("n_triangles", F.lit(0)).cast("long")
             .alias("n_triangles"))
-    )
-
-
-def clustering_coefficient(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    dp: int = 6,
-) -> DataFrame:
-    """Local clustering coefficient — ``2·T(v) / (d(v)·(d(v)−1))``,
-    the fraction of a vertex's neighbor pairs that are themselves
-    connected (Watts-Strogatz): the per-vertex ratio form of
-    :func:`triangle_count`, and the standard link-farm/organic-
-    neighborhood discriminator (farms interlink densely; organic
-    hubs do not). Vertices with degree < 2 read 0 (no wedge to
-    close). Exact integer counts, one ``dp``-rounded division.
-    Returns ``(vertex, degree, n_triangles, coefficient)``."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.explode(F.array("a", "b")).alias("vertex"))
-        .groupBy("vertex").agg(F.count(F.lit(1)).alias("degree"))
-    )
-    tri = triangle_count(edges)
-    return (
-        deg.join(tri, "vertex")
-        .select(
-            "vertex", "degree", "n_triangles",
-            F.when(
-                F.col("degree") >= 2,
-                F.round(
-                    2.0 * F.col("n_triangles")
-                    / (F.col("degree") * (F.col("degree") - 1)), dp))
-            .otherwise(F.lit(0.0)).alias("coefficient"))
     )
 
 
@@ -709,35 +682,30 @@ def bfs_distances(
     Scale shape: classic frontier expansion — per round ONE join
     (frontier ⋈ edges) + one distinct + one anti-join against the
     settled set (only NEWLY reached vertices survive, so frontiers
-    shrink as the ball saturates); ``localCheckpoint`` per round
-    (the iterative rule). Rounds = ``max_depth``, not diameter —
-    the budget is the caller's radius, never a convergence hope."""
+    shrink as the ball saturates). The frontier of round ``k`` is the
+    ring reached in round ``k - 1``, so the settled table is the whole
+    round state. Rounds = ``max_depth``, not diameter — the budget is
+    the caller's radius, never a convergence hope."""
     if max_depth < 0:
         raise ValueError("max_depth must be >= 0")
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_edges(edges, src, dst)
     seed_col = seeds.columns[0]
     dist = seeds.select(
         F.col(seed_col).alias("vertex"), F.lit(0).alias("dist")
     ).distinct().localCheckpoint(eager=True)
-    frontier = dist
-    for k in range(1, max_depth + 1):
+
+    def step(dist: DataFrame, k: int) -> DataFrame:
+        frontier = dist.filter(F.col("dist") == k - 1)
         nxt = (
             frontier.join(und, frontier.vertex == und.a)
             .select(F.col("b").alias("vertex"),
                     F.lit(k).alias("dist"))
             .distinct()
             .join(dist.select("vertex"), "vertex", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return dist
+        return dist.unionByName(nxt)
+
+    return iterate(dist, step, max_depth)
 
 
 def k_core_peel(
@@ -757,32 +725,25 @@ def k_core_peel(
     reaches fixpoint far earlier and further rounds are no-ops.
 
     Per round: one degree aggregation over the surviving edge set +
-    one semi-join filter — everything keyed, lineage checkpointed.
+    one semi-join filter — everything keyed.
     Returns ``(vertex, degree)`` of the surviving subgraph."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = und
-    for _ in range(rounds):
+
+    def step(e: DataFrame, _k: int) -> DataFrame:
         deg = (
             e.select(F.explode(F.array("a", "b")).alias("v"))
             .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("v")
-        e = (
+        return (
             e.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
         )
+
+    e = iterate(_canonical_edges(edges, src, dst), step, rounds)
     return (
         e.select(F.explode(F.array("a", "b")).alias("vertex"))
         .groupBy("vertex")
@@ -816,26 +777,18 @@ def adamic_adar_links(
     ``max_center_degree`` drops them loudly (the documented recall
     trade every production common-neighbor job makes; celebrity hubs
     contribute ~0 weight anyway)."""
-    import warnings as _w
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_edges(edges, src, dst)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     # degree-1 centers have a single neighbor — no wedge to form, and
     # their 1/ln(1) would divide by zero under ANSI; drop them early
     centers = und.join(deg, "a").filter(F.col("d") >= 2).select(
         F.col("a").alias("z"), F.col("b").alias("n"), "d")
     if max_center_degree is not None:
-        _w.warn(
+        warnings.warn(
             f"adamic_adar_links: centers over degree {max_center_degree} "
             "are dropped — scores on pairs only connected through "
             "super-hubs are lost (each contributes < "
-            f"{1.0 / __import__('math').log(max_center_degree):.3f})")
+            f"{1.0 / math.log(max_center_degree):.3f})")
         centers = centers.filter(F.col("d") <= max_center_degree)
     weight = F.round(1.0 / F.log(F.col("d")), 9).cast("decimal(20,9)")
     w1 = centers.select("z", F.col("n").alias("x"), weight.alias("__w"))
@@ -881,19 +834,11 @@ def jaccard_links(
     standard common-neighbor recall trade — a celebrity hub inflates
     the candidate set quadratically while its Jaccard contribution is
     diluted by the union term anyway)."""
-    import warnings as _w
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_edges(edges, src, dst)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     centers = und.select(F.col("a").alias("z"), F.col("b").alias("n"))
     if max_center_degree is not None:
-        _w.warn(
+        warnings.warn(
             f"jaccard_links: centers over degree {max_center_degree} are "
             "dropped — pairs only connected through super-hubs lose those "
             "intersection contributions")
@@ -952,19 +897,12 @@ def modularity_communities(
     (2m = directed edge-row count, 2m_c = within-community rows,
     d_c = community degree sum), one division at the end, so the
     score replays exactly; Q itself is the plain sum of the rounded
-    contributions. Edges symmetrize/dedup like every operator in this
-    module; vertices missing from ``labels`` keep their own id as a
+    contributions. Edges go through :func:`_symmetric_edges`; vertices missing from ``labels`` keep their own id as a
     singleton label (the LPA initial state). Two keyed joins + two
     grouped counts — nothing all-pairs. Returns
     ``(community, n_vertices, internal_edges, degree_sum,
     contribution)`` ordered by community."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_edges(edges, src, dst)
     lab = labels.select(
         F.col(vertex_col).alias("v"), F.col(label_col).alias("lbl"))
     verts = und.select(F.col("a").alias("v")).distinct()
@@ -1031,8 +969,9 @@ def shortest_paths_weighted(
     set, and is EXACT for the <=k-edge metric (any <=k-edge shortest
     path has a strictly-improving prefix chain, so every link is
     relaxed from a frontier member the round after its prefix settles).
-    ``localCheckpoint`` per round (the iterative-plan rule); integer
-    weights keep the min-merge engine-exact.
+    The round state is the settled table with an ``__new`` flag on the
+    rows the last round improved (the next frontier); integer weights
+    keep the min-merge engine-exact.
 
     ``validate_weights=False`` skips the eager non-negativity probe
     (one early-exit cluster round-trip per call) for hot paths whose
@@ -1067,31 +1006,31 @@ def shortest_paths_weighted(
     )
     seed_col = seeds.columns[0]
     dist = seeds.select(
-        F.col(seed_col).alias("vertex"), F.lit(0).cast("long").alias("dist")
+        F.col(seed_col).alias("vertex"), F.lit(0).cast("long").alias("dist"),
+        F.lit(True).alias("__new"),
     ).distinct().localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_hops):
+
+    def step(dist: DataFrame, _k: int) -> DataFrame:
+        frontier = dist.filter(F.col("__new"))
         cand = (
             frontier.join(und, frontier.vertex == und.a)
             .select(F.col("b").alias("vertex"),
-                    (F.col("dist") + F.col("w")).alias("dist"))
-            .groupBy("vertex").agg(F.min("dist").alias("dist"))
+                    (F.col("dist") + F.col("w")).alias("dist"),
+                    F.lit(None).cast("long").alias("__old"))
         )
-        merged = (
-            dist.unionByName(cand)
-            .groupBy("vertex").agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        # one keyed min over settled and candidate rows keeps the
+        # settled distance beside the new one
+        return (
+            dist.select("vertex", "dist", F.col("dist").alias("__old"))
+            .unionByName(cand)
+            .groupBy("vertex")
+            .agg(F.min("dist").alias("dist"), F.min("__old").alias("__old"))
+            .select("vertex", "dist",
+                    (F.col("__old").isNull()
+                     | (F.col("dist") < F.col("__old"))).alias("__new"))
         )
-        frontier = (
-            merged.join(
-                dist.withColumnRenamed("dist", "__old"), "vertex", "left")
-            .filter(F.col("__old").isNull()
-                    | (F.col("dist") < F.col("__old")))
-            .select("vertex", "dist")
-            .localCheckpoint(eager=True)
-        )
-        dist = merged
-    return dist
+
+    return iterate(dist, step, max_hops).select("vertex", "dist")
 
 
 def bipartite_projection(
@@ -1234,11 +1173,7 @@ def degree_assortativity(
     closed form over the directed-both-ways edge multiset (each
     undirected edge contributes both orientations — the standard
     symmetric estimator)."""
-    e = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    sym = e.unionAll(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).filter(F.col("a") != F.col("b")).distinct()
+    sym = _symmetric_edges(edges, src_col, dst_col)
     deg = sym.groupBy("a").agg(
         F.count(F.lit(1)).cast("long").alias("deg"))
     j = (

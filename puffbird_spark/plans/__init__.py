@@ -1,13 +1,68 @@
 """Plan-inspection helpers: assert the physical plan is the one you'd want
 at 100 TB (filters pushed to the scan, columns pruned, small sides
 broadcast, codegen engaged). Used by tests/test_plans.py and ad-hoc tuning.
+
+Also the round driver of the iterative operators (:func:`iterate`).
 """
 
 from __future__ import annotations
 
 import re
+import warnings
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    n_iter: int,
+    until: Column | None = None,
+) -> DataFrame:
+    """Run ``state = step(state, k)`` for rounds ``k = 1..n_iter`` and
+    return the last state.
+
+    Each round's state is materialized by a local checkpoint, which
+    truncates the lineage: without it the plan doubles every round and
+    the job dies on planning time long before data size matters. The
+    state a round supersedes is released as soon as its successor is
+    materialized. Only states built here are released; the initial
+    ``state`` and any frame ``step`` closes over stay with the caller.
+
+    Without ``until`` every round is an eager checkpoint and all
+    ``n_iter`` rounds run. With ``until`` (a predicate over the new
+    state's rows, true where the round changed something) each round
+    is a LAZY checkpoint plus one count of the matching rows: that one
+    job both materializes the round and returns the convergence signal.
+    The loop stops at the first round that changes nothing and warns
+    when ``n_iter`` rounds end without a fixpoint.
+    """
+    changed = 0
+    for k in range(1, n_iter + 1):
+        nxt = step(state, k).localCheckpoint(eager=until is None)
+        if until is not None:
+            changed = nxt.filter(until).count()
+        if k > 1:
+            _release(state)
+        state = nxt
+        if until is not None and changed == 0:
+            break
+    if changed:
+        warnings.warn(
+            f"no fixpoint after {n_iter} rounds ({changed} rows still "
+            "changing): the result is not converged; raise the round "
+            "budget",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return state
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Unpersist the RDD behind a frame returned by ``localCheckpoint``
+    (its logical plan is the ``LogicalRDD`` over that RDD)."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -9,6 +9,10 @@ session concept; this module is the Spark-native execution envelope:
   oracles (DuckDB) bit-for-bit.
 - Arrow enabled for the few Pandas-UDF escape hatches (variant explosion,
   embedding kernels); everything else stays JVM-side.
+- Python workers fork from ``puffbird_spark._worker_daemon``, which stops
+  every task from re-reading ``pyspark.zip``'s directory on CPython < 3.13
+  (about a second per task); the package's parent directory goes on the
+  workers' ``PYTHONPATH`` so the daemon imports from any working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -68,6 +73,8 @@ def get_spark(
         # --- python boundary: Arrow batches, never per-row pickling -------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.daemon.module", "puffbird_spark._worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # --- scan efficiency ----------------------------------------------
         # nanosecond parquet timestamps (events table) surface as long —
         # sources.load_table converts them to timestamp_ntz at microsecond

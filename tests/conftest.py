@@ -27,3 +27,23 @@ def sf_dir():
 
 def load(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+_PARITY_FILES = ("test_reference_parity.py", "test_tutorial_parity.py")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line on the reference-parity suites: they skip when no
+    reference checkout is importable, which would otherwise go unseen."""
+    seen = {"ran": set(), "skipped": set()}
+    for outcome, key in (("passed", "ran"), ("failed", "ran"),
+                         ("error", "ran"), ("skipped", "skipped")):
+        for rep in terminalreporter.stats.get(outcome, []):
+            nodeid = getattr(rep, "nodeid", "")
+            if nodeid.split("::")[0].endswith(_PARITY_FILES):
+                seen[key].add(nodeid)
+    ran, skipped = len(seen["ran"]), len(seen["skipped"] - seen["ran"])
+    if ran or skipped:
+        terminalreporter.write_line(
+            f"reference parity ({', '.join(_PARITY_FILES)}): "
+            f"{ran} ran, {skipped} skipped")

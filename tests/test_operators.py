@@ -4313,6 +4313,39 @@ def test_hits_hub_authority_separation_and_replay(spark):
     assert out == {v: (hub[v], auth[v]) for v in verts}
 
 
+def test_graph_rounds_do_not_leak_checkpoints(spark):
+    """The round driver releases every superseded round: the RDDs an
+    iterative operator leaves pinned after ``collect()`` do not grow
+    with its round budget (setup frames and the final round remain)."""
+    from puffbird_spark.operators.graph import (
+        bfs_distances, hits, label_propagation, pagerank)
+
+    jsc = spark.sparkContext._jsc
+    g = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 12) for i in range(12)] + [(0, 5), (5, 9)],
+        "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "vertex long")
+
+    def pinned(run):
+        """RDDs newly pinned by ``run().collect()``, released after."""
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        run().collect()
+        new = {k: r for k, r in jsc.getPersistentRDDs().items()
+               if k not in before}
+        for rdd in new.values():
+            rdd.unpersist(True)
+        return len(new)
+
+    ops = {
+        "pagerank": lambda n: pagerank(g, n_iter=n),
+        "label_propagation": lambda n: label_propagation(g, n_iter=n),
+        "hits": lambda n: hits(g, n_iter=n),
+        "bfs_distances": lambda n: bfs_distances(g, seeds, max_depth=n),
+    }
+    for name, op in ops.items():
+        assert pinned(lambda: op(2)) == pinned(lambda: op(8)), name
+
+
 def test_ivf_pq_full_probe_high_overfetch_is_near_exact(spark):
     """IVF+PQ sanity: probing ALL cells with a large overfetch must
     recover (nearly) the exact top-k — cells stop filtering and the
