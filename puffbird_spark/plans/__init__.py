@@ -175,6 +175,13 @@ def codegen_stage_count(df: DataFrame) -> int:
     return len(set(ids))
 
 
+def codegen_compiles(spark) -> int:
+    """Number of classes Janino has compiled in this JVM so far."""
+    jvm = spark.sparkContext._jvm  # type: ignore[attr-defined]
+    return int(jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())
+
+
 def fence(df: DataFrame, keys: list[str], **exprs) -> DataFrame:
     """Materialize expensive expressions as bound attributes behind a
     one-element explode.

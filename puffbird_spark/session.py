@@ -13,6 +13,9 @@ session concept; this module is the Spark-native execution envelope:
   every task from re-reading ``pyspark.zip``'s directory on CPython < 3.13
   (about a second per task); the package's parent directory goes on the
   workers' ``PYTHONPATH`` so the daemon imports from any working directory.
+- The compiled-class cache holds the whole working set of generated code,
+  so a query or pass that repeats an earlier plan shape reuses its classes
+  instead of recompiling them with Janino.
 """
 
 from __future__ import annotations
@@ -70,6 +73,11 @@ def get_spark(
         # --- determinism & oracle parity ----------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # --- generated code: compile each class once ----------------------
+        # working set measured at 148-153 classes per relational_scan pass,
+        # 208-220 per llm_iterative pass; static, so only effective when the
+        # session is created
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # --- python boundary: Arrow batches, never per-row pickling -------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

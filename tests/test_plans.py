@@ -750,3 +750,22 @@ def test_acf_entity_windows_are_keyed(q):
     the entity key."""
     df = q("timeseries_acf_entity")
     assert P.unpartitioned_window_orders(df) == []
+
+
+_RELATIONAL_GATES = (
+    "q1_pricing_summary", "q3_shipping_priority", "q6_forecast_revenue",
+    "q18_large_volume_customers", "window_rank", "engine_to_long_roundtrip",
+    "explode_tokens", "merge_upsert_customers")
+
+
+def test_rerun_reuses_generated_code(spark, q):
+    # Spark's default compiled-class cache (100 entries in 4 LRU segments)
+    # is smaller than these gates' working set: with it, the rerun
+    # recompiles dozens of the classes the first run compiled.
+    for name in _RELATIONAL_GATES:
+        q(name).toPandas()
+    before = P.codegen_compiles(spark)
+    for name in _RELATIONAL_GATES:
+        q(name).toPandas()
+    recompiled = P.codegen_compiles(spark) - before
+    assert recompiled == 0
