@@ -93,7 +93,6 @@ def pack_token_budget(
     seq_len: int = 2048,
     seed: str = "budget",
     default_budget: int = 0,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """FUSED mixture + packing: fill each domain's token budget in
     deterministic hash order AND lay the selected documents into
@@ -115,29 +114,18 @@ def pack_token_budget(
     last_pack / n_packs_spanned`` (spanning semantics of
     :func:`pack_spanning`, pack identity = (domain, pack)).
     """
-    from .splits import grouped_prefix_sum, hash_draw
+    from .splits import _domain_budget, _draw_prefix_sum
 
     # n_tokens > 0 matches pack_spanning's layout filter: zero-token
     # docs occupy no context and are excluded here too, so the fused
     # output differs from token_budget_sample (which keeps them — they
     # consume no budget) exactly on empty documents.
-    draw_name = "__pb_draw"
     d = docs.select(
         F.col(key), F.col(domain), F.col(tokens_col).alias("n_tokens")
-    ).filter(F.col("n_tokens") > 0).withColumn(
-        draw_name, hash_draw(F.col(key), seed))
-    d = grouped_prefix_sum(
-        d, [domain], [draw_name, key], "n_tokens", "cum_tokens",
-        checkpoint=checkpoint,
-    )
-    budget = None
-    for name, b in dict(budgets).items():
-        cond = F.col(domain) == F.lit(name)
-        budget = (F.when(cond, F.lit(int(b))) if budget is None
-                  else budget.when(cond, F.lit(int(b))))
-    budget = (F.lit(int(default_budget)) if budget is None
-              else budget.otherwise(F.lit(int(default_budget))))
-    kept = d.filter(F.col("cum_tokens") <= budget).drop(draw_name)
+    ).filter(F.col("n_tokens") > 0)
+    d = _draw_prefix_sum(d, key, seed, [domain], "n_tokens", "cum_tokens")
+    kept = d.filter(
+        F.col("cum_tokens") <= _domain_budget(domain, budgets, default_budget))
     start = (F.col("cum_tokens") - F.col("n_tokens")).alias("start_offset")
     first = F.floor(F.col("start_offset") / seq_len)
     last = F.floor((F.col("cum_tokens") - 1) / seq_len)

@@ -37,8 +37,9 @@ Boundary semantics (round-3 ADVICE items, all fixed here):
   the NUL-byte sentinel), ``('a', NULL)`` never aliases ``('a',)``, and
   delimiter characters inside values can't merge strata.
 - ``shuffle_order`` no longer funnels the dataset through one task: the
-  rank is computed as per-range-partition row_number + broadcast offsets
-  (two balanced exchanges, no unpartitioned window over the data).
+  rank is computed as per-slice row_number + broadcast offsets, the slice
+  being a monotone bucket of the draw (two balanced exchanges, no
+  unpartitioned window over the data, nothing materialized).
 
 Reference parity note: neuralsignal/puffbird has no sampling surface at
 all (frame.py covers transform only); this module is part of the EXT
@@ -186,7 +187,6 @@ def shuffle_order(
     seed: str = "shuffle",
     rank_col: str = "shuffle_rank",
     num_partitions: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Global deterministic shuffle: a total order that is uniform-random
     with respect to content but reproducible across runs.
@@ -199,29 +199,23 @@ def shuffle_order(
     unpartitioned ``Window.orderBy``, i.e. the whole dataset through one
     task): two balanced exchanges, no driver funnel —
 
-    1. ``repartitionByRange(draw, key)`` — Spark's sampled range exchange;
-       partition i holds a contiguous, non-overlapping slice of the total
-       order.
-    2. per-partition ``row_number`` (window partitioned by the range
-       partition id — each window group IS one balanced partition), plus
-    3. per-partition counts (one row per partition — a few hundred rows at
-       any scale) rolled into broadcast offsets and added to the local
-       rank. The tiny unpartitioned window runs over #partitions rows,
-       never over data.
+    1. slice id = :func:`draw_bucket` of the draw (``num_partitions``
+       uniform slices); slice i holds a contiguous, non-overlapping range
+       of the total order.
+    2. per-slice ``row_number`` (window partitioned by the slice id), plus
+    3. per-slice counts (one row per slice — a few hundred rows at any
+       scale) rolled into broadcast offsets and added to the local rank.
+       The tiny unpartitioned window runs over #slices rows, never over
+       data.
 
-    The resulting rank is independent of where the sampled range bounds
-    land, so it is bit-stable across executor counts and layouts.
-    (Implemented as the degenerate single-group case of
-    :func:`grouped_prefix_sum` with value 1 — rank == prefix count.)
+    The rank is independent of the slice count, so it is bit-stable
+    across executor counts and layouts. (Implemented as the degenerate
+    single-group case of :func:`grouped_prefix_sum` with value 1 — rank
+    == prefix count.)
     """
-    draw_name = "__pb_draw"
-    d = df.withColumn(draw_name, hash_draw(F.col(key), seed))
-    d = grouped_prefix_sum(
-        d, [], [draw_name, key], F.lit(1), rank_col,
-        num_partitions=num_partitions,
-        checkpoint=checkpoint,
-    )
-    return d.withColumn(rank_col, F.col(rank_col).cast("long")).drop(draw_name)
+    d = _draw_prefix_sum(df, key, seed, [], F.lit(1), rank_col,
+                         num_partitions)
+    return d.withColumn(rank_col, F.col(rank_col).cast("long"))
 
 
 def stratum_salt(strata: Sequence[str]) -> Column:
@@ -268,7 +262,7 @@ def draw_bucket(draw: Column, n_buckets: int) -> Column:
     ``_PREFIX_LEN``-char lowercase-hex draw: the first 4 nibbles scale to
     the bucket range, so ``bucket(a) <= bucket(b)`` whenever ``a <= b``
     (monotone in the draw) and buckets are uniform because the draw is.
-    This is what lets :func:`grouped_prefix_sum` run ``checkpoint=False``:
+    This is the slice id of every draw-ordered :func:`grouped_prefix_sum`:
     a pure FUNCTION OF THE DATA can be recomputed identically by every
     plan branch, unlike ``spark_partition_id()`` after a sampled range
     exchange."""
@@ -386,7 +380,6 @@ def grouped_prefix_sum(
     value_col: str | Column,
     out_col: str,
     num_partitions: int | None = None,
-    checkpoint: bool = True,
     bucket: Column | None = None,
 ) -> DataFrame:
     """Running (inclusive) sum of ``value_col`` per group in ``order_cols``
@@ -405,32 +398,28 @@ def grouped_prefix_sum(
     unique key as tiebreaker) — ties crossing a slice boundary would
     otherwise make the prefix sum nondeterministic.
 
-    Two ways to derive the slice id ``pid``, bit-equal under test:
+    The slice id ``pid`` follows the order key:
 
-    - ``checkpoint=True`` (default): range-partition on (group, order),
-      stamp ``spark_partition_id()``, and ``localCheckpoint(eager=True)``
-      to freeze the layout. The checkpoint exists because BOTH the main
-      branch and the totals branch consume the exchange and Spark does
-      not reliably reuse it — re-sampled range bounds would re-stamp
-      pids, so offsets from one layout could join against pids of
-      another (the union-of-same-parent trap, NOTES r3). SCALE TRADE,
-      stated plainly: (a) building the DataFrame triggers a Spark job at
-      plan-construction time (the checkpoint is eager), and (b) the FULL
-      input materializes on executor block storage; localCheckpoint
-      blocks are executor-local and non-fault-tolerant, so on a real
-      cluster an executor loss makes downstream stages unrecoverable
-      (round-4 ADVICE) — acceptable for job-scoped batch stages, wrong
-      for long-lived or preemptible clusters.
-    - ``checkpoint=False``: derive pid from ``bucket`` — a Column that
-      must be a monotone non-decreasing function of the order key within
-      every group. When ``bucket`` is omitted it defaults to
-      :func:`draw_bucket` over the FIRST of ``order_cols``, which must
-      then be a ``_PREFIX_LEN``-char lowercase-hex draw (true for every
-      consumer in this module — they all lead with ``hash_draw``).
-      Nothing materializes and an executor loss just recomputes lineage;
-      costs one extra scan of the input (the totals branch re-reads the
-      source) and the slice balance rides on the bucket's uniformity
-      rather than on sampled range bounds.
+    - a hash-draw key gets an analytic monotone bucket: the caller passes
+      ``bucket``, a Column that is a non-decreasing function of the order
+      key within every group (:func:`draw_bucket` of the draw, via
+      :func:`_draw_prefix_sum`). Nothing materializes and an executor loss
+      just recomputes lineage; the totals branch re-reads the source, and
+      slice balance rides on the draw's uniformity.
+    - any other key (``bucket`` omitted) gets sampled range bounds frozen
+      by a checkpoint: range-partition on (group, order) into
+      ``num_partitions`` (default: the session's shuffle partitions),
+      stamp ``spark_partition_id()`` and ``localCheckpoint(eager=True)``.
+      Sampled bounds are what keep ties and skew of an arbitrary key
+      balanced; the checkpoint exists because BOTH the main branch and the
+      totals branch consume the exchange and Spark does not reliably
+      reuse it — re-sampled bounds would re-stamp pids, so offsets from
+      one layout could join against pids of another (the
+      union-of-same-parent trap, NOTES r3). SCALE TRADE: building the
+      DataFrame runs a Spark job (the checkpoint is eager), and the FULL
+      input materializes on executor-local, non-fault-tolerant block
+      storage, so an executor loss makes downstream stages unrecoverable
+      (round-4 ADVICE).
     """
     from pyspark.sql import Window
 
@@ -440,22 +429,17 @@ def grouped_prefix_sum(
     tot = "__pb_tot"
     off = "__pb_off"
     v = F.col(value_col) if isinstance(value_col, str) else value_col
-    n_part = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"
-    )
-    if checkpoint:
-        d = df.withColumn(val, v).repartitionByRange(
+    d = df.withColumn(val, v)
+    if bucket is None:
+        n_part = num_partitions or df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "200")
+        d = d.repartitionByRange(
             int(n_part), *[F.col(c) for c in [*group_cols, *order_cols]]
         )
         d = (d.withColumn(pid, F.spark_partition_id())
              .localCheckpoint(eager=True))
     else:
-        if bucket is None:
-            # clamp to draw_bucket's 4-nibble ceiling: >65k-partition
-            # clusters get 65k uniform buckets (AQE can split further)
-            bucket = draw_bucket(
-                F.col(order_cols[0]), min(int(n_part), 65536))
-        d = df.withColumn(val, v).withColumn(pid, bucket.cast("long"))
+        d = d.withColumn(pid, bucket.cast("long"))
     local_w = Window.partitionBy(pid, *group_cols).orderBy(*order_cols)
     d = d.withColumn(local, F.sum(val).over(local_w))
     totals = d.groupBy(pid, *group_cols).agg(F.sum(val).alias(tot))
@@ -474,6 +458,29 @@ def grouped_prefix_sum(
     )
 
 
+def _draw_prefix_sum(
+    df: DataFrame,
+    key: str,
+    seed: str,
+    group_cols: Sequence[str],
+    value_col: str | Column,
+    out_col: str,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """:func:`grouped_prefix_sum` in ``(hash_draw(key, seed), key)`` order,
+    sliced by :func:`draw_bucket` of the draw into ``num_partitions``
+    buckets (default: the session's shuffle partitions), capped at
+    draw_bucket's 65536 — beyond that AQE can split further."""
+    draw = "__pb_draw"
+    n = int(num_partitions or df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions", "200"))
+    d = df.withColumn(draw, hash_draw(F.col(key), seed))
+    return grouped_prefix_sum(
+        d, group_cols, [draw, key], value_col, out_col,
+        bucket=draw_bucket(F.col(draw), min(n, 65536)),
+    ).drop(draw)
+
+
 def token_budget_sample(
     df: DataFrame,
     key: str,
@@ -483,7 +490,6 @@ def token_budget_sample(
     seed: str = "budget",
     default_budget: int = 0,
     cum_col: str = "cum_tokens",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-domain TOKEN budgets (the unit a pretraining mixture is actually
     specified in — "600B tokens of web, 50B of code"): take each domain's
@@ -500,21 +506,16 @@ def token_budget_sample(
     plus a scan-local threshold filter. Emits ``cum_col`` (the inclusive
     running token total) so the selection is oracle-checkable row by row.
     """
-    draw_name = "__pb_draw"
-    d = df.withColumn(draw_name, hash_draw(F.col(key), seed))
-    d = grouped_prefix_sum(
-        d, [domain], [draw_name, key], tokens_col, cum_col,
-        checkpoint=checkpoint,
-    )
-    budget = _domain_budget(domain, budgets, default_budget)
-    return d.filter(F.col(cum_col) <= budget).drop(draw_name)
+    d = _draw_prefix_sum(df, key, seed, [domain], tokens_col, cum_col)
+    return d.filter(
+        F.col(cum_col) <= _domain_budget(domain, budgets, default_budget))
 
 
 def _domain_budget(
     domain: str, budgets: Mapping[str, int], default_budget: int
 ) -> Column:
     """Per-domain budget as one CASE column (shared by the uniform and
-    weighted token-budget samplers)."""
+    weighted token-budget samplers and ``packing.pack_token_budget``)."""
     budget: Column | None = None
     for name, b in budgets.items():
         cond = F.col(domain) == F.lit(name)
@@ -534,7 +535,6 @@ def token_budget_weighted(
     seed: str = "wbudget",
     default_budget: int = 0,
     cum_col: str = "cum_tokens",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-domain token budgets filled in WEIGHTED preference order — the
     fusion of :func:`token_budget_sample` (budgets in tokens, the unit a
@@ -553,20 +553,10 @@ def token_budget_weighted(
     Cost shape: ONE grouped prefix-sum over the ES order (two balanced
     exchanges via :func:`grouped_prefix_sum`; a 90%-of-corpus domain never
     funnels through one task) plus a scan-local CASE filter. Emits
-    ``cum_col`` so the selection is oracle-checkable row by row.
-
-    ``checkpoint=False`` is rejected here: the ES order key is an
-    unbounded double, not a hex draw, so :func:`grouped_prefix_sum`'s
-    default :func:`draw_bucket` derivation does not apply. Lineage-safe
-    variants need a caller-derived monotone bucket over the ES key
-    (open question; the checkpointed path is correct at any scale, with
-    the executor-loss caveat documented on :func:`grouped_prefix_sum`).
+    ``cum_col`` so the selection is oracle-checkable row by row. The ES
+    key is an unbounded double, not a hex draw, so the prefix sum takes
+    the sampled-range path (see :func:`grouped_prefix_sum`).
     """
-    if not checkpoint:
-        raise ValueError(
-            "token_budget_weighted requires checkpoint=True (no monotone "
-            "default bucket exists for the ES order key)"
-        )
     w = F.col(weight_col).cast("double")
     neg = "__pb_es_neg"
     d = (
@@ -575,10 +565,7 @@ def token_budget_weighted(
         # prefix-sum order (u in (0,1) => ln(u) < 0 => -ln(u)/w > 0)
         .withColumn(neg, -(F.log(uniform_draw(F.col(key), seed)) / w))
     )
-    d = grouped_prefix_sum(
-        d, [domain], [neg, key], tokens_col, cum_col,
-        checkpoint=checkpoint,
-    )
+    d = grouped_prefix_sum(d, [domain], [neg, key], tokens_col, cum_col)
     budget = _domain_budget(domain, budgets, default_budget)
     return d.filter(F.col(cum_col) <= budget).drop(neg)
 
@@ -714,7 +701,6 @@ def length_bucket_batches(
     bucket_col: str = "bucket",
     batch_col: str = "batch_idx",
     pos_col: str = "pos_in_batch",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Length-bucketed batch assignment: group sequences of similar length
     so training batches waste minimal padding, then deal each bucket into
@@ -733,15 +719,9 @@ def length_bucket_batches(
         bucket = F.when(
             F.col(length_col) <= F.lit(int(edges[i])), F.lit(i)
         ).otherwise(bucket)
-    draw_name = "__pb_draw"
     rank_name = "__pb_rank"
-    d = df.withColumn(bucket_col, bucket).withColumn(
-        draw_name, hash_draw(F.col(key), seed)
-    )
-    d = grouped_prefix_sum(
-        d, [bucket_col], [draw_name, key], F.lit(1), rank_name,
-        checkpoint=checkpoint,
-    )
+    d = _draw_prefix_sum(df.withColumn(bucket_col, bucket), key, seed,
+                         [bucket_col], F.lit(1), rank_name)
     return (
         d.withColumn(
             batch_col, ((F.col(rank_name) - 1) / batch_size).cast("long")
@@ -749,7 +729,7 @@ def length_bucket_batches(
         .withColumn(
             pos_col, ((F.col(rank_name) - 1) % batch_size).cast("long")
         )
-        .drop(draw_name, rank_name)
+        .drop(rank_name)
     )
 
 

@@ -16,6 +16,10 @@ session concept; this module is the Spark-native execution envelope:
 - The compiled-class cache holds the whole working set of generated code,
   so a query or pass that repeats an earlier plan shape reuses its classes
   instead of recompiling them with Janino.
+- Streaming checkpoints go through Hadoop's ``FileSystem`` rather than
+  ``FileContext``: without Hadoop's native library, ``FileContext``
+  forks a ``readlink`` on both ends of every rename (and a ``chmod`` per
+  created file), which dominated a small stateful stream's batch time.
 """
 
 from __future__ import annotations
@@ -78,6 +82,15 @@ def get_spark(
         # 208-220 per llm_iterative pass; static, so only effective when the
         # session is created
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # --- streaming checkpoints: no shell fork per file ----------------
+        # without Hadoop's native library, FileContext's local fs forks
+        # readlink on both ends of every rename and chmod per created file:
+        # 496 process starts (328 readlink, 168 chmod) per llm_iterative
+        # stream replay at ~4.8 ms each. FileSystem.rename is the commit,
+        # and it is atomic on HDFS and on POSIX local disks.
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
         # --- python boundary: Arrow batches, never per-row pickling -------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -9,14 +9,22 @@ pass ``drop_empty=True``; the 16 legacy sites below (all in
 as benign for its fixture — VERDICT r11 What's-wrong #3 / r12 #2) are
 FROZEN by per-file count. Converting a legacy site lowers the count
 (tighten the freeze then); adding a bare site anywhere fails here.
+
+Raw materialization calls (``localCheckpoint``, ``checkpoint``,
+``persist``, ``cache``) outside ``puffbird_spark/plans/`` are frozen the
+same way, per file: they pin blocks nothing releases, and ROADMAP
+direction 2 moves them behind one scoped helper. Removing a call lowers
+the count (tighten the freeze then); adding one anywhere fails here.
 """
 
+import ast
 import glob
 import os
 import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-QUERIES_DIR = os.path.join(REPO, "puffbird_spark", "queries")
+PACKAGE_DIR = os.path.join(REPO, "puffbird_spark")
+QUERIES_DIR = os.path.join(PACKAGE_DIR, "queries")
 
 # frozen legacy allowlist: basename -> number of bare tokens() calls
 _LEGACY_BARE_TOKENS = {"llm_q.py": 16}
@@ -94,3 +102,55 @@ def test_legacy_allowlist_not_stale():
         assert n == allowed, (
             f"{name}: allowlist says {allowed} legacy sites, found {n} — "
             f"update _LEGACY_BARE_TOKENS to match")
+
+
+# frozen raw materialization calls: path under puffbird_spark/ -> count
+_MATERIALIZE_CALLS = ("localCheckpoint", "checkpoint", "persist", "cache")
+_LEGACY_MATERIALIZE = {
+    "operators/bpe.py": 2,
+    "operators/clustering.py": 3,
+    "operators/dedup.py": 3,
+    "operators/drift.py": 4,
+    "operators/evaluation.py": 4,
+    "operators/graph.py": 13,
+    "operators/lm.py": 1,
+    "operators/profile.py": 2,
+    "operators/retrieval.py": 2,
+    "operators/similarity.py": 3,
+    "operators/sketch.py": 3,
+    "operators/splits.py": 1,
+    "operators/unigram.py": 1,
+    "queries/llm_q.py": 2,
+    "queries/relational.py": 3,
+    "queries/sources_q.py": 2,
+    "queries/streaming_q.py": 6,
+}
+
+
+def _materialize_counts():
+    """Per-file count of ``x.<call>(...)`` nodes for the calls in
+    ``_MATERIALIZE_CALLS``, over the package outside ``plans/``."""
+    counts = {}
+    for path in sorted(glob.glob(os.path.join(PACKAGE_DIR, "**", "*.py"),
+                                 recursive=True)):
+        rel = os.path.relpath(path, PACKAGE_DIR).replace(os.sep, "/")
+        if rel.startswith("plans/"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        n = sum(1 for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _MATERIALIZE_CALLS)
+        if n:
+            counts[rel] = n
+    return counts
+
+
+def test_raw_materialization_calls_frozen():
+    """No file gains a raw checkpoint/persist/cache call, and the
+    freeze matches reality so a removed call cannot quietly re-grow."""
+    assert _materialize_counts() == _LEGACY_MATERIALIZE, (
+        "raw localCheckpoint/checkpoint/persist/cache calls changed — "
+        "new code must not add one; after removing one, lower "
+        "_LEGACY_MATERIALIZE to match")

@@ -81,65 +81,81 @@ def test_pack_spanning_invariants(spark):
 
 
 def test_pack_token_budget_fused_invariants(spark, sf_dir):
-    """The fused mixture+packing pass must (a) equal token_budget_sample
-    on membership and running totals — the prefix-closure argument made
+    """The fused mixture+packing pass must (a) equal both
+    token_budget_sample and the budget filter over grouped_prefix_sum's
+    range path (no slice-id column: range partition + checkpoint) on
+    membership and running totals — the prefix-closure argument made
     concrete — and (b) lay the kept stream out contiguously per domain
-    with exact spanning-pack arithmetic, in both checkpoint modes.
+    with exact spanning-pack arithmetic.
 
-    The comparison filters the sample to n_tokens > 0: the fused packer
-    excludes zero-token docs (they occupy no context — pack_spanning's
-    filter), while token_budget_sample keeps them (they consume no
-    budget); an injected empty doc pins that asymmetry."""
+    Both references filter to n_tokens > 0: the fused packer excludes
+    zero-token docs (they occupy no context — pack_spanning's filter),
+    while token_budget_sample keeps them (they consume no budget); an
+    injected empty doc pins that asymmetry."""
     from conftest import load
     from puffbird_spark.operators.packing import pack_token_budget
-    from puffbird_spark.operators.splits import token_budget_sample
+    from puffbird_spark.operators.splits import (
+        grouped_prefix_sum, hash_draw, token_budget_sample)
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars").unionByName(
         spark.createDataFrame(
             [(990001, "src0", 0)], "doc_id long, source string, n_chars int"))
     budgets = {"src0": 4000, "src1": 2500}
+    budget = (F.when(F.col("source") == "src0", 4000)
+              .when(F.col("source") == "src1", 2500).otherwise(1500))
+    ref = grouped_prefix_sum(
+        docs.filter(F.col("n_chars") > 0).withColumn(
+            "draw", hash_draw(F.col("doc_id"), "pack")),
+        ["source"], ["draw", "doc_id"], "n_chars", "cum_tokens",
+    ).filter(F.col("cum_tokens") <= budget)
     sample = token_budget_sample(
         docs, "doc_id", "source", "n_chars", budgets, seed="pack",
         default_budget=1500).filter(F.col("n_chars") > 0)
-    for cp in (True, False):
-        fused = pack_token_budget(
-            docs, "doc_id", "source", "n_chars", budgets, seq_len=512,
-            seed="pack", default_budget=1500, checkpoint=cp)
+    fused = pack_token_budget(
+        docs, "doc_id", "source", "n_chars", budgets, seq_len=512,
+        seed="pack", default_budget=1500)
+    for other in (ref, sample):
         j = fused.select("doc_id", "cum_tokens").join(
-            sample.select("doc_id",
-                          F.col("cum_tokens").alias("c2")), "doc_id")
-        assert fused.count() == sample.count() == j.count()
+            other.select("doc_id", F.col("cum_tokens").alias("c2")),
+            "doc_id")
+        assert fused.count() == other.count() == j.count()
         assert j.filter(F.col("cum_tokens") != F.col("c2")).count() == 0
-        # contiguous layout per domain + exact span arithmetic
-        by_domain = {}
-        for r in fused.collect():
-            by_domain.setdefault(r["source"], []).append(r)
-        for src, rows in by_domain.items():
-            rows.sort(key=lambda r: r["cum_tokens"])
-            offset = 0
-            for r in rows:
-                assert r["start_offset"] == offset, (cp, src)
-                assert r["first_pack"] == offset // 512
-                assert r["last_pack"] == (offset + r["n_tokens"] - 1) // 512
-                assert r["n_packs_spanned"] == (
-                    r["last_pack"] - r["first_pack"] + 1)
-                offset += r["n_tokens"]
+    # contiguous layout per domain + exact span arithmetic
+    by_domain = {}
+    for r in fused.collect():
+        by_domain.setdefault(r["source"], []).append(r)
+    for src, rows in by_domain.items():
+        rows.sort(key=lambda r: r["cum_tokens"])
+        offset = 0
+        for r in rows:
+            assert r["start_offset"] == offset, src
+            assert r["first_pack"] == offset // 512
+            assert r["last_pack"] == (offset + r["n_tokens"] - 1) // 512
+            assert r["n_packs_spanned"] == (
+                r["last_pack"] - r["first_pack"] + 1)
+            offset += r["n_tokens"]
 
 
 def test_pack_token_budget_no_domain_funnel(spark, sf_dir):
-    """Plan contract for the fused packer: the data-bearing window is
-    partitioned by the slice id (never by domain alone — a dominant
-    domain must not become one task), in BOTH checkpoint modes."""
+    """Plan contract for the fused packer and for the range path of the
+    prefix sum it rides on: the data-bearing window is partitioned by
+    the slice id (never by domain alone — a dominant domain must not
+    become one task)."""
     from conftest import load
     from puffbird_spark.operators.packing import pack_token_budget
+    from puffbird_spark.operators.splits import grouped_prefix_sum
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars")
-    for cp in (True, False):
-        out = pack_token_budget(
+    outs = [
+        pack_token_budget(
             docs, "doc_id", "source", "n_chars", {"src0": 4000},
-            seq_len=512, default_budget=1500, checkpoint=cp)
+            seq_len=512, default_budget=1500),
+        grouped_prefix_sum(
+            docs, ["source"], ["doc_id"], "n_chars", "cum_tokens"),
+    ]
+    for out in outs:
         phys = out._jdf.queryExecution().executedPlan().toString()
         data_windows = [ln for ln in phys.splitlines()
                         if "Window" in ln and "__pb_local" in ln]

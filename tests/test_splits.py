@@ -273,9 +273,7 @@ def test_token_budget_weighted_prefix_and_weights(spark, sf_dir):
     """Weighted token budget: budget never exceeded; the kept set is a
     prefix of the ES (weighted-preference) order — every dropped doc's
     ES-order cumulative total exceeds the budget; NULL / non-positive
-    weights are dropped; checkpoint=False is rejected."""
-    import pytest
-
+    weights are dropped."""
     from puffbird_spark.operators.splits import (
         token_budget_weighted, uniform_draw)
 
@@ -311,10 +309,6 @@ def test_token_budget_weighted_prefix_and_weights(spark, sf_dir):
         bad, "doc_id", "source", "n_chars", "quality",
         {"src0": 10**9}, default_budget=10**9)
     assert out.filter(F.col("doc_id") % 3 != 2).count() == 0
-    with pytest.raises(ValueError, match="checkpoint"):
-        token_budget_weighted(
-            docs, "doc_id", "source", "n_chars", "quality", budgets,
-            checkpoint=False)
 
 
 def test_length_bucket_batches_shape(spark, sf_dir):
@@ -347,9 +341,20 @@ def test_length_bucket_batches_shape(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ #
-# checkpoint=False: the hash-bucket pid derivation (round-5, VERDICT
-# r4 #4) — no materialization, fault-tolerant lineage, bit-equal
+# draw-ordered prefix sums: the hash-bucket pid derivation (round-5,
+# VERDICT r4 #4) — no materialization, fault-tolerant lineage, bit-equal
+# to the sampled-range path (grouped_prefix_sum without a bucket)
 # ------------------------------------------------------------------ #
+
+
+def _range_prefix_sum(df, key, seed, group_cols, value, out, **kw):
+    """Reference: the same prefix sum over (draw, key) on the range-
+    partition + checkpoint path of grouped_prefix_sum."""
+    from puffbird_spark.operators.splits import grouped_prefix_sum
+
+    d = df.withColumn("__draw", hash_draw(F.col(key), seed))
+    return grouped_prefix_sum(
+        d, group_cols, ["__draw", key], value, out, **kw).drop("__draw")
 
 
 def test_draw_bucket_bounds_and_monotonicity(spark):
@@ -378,15 +383,15 @@ def test_draw_bucket_bounds_and_monotonicity(spark):
 
 
 def test_shuffle_order_checkpoint_free_bit_equal(spark, sf_dir):
-    """The checkpoint=False path (pid = draw_bucket, pure function of the
-    data — nothing materialized on executors) must reproduce the
-    checkpointed rank bit-for-bit, and its plan must contain no
-    checkpoint scan."""
+    """shuffle_order (pid = draw_bucket, pure function of the data —
+    nothing materialized on executors) must reproduce the range-path
+    rank bit-for-bit, and its plan must contain no checkpoint scan."""
     orders = load(spark, sf_dir, "orders").select("o_orderkey")
-    a = shuffle_order(orders, "o_orderkey", num_partitions=8)
-    b = shuffle_order(orders, "o_orderkey", num_partitions=8,
-                      checkpoint=False)
+    a = _range_prefix_sum(orders, "o_orderkey", "shuffle", [], F.lit(1),
+                          "shuffle_rank", num_partitions=8)
+    b = shuffle_order(orders, "o_orderkey", num_partitions=8)
     diff = a.join(b.withColumnRenamed("shuffle_rank", "r2"), "o_orderkey")
+    assert diff.count() == orders.count()
     assert diff.filter(F.col("shuffle_rank") != F.col("r2")).count() == 0
     # lineage stays logical: no ExistingRDD/LogicalRDD checkpoint scan
     logical = b._jdf.queryExecution().optimizedPlan().toString()
@@ -399,32 +404,86 @@ def test_token_budget_checkpoint_free_bit_equal(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars")
     budgets = {"src0": 4000, "src1": 2500}
-    a = token_budget_sample(
-        docs, "doc_id", "source", "n_chars", budgets, default_budget=1500)
+    ref = _range_prefix_sum(docs, "doc_id", "budget", ["source"],
+                            "n_chars", "cum_tokens")
+    a = ref.filter(F.col("cum_tokens") <= F.when(
+        F.col("source") == "src0", 4000)
+        .when(F.col("source") == "src1", 2500).otherwise(1500))
     b = token_budget_sample(
-        docs, "doc_id", "source", "n_chars", budgets, default_budget=1500,
-        checkpoint=False)
+        docs, "doc_id", "source", "n_chars", budgets, default_budget=1500)
     assert a.count() == b.count()
     j = a.select("doc_id", "cum_tokens").join(
         b.select("doc_id", F.col("cum_tokens").alias("c2")), "doc_id")
     assert j.count() == a.count()
     assert j.filter(F.col("cum_tokens") != F.col("c2")).count() == 0
+    logical = b._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in logical, logical
 
 
 def test_length_batches_checkpoint_free_bit_equal(spark, sf_dir):
     from puffbird_spark.operators.splits import length_bucket_batches
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    kw = dict(key="doc_id", length_col="n_chars", batch_size=8,
-              bucket_edges=[200, 350, 500])
-    a = length_bucket_batches(docs, **kw)
-    b = length_bucket_batches(docs, checkpoint=False, **kw)
+    edges = [200, 350, 500]
+    bucket = F.lit(len(edges))
+    for i in range(len(edges) - 1, -1, -1):
+        bucket = F.when(F.col("n_chars") <= edges[i], i).otherwise(bucket)
+    ref = _range_prefix_sum(docs.withColumn("bucket", bucket), "doc_id",
+                            "batch", ["bucket"], F.lit(1), "rank")
+    a = ref.select("doc_id", "bucket",
+                   ((F.col("rank") - 1) / 8).cast("long").alias("batch_idx"),
+                   ((F.col("rank") - 1) % 8).cast("long").alias(
+                       "pos_in_batch"))
+    b = length_bucket_batches(docs, key="doc_id", length_col="n_chars",
+                              batch_size=8, bucket_edges=edges)
     j = a.join(
-        b.select("doc_id", F.col("batch_idx").alias("b2"),
+        b.select("doc_id", F.col("bucket").alias("k2"),
+                 F.col("batch_idx").alias("b2"),
                  F.col("pos_in_batch").alias("p2")), "doc_id")
     assert j.count() == a.count() == b.count()
-    assert j.filter((F.col("batch_idx") != F.col("b2"))
+    assert j.filter((F.col("bucket") != F.col("k2"))
+                    | (F.col("batch_idx") != F.col("b2"))
                     | (F.col("pos_in_batch") != F.col("p2"))).count() == 0
+
+
+def test_draw_ordered_prefix_sums_pin_no_blocks(spark, sf_dir, tmp_path):
+    """The draw-ordered callers of grouped_prefix_sum materialize
+    nothing: the RDDs pinned in the block manager do not grow across
+    the call plus its action (measured as a delta, like
+    test_graph_rounds_do_not_leak_checkpoints)."""
+    from puffbird_spark.operators.layout import write_training_shards
+    from puffbird_spark.operators.packing import pack_token_budget
+    from puffbird_spark.operators.splits import (
+        length_bucket_batches, token_budget_sample)
+
+    jsc = spark.sparkContext._jsc
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars")
+    budgets = {"src0": 4000}
+
+    def pinned(run):
+        """RDDs newly pinned by ``run()``, released after."""
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        run()
+        new = {k: r for k, r in jsc.getPersistentRDDs().items()
+               if k not in before}
+        for rdd in new.values():
+            rdd.unpersist(True)
+        return len(new)
+
+    ops = {
+        "shuffle_order": lambda: shuffle_order(docs, "doc_id").collect(),
+        "token_budget_sample": lambda: token_budget_sample(
+            docs, "doc_id", "source", "n_chars", budgets).collect(),
+        "length_bucket_batches": lambda: length_bucket_batches(
+            docs, "doc_id", "n_chars", 8, [200, 350]).collect(),
+        "pack_token_budget": lambda: pack_token_budget(
+            docs, "doc_id", "source", "n_chars", budgets).collect(),
+        "write_training_shards": lambda: write_training_shards(
+            docs, str(tmp_path / "shards"), key="doc_id", n_shards=4),
+    }
+    for name, op in ops.items():
+        assert pinned(op) == 0, name
 
 
 def test_cap_per_group_append_stability(spark, sf_dir):
