@@ -32,18 +32,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import telemetry
 from ..functions.vectors import as_double, dot
 
-#: k * dim above which assignment switches from plan-literal HOF folds to
-#: the Arrow kernel. The literal path builds k struct expressions PER ROW,
-#: so codegen size and per-row cost grow linearly in k — fine at the gate's
-#: k=8, a codegen/expression-tree blowup at SemDeDup-scale k (thousands).
+#: k * dim above which assignment always takes the Arrow kernel (from its
+#: quarter up, row count decides). The literal path builds k struct
+#: expressions PER ROW, so codegen size and per-row cost grow linearly in
+#: k — fine at the gate's k=8, a codegen/expression-tree blowup at
+#: SemDeDup-scale k (thousands).
 #: The Arrow kernel is one (n x k) batched matmul-shaped loop per batch,
 #: bit-equal to the literal path (strict left-to-right folds, same
 #: HALF_UP rounding) — differential-tested in tests/test_operators.py.
 ARROW_ASSIGN_KDIM = 2048
-
-
 
 
 def _assign_arrow(
@@ -101,36 +101,27 @@ def _assign_arrow(
     )
 
 
-def _assign(
-    e: DataFrame, cents: list[list[float]], kernel: str = "auto",
-) -> DataFrame:
+def _assign(e: DataFrame, cents: list[list[float]]) -> DataFrame:
     """Nearest-centroid assignment: adds ``__cid`` and 6-dp-rounded
-    ``__d2`` to (__id, __v) rows. ``kernel='auto'`` picks plan-literal
-    HOF folds for small k*dim and the Arrow kernel above
-    ``ARROW_ASSIGN_KDIM`` (the `cosine_topk` batch-size-gating
-    pattern); 'literal'/'arrow' force a path."""
+    ``__d2`` to (__id, __v) rows. Plan-literal HOF folds for small
+    k*dim, the Arrow kernel above ``ARROW_ASSIGN_KDIM``; in between the
+    estimated row count decides (``telemetry.ARROW_MIN_WORK``)."""
+    import math
+
     import numpy as np
 
-    if kernel not in ("auto", "literal", "arrow"):
-        raise ValueError(f"unknown assignment kernel {kernel!r}")
-    if kernel == "auto":
-        kdim = len(cents) * (len(cents[0]) if cents else 0)
-        if kdim > ARROW_ASSIGN_KDIM:
-            kernel = "arrow"
-        elif kdim >= ARROW_ASSIGN_KDIM // 4:
-            # mid-size k*dim: the Arrow batch amortizes over row count
-            # (sf1 rehearsal r8: k=64/dim=64 Arrow beat k=8 literal at
-            # 20k vectors) but loses to codegen on tiny corpora that
-            # pay the Python worker spin-up
-            from .similarity import _est_rows, _vec_row_bytes
-
-            dim = len(cents[0]) if cents else 64
-            kernel = ("arrow"
-                      if _est_rows(e, _vec_row_bytes(dim)) >= 20_000
-                      else "literal")
-        else:
-            kernel = "literal"
-    if kernel == "arrow":
+    kdim = len(cents) * (len(cents[0]) if cents else 0)
+    if kdim > ARROW_ASSIGN_KDIM:
+        rows = math.inf
+    elif kdim >= ARROW_ASSIGN_KDIM // 4:
+        # mid-size k*dim: the Arrow batch amortizes over row count but
+        # loses to codegen on tiny corpora that pay the Python worker
+        # spin-up
+        dim = len(cents[0]) if cents else 64
+        rows = telemetry.est_rows(e, telemetry.vec_row_bytes(dim))
+    else:
+        rows = 0.0
+    if telemetry.arrow_kernel("kmeans_assign", rows):
         return _assign_arrow(e, cents)
     vv = dot(F.col("__v"), F.col("__v"))
     opts = []
@@ -154,15 +145,13 @@ def kmeans_assign(
     iters: int = 1,
     seed: str = "kmeans",
     keep_vec: bool = False,
-    kernel: str = "auto",
 ) -> DataFrame:
     """Run ``iters`` Lloyd refinements from the deterministic seed
     centroids and return the final assignment:
     ``(id_col, cluster, d2)`` with ``d2`` the 6-dp squared L2 distance
     to the final centroid. Driver traffic per iteration is exactly
-    k x dim mean cells — independent of corpus size. ``kernel``
-    selects the assignment path (see :func:`_assign`); results are
-    identical either way."""
+    k x dim mean cells — independent of corpus size. Both assignment
+    kernels (see :func:`_assign`) give identical results."""
     from .splits import hash_draw
 
     e = df.select(
@@ -176,7 +165,7 @@ def kmeans_assign(
         raise ValueError(f"k={k} exceeds the {len(init_rows)} input rows")
     cents = [list(r["__v"]) for r in init_rows]
     for _ in range(iters):
-        assigned = _assign(e, cents, kernel=kernel)
+        assigned = _assign(e, cents)
         cells = (
             assigned.select(
                 "__cid", F.posexplode("__v").alias("pos", "x"))
@@ -200,7 +189,7 @@ def kmeans_assign(
     ]
     if keep_vec:
         cols.append(F.col("__v").alias(vec_col))
-    return _assign(e, cents, kernel=kernel).select(*cols)
+    return _assign(e, cents).select(*cols)
 
 
 def semantic_dedup(
@@ -211,8 +200,6 @@ def semantic_dedup(
     iters: int = 1,
     threshold: float = 0.45,
     seed: str = "kmeans",
-    kernel: str = "auto",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """SemDeDup-shaped semantic dedup (Abbas et al., arXiv:2303.09540):
     cluster the embeddings with :func:`kmeans_assign`, search for
@@ -235,10 +222,10 @@ def semantic_dedup(
     ``is_canonical = false`` rows to dedup the corpus.
 
     The quadratic pair filter is the wall-clock at scale (n²/k cosine
-    evaluations): ``use_arrow=None`` auto-selects the kernel from the
-    estimated pair count — the interpreted HOF fold for small jobs (no
-    Python worker spin-up), or a per-cluster ``applyInPandas`` matrix
-    kernel above ``similarity.ARROW_MIN_PAIRS``: each cluster ships its
+    evaluations): the kernel follows the estimated pair count — the
+    interpreted HOF fold for small jobs (no Python worker spin-up), or a
+    per-cluster ``applyInPandas`` matrix kernel above
+    ``telemetry.ARROW_MIN_WORK["semantic_pairs"]``: each cluster ships its
     vectors ONCE and computes the whole cosine matrix with one matmul,
     so Arrow traffic is linear in n (a per-PAIR Arrow UDF still moved
     both vectors per pair — 160s -> 83s -> 13s at 20k vectors / k=8 in
@@ -248,9 +235,7 @@ def semantic_dedup(
     differential unit test).
     """
     from ..functions.vectors import dot, norm
-    from ..telemetry import record_kernel
     from .graph import dedup_clusters
-    from .similarity import ARROW_MIN_PAIRS, _est_rows, _vec_row_bytes
 
     # Hoist the norm out of the quadratic stage: computed once per ROW
     # here, the pair filter costs one dot-fold instead of three.
@@ -259,29 +244,19 @@ def semantic_dedup(
     # same division.
     a = kmeans_assign(
         df, id_col, vec_col, k=k, iters=iters, seed=seed, keep_vec=True,
-        kernel=kernel,
     ).select(
         id_col, "cluster", vec_col, norm(F.col(vec_col)).alias("__n"))
     # both sides of the self-join consume `a`; without materialization
     # the whole assignment pipeline (scan + k centroid folds + norm)
-    # runs twice (the perplexity/hll lesson)
-    if use_arrow is None:
-        # real count, not plan statistics — a checkpointed frame's
-        # sizeInBytes reads as defaultSizeInBytes-huge (the
-        # incremental_embedding_dedup lesson). LAZY checkpoint: the
-        # count computes every partition, so one job materializes the
-        # assignment AND returns the kernel-gate count (was checkpoint
-        # job + count job).
-        a = a.localCheckpoint(eager=False)
-        n_est = a.count()
-        use_arrow = (n_est * n_est) / max(k, 1) >= ARROW_MIN_PAIRS
-    else:
-        # forced kernel: no gate count to piggyback on — materialize
-        # eagerly so the HOF self-join's two branches never race to
-        # compute the assignment pipeline concurrently
-        a = a.localCheckpoint(eager=True)
-    record_kernel("semantic_pairs", "arrow" if use_arrow else "hof")
-    if use_arrow:
+    # runs twice (the perplexity/hll lesson). The kernel gate reads the
+    # real count, not plan statistics — a checkpointed frame's
+    # sizeInBytes reads as defaultSizeInBytes-huge (the
+    # incremental_embedding_dedup lesson). LAZY checkpoint: the count
+    # computes every partition, so one job materializes the assignment
+    # AND returns the count (was checkpoint job + count job).
+    a = a.localCheckpoint(eager=False)
+    n_est = a.count()
+    if telemetry.arrow_kernel("semantic_pairs", n_est * n_est / max(k, 1)):
         import numpy as np
         import pandas as pd
 
@@ -405,7 +380,6 @@ def embedding_outliers(
     iters: int = 1,
     prob: float = 0.9,
     seed: str = "kmeans",
-    kernel: str = "auto",
 ) -> DataFrame:
     """Distance-based outlier flagging for corpus curation (the
     DataComp/noise-pruning move: embeddings far from EVERY cluster are
@@ -423,7 +397,7 @@ def embedding_outliers(
     from .splits import quantile_buckets
 
     a = kmeans_assign(
-        df, id_col, vec_col, k=k, iters=iters, seed=seed, kernel=kernel)
+        df, id_col, vec_col, k=k, iters=iters, seed=seed)
     b = quantile_buckets(a, "d2", probs=(prob,), bucket_col="__b")
     return b.select(
         id_col, "cluster", "d2", (F.col("__b") == 2).alias("is_outlier"))
@@ -572,7 +546,6 @@ def incremental_embedding_dedup(
     planes: int = 4,
     threshold: float = 0.45,
     seed: str = "srp",
-    use_arrow: bool | None = None,
     state_repr: str = "raw",
     sq_params: tuple | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -620,11 +593,11 @@ def incremental_embedding_dedup(
     same pair across rounds). Band codes always derive from the raw
     batch floats — the band machinery is unchanged.
 
-    The verification stage is quadratic PER BUCKET, so it auto-gates
-    its kernel exactly like :func:`semantic_dedup_pairs`
-    (``use_arrow=None``): the interpreted per-pair HOF fold for small
-    jobs, or — above ``similarity.ARROW_MIN_PAIRS`` estimated
-    collisions — a per-``(band, bucket)`` ``applyInPandas`` MATRIX
+    The verification stage is quadratic PER BUCKET, so it gates its
+    kernel like :func:`semantic_dedup`: the interpreted per-pair HOF
+    fold for small jobs, or — above
+    ``telemetry.ARROW_MIN_WORK["incremental_embedding_pairs"]``
+    expected collisions — a per-``(band, bucket)`` ``applyInPandas`` MATRIX
     kernel that ships each bucket's vectors ONCE and computes the
     whole cosine matrix with one matmul (the r8 sf1 rehearsal caught
     the per-pair path at 126 s for 20k vectors under planes=4 — 25 M
@@ -636,8 +609,7 @@ def incremental_embedding_dedup(
     from pyspark.sql import types as T
 
     from ..functions.vectors import cosine_rounded
-    from ..telemetry import record_kernel
-    from .similarity import ARROW_MIN_PAIRS, sq_dequantize, sq_quantize
+    from .similarity import sq_dequantize, sq_quantize
 
     if state_repr not in ("raw", "sq8"):
         raise ValueError(
@@ -673,36 +645,26 @@ def incremental_embedding_dedup(
     # not data volume, dominated the three-batch replay).
     bb = bb.persist()
     all_b = state.unionByName(bb)
-    na_rows = None
-    if use_arrow is None:
-        # REAL counts, not plan statistics: a persisted/checkpointed
-        # frame (and an empty caller-built state) reports a
-        # defaultSizeInBytes-class sizeInBytes, which read as "huge"
-        # and pinned the kernel to Arrow at every scale. The batch
-        # count doubles as the persist materializer; the STATE count is
-        # threaded between calls on the returned frame (``_pbs_rows``
-        # below) — a production incremental pipeline knows its state
-        # size, and the attribute makes the replay loop know it too —
-        # falling back to one count for a state of unknown size.
-        nb_rows = bb.count()
-        state_rows = getattr(state, "_pbs_rows", None)
-        na_rows = nb_rows + (
-            state_rows if state_rows is not None else state.count())
-        # expected collisions under uniform buckets: per band, a batch
-        # vector meets n_all / 2^planes bucket-mates (row counts carry a
-        # bands factor each, hence the single bands divisor). The
-        # measured crossover (forced-path med3): sf0.1's 3-batch
-        # replay reads 6.5s all-HOF vs 4.6s all-Arrow — the FIRST
-        # batch's ~60k estimate already belongs on the Arrow side —
-        # and sf1 reads 126s vs 8.3s; HOF only wins on genuinely tiny
-        # inputs (unit-test scale) where worker spin-up dominates, so
-        # the switch sits at half the generic ARROW_MIN_PAIRS.
-        use_arrow = (
-            (nb_rows * na_rows) / float(bands * 2 ** planes)
-            >= ARROW_MIN_PAIRS // 2)
-    record_kernel(
-        "incremental_embedding_pairs", "arrow" if use_arrow else "hof")
-    if use_arrow:
+    # REAL counts, not plan statistics: a persisted/checkpointed frame
+    # (and an empty caller-built state) reports a defaultSizeInBytes-class
+    # sizeInBytes, which read as "huge" and pinned the kernel to Arrow at
+    # every scale. The batch count doubles as the persist materializer;
+    # the STATE count is threaded between calls on the returned frame
+    # (``_pbs_rows`` below) — a production incremental pipeline knows its
+    # state size, and the attribute makes the replay loop know it too —
+    # falling back to one count for a state of unknown size.
+    nb_rows = bb.count()
+    state_rows = getattr(state, "_pbs_rows", None)
+    na_rows = nb_rows + (
+        state_rows if state_rows is not None else state.count())
+    # expected collisions under uniform buckets: per band, a batch vector
+    # meets n_all / 2^planes bucket-mates (row counts carry a bands factor
+    # each, hence the single bands divisor). At sf0.1 the FIRST batch's
+    # ~60k estimate already belongs on the Arrow side; HOF only wins on
+    # genuinely tiny inputs (unit-test scale) where worker spin-up
+    # dominates.
+    collisions = (nb_rows * na_rows) / float(bands * 2 ** planes)
+    if telemetry.arrow_kernel("incremental_embedding_pairs", collisions):
         import numpy as np
         import pandas as pd
 
@@ -774,8 +736,7 @@ def incremental_embedding_dedup(
         )
     survivors = batch.join(
         rejected, batch[id_col] == rejected["__rej"], "left_anti")
-    if na_rows is not None:
-        all_b._pbs_rows = na_rows  # thread state size to the next call
+    all_b._pbs_rows = na_rows  # thread state size to the next call
     return survivors, all_b
 
 

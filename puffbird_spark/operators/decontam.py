@@ -123,9 +123,8 @@ def bloom_filter_words(
 
 
 def _bloom_bit_exprs(words: list[int], k: int):
-    """The shared probe expression factory: given a gram Column, AND of
-    the k Bloom bit tests, as native Columns. Both probe strategies build
-    from this so they are bit-equal by construction."""
+    """The probe expression factory (shared with ``bloomjoin``): given a
+    gram Column, AND of the k Bloom bit tests, as native Columns."""
     import numpy as np
 
     m_bits = len(words) * 64
@@ -167,12 +166,11 @@ def bloom_contaminated(
     n: int = 3,
     k: int = 5,
     flag_col: str = "bloom_hit",
-    strategy: str = "hof",
 ) -> DataFrame:
     """Flag training docs where ANY distinct n-gram tests positive in the
     Bloom filter. The filter words ship as a literal array (m/64 longs
     inside the plan); the k bit tests per gram are native Column bit
-    arithmetic — zero joins, zero Python either way. Bloom guarantees NO
+    arithmetic — zero joins, zero Python. Bloom guarantees NO
     false negatives (every truly contaminated doc is flagged); false
     positives are bounded by (1 - e^{-kn/m})^k and verified by the gate.
 
@@ -183,62 +181,22 @@ def bloom_contaminated(
     every invocation. With the array shipped as a single ndarray literal
     the probe executes in ~0.7 s warm at sf0.1 (~1.1 s on a 10x corpus).
 
-    Two probe strategies, bit-equal (tests/test_operators.py):
-
-    - ``hof`` (default): the k bit tests inside an ``exists``
-      higher-order function. Zero shuffle, fused into the scan stage,
-      short-circuits on the first hitting gram. HOF lambdas evaluate
-      interpreted (outside whole-stage codegen), but measured at both
-      sf0.1 and a 10x replica this still beats the codegen alternative
-      (0.65 s vs 0.99 s warm; 1.13 s vs 1.59 s at 10x) because it avoids
-      materializing one row per gram and the aggregate exchange.
-    - ``explode``: posexplode the distinct grams, evaluate the same
-      hash+bit exprs as ordinary projected Columns — inside whole-stage
-      codegen — then fold back to one boolean per doc with a map-side-
-      combining ``groupBy(id).agg(max(hit))``. Costs one exchange of
-      (id, bool, bool) partial aggregates — one ~9-byte row per doc per
-      scan partition, noise at 100 TB. The escape hatch if a future
-      engine/SF makes per-element interpretation the real bottleneck;
-      re-measured at sf1 in NOTES before any default flip.
+    The probe is the k bit tests inside an ``exists`` higher-order
+    function: zero shuffle, fused into the scan stage, short-circuiting
+    on the first hitting gram. HOF lambdas evaluate interpreted (outside
+    whole-stage codegen), but measured at both sf0.1 and a 10x replica
+    this beat a codegen'd posexplode + ``groupBy(id).agg(max(hit))``
+    probe (0.65 s vs 0.99 s warm; 1.13 s vs 1.59 s at 10x), which paid
+    for one row per gram and an aggregate exchange.
     """
-    from ..functions.text import shingles, tokens
     from ..plans import fence
 
-    if strategy not in ("explode", "hof"):
-        raise ValueError(f"unknown bloom probe strategy: {strategy!r}")
     gram_hits = _bloom_bit_exprs(words, k)
     staged = fence(
         train.select(F.col(id_col), F.col(text_col)),
         [id_col], sh=shingles(tokens(text_col), n),
     )
-    if strategy == "hof":
-        return staged.select(
-            id_col, F.exists("sh", gram_hits).alias(flag_col)
-        )
-    # explode strategy. `shingles()` never yields a NULL array (its
-    # otherwise-branch emits an empty array for NULL/short text — pinned
-    # by test_shingles_null_text_empty_array), so `exists` parity here
-    # means: empty array -> false, genuine NULL elements hash through
-    # the same expressions the HOF lambda would send them.
-    # posexplode_outer keeps empty-array docs as a single synthetic row
-    # distinguished by __pos IS NULL (a genuine NULL element still
-    # carries its position).
-    ex = staged.select(
-        F.col(id_col),
-        F.posexplode_outer(F.array_distinct("sh")).alias("__pos", "__gram"),
-    )
-    hit = F.when(
-        F.col("__pos").isNull(), F.lit(None).cast("boolean")
-    ).otherwise(gram_hits(F.col("__gram")))
-    return (
-        ex.select(id_col, hit.alias("__hit"))
-        .groupBy(id_col)
-        .agg(F.max("__hit").alias("__any"))
-        .select(
-            id_col,
-            F.coalesce(F.col("__any"), F.lit(False)).alias(flag_col),
-        )
-    )
+    return staged.select(id_col, F.exists("sh", gram_hits).alias(flag_col))
 
 
 def contamination_report(

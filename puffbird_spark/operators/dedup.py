@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import telemetry
 from ..functions.text import char_shingles, shingles, tokens
 
 
@@ -345,7 +346,6 @@ def minhash_candidate_pairs(
     max_bucket_size: int = 10_000,
     threshold: float | None = None,
     hasher: str = "xxhash64",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows of
     ``num_hashes/bands``; docs sharing any band hash become candidates.
@@ -368,7 +368,7 @@ def minhash_candidate_pairs(
     if threshold is not None:
         bands, _ = lsh_banding_config(threshold, num_hashes)
     banded = minhash_banded(
-        df, text_col, id_col, num_hashes, bands, n, hasher, use_arrow)
+        df, text_col, id_col, num_hashes, bands, n, hasher)
     # pair WITHIN buckets instead of a banded self-join: one groupBy shuffle,
     # no double computation of the shingle/signature pipeline, and the
     # quadratic work is bounded per bucket (a bucket is a duplicate cluster)
@@ -773,7 +773,6 @@ def minhash_banded(
     bands: int = 4,
     n: int = 3,
     hasher: str = "md5",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """The reusable first half of the LSH pipeline: per-doc MinHash
     signature exploded into ``bands`` rows of
@@ -823,16 +822,9 @@ def minhash_banded(
     # node is its own optimizer fence; the Column path needs plans.fence()
     # or each of the `bands` band projections would re-inline the whole
     # 32-permutation signature expression.
-    if use_arrow is None:
-        from .similarity import _est_rows
-
-        # ~320 B/doc on disk for the synthetic corpus; threshold ~20k docs
-        # is where interpreted signature work outgrows worker spin-up
-        use_arrow = _est_rows(df, 320) >= 20_000
-    from ..telemetry import record_kernel
-
-    record_kernel("minhash_signature", "arrow" if use_arrow else "column")
-    if use_arrow:
+    # ~320 B/doc on disk for the synthetic corpus
+    n_docs = telemetry.est_rows(df, 320)
+    if telemetry.arrow_kernel("minhash_signature", n_docs):
         sig = hashed.select(
             "id", _signature_arrow_udf(num_hashes)(F.col("hs")).alias("sig")
         )
@@ -874,7 +866,6 @@ def incremental_minhash_dedup(
     n: int = 3,
     threshold: float = 0.4,
     hasher: str = "md5",
-    use_arrow: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fuzzy (MinHash-LSH) dedup of a NEW batch against a living corpus
     without rescanning it — the near-dup twin of
@@ -905,7 +896,7 @@ def incremental_minhash_dedup(
     state to persist for the next batch.
     """
     bb = minhash_banded(
-        batch, text_col, id_col, num_hashes, bands, n, hasher, use_arrow)
+        batch, text_col, id_col, num_hashes, bands, n, hasher)
     # bb is consumed twice (probe side + appended into the state union);
     # materialize so the signature pipeline runs once per batch — the
     # caller persists this state anyway
@@ -1119,7 +1110,6 @@ def cdc_shared_chunks(
 #: of ALL pairs share a prefix gram, so the candidate join emitted
 #: 17.6e9 rows for a 250k-pair answer and OOM'd the 32-thread JVM).
 DENSE_GRAM_LIMIT = 8192
-DENSE_MIN_AVG_DF = 64.0
 DENSE_BLOCK_DOCS = 4096
 #: hard ceiling on block count: beyond it the block-pair fan-out
 #: (nb²/2 tasks, each doc shipped nb times) and the Θ(N²·G) compute are
@@ -1266,7 +1256,6 @@ def prefix_filter_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 5,
     kind: str = "char",
-    strategy: str = "auto",
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity join. Two physical strategies,
     both returning the SAME pairs as the all-pairs kernel
@@ -1298,16 +1287,15 @@ def prefix_filter_jaccard_pairs(
     **dense** — blocked bitset matmul (:func:`_dense_jaccard_pairs`),
     for degenerate corpora whose distinct-gram space is tiny (≤
     ``DENSE_GRAM_LIMIT``) while per-gram document frequency is huge
-    (avg df ≥ ``DENSE_MIN_AVG_DF``). There prefix filtering prunes
-    ~nothing — the round-9 sf1 rehearsal measured a 17.6e9-row
-    candidate join (70,000× the 250k-pair answer) that OOM'd the JVM —
-    and the throughput-optimal exact plan is block-pair matrix
-    intersection counts over the (codebook-sized) dense gram index.
+    (avg df ≥ ``telemetry.ARROW_MIN_WORK["prefix_filter"]``). There
+    prefix filtering prunes ~nothing — the round-9 sf1 rehearsal
+    measured a 17.6e9-row candidate join (70,000× the 250k-pair answer)
+    that OOM'd the JVM — and the throughput-optimal exact plan is
+    block-pair matrix intersection counts over the (codebook-sized)
+    dense gram index.
 
-    ``strategy='auto'`` (default) picks per-corpus from two bounded
-    aggregates (distinct-gram count and average document frequency);
-    ``'sparse'``/``'dense'`` force a path (the differential tests run
-    both on the same corpus)."""
+    The path is picked per corpus from two bounded aggregates
+    (distinct-gram count and average document frequency)."""
     if kind == "word":
         sh_expr = shingles(tokens(text_col), n=n)
     elif kind == "char":
@@ -1316,9 +1304,6 @@ def prefix_filter_jaccard_pairs(
         raise ValueError(f"kind must be 'word' or 'char', got {kind!r}")
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if strategy not in ("auto", "sparse", "dense"):
-        raise ValueError(
-            f"strategy must be auto|sparse|dense, got {strategy!r}")
     grams = (
         widen_parallelism(df)
         .select(F.col(id_col).alias("id"), F.explode(sh_expr).alias("g"))
@@ -1330,22 +1315,17 @@ def prefix_filter_jaccard_pairs(
     grams = grams.localCheckpoint(eager=True)
     gdf = grams.groupBy("dg").agg(F.count(F.lit(1)).alias("__df"))
 
-    if strategy != "sparse":
-        # regime stats: two bounded scalars off the checkpointed frame
-        stats = gdf.agg(
-            F.count(F.lit(1)).alias("g"),
-            F.sum("__df").alias("rows")).collect()[0]
-        n_distinct = int(stats["g"] or 0)
-        avg_df = (float(stats["rows"]) / n_distinct) if n_distinct else 0.0
-        dense_ok = (0 < n_distinct <= DENSE_GRAM_LIMIT
-                    and avg_df >= DENSE_MIN_AVG_DF)
-        if strategy == "dense" and n_distinct > DENSE_GRAM_LIMIT:
-            raise ValueError(
-                f"dense strategy needs distinct grams <= {DENSE_GRAM_LIMIT}"
-                f", corpus has {n_distinct}")
-        if strategy == "dense" or dense_ok:
-            return _dense_jaccard_pairs(grams, threshold, n_distinct)
-
+    # regime stats: two bounded scalars off the checkpointed frame
+    stats = gdf.agg(
+        F.count(F.lit(1)).alias("g"),
+        F.sum("__df").alias("rows")).collect()[0]
+    n_distinct = int(stats["g"] or 0)
+    avg_df = (float(stats["rows"]) / n_distinct) if n_distinct else 0.0
+    # the dense index only exists for a codebook-sized gram space
+    if telemetry.arrow_kernel(
+            "prefix_filter",
+            avg_df if 0 < n_distinct <= DENSE_GRAM_LIMIT else 0.0):
+        return _dense_jaccard_pairs(grams, threshold, n_distinct)
     return _sparse_jaccard_pairs(grams, gdf, threshold)
 
 

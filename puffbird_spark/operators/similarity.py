@@ -26,45 +26,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import telemetry
 from ..functions.vectors import (  # noqa: F401
     as_double,
     cosine_rounded,
     cosine_rounded_arrow,
 )
-from ..telemetry import record_kernel
-
-#: pair count above which the Arrow einsum scorer beats the JVM HOF fold.
-#: Below it, the ~0.5 s/worker Python-worker spin-up of the FIRST Arrow
-#: stage in a session (10-20 s total at local[32]) dwarfs the per-pair win
-#: (~0.1µs Arrow vs ~40µs interpreted) — the r3 bench regression
-#: (knn_cosine 3.3x cold). Above it the kernel pays for itself even cold,
-#: and on a long-lived 100 TB cluster the spin-up is already sunk.
-ARROW_MIN_PAIRS = 100_000
-
-
-def _est_rows(df: DataFrame, row_bytes: int) -> float:
-    """Plan-statistics row estimate: optimizer sizeInBytes / approximate
-    row width. Pure metadata (parquet footer sizes through the optimized
-    plan) — NO job runs. Good to an order of magnitude, which is all the
-    Arrow-vs-HOF threshold needs. CAVEAT: only meaningful for frames
-    whose lineage reaches a file scan — a localCheckpoint'd frame (or
-    an empty LocalRelation) reports a defaultSizeInBytes-class value
-    that reads as "huge"; call ``.count()`` on those instead (cheap on
-    a materialized checkpoint — the incremental_embedding_dedup
-    lesson)."""
-    try:
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return float(int(size)) / max(row_bytes, 1)
-    except Exception:
-        return float("inf")  # unknown => assume big => Arrow (the scale default)
-
-
-def _vec_row_bytes(dim: int) -> int:
-    # id (8B) + array<float> payload at its ON-DISK width: the stats come
-    # from parquet file sizes, and random floats are near-incompressible,
-    # so 4*dim tracks the scan estimate (measured ~322 B/row actual vs
-    # 264 predicted at dim=64).
-    return 8 + 4 * dim
 
 
 def cosine_topk(
@@ -75,31 +42,27 @@ def cosine_topk(
     k: int = 5,
     exclude_self: bool = True,
     dim: int | None = None,
-    use_arrow: bool | None = None,
     est_queries: int | None = None,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (query_id, cand_id, cosine).
 
     Ranking uses the ROUNDED cosine with id tie-break, so results are
-    deterministic and engine-portable. ``use_arrow=None`` auto-selects the
-    scoring kernel from plan-estimated pair count (corpus x queries):
-    small jobs take the JVM HOF fold (no Python worker spin-up), large
-    ones the Arrow einsum kernel (see ``ARROW_MIN_PAIRS``). The optimizer
-    does not discount ``sizeInBytes`` for filters, so when the caller
-    knows the (small, broadcast) query-side cardinality it should pass
-    ``est_queries`` — otherwise a `WHERE id < 10` query set is estimated
-    at full-table size and the gate leans Arrow."""
+    deterministic and engine-portable. The scoring kernel follows the
+    plan-estimated pair count (corpus x queries, see
+    ``telemetry.ARROW_MIN_WORK``): small jobs take the JVM HOF fold (no
+    Python worker spin-up), large ones the Arrow einsum kernel. The
+    optimizer does not discount ``sizeInBytes`` for filters, so when the
+    caller knows the (small, broadcast) query-side cardinality it should
+    pass ``est_queries`` — otherwise a `WHERE id < 10` query set is
+    estimated at full-table size and the gate leans Arrow."""
     c = corpus.select(
         F.col(id_col).alias("cand_id"), as_double(vec_col).alias("cvec")
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qvec")
     )
-    if use_arrow is None:
-        rb = _vec_row_bytes(dim or 64)
-        n_q = float(est_queries) if est_queries else _est_rows(q, rb)
-        use_arrow = _est_rows(c, rb) * n_q >= ARROW_MIN_PAIRS
-    record_kernel("cosine_topk", "arrow" if use_arrow else "hof")
+    use_arrow = telemetry.arrow_kernel(
+        "cosine_topk", telemetry.est_cross_pairs(c, q, dim or 64, est_queries))
     pairs = c.crossJoin(F.broadcast(q))
     return _score_topk(pairs, k, exclude_self, use_arrow=use_arrow)
 
@@ -186,7 +149,6 @@ def lsh_bucket_topk(
     probes: int | None = None,
     directed_probes: int | None = None,
     target_scan_fraction: float = 0.5,
-    use_arrow: bool | None = None,
     est_queries: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: join only within matching SRP buckets.
@@ -264,18 +226,15 @@ def lsh_bucket_topk(
         ]
         q = q.withColumn("bucket", F.explode(F.array(*flips)))
     q = q.drop("_dots")
-    if use_arrow is None:
-        # bucketing cuts the scanned fraction to ~n_probed/2^planes
-        n_probed = 1 + (
-            directed_probes if directed_probes else
-            sum(1 for r in range(1, min(probes, planes) + 1)
-                for _ in itertools.combinations(range(planes), r))
-        )
-        rb = _vec_row_bytes(dim)
-        n_q = float(est_queries) if est_queries else _est_rows(queries, rb)
-        est = _est_rows(corpus, rb) * n_q * n_probed / float(2 ** planes)
-        use_arrow = est >= ARROW_MIN_PAIRS
-    record_kernel("lsh_bucket_topk", "arrow" if use_arrow else "hof")
+    # bucketing cuts the scanned fraction to ~n_probed/2^planes
+    n_probed = 1 + (
+        directed_probes if directed_probes else
+        sum(1 for r in range(1, min(probes, planes) + 1)
+            for _ in itertools.combinations(range(planes), r))
+    )
+    est = telemetry.est_cross_pairs(corpus, queries, dim, est_queries)
+    use_arrow = telemetry.arrow_kernel(
+        "lsh_bucket_topk", est * n_probed / float(2 ** planes))
     pairs = c.join(F.broadcast(q), on="bucket").dropDuplicates(
         ["query_id", "cand_id"]
     )
@@ -315,7 +274,6 @@ def cosine_radius(
     vec_col: str = "embedding",
     exclude_self: bool = True,
     dim: int | None = None,
-    use_arrow: bool | None = None,
     est_queries: int | None = None,
 ) -> DataFrame:
     """Range search: every (query, candidate) pair with ROUNDED cosine
@@ -337,11 +295,9 @@ def cosine_radius(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qvec")
     )
-    if use_arrow is None:
-        rb = _vec_row_bytes(dim or 64)
-        n_q = float(est_queries) if est_queries else _est_rows(q, rb)
-        use_arrow = _est_rows(c, rb) * n_q >= ARROW_MIN_PAIRS
-    record_kernel("cosine_radius", "arrow" if use_arrow else "hof")
+    use_arrow = telemetry.arrow_kernel(
+        "cosine_radius",
+        telemetry.est_cross_pairs(c, q, dim or 64, est_queries))
     pairs = c.crossJoin(F.broadcast(q))
     if exclude_self:
         pairs = pairs.filter(F.col("cand_id") != F.col("query_id"))
@@ -451,11 +407,9 @@ def bq_topk(
 
         return F.pandas_udf(_words, returnType="array<long>")
 
-    rb = _vec_row_bytes(dim)
-    use_arrow_sig = (
-        _est_rows(corpus, rb) * planes >= ARROW_MIN_PAIRS * 20
-    )
-    record_kernel("bq_signature", "arrow" if use_arrow_sig else "hof")
+    use_arrow_sig = telemetry.arrow_kernel(
+        "bq_signature",
+        telemetry.est_rows(corpus, telemetry.vec_row_bytes(dim)) * planes)
 
     def _signed(df, id_name, vec_name, prefix):
         if use_arrow_sig:
@@ -727,7 +681,6 @@ def sq_topk(
     k: int = 5,
     overfetch: int = 4,
     exclude_self: bool = True,
-    use_arrow: bool | None = None,
     est_queries: int | None = None,
 ) -> DataFrame:
     """Approximate top-k over an int8 scalar-quantized corpus with exact
@@ -760,11 +713,9 @@ def sq_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qvec")
     )
-    if use_arrow is None:
-        rb = _vec_row_bytes(dim)
-        n_q = float(est_queries) if est_queries else _est_rows(queries, rb)
-        use_arrow = _est_rows(corpus, rb) * n_q >= ARROW_MIN_PAIRS
-    record_kernel("sq_topk", "arrow" if use_arrow else "hof")
+    use_arrow = telemetry.arrow_kernel(
+        "sq_topk",
+        telemetry.est_cross_pairs(corpus, queries, dim, est_queries))
     cand = _score_topk(
         cq.crossJoin(F.broadcast(q)), overfetch * k, exclude_self,
         use_arrow=use_arrow,
@@ -907,7 +858,7 @@ def pq_topk(
         corpus, dim, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col,
         sample_size=sample_size, seed=seed,
     )
-    record_kernel("pq_topk", "arrow")
+    telemetry.record_kernel("pq_topk", "arrow")
     codes = corpus.select(
         F.col(id_col).alias("cand_id"),
         _pq_encode_udf(books)(as_double(vec_col)).alias("pq"),
@@ -939,7 +890,6 @@ def rp_topk(
     overfetch: int = 4,
     exclude_self: bool = True,
     seed: str = "rp",
-    use_arrow: bool | None = None,
     est_queries: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via random-projection prefilter + exact re-rank
@@ -967,11 +917,9 @@ def rp_topk(
     qp = random_projection(
         queries, id_col, vec_col, in_dim, rp_dim, seed
     ).select(F.col(id_col).alias("query_id"), F.col("zvec").alias("qvec"))
-    if use_arrow is None:
-        rb = _vec_row_bytes(in_dim)
-        n_q = float(est_queries) if est_queries else _est_rows(queries, rb)
-        use_arrow = _est_rows(corpus, rb) * n_q >= ARROW_MIN_PAIRS
-    record_kernel("rp_topk", "arrow" if use_arrow else "hof")
+    use_arrow = telemetry.arrow_kernel(
+        "rp_topk",
+        telemetry.est_cross_pairs(corpus, queries, in_dim, est_queries))
     cand = _score_topk(
         cp.crossJoin(F.broadcast(qp)), overfetch * k, exclude_self,
         use_arrow=use_arrow,
@@ -1025,7 +973,7 @@ def ivf_pq_topk(
         corpus, dim, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col,
         sample_size=sample_size, seed=seed,
     )
-    record_kernel("ivf_pq_topk", "arrow")
+    telemetry.record_kernel("ivf_pq_topk", "arrow")
     # one corpus pass: cell id + reconstructed (ADC-equivalent) vector
     c = corpus.select(
         F.col(id_col).alias("cand_id"), as_double(vec_col).alias("__fv")
@@ -1428,7 +1376,6 @@ def cosine_pairs_exact(
     vec_col: str = "embedding",
     threshold: float = 0.45,
     dim: int | None = None,
-    use_arrow: bool | None = None,
     block_rows: int = 4096,
     dp: int = 6,
 ) -> DataFrame:
@@ -1438,9 +1385,9 @@ def cosine_pairs_exact(
     generate candidates first; THIS kernel is what verifies them and
     what small-corpus gates run outright).
 
-    ``use_arrow=None`` auto-selects per the package convention: below
-    ``ARROW_MIN_PAIRS`` estimated pairs, the JVM theta-join + HOF fold
-    (no Python worker spin-up); above it, the blocked matrix kernel —
+    The kernel follows the estimated pair count (``n²/2`` against
+    ``telemetry.ARROW_MIN_WORK``): small, the JVM theta-join + HOF fold
+    (no Python worker spin-up); large, the blocked matrix kernel —
     one ``applyInPandas`` task per block pair, one einsum per task,
     pairs materialized only ABOVE the threshold (output-sized). The
     round-9 sf1 rehearsal measured the HOF fold at ~40µs/pair grinding
@@ -1452,13 +1399,9 @@ def cosine_pairs_exact(
     e = df.select(
         F.col(id_col).alias("__id"), as_double(vec_col).alias("__v")
     ).filter(F.col("__v").isNotNull())
-    if use_arrow is None:
-        rb = _vec_row_bytes(dim or 64)
-        n = _est_rows(e, rb)
-        use_arrow = n * n / 2 >= ARROW_MIN_PAIRS
-    record_kernel("cosine_pairs_exact", "arrow" if use_arrow else "hof")
+    n = telemetry.est_rows(e, telemetry.vec_row_bytes(dim or 64))
     thr = float(threshold)
-    if not use_arrow:
+    if not telemetry.arrow_kernel("cosine_pairs_exact", n * n / 2):
         from ..functions.vectors import cosine_rounded
 
         a, b = e.alias("a"), e.alias("b")

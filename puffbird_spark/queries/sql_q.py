@@ -102,9 +102,10 @@ def dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (`cosine_pairs_exact`,
     operators/similarity.py). All-pairs exact kernel for the oracle;
     the scale path buckets by SRP-LSH first
-    (operators/similarity.lsh_bucket_topk). The kernel auto-gates per
-    the package convention — JVM HOF fold below ARROW_MIN_PAIRS, the
-    blocked matrix kernel above it (the round-9 sf1 rehearsal caught
+    (operators/similarity.lsh_bucket_topk). The kernel follows the
+    estimated pair count — JVM HOF fold below its
+    ``telemetry.ARROW_MIN_WORK`` entry, the blocked matrix kernel at or
+    above it (the round-9 sf1 rehearsal caught
     the HOF fold grinding 2×10⁸ pairs at ~40µs each; both kernels
     replay HALF_UP 6-dp, differential-pinned). Threshold 0.45: the
     synthetic embeddings are near-orthogonal (max pairwise cosine

@@ -25,6 +25,27 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def force_kernel(monkeypatch):
+    """``force_kernel(op, arrow)`` pins ``op``'s kernel choice for the
+    rest of the test (call again to flip it; ``arrow=None`` hands it back
+    to the policy); other ops keep the policy. The forced choice is
+    recorded like a real one."""
+    from puffbird_spark import telemetry
+
+    forced = {}
+    policy = telemetry.arrow_kernel
+
+    def arrow_kernel(op, work):
+        if forced.get(op) is None:
+            return policy(op, work)
+        telemetry.record_kernel(op, telemetry.kernel_name(op, forced[op]))
+        return forced[op]
+
+    monkeypatch.setattr(telemetry, "arrow_kernel", arrow_kernel)
+    return forced.__setitem__
+
+
 def load(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 

@@ -10,6 +10,11 @@ as benign for its fixture — VERDICT r11 What's-wrong #3 / r12 #2) are
 FROZEN by per-file count. Converting a legacy site lowers the count
 (tighten the freeze then); adding a bare site anywhere fails here.
 
+Kernel choice is one policy (``telemetry.arrow_kernel`` over
+``telemetry.ARROW_MIN_WORK``): no public operator takes a caller-set
+kernel option, and no operator reaches into ``similarity`` for its old
+private size estimators or threshold.
+
 Raw materialization calls (``localCheckpoint``, ``checkpoint``,
 ``persist``, ``cache``) outside ``puffbird_spark/plans/`` are frozen the
 same way, per file: they pin blocks nothing releases, and ROADMAP
@@ -108,7 +113,7 @@ def test_legacy_allowlist_not_stale():
 _MATERIALIZE_CALLS = ("localCheckpoint", "checkpoint", "persist", "cache")
 _LEGACY_MATERIALIZE = {
     "operators/bpe.py": 2,
-    "operators/clustering.py": 3,
+    "operators/clustering.py": 2,
     "operators/dedup.py": 3,
     "operators/drift.py": 4,
     "operators/evaluation.py": 4,
@@ -154,3 +159,35 @@ def test_raw_materialization_calls_frozen():
         "raw localCheckpoint/checkpoint/persist/cache calls changed — "
         "new code must not add one; after removing one, lower "
         "_LEGACY_MATERIALIZE to match")
+
+
+_KERNEL_OPTIONS = {"use_arrow", "kernel", "strategy"}
+_SIMILARITY_PRIVATES = {"_est_rows", "_vec_row_bytes", "ARROW_MIN_PAIRS"}
+
+
+def test_operators_take_no_kernel_option():
+    """No public function under ``operators/`` takes a kernel override
+    (the private ``_score_topk`` flag is set only by fixed-kernel
+    tails), and no operator imports the pre-policy estimators or
+    threshold from ``similarity``."""
+    found = []
+    for path in sorted(glob.glob(
+            os.path.join(PACKAGE_DIR, "operators", "*.py"))):
+        name = os.path.basename(path)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                if not node.name.startswith("_") and (
+                        params & _KERNEL_OPTIONS):
+                    found.append((name, node.name,
+                                  sorted(params & _KERNEL_OPTIONS)))
+            if (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.split(".")[-1] == "similarity"):
+                bad = {x.name for x in node.names} & _SIMILARITY_PRIVATES
+                if bad:
+                    found.append((name, "import", sorted(bad)))
+    assert not found, (
+        "kernel choice belongs to telemetry.arrow_kernel: " + repr(found))

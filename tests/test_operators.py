@@ -994,40 +994,25 @@ def test_bloom_decontamination_no_false_negatives(spark):
 
 
 def test_bloom_probe_plan_shapes(spark):
-    """Plan contracts per probe strategy: the DEFAULT ``hof`` probe is
-    scan-local (no Exchange at all, fused with the scan); the alternative
-    ``explode`` strategy pays exactly one Exchange — the (id, bool)
-    partial-aggregate fold — and keeps the k hash+bit tests inside
-    whole-stage codegen. (r5 profiling showed the r4 slowness was literal
-    plan construction, not HOF interpretation — hof measured faster and
-    stays default; see decontam.py.)"""
+    """Plan contract of the HOF probe: scan-local, no Exchange at all,
+    fused with the scan. (r5 profiling showed the r4 slowness was
+    literal plan construction, not HOF interpretation; see
+    decontam.py.)"""
     from puffbird_spark.operators.decontam import bloom_contaminated
 
     tr = spark.createDataFrame(
         [(1, "alpha beta gamma epsilon")], "doc_id long, text string")
     words = [0] * 16  # 1024-bit empty filter: plan shape is what matters
 
-    hof = bloom_contaminated(tr, words, n=3, k=5, strategy="hof")
+    hof = bloom_contaminated(tr, words, n=3, k=5)
     phys = hof._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in phys, phys
-
-    ex = bloom_contaminated(tr, words, n=3, k=5, strategy="explode")
-    phys = ex._jdf.queryExecution().executedPlan().toString()
-    assert phys.count("Exchange") == 1, phys
-    # the xxhash64 probe expressions must sit in a codegen'd projection,
-    # not inside an interpreted lambda: simple-mode explain marks codegen
-    # spans with *(N) and the hash shows up under a starred Project
-    simple = spark._jvm.PythonSQLUtils.explainString(
-        ex._jdf.queryExecution(), "simple")
-    assert "xxhash64" in simple
-    assert "ArrayExists" not in phys
 
 
 def test_shingles_null_text_empty_array(spark):
     """shingles(tokens(text)) NEVER yields a NULL array: size(NULL) is
     NULL so the short-doc guard falls to its otherwise(empty-array)
-    branch for NULL text too. The explode bloom-probe strategy relies
-    on this invariant to skip NULL-array plumbing (ADVICE r5)."""
+    branch for NULL text too (ADVICE r5)."""
     from puffbird_spark.functions.text import shingles, tokens
 
     df = spark.createDataFrame(
@@ -1039,15 +1024,15 @@ def test_shingles_null_text_empty_array(spark):
     assert got[4] == ["a b c", "b c d"]
 
 
-def test_bloom_probe_strategies_bit_equal(spark, sf_dir):
-    """The interpreted-HOF twin and the codegen explode path must agree
-    row-for-row — on the real documents table AND on the edge cases the
-    exists() semantics pin down (NULL text — tokens() maps it to an empty
-    token list, so both paths say false, not NULL — short text with an
-    empty shingle array, duplicated grams)."""
+def test_bloom_probe_covers_exact_contamination(spark, sf_dir):
+    """The Bloom probe flags every doc the exact ``contamination`` join
+    flags (no false negatives) — on the real documents table AND on the
+    edge cases the exists() semantics pin down (NULL text — tokens()
+    maps it to an empty token list, so the flag is false, not NULL —
+    short text with an empty shingle array, duplicated grams)."""
     from puffbird_spark.functions.text import shingles, tokens
     from puffbird_spark.operators.decontam import (
-        bloom_contaminated, bloom_filter_words)
+        bloom_contaminated, bloom_filter_words, contamination)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     ev = docs.filter(F.col("doc_id") % 20 == 0)
@@ -1064,26 +1049,27 @@ def test_bloom_probe_strategies_bit_equal(spark, sf_dir):
         "doc_id long, text string")
     probe = tr.select("doc_id", "text").unionByName(edge)
 
-    def flags(strategy):
-        return {r["doc_id"]: r["bloom_hit"] for r in bloom_contaminated(
-            probe, words, n=3, k=5, strategy=strategy).collect()}
+    got = {r["doc_id"]: r["bloom_hit"] for r in bloom_contaminated(
+        probe, words, n=3, k=5).collect()}
+    exact = {r["doc_id"] for r in contamination(
+        probe, ev, n=3).collect()}
+    assert exact and all(got[d] is True for d in exact)
+    assert got[900001] is False
+    assert got[900003] is False
 
-    got_hof, got_ex = flags("hof"), flags("explode")
-    assert got_hof == got_ex
-    assert got_ex[900001] is False
-    assert got_ex[900003] is False
 
-
-def test_minhash_signature_kernel_gate_equality(spark, sf_dir):
+def test_minhash_signature_kernel_gate_equality(
+        spark, sf_dir, force_kernel):
     """The batch-size-gated signature kernels (Arrow numpy vs native
     Column formulation behind a fence) must produce identical candidate
     pair sets — the gate decision may never change results."""
     docs = load_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     def pairs(use_arrow):
+        force_kernel("minhash_signature", use_arrow)
         df = DD.minhash_candidate_pairs(
             docs, "text", "doc_id", num_hashes=16, bands=4, n=3,
-            hasher="md5", use_arrow=use_arrow)
+            hasher="md5")
         return {(r["id_a"], r["id_b"], r["est_jaccard"])
                 for r in df.collect()}
 
@@ -3162,16 +3148,15 @@ def test_quantile_normalize_all_null_raises(spark):
     assert out.count() == 2                # the NULL row is excluded
 
 
-def test_kmeans_arrow_kernel_bit_equal_at_large_k(spark):
+def test_kmeans_arrow_kernel_bit_equal_at_large_k(spark, force_kernel):
     """VERDICT r7 #2: the Arrow assignment kernel must be BIT-equal to
     the plan-literal path (left-to-right folds + HALF_UP replay), and
-    'auto' must pick it above ARROW_ASSIGN_KDIM."""
+    the policy must pick it above ARROW_ASSIGN_KDIM."""
     import hashlib
-
-    import pytest as _pytest
 
     from puffbird_spark.operators.clustering import (
         ARROW_ASSIGN_KDIM, kmeans_assign)
+    from puffbird_spark.telemetry import drain_kernels
 
     k, dim, n = 64, 33, 220
     assert k * dim > ARROW_ASSIGN_KDIM        # 'auto' routes to arrow
@@ -3186,16 +3171,18 @@ def test_kmeans_arrow_kernel_bit_equal_at_large_k(spark):
 
     df = spark.createDataFrame(
         [(i, vec(i)) for i in range(n)], ["vid", "emb"])
-    lit = sorted(map(tuple, kmeans_assign(
-        df, "vid", "emb", k=k, iters=2, kernel="literal").collect()))
-    arr = sorted(map(tuple, kmeans_assign(
-        df, "vid", "emb", k=k, iters=2, kernel="arrow").collect()))
+    drain_kernels()
     auto = sorted(map(tuple, kmeans_assign(
+        df, "vid", "emb", k=k, iters=2).collect()))
+    assert drain_kernels()["kmeans_assign"] == "arrow"
+    force_kernel("kmeans_assign", False)
+    lit = sorted(map(tuple, kmeans_assign(
+        df, "vid", "emb", k=k, iters=2).collect()))
+    force_kernel("kmeans_assign", True)
+    arr = sorted(map(tuple, kmeans_assign(
         df, "vid", "emb", k=k, iters=2).collect()))
     assert lit == arr           # cluster AND d2, exact doubles
     assert auto == arr
-    with _pytest.raises(ValueError, match="kernel"):
-        kmeans_assign(df, "vid", "emb", k=4, kernel="simd")
 
 
 def test_wav_codec_roundtrip_and_stdlib_cross_check():
@@ -3399,13 +3386,14 @@ def test_incremental_embedding_dedup_replay_equals_one_shot(spark):
     assert bk.count() == 10              # 5 vectors x 2 bands
 
 
-def test_semantic_dedup_arrow_pair_kernel_equal(spark):
+def test_semantic_dedup_arrow_pair_kernel_equal(spark, force_kernel):
     """Round-8: the Arrow pair kernel must produce the same near-dup
     graph as the HOF fold at the 6-dp rounding (the cosine_topk
     precedent), and auto must pick HOF for tiny inputs."""
     import hashlib
 
     from puffbird_spark.operators.clustering import semantic_dedup
+    from puffbird_spark.telemetry import drain_kernels
 
     def vec(i):
         out = []
@@ -3419,10 +3407,15 @@ def test_semantic_dedup_arrow_pair_kernel_equal(spark):
     rows += [(100 + i, [v + 0.001 * i for v in vec(i)]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(k=4, iters=1, threshold=0.9)
+    drain_kernels()
+    semantic_dedup(df, "vec_id", "embedding", **kw)
+    assert drain_kernels()["semantic_pairs"] == "hof"
+    force_kernel("semantic_pairs", False)
     hof = sorted(map(tuple, semantic_dedup(
-        df, "vec_id", "embedding", use_arrow=False, **kw).collect()))
+        df, "vec_id", "embedding", **kw).collect()))
+    force_kernel("semantic_pairs", True)
     arr = sorted(map(tuple, semantic_dedup(
-        df, "vec_id", "embedding", use_arrow=True, **kw).collect()))
+        df, "vec_id", "embedding", **kw).collect()))
     assert hof == arr and len(hof) > 0
 
 
@@ -3719,7 +3712,7 @@ def test_jpeg_progressive_decode(spark):
     assert px == bytes(exp.tobytes())
 
 
-def test_prefix_filter_jaccard_equals_all_pairs(spark):
+def test_prefix_filter_jaccard_equals_all_pairs(spark, force_kernel):
     """The prefix-filter join must return EXACTLY the all-pairs kernel's
     result (recall 1 is a theorem, not a knob) — including near-threshold
     pairs, duplicate docs, short docs below the gram width, and empty
@@ -3748,23 +3741,23 @@ def test_prefix_filter_jaccard_equals_all_pairs(spark):
         assert ap == pf, (t, n, kind)
         assert len(ap) > 0 or t == 0.9
         # the dense blocked-matmul strategy (round-9 sf1 OOM fix) must
-        # return the identical pair set — force it past the auto gate,
+        # return the identical pair set — force it past the policy,
         # with a tiny block size so multi-block pairing is exercised
         from puffbird_spark.operators import dedup as _dd
 
         orig_block = _dd.DENSE_BLOCK_DOCS
         _dd.DENSE_BLOCK_DOCS = 16
+        force_kernel("prefix_filter", True)
         try:
             dn = sorted(map(tuple, prefix_filter_jaccard_pairs(
-                df, "text", "doc_id", threshold=t, n=n, kind=kind,
-                strategy="dense").collect()))
+                df, "text", "doc_id", threshold=t, n=n,
+                kind=kind).collect()))
         finally:
             _dd.DENSE_BLOCK_DOCS = orig_block
+            force_kernel("prefix_filter", None)
         assert ap == dn, (t, n, kind, "dense")
     with _pytest.raises(ValueError, match="threshold"):
         prefix_filter_jaccard_pairs(df, "text", "doc_id", threshold=0.0)
-    with _pytest.raises(ValueError, match="strategy"):
-        prefix_filter_jaccard_pairs(df, "text", "doc_id", strategy="fast")
 
 
 def test_g711_expansion_tables_and_wav_decode():
@@ -4072,7 +4065,7 @@ def test_fuzzy_del1_matches_brute_force_all_edit_kinds(spark):
         fuzzy_pairs_del1(df, "k", "id", max_bucket=1)
 
 
-def test_incremental_embedding_arrow_kernel_equals_hof(spark):
+def test_incremental_embedding_arrow_kernel_equals_hof(spark, force_kernel):
     """The per-bucket matrix verification kernel (the sf1-rehearsal
     fix: ship rows, not pairs) must reject EXACTLY the vectors the
     interpreted per-pair fold rejects — one-shot and replayed."""
@@ -4099,11 +4092,11 @@ def test_incremental_embedding_arrow_kernel_equals_hof(spark):
 
     kw = dict(id_col="vec_id", vec_col="embedding", in_dim=dim,
               bands=2, planes=3, threshold=0.8)
-    s_hof, st_hof = incremental_embedding_dedup(
-        df, empty_state(), use_arrow=False, **kw)
-    s_arw, st_arw = incremental_embedding_dedup(
-        df, empty_state(), use_arrow=True, **kw)
+    force_kernel("incremental_embedding_pairs", False)
+    s_hof, st_hof = incremental_embedding_dedup(df, empty_state(), **kw)
     hof = sorted(r["vec_id"] for r in s_hof.collect())
+    force_kernel("incremental_embedding_pairs", True)
+    s_arw, st_arw = incremental_embedding_dedup(df, empty_state(), **kw)
     arw = sorted(r["vec_id"] for r in s_arw.collect())
     assert hof == arw and 0 < len(hof) < 40
     assert st_hof.count() == st_arw.count() == 80
@@ -4113,7 +4106,7 @@ def test_incremental_embedding_arrow_kernel_equals_hof(spark):
     for lo, hi in ((0, 15), (15, 30), (30, 40)):
         surv, state = incremental_embedding_dedup(
             df.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
-            state, use_arrow=True, **kw)
+            state, **kw)
         got += [r["vec_id"] for r in surv.collect()]
     assert sorted(got) == hof
 
@@ -4142,7 +4135,7 @@ def test_sq_quantize_saturates_out_of_range(spark):
     assert q[1]["d"] == [100.0, 255.0]    # in-range stays exact
 
 
-def test_incremental_embedding_dedup_sq8_state(spark):
+def test_incremental_embedding_dedup_sq8_state(spark, force_kernel):
     """r14 (VERDICT #8): the SQ-int8 state representation. On a
     fixture whose cosine margins dwarf the quantization error, sq8
     decisions are IDENTICAL to raw on both kernels; sq8 batch replay
@@ -4177,14 +4170,16 @@ def test_incremental_embedding_dedup_sq8_state(spark):
               bands=2, planes=3, threshold=0.8)
     sq = dict(state_repr="sq8", sq_params=(lo, scale))
 
+    force_kernel("incremental_embedding_pairs", False)
     s_raw, _ = incremental_embedding_dedup(
-        df, empty_state(T.DoubleType()), use_arrow=False, **kw)
+        df, empty_state(T.DoubleType()), **kw)
     raw_ids = sorted(r["vec_id"] for r in s_raw.collect())
 
     s_sq_h, st_sq = incremental_embedding_dedup(
-        df, empty_state(T.ByteType()), use_arrow=False, **kw, **sq)
+        df, empty_state(T.ByteType()), **kw, **sq)
+    force_kernel("incremental_embedding_pairs", True)
     s_sq_a, _ = incremental_embedding_dedup(
-        df, empty_state(T.ByteType()), use_arrow=True, **kw, **sq)
+        df, empty_state(T.ByteType()), **kw, **sq)
     assert sorted(r["vec_id"] for r in s_sq_h.collect()) == raw_ids
     assert sorted(r["vec_id"] for r in s_sq_a.collect()) == raw_ids
     # the state actually stores int8 codes
@@ -4196,7 +4191,7 @@ def test_incremental_embedding_dedup_sq8_state(spark):
         surv, state = incremental_embedding_dedup(
             df.filter((F.col("vec_id") >= blo)
                       & (F.col("vec_id") < bhi)),
-            state, use_arrow=True, **kw, **sq)
+            state, **kw, **sq)
         got += [r["vec_id"] for r in surv.collect()]
     assert sorted(got) == raw_ids
 
@@ -5555,19 +5550,19 @@ def test_bipartite_projection_uncapped_pairs(spark):
     assert out.count() == 6  # C(4,2)
 
 
-def test_cosine_radius_matches_brute_filter(spark):
+def test_cosine_radius_matches_brute_filter(spark, force_kernel):
     from puffbird_spark.operators.similarity import (
         cosine_radius, cosine_topk,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 3)
-    radius = cosine_radius(
-        emb, q, tau=0.2, est_queries=3, use_arrow=False
-    )
+    force_kernel("cosine_radius", False)
+    force_kernel("cosine_topk", False)
+    radius = cosine_radius(emb, q, tau=0.2, est_queries=3)
     # top-k with huge k = the full scored pair set; filter >= tau
     full = cosine_topk(
-        emb, q, k=10**6, est_queries=3, use_arrow=False
+        emb, q, k=10**6, est_queries=3
     ).filter(F.col("cosine") >= 0.2)
     a = {(r.query_id, r.cand_id, r.cosine) for r in radius.collect()}
     b = {(r.query_id, r.cand_id, r.cosine) for r in full.collect()}
@@ -5820,7 +5815,7 @@ def test_weighted_percentiles_row_multiplicity_equivalence(spark):
     assert a == b
 
 
-def test_bq_topk_exact_at_full_prefilter(spark):
+def test_bq_topk_exact_at_full_prefilter(spark, force_kernel):
     from puffbird_spark.operators.similarity import bq_topk, cosine_topk
 
     emb = spark.read.parquet(
@@ -5828,7 +5823,8 @@ def test_bq_topk_exact_at_full_prefilter(spark):
     q = emb.filter(F.col("vec_id") < 3)
     # prefilter wide enough to keep every candidate -> exact equality
     bq = bq_topk(emb, q, dim=64, k=5, planes=32, prefilter=1000)
-    ex = cosine_topk(emb, q, k=5, est_queries=3, use_arrow=False)
+    force_kernel("cosine_topk", False)
+    ex = cosine_topk(emb, q, k=5, est_queries=3)
     assert sorted(map(tuple, bq.collect())) == sorted(map(tuple, ex.collect()))
 
 
@@ -5898,22 +5894,18 @@ def test_random_walks_salt_changes_draws(spark):
     assert sorted(map(tuple, a.collect())) != sorted(map(tuple, b.collect()))
 
 
-def test_bq_signature_kernels_bit_identical(spark):
-    import puffbird_spark.operators.similarity as S
+def test_bq_signature_kernels_bit_identical(spark, force_kernel):
     from puffbird_spark.operators.similarity import bq_topk
 
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet").limit(200)
     q = emb.filter(F.col("vec_id") < 3)
+    force_kernel("bq_signature", False)
     hof = sorted(map(tuple, bq_topk(
         emb, q, dim=64, k=5, planes=96, prefilter=4).collect()))
-    orig = S._est_rows
-    S._est_rows = lambda df, rb: 1e9  # force the Arrow signature kernel
-    try:
-        arrow = sorted(map(tuple, bq_topk(
-            emb, q, dim=64, k=5, planes=96, prefilter=4).collect()))
-    finally:
-        S._est_rows = orig
+    force_kernel("bq_signature", True)
+    arrow = sorted(map(tuple, bq_topk(
+        emb, q, dim=64, k=5, planes=96, prefilter=4).collect()))
     # the cumsum sign replay makes the kernels bit-identical — the
     # kernel choice must be invisible to results
     assert hof == arrow and len(hof) == 15
@@ -6041,7 +6033,7 @@ def test_augment_images_involution_and_dims(spark):
 
 
 def test_prefix_filter_auto_picks_dense_on_low_diversity(spark):
-    """strategy='auto' must route a low-diversity corpus (tiny distinct
+    """The kernel policy must route a low-diversity corpus (tiny distinct
     gram space, huge per-gram df — the regime where the candidate join
     degenerates, round-9 sf1 OOM) to the dense blocked kernel, and the
     result must still equal the all-pairs kernel."""
@@ -6051,7 +6043,7 @@ def test_prefix_filter_auto_picks_dense_on_low_diversity(spark):
 
     rng = random.Random(11)
     # 3-char alphabet => tiny char-2-gram space; 150 docs of 30 chars
-    # => avg df far above DENSE_MIN_AVG_DF
+    # => avg df far above ARROW_MIN_WORK["prefix_filter"]
     rows = [(i, "".join(rng.choice("abc") for _ in range(30)))
             for i in range(150)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -6075,7 +6067,7 @@ def test_prefix_filter_auto_picks_dense_on_low_diversity(spark):
     assert auto == ap
 
 
-def test_jaccard_strategies_randomized_differential(spark):
+def test_jaccard_strategies_randomized_differential(spark, force_kernel):
     """Randomized sweep across the regime boundary (round-9 dense path):
     corpora with alphabet sizes from tiny (dense regime) to wide
     (sparse regime), each checked three ways — all-pairs kernel vs the
@@ -6101,12 +6093,12 @@ def test_jaccard_strategies_randomized_differential(spark):
         df = spark.createDataFrame(rows, "doc_id long, text string")
         ap = sorted(map(tuple, DD.jaccard_pairs(
             df, "text", "doc_id", threshold=t, n=2, kind="char").collect()))
+        force_kernel("prefix_filter", False)
         sp = sorted(map(tuple, DD.prefix_filter_jaccard_pairs(
-            df, "text", "doc_id", threshold=t, n=2, kind="char",
-            strategy="sparse").collect()))
+            df, "text", "doc_id", threshold=t, n=2, kind="char").collect()))
+        force_kernel("prefix_filter", True)
         dn = sorted(map(tuple, DD.prefix_filter_jaccard_pairs(
-            df, "text", "doc_id", threshold=t, n=2, kind="char",
-            strategy="dense").collect()))
+            df, "text", "doc_id", threshold=t, n=2, kind="char").collect()))
         assert ap == sp, (seed, "sparse")
         assert ap == dn, (seed, "dense")
         assert len(ap) > 0, seed  # the sweep must be testing something
@@ -6146,7 +6138,7 @@ def test_equi_depth_matches_ntile_exactly(spark):
         assert got == ref, (n_rows, k)
 
 
-def test_dense_jaccard_block_ceiling_raises(spark):
+def test_dense_jaccard_block_ceiling_raises(spark, force_kernel):
     """Past DENSE_MAX_BLOCKS the dense path must refuse with guidance
     (MinHash) instead of grinding into the quadratic fan-out."""
     import pytest as _pytest
@@ -6157,11 +6149,12 @@ def test_dense_jaccard_block_ceiling_raises(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     orig_block, orig_max = DD.DENSE_BLOCK_DOCS, DD.DENSE_MAX_BLOCKS
     DD.DENSE_BLOCK_DOCS, DD.DENSE_MAX_BLOCKS = 4, 5
+    force_kernel("prefix_filter", True)
     try:
         with _pytest.raises(ValueError, match="minhash"):
             DD.prefix_filter_jaccard_pairs(
-                df, "text", "doc_id", threshold=0.5, n=2, kind="char",
-                strategy="dense").collect()
+                df, "text", "doc_id", threshold=0.5, n=2,
+                kind="char").collect()
     finally:
         DD.DENSE_BLOCK_DOCS, DD.DENSE_MAX_BLOCKS = orig_block, orig_max
 
@@ -6295,7 +6288,7 @@ def test_profile_topk_sparse_max_df_is_norm_only(spark):
     assert got != exact
 
 
-def test_zero_vector_cosine_is_zero_not_nan(spark):
+def test_zero_vector_cosine_is_zero_not_nan(spark, force_kernel):
     """Zero-norm embeddings (empty docs, padding) release cosine 0.0 on
     EVERY kernel — never NaN: Spark orders and compares NaN as GREATEST
     (non-IEEE), so an unguarded 0/0 makes a zero vector pass
@@ -6322,21 +6315,19 @@ def test_zero_vector_cosine_is_zero_not_nan(spark):
     ).collect()
     assert all(x["c"] == 0.0 for x in r)
 
-    for fn, kw in ((cosine_topk, {"k": 3}),
-                   (cosine_pairs_exact, {"threshold": 0.3})):
-        if fn is cosine_topk:
-            hof = fn(df, df, use_arrow=False, **kw).collect()
-            arw = fn(df, df, use_arrow=True, **kw).collect()
-        else:
-            hof = fn(df, use_arrow=False, **kw).collect()
-            arw = fn(df, use_arrow=True, **kw).collect()
+    for fn, args, kw in ((cosine_topk, (df, df), {"k": 3}),
+                         (cosine_pairs_exact, (df,), {"threshold": 0.3})):
+        force_kernel(fn.__name__, False)
+        hof = fn(*args, **kw).collect()
+        force_kernel(fn.__name__, True)
+        arw = fn(*args, **kw).collect()
         assert sorted(map(tuple, hof)) == sorted(map(tuple, arw)), fn
         assert not any(
             v is None or (isinstance(v, float) and math.isnan(v))
             for row in hof for v in row), fn
 
 
-def test_cosine_pairs_exact_hof_equals_arrow(spark):
+def test_cosine_pairs_exact_hof_equals_arrow(spark, force_kernel):
     """The blocked matrix kernel of cosine_pairs_exact must equal the
     JVM HOF theta-join path pair-for-pair at 6 dp — forced both ways,
     with a tiny block size so multi-block pairing is exercised."""
@@ -6349,12 +6340,13 @@ def test_cosine_pairs_exact_hof_equals_arrow(spark):
     # a few near-duplicates so the frontier is non-trivial
     rows += [(100 + i, [v * 1.01 for v in rows[i][1]]) for i in range(5)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    force_kernel("cosine_pairs_exact", False)
     hof = sorted(map(tuple, cosine_pairs_exact(
-        df, "vec_id", "embedding", threshold=0.2, dim=8,
-        use_arrow=False).collect()))
+        df, "vec_id", "embedding", threshold=0.2, dim=8).collect()))
+    force_kernel("cosine_pairs_exact", True)
     arrow = sorted(map(tuple, cosine_pairs_exact(
         df, "vec_id", "embedding", threshold=0.2, dim=8,
-        use_arrow=True, block_rows=16).collect()))
+        block_rows=16).collect()))
     assert hof == arrow
     assert len(hof) >= 5  # the planted near-dups must appear
 
@@ -6394,7 +6386,7 @@ def test_prefix_filter_boundary_pair_survives_release_slack(spark):
     assert row["jaccard"] == 0.85
 
 
-def test_ppjoin_positional_filter_differential(spark):
+def test_ppjoin_positional_filter_differential(spark, force_kernel):
     """r13 (VERDICT #9 / r11 #8): the PPJoin positional filter prunes
     candidates whose first-shared-prefix-token positions cap the
     overlap below ⌈t/(1+t)·(|x|+|y|)⌉ — recall must stay EXACTLY 1.
@@ -6408,6 +6400,7 @@ def test_ppjoin_positional_filter_differential(spark):
     from puffbird_spark.operators.dedup import (
         jaccard_pairs, prefix_filter_jaccard_pairs)
 
+    force_kernel("prefix_filter", False)
     rng = random.Random(13)
     vocab = [f"tok{i}" for i in range(60)]
     rows = []
@@ -6439,15 +6432,14 @@ def test_ppjoin_positional_filter_differential(spark):
         ap = sorted(map(tuple, jaccard_pairs(
             df, "text", "doc_id", threshold=t, n=1, kind="word").collect()))
         pf = sorted(map(tuple, prefix_filter_jaccard_pairs(
-            df, "text", "doc_id", threshold=t, n=1, kind="word",
-            strategy="sparse").collect()))
+            df, "text", "doc_id", threshold=t, n=1,
+            kind="word").collect()))
         assert ap == pf, t
         assert len(ap) > 0
     apc = sorted(map(tuple, jaccard_pairs(
         df, "text", "doc_id", threshold=0.5, n=3, kind="char").collect()))
     pfc = sorted(map(tuple, prefix_filter_jaccard_pairs(
-        df, "text", "doc_id", threshold=0.5, n=3, kind="char",
-        strategy="sparse").collect()))
+        df, "text", "doc_id", threshold=0.5, n=3, kind="char").collect()))
     assert apc == pfc
 
 

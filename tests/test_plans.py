@@ -457,7 +457,7 @@ def test_jaccard_prefix_sparse_candidates_equijoin(q):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_jaccard_dense_path_blocked_kernel(spark, sf_dir):
+def test_jaccard_dense_path_blocked_kernel(spark, sf_dir, force_kernel):
     """The dense-regime path (round-9 sf1 OOM fix) must be the blocked
     applyInPandas matmul: block-pair frames broadcast, one
     FlatMapGroupsInPandas kernel, and no cartesian anywhere — the whole
@@ -465,9 +465,9 @@ def test_jaccard_dense_path_blocked_kernel(spark, sf_dir):
     from puffbird_spark.operators.dedup import prefix_filter_jaccard_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    force_kernel("prefix_filter", True)
     df = prefix_filter_jaccard_pairs(
-        docs, "text", "doc_id", threshold=0.5, n=5, kind="char",
-        strategy="dense")
+        docs, "text", "doc_id", threshold=0.5, n=5, kind="char")
     plan = P.formatted_plan(df)
     assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
@@ -512,13 +512,51 @@ def test_kernel_auto_gate_tracks_pair_estimate(spark, sf_dir):
     drain_kernels()
     cosine_topk(emb, emb.limit(5), k=3, est_queries=5)  # ~3k pairs
     assert drain_kernels()["cosine_topk"] == "hof"
-    cosine_topk(emb, emb, k=3)  # ~500^2 pairs >= ARROW_MIN_PAIRS
+    cosine_topk(emb, emb, k=3)  # ~500^2 pairs >= its ARROW_MIN_WORK entry
     assert drain_kernels()["cosine_topk"] == "arrow"
 
     cosine_pairs_exact(emb.limit(50))
     assert drain_kernels()["cosine_pairs_exact"] == "hof"
     cosine_pairs_exact(emb)
     assert drain_kernels()["cosine_pairs_exact"] == "arrow"
+
+
+def test_kernel_policy_records_assign_and_prefix_filter(spark):
+    """k-means assignment and exact Jaccard choose a kernel from their
+    input too; both choices reach the drained record (the bench's
+    per-query kernel line) under their own names."""
+    from puffbird_spark.operators.clustering import kmeans_assign
+    from puffbird_spark.operators.dedup import prefix_filter_jaccard_pairs
+    from puffbird_spark.telemetry import drain_kernels
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)],
+        "vid long, emb array<double>")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha beta"), (3, "gamma")],
+        "doc_id long, text string")
+    drain_kernels()
+    kmeans_assign(vecs, "vid", "emb", k=2)
+    prefix_filter_jaccard_pairs(docs, "text", "doc_id")
+    assert drain_kernels() == {
+        "kmeans_assign": "literal", "prefix_filter": "sparse"}
+
+
+def test_kernel_drain_keeps_every_choice(spark, force_kernel):
+    """A step that calls one site twice and lands on both kernels
+    drains to both names, sorted — not just the last choice."""
+    from puffbird_spark.operators.similarity import cosine_topk
+    from puffbird_spark.telemetry import drain_kernels
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)],
+        "vec_id long, embedding array<double>")
+    drain_kernels()
+    force_kernel("cosine_topk", True)
+    cosine_topk(emb, emb, k=1)
+    force_kernel("cosine_topk", False)
+    cosine_topk(emb, emb, k=1)
+    assert drain_kernels() == {"cosine_topk": "arrow,hof"}
 
 
 def test_windowspec_splitter_handles_comma_bearing_exprs(spark):
