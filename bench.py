@@ -1,40 +1,26 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark runner: the ``BENCH_QUERIES`` set at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": total_cold_sec, "unit": "sec",
  "value_warm": total_warm_sec, "queries": {name: warm_med3_sec},
  "sf": ...}
 
-Round-7 stdout packing (VERDICT r6 #5): per-query stdout is the OFFICIAL
-number only — warm med3, a scalar, which is also the driver's spec'd
-``{"queries": {name: sec}}`` shape. The r5-r6 ``[cold, warm]`` pairs for
-46 queries left no room under the driver's 2000-char stdout tail for the
-six round-6 heavyweights; per-query cold remains on stderr (every run,
-with med3 samples and kernel lines) and the cold TOTAL stays in
-``value``. Round-over-round ratio lines are warm-vs-warm accordingly.
+``queries`` holds every ``BENCH_QUERIES`` entry at 2 dp, whatever the
+timings, so the set of names on stdout is fixed. Per-query cold times,
+the sorted warm samples and kernel lines go to stderr; the complete
+``[cold, warm]`` record at 3 dp goes to the ``bench_full.json`` sidecar.
 
-Round-4 methodology (VERDICT r3 #3), tightened round 6 (VERDICT r5 #2):
-every query runs FOUR times in-session.
+Every query runs FOUR times in-session (``time_gate``):
 - cold  = first run: includes plan analysis, codegen, Arrow worker
   spin-up (~0.5 s/worker for the first Python stage of a session) — what
   a one-shot job pays.
 - warm  = MEDIAN of the next 3 runs: steady-state throughput — what a
   long-lived cluster pays per query, robust to one noisy sample on a
-  loaded driver host (single warm samples produced two rounds of
-  unattributable 1.5-5x "regressions" that were ambient load). The
-  sorted samples print to stderr per query, as does a `# kernel` line
-  naming the Arrow-vs-Column/HOF choice each auto-gated operator made
+  loaded driver host (single warm samples produced unattributable
+  1.5-5x "regressions" that were ambient load). The sorted samples
+  print to stderr per query, as does a `# kernel` line naming the
+  Arrow-vs-Column/HOF choice each auto-gated operator made
   (puffbird_spark/telemetry.py), so any residual outlier is
   attributable to a kernel flip vs the host.
-
-Round-5 stdout contract (VERDICT r4 #2): the driver snapshots only the
-LAST 2000 chars of stdout (`tail` in BENCH_r*.json) — round 4's line
-(two parallel 35-query dicts + ratio_vs_prev) overflowed that and the
-official record came back ``parsed: null``. The line now packs cold+warm
-as a single ``{name: [cold, warm]}`` dict at 2 dp, drops
-``ratio_vs_prev`` from stdout (derivable from the previous round's
-snapshot), and ``tests/test_bench_contract.py`` asserts the worst-case
-serialized line stays under 1800 chars. Full 3-dp detail and the
-vs-previous ratios still go to stderr per query.
 
 Work is forced with a count() over the result (no driver-side collect of
 payload rows).
@@ -42,10 +28,8 @@ payload rows).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -263,39 +247,6 @@ BENCH_OVERRIDES = {
 }
 
 
-def _prev_round_timings() -> dict[str, float]:
-    """Official per-query timings from the newest BENCH_r{N}.json in the
-    repo root. r5-r6 snapshots store ``{name: [cold, warm]}`` — take
-    warm (the official number since r6); r1-r4 and r7+ store a scalar
-    (cold historically, warm now) — take it as-is. Ratio lines compare
-    official-vs-official either way."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, dict[str, float]] | None = None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            # driver snapshots wrap the bench line under "parsed"
-            parsed = data.get("parsed") or {}
-            q = data.get("queries") or parsed.get("queries") or {}
-        except Exception:
-            continue
-        if not q:
-            # parse-broken snapshot (BENCH_r04's parsed:null) — don't let
-            # it shadow an older round's valid timings
-            continue
-        rnd = int(m.group(1))
-        if best is None or rnd > best[0]:
-            best = (rnd, {
-                k: float(v[-1] if isinstance(v, (list, tuple)) else v)
-                for k, v in q.items()
-            })
-    return best[1] if best else {}
-
-
 def _warm_python_workers(spark, cpus: int) -> None:
     """Keep the Python worker fleet hot; call before each measured query.
 
@@ -377,6 +328,38 @@ def _drop_leaked_blocks(spark) -> None:
         rdd.unpersist(True)
 
 
+def time_gate(spark, fn, sf_dir: str, cpus: int):
+    """Time one gate: a cold run, then three warm samples.
+
+    The Python fleet is kept alive first: the 60 s idle reaper
+    (``_warm_python_workers``) must never fire INSIDE a measured window;
+    this costs ~0.1 s when the fleet is already hot. After every run the
+    kernel telemetry is drained and the run's pinned blocks are
+    released, outside the timed window; a cold run that raises still
+    releases its blocks before the error propagates. Warm is the MEDIAN
+    of the samples: the median survives one noisy run on a loaded host.
+
+    Returns ``(rows, cold_s, warm_samples_s, kernels)``, where
+    ``kernels`` is what the cold run chose (``telemetry.drain_kernels``).
+    """
+    _warm_python_workers(spark, cpus)
+    t0 = time.time()
+    try:
+        n = fn(spark, sf_dir).count()
+    finally:
+        cold = time.time() - t0
+        kernels = drain_kernels()
+        _drop_leaked_blocks(spark)
+    samples = []
+    for _ in range(3):
+        t0 = time.time()
+        fn(spark, sf_dir).count()
+        samples.append(time.time() - t0)
+        drain_kernels()
+        _drop_leaked_blocks(spark)
+    return n, cold, samples, kernels
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -404,25 +387,8 @@ def main() -> None:
     warm: dict[str, float] = {}
     for name in BENCH_QUERIES:
         fn = BENCH_OVERRIDES.get(name) or QUERIES[name]
-        # fleet keep-alive: the 60 s idle reaper (docstring above) must
-        # never fire INSIDE a measured window; ~0.1 s when already hot
-        _warm_python_workers(spark, int(cpus))
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        n = df.count()
-        cold[name] = round(time.time() - t0, 3)
-        kernels = drain_kernels()
-        _drop_leaked_blocks(spark)
-        # warm = MEDIAN of 3 runs (VERDICT r5 #2): a single warm sample on
-        # a loaded host produced two rounds of unattributable regressions;
-        # the median survives one noisy run per query.
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-            drain_kernels()
-            _drop_leaked_blocks(spark)
+        n, cold_s, samples, kernels = time_gate(spark, fn, sf_dir, int(cpus))
+        cold[name] = round(cold_s, 3)
         warm[name] = round(statistics.median(samples), 3)
         print(
             f"# {name}: cold {cold[name]:.3f}s / warm {warm[name]:.3f}s"
@@ -434,15 +400,6 @@ def main() -> None:
             picks = ",".join(f"{op}={k}" for op, k in sorted(kernels.items()))
             print(f"# kernel {name}: {picks}", file=sys.stderr)
 
-    # vs-previous ratios: stderr only (VERDICT r4 #2 — derivable from the
-    # prior round's snapshot; keeping them off stdout keeps the line small)
-    prev = _prev_round_timings()
-    for name in warm:
-        if name in prev and prev[name] > 0:
-            print(
-                f"# ratio_vs_prev {name}: {warm[name] / prev[name]:.3f}",
-                file=sys.stderr,
-            )
     try:
         la = ", ".join(f"{x:.2f}" for x in os.getloadavg())
         print(f"# host loadavg at end: {la}", file=sys.stderr)
@@ -454,61 +411,31 @@ def main() -> None:
     spark.stop()
 
 
-#: serialized stdout-line budget: the driver tail-captures 2000 chars;
-#: stay under this with margin (the r4 overflow came back `parsed: null`)
-STDOUT_LINE_BUDGET = 1800
-
-#: Round-9 rotation decision (VERDICT r7 #8, r8 #5): the stdout line
-#: additionally reserves ~20 future entries' worth of characters, so the
-#: official line provably cannot creep into the capture limit as bench
-#: queries are added. The stdout dict therefore carries the LARGEST-warm
-#: queries that fit (the ones regression analysis can actually use —
-#: sub-second entries are host jitter at sf0.1) and the COMPLETE
-#: per-query record goes to the ``bench_full.json`` sidecar every run.
-#: Nothing is silently capped: totals cover every query, the off-stdout
-#: names are announced on stderr, and the sidecar holds cold+warm at
-#: 3 dp for all of them.
-STDOUT_HEADROOM = 600
-
 FULL_SIDECAR = "bench_full.json"
 
 
 def build_stdout_record(cold: dict[str, float], warm: dict[str, float],
                         sf_label: str) -> dict:
-    """The one-line stdout payload. Kept as a pure function so
-    tests/test_bench_contract.py can assert the serialized size against
-    the driver's 2000-char stdout tail capture (BENCH_r04 lesson).
-    Trims smallest-warm entries until the line fits
-    ``STDOUT_LINE_BUDGET - STDOUT_HEADROOM`` (see rotation note above)."""
-    record = {
+    """The one-line stdout payload: totals plus every query's warm med3.
+    A pure function, so tests/test_bench_contract.py can pin its key
+    set for any timings."""
+    return {
         "metric": "bench_total_runtime",
         "value": round(sum(cold.values()), 2),
         "unit": "sec",
         "value_warm": round(sum(warm.values()), 2),
-        # per-query stdout is the OFFICIAL number only (warm med3, the
-        # driver's spec'd {name: sec} shape); per-query cold is on stderr
-        # and the full set in the bench_full.json sidecar
+        # per-query stdout is warm med3 only; per-query cold is on stderr
+        # and in the bench_full.json sidecar
         "queries": {name: round(warm.get(name, 0.0), 2) for name in cold},
         "sf": float(sf_label) if sf_label.replace(".", "").isdigit() else sf_label,
     }
-    limit = STDOUT_LINE_BUDGET - STDOUT_HEADROOM
-    dropped = []
-    while (len(json.dumps(record, separators=(",", ":")))
-           > limit and record["queries"]):
-        name = min(record["queries"], key=lambda n: (record["queries"][n], n))
-        dropped.append(name)
-        del record["queries"][name]
-    if dropped:
-        print(f"# stdout budget: {len(dropped)} smallest-warm entries are "
-              f"sidecar/stderr-only this run: {dropped}", file=sys.stderr)
-    return record
 
 
 def write_full_sidecar(cold: dict[str, float], warm: dict[str, float],
                        sf_label: str, path: str | None = None) -> str:
     """The complete per-query record — every bench query's ``[cold,
-    warm]`` at 3 dp plus totals — written beside the repo root each run,
-    so the trimmed stdout line never loses information."""
+    warm]`` at 3 dp plus totals and host loadavg — written beside the
+    repo root each run; stdout carries warm times only."""
     here = os.path.dirname(os.path.abspath(__file__))
     path = path or os.path.join(here, FULL_SIDECAR)
     payload = {

@@ -1,6 +1,6 @@
 """Declared query surface (SURVEY.md §2): importing this package populates
 the QUERIES/ORACLES registries consumed by ``__spark_entry__`` and
-``bench.py``."""
+``bench.py``, in import order."""
 
 from .base import ORACLES, QUERIES, load  # noqa: F401
 from . import (  # noqa: F401,E402
@@ -12,46 +12,9 @@ from . import (  # noqa: F401,E402
     relational,
     sources_q,
     sql_q,
-    staged_r12,
-    staged_r13,
-    staged_r14,
     streaming_q,
     udf_q,
     windows_q,
 )
-
-# The driver's correctness gate consumes the first 50 registry entries in
-# order. The rotation is GENERATED, not hand-maintained (VERDICT r6 #3):
-# ``tools/next_window.py`` reads CORRECTNESS_r*.json and emits
-# ``verify_window.txt`` — never-driver-checked gates first, then stalest
-# evidence first. Re-run the tool (committing the new file) whenever a
-# round's CORRECTNESS lands or a new gate is registered.
-_WINDOW_FILE = __import__("os").path.join(
-    __import__("os").path.dirname(__file__), "verify_window.txt"
-)
-
-
-def _load_window() -> list[str]:
-    try:
-        with open(_WINDOW_FILE) as fh:
-            return [
-                line.strip()
-                for line in fh
-                if line.strip() and not line.startswith("#")
-            ]
-    except OSError:
-        return []
-
-
-def _reorder() -> None:
-    snapshot = dict(QUERIES)
-    QUERIES.clear()
-    for name in _load_window():
-        if name in snapshot:
-            QUERIES[name] = snapshot.pop(name)
-    QUERIES.update(snapshot)
-
-
-_reorder()
 
 __all__ = ["QUERIES", "ORACLES", "load"]

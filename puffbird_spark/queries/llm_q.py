@@ -6143,6 +6143,73 @@ def eval_chrf(spark, sf_dir):
         "__ct", "__rt", id_col="doc_id", max_n=6, beta=2.0)
 
 
+def _corpus_bleu_oracle(max_n: int = 4) -> str:
+    """Pooled replay of corpus_bleu over the same dropped-token fixture
+    as eval_bleu: per-order matches and candidate totals sum over ALL
+    pairs before the ratio; BP compares total lengths."""
+    tok_gram = ("[array_to_string({col}[i:i+{n}-1], ' ') "
+                "FOR i IN range(1, len({col}) - {n} + 2)]")
+    orders = ",".join(
+        _clip_match_sql("b", "ct", "rt", n, tok_gram)
+        for n in range(1, max_n + 1))
+    munion = " UNION ALL ".join(
+        f"SELECT {n} AS n, doc_id, mt FROM m{n}"
+        for n in range(1, max_n + 1))
+    ncols = ",".join(str(n) for n in range(1, max_n + 1))
+    pcols = ",\n    ".join(
+        f"MAX(CASE WHEN n = {n} THEN round(p, 6) END) AS p{n}"
+        for n in range(1, max_n + 1))
+    psel = ", ".join(f"p{n}" for n in range(1, max_n + 1))
+    return f"""
+WITH {_EVAL_PAIR_SQL},{orders},
+mall AS (SELECT n, SUM(mt) AS m FROM ({munion}) GROUP BY n),
+tall AS (SELECT n.n,
+    SUM(GREATEST(len(b.ct) - n.n + 1, 0)) AS t,
+    COUNT(*) AS pairs, SUM(len(b.ct)) AS sc, SUM(len(b.rt)) AS sr
+  FROM b CROSS JOIN (SELECT unnest([{ncols}]) AS n) n GROUP BY 1),
+pern AS (SELECT tall.n, tall.t, COALESCE(mall.m, 0) AS m,
+    tall.pairs, tall.sc, tall.sr
+  FROM tall LEFT JOIN mall ON mall.n = tall.n),
+p AS (SELECT n, pairs, sc, sr,
+    CASE WHEN t > 0 THEN CAST(m AS DOUBLE) / t ELSE 0.0 END AS p
+  FROM pern),
+agg AS (SELECT MAX(pairs) AS n_pairs, MAX(sc) AS sc, MAX(sr) AS sr,
+    MIN(p) AS pmin,
+    SUM(CASE WHEN p > 0
+             THEN CAST(round(ln(p), 9) AS DECIMAL(20,9)) END) AS slog,
+    {pcols}
+  FROM p),
+fin AS (SELECT n_pairs, sc, sr, {psel}, pmin, slog,
+    CASE WHEN sc = 0 THEN 0.0
+         WHEN sc >= sr THEN 1.0
+         ELSE round(exp(1.0 - CAST(sr AS DOUBLE) / sc), 9) END AS bp
+  FROM agg)
+SELECT CAST(n_pairs AS BIGINT) AS n_pairs,
+  CAST(sc AS BIGINT) AS cand_tokens, CAST(sr AS BIGINT) AS ref_tokens,
+  {psel}, round(bp, 6) AS bp,
+  CASE WHEN pmin > 0 AND sc > 0
+       THEN round(bp * exp(CAST(slog AS DOUBLE) / {max_n}.0), 6)
+       ELSE 0.0 END AS bleu
+FROM fin
+"""
+
+
+@query("eval_corpus_bleu", oracle=_corpus_bleu_oracle())
+def eval_corpus_bleu(spark, sf_dir):
+    """Corpus-level BLEU (`corpus_bleu`, operators/evaluation.py;
+    Papineni et al. ACL 2002 exact micro-average) over the same
+    dropped-token fixture as eval_bleu: matches and candidate totals
+    pool over all 500 pairs before the per-order ratio, BP compares
+    total lengths — one short pair dilutes instead of zeroing (the
+    sentence/corpus distinction, unit- and property-pinned). One row;
+    the oracle replays the pooled sums, the log ladder, and BP."""
+    from ..operators.evaluation import corpus_bleu
+
+    return corpus_bleu(
+        _eval_pair_fixture(spark, sf_dir), "__cand", "__ref",
+        id_col="doc_id", max_n=4)
+
+
 def _rouge_oracle(max_n: int = 2) -> str:
     """Full replay of rouge_n over the eval-pair fixture: clipped
     token-gram matches per order, per-order P/R as 9-dp-snapped exact
@@ -6459,6 +6526,49 @@ def eval_krippendorff_alpha(spark, sf_dir):
     return krippendorff_alpha(ev, "unit", "value")
 
 
+_FLEISS_ORACLE = """
+WITH base AS (SELECT event_id // 4 AS u, event_type AS c FROM events),
+uc AS (SELECT u, c, COUNT(*) AS nuc FROM base GROUP BY 1, 2),
+pu AS (SELECT u, SUM(nuc) AS n,
+         SUM(CAST(nuc AS HUGEINT) * CAST(nuc AS HUGEINT)) AS sq
+       FROM uc GROUP BY 1),
+obs AS (SELECT COUNT(*) AS nu,
+    SUM(CAST(round((CAST(sq AS DOUBLE) - 4) / (4 * 3), 9)
+        AS DECIMAL(20,9))) AS pusum
+  FROM pu),
+cat AS (SELECT c, SUM(nuc) AS nc FROM uc GROUP BY 1),
+esq AS (SELECT SUM(CAST(nc AS HUGEINT) * CAST(nc AS HUGEINT)) AS s
+        FROM cat),
+f AS (SELECT nu, CAST(pusum AS DOUBLE) / nu AS pbar,
+    CAST(s AS DOUBLE) / ((CAST(nu AS DOUBLE) * 4)
+                         * (CAST(nu AS DOUBLE) * 4)) AS pe
+  FROM obs, esq)
+SELECT CAST(nu AS BIGINT) AS n_units, CAST(4 AS BIGINT) AS n_raters,
+  round(pbar, 6) AS p_bar, round(pe, 6) AS p_e,
+  CASE WHEN pe < 1 THEN round((pbar - pe) / (1 - pe), 6) END AS kappa
+FROM f
+"""
+
+
+@query("eval_fleiss_kappa", oracle=_FLEISS_ORACLE)
+def eval_fleiss_kappa(spark, sf_dir):
+    """Fleiss' kappa over a fixed 4-rater panel (`fleiss_kappa`,
+    operators/evaluation.py; Fleiss 1971): per-unit agreement from
+    category count squares vs squared category marginals. Fixture:
+    every 4 consecutive events form one unit (event_id // 4 — the
+    panel-size contract holds exactly at both oracle SFs), rated with
+    their event_type. One count aggregation + two tiny folds."""
+    from ..operators.evaluation import fleiss_kappa
+
+    # integer `div`, never double division (the round-9 hour-bucket
+    # lesson): exact at any id magnitude; event_id is non-negative in
+    # every test table, where `div` and the oracle's `//` coincide
+    ev = load(spark, sf_dir, "events").select(
+        F.expr("event_id div 4").alias("unit"),
+        F.col("event_type").alias("value"))
+    return fleiss_kappa(ev, "unit", "value")
+
+
 _ROC_AUC_ORACLE = """
 WITH b AS (SELECT value AS s,
     event_type IN ('purchase', 'signup') AS y
@@ -6588,6 +6698,47 @@ def eval_probabilistic(spark, sf_dir):
     return probabilistic_scores(
         ev, F.col("value") - F.floor("value"),
         F.col("event_type").isin("purchase", "signup"))
+
+
+_MCC_ORACLE = """
+WITH b AS (SELECT value > 10 AS y, value > 8 AS p FROM events
+           WHERE value IS NOT NULL),
+t AS (SELECT
+    SUM(CASE WHEN y AND p THEN 1 ELSE 0 END) AS tp,
+    SUM(CASE WHEN NOT y AND p THEN 1 ELSE 0 END) AS fp,
+    SUM(CASE WHEN NOT y AND NOT p THEN 1 ELSE 0 END) AS tn,
+    SUM(CASE WHEN y AND NOT p THEN 1 ELSE 0 END) AS fn
+  FROM b)
+SELECT CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+  CAST(tn AS BIGINT) AS tn, CAST(fn AS BIGINT) AS fn,
+  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tn + fp > 0
+        AND tn + fn > 0
+       THEN round(CAST(CAST(tp AS HUGEINT) * tn
+                       - CAST(fp AS HUGEINT) * fn AS DOUBLE)
+                  / sqrt(CAST(tp + fp AS DOUBLE)
+                         * CAST(tp + fn AS DOUBLE)
+                         * CAST(tn + fp AS DOUBLE)
+                         * CAST(tn + fn AS DOUBLE)), 6)
+  END AS mcc
+FROM t
+"""
+
+
+@query("eval_mcc", oracle=_MCC_ORACLE)
+def eval_mcc(spark, sf_dir):
+    """Matthews correlation coefficient (`mcc_binary`,
+    operators/evaluation.py; Matthews 1975) — the imbalance-honest
+    confusion-matrix summary: exact long cells from one aggregation
+    pass, IEEE-exact sqrt, NULL on a degenerate marginal. Fixture: a
+    threshold 'classifier' (value > 8) scored against a stricter
+    truth (value > 10) — all four cells populated, MCC strongly
+    positive."""
+    from ..operators.evaluation import mcc_binary
+
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull())
+    return mcc_binary(
+        ev, F.col("value") > 10, F.col("value") > 8)
 
 
 _ZIPF_ORACLE = """

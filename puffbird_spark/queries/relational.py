@@ -5365,6 +5365,61 @@ def diag_cliffs_delta(spark, sf_dir):
     return cliffs_delta(li, F.col("l_returnflag") == "R", "l_quantity")
 
 
+_EFFECT_SIZE_ORACLE = """
+WITH b AS (SELECT CAST(value AS DECIMAL(20,6)) AS v,
+    event_type = 'purchase' AS a
+  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
+t AS (SELECT
+    SUM(CASE WHEN a THEN 1 ELSE 0 END) AS na,
+    SUM(CASE WHEN a THEN 0 ELSE 1 END) AS nb,
+    SUM(CASE WHEN a THEN v END) AS sa,
+    SUM(CASE WHEN NOT a THEN v END) AS sb,
+    SUM(CASE WHEN a THEN CAST(v * 1000000 AS HUGEINT)
+                         * CAST(v * 1000000 AS HUGEINT) END) AS qa,
+    SUM(CASE WHEN NOT a THEN CAST(v * 1000000 AS HUGEINT)
+                             * CAST(v * 1000000 AS HUGEINT) END) AS qb
+  FROM b),
+f AS (SELECT CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
+    CAST(na AS DOUBLE) AS nad, CAST(nb AS DOUBLE) AS nbd,
+    CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd,
+    CAST(qa AS DOUBLE) / 1e12 AS qad,
+    CAST(qb AS DOUBLE) / 1e12 AS qbd
+  FROM t),
+g AS (SELECT *,
+    (nad * qad - sad * sad) / (nad * (nad - 1.0)) AS va,
+    (nbd * qbd - sbd * sbd) / (nbd * (nbd - 1.0)) AS vb
+  FROM f),
+h AS (SELECT *,
+    ((nad - 1.0) * va + (nbd - 1.0) * vb) / (nad + nbd - 2.0) AS pooled
+  FROM g)
+SELECT na AS n_a, nb AS n_b,
+  round(sad / nad, 6) AS mean_a, round(sbd / nbd, 6) AS mean_b,
+  CASE WHEN na >= 2 AND nb >= 2 AND pooled > 0
+       THEN round((sad / nad - sbd / nbd) / sqrt(pooled), 6)
+  END AS cohens_d,
+  CASE WHEN na >= 2 AND nb >= 2 AND pooled > 0
+       THEN round((sad / nad - sbd / nbd) / sqrt(pooled)
+                  * (1.0 - 3.0 / (4.0 * (nad + nbd) - 9.0)), 6)
+  END AS hedges_g
+FROM h
+"""
+
+
+@query("diag_effect_size", oracle=_EFFECT_SIZE_ORACLE)
+def diag_effect_size(spark, sf_dir):
+    """Cohen's d + Hedges' g (`effect_size`, operators/drift.py;
+    Cohen 1988, Hedges 1981) — the standardized mean-difference
+    companion to `diag_mann_whitney`'s significance z: HOW BIG is the
+    purchase-vs-rest value shift. Exact decimal sums, scaled-integer
+    Σx² (the r13 lossy-decimal-square lesson), one aggregation pass,
+    factors-as-double combine."""
+    from ..operators.drift import effect_size
+
+    ev = load(spark, sf_dir, "events")
+    return effect_size(
+        ev, F.col("event_type") == "purchase", "value")
+
+
 _KRUSKAL_ORACLE = """
 WITH b AS (SELECT CAST(l_returnflag AS VARCHAR) AS g, l_quantity AS v
   FROM lineitem WHERE l_returnflag IS NOT NULL
@@ -5480,6 +5535,41 @@ def timeseries_acf_entity(spark, sf_dir):
     return autocorrelation(
         ev, "user_id", "ts", "value", lags=(1, 2, 3),
         order_tiebreak="event_id")
+
+
+_PACF_ORACLE = f"""
+WITH acf AS ({_ACF_ORACLE}),
+p AS (SELECT user_id, MAX(n) AS n,
+    MAX(CASE WHEN lag = 1 THEN acf END) AS r1,
+    MAX(CASE WHEN lag = 2 THEN acf END) AS r2,
+    MAX(CASE WHEN lag = 3 THEN acf END) AS r3
+  FROM acf GROUP BY 1),
+f AS (SELECT user_id, n, r1, r2, r3, 1 - r1 * r1 AS den2 FROM p),
+g AS (SELECT *, (r2 - r1 * r1) / den2 AS p22 FROM f),
+h AS (SELECT *, r1 * (1 - p22) AS p21 FROM g),
+i AS (SELECT *, 1 - p21 * r1 - p22 * r2 AS den3 FROM h)
+SELECT user_id, n, round(r1, 6) AS pacf1,
+  CASE WHEN den2 <> 0 THEN round(p22, 6) END AS pacf2,
+  CASE WHEN den2 <> 0 AND den3 <> 0
+       THEN round((r3 - p21 * r2 - p22 * r1) / den3, 6) END AS pacf3
+FROM i
+"""
+
+
+@query("timeseries_pacf_entity", oracle=_PACF_ORACLE)
+def timeseries_pacf_entity(spark, sf_dir):
+    """Per-entity partial autocorrelation at lags 1..3
+    (`partial_autocorrelation`, operators/timeseries.py; Box &
+    Jenkins / Durbin-Levinson unrolled) — the AR-order selector over
+    each user's event-value sequence, computed from the RELEASED
+    6-dp ACF values so both engines fold identical doubles. Same
+    keyed shuffle shape as `timeseries_acf_entity` plus one keyed
+    pivot fold."""
+    from ..operators.timeseries import partial_autocorrelation
+
+    ev = load(spark, sf_dir, "events")
+    return partial_autocorrelation(
+        ev, "user_id", "ts", "value", order_tiebreak="event_id")
 
 
 _LJUNG_ORACLE = f"""

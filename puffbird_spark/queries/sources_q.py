@@ -3497,6 +3497,57 @@ def multimodal_tiff_raster(spark, sf_dir):
     return tiff_stats(docs)
 
 
+_EXIF_ORACLE = """
+WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS path,
+    doc_id % 997 AS s,
+    CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS bo
+  FROM documents)
+SELECT path, bo AS byte_order,
+  CAST(8 AS INTEGER) AS n_ifd0, CAST(3 AS INTEGER) AS n_exif,
+  CAST(640 + s % 1360 AS BIGINT) AS width,
+  CAST(480 + s % 600 AS BIGINT) AS height,
+  CAST(1 + s % 8 AS INTEGER) AS orientation,
+  'CAM' || CAST(s % 10 AS VARCHAR) AS make,
+  'MODEL-' || CAST(s % 100 AS VARCHAR) AS model,
+  printf('2024:%02d:%02d %02d:%02d:%02d',
+         1 + s % 12, 1 + s % 28, s % 24, s % 60, s % 60) AS datetime,
+  CAST(72 + s % 228 AS BIGINT) AS xres_num,
+  CAST(1 AS BIGINT) AS xres_den,
+  CAST(1 AS BIGINT) AS exposure_num,
+  CAST(60 + s % 940 AS BIGINT) AS exposure_den,
+  CAST(100 * (1 + s % 32) AS INTEGER) AS iso,
+  CAST((35 + s % 165) * 10 + s % 10 AS BIGINT) AS focal_num,
+  CAST(10 AS BIGINT) AS focal_den
+FROM d
+"""
+
+
+@query("multimodal_exif", oracle=_EXIF_ORACLE)
+def multimodal_exif(spark, sf_dir):
+    """TIFF/EXIF metadata extraction (`exif_metadata` +
+    `decode_tiff_exif`, operators/multimodal.py) — REAL IFD walks
+    (byte-order + magic validation, ascending-tag entries, the 4-byte
+    inline-vs-offset rule, ASCII/SHORT/LONG/RATIONAL, EXIF sub-IFD
+    pointer) over fixture TIFFs that ALTERNATE little/big endian by
+    doc parity, so both decode paths are driven. The oracle replays
+    every released field closed-form from the seed — encoder and
+    decoder must both be exactly right. Arrow mapInPandas media
+    shape, zero shuffle, metadata-only byte touches."""
+    from ..operators.dedup import widen_parallelism
+    from ..operators.multimodal import encode_tiff_exif, exif_metadata
+
+    def _make(doc_id):
+        return doc_id.map(
+            lambda i: encode_tiff_exif(
+                int(i) % 997, "II" if int(i) % 2 == 0 else "MM"))
+
+    make_tiff = F.pandas_udf(_make, returnType="binary")
+    docs = widen_parallelism(load(spark, sf_dir, "documents")).select(
+        F.col("doc_id").cast("string").alias("path"),
+        make_tiff(F.col("doc_id")).alias("content"))
+    return exif_metadata(docs)
+
+
 @query("source_warc_records", oracle="""
 WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS path, doc_id AS did,
     doc_id % 997 AS s, 2 + doc_id % 3 AS nrec

@@ -374,6 +374,99 @@ def stream_stateful_count(spark, sf_dir):
     )
 
 
+#: event-time TTL for the streaming inactivity gate (6 h in seconds):
+#: at both driven SFs a healthy fraction of users have a trailing
+#: inactivity gap above it (sf0.001: 9 of 15) and the rest below.
+_TTL_SEC = 6 * 3600
+
+
+@query("stream_state_ttl", oracle=f"""
+WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events
+           WHERE user_id IS NOT NULL),
+cut AS (SELECT (MIN(us) + MAX(us)) // 2 AS c, MAX(us) AS mx,
+               (SELECT MAX(us) FROM e WHERE us < (SELECT (MIN(us) + MAX(us)) // 2 FROM e)) AS mxb0
+        FROM e),
+per AS (SELECT user_id, MIN(us) AS first_us, MAX(us) AS last_us,
+               COUNT(*) AS n FROM e GROUP BY 1)
+SELECT per.user_id,
+  per.first_us AS first_seen_us, per.last_us AS last_seen_us,
+  CAST(per.n AS BIGINT) AS n_events,
+  CAST(CASE WHEN per.last_us // 1000 + {_TTL_SEC * 1000}
+                 < cut.mxb0 // 1000
+            THEN cut.mxb0 // 1000
+            ELSE cut.mx // 1000 END AS BIGINT) AS expired_at_wm_ms
+FROM per CROSS JOIN cut
+WHERE per.last_us // 1000 + {_TTL_SEC * 1000} < cut.mx // 1000
+""")
+def stream_state_ttl(spark, sf_dir):
+    """TRUE streaming event-time state TTL (`ttl_inactivity_tracker`,
+    streaming/stateful.py): per-user activity state expires when the
+    watermark passes last-activity + 6 h, emitting one final row per
+    expired user — the dormant-entity emission. Replay: two
+    deterministic halves cut at the LITERAL midpoint timestamp
+    (oracle-computable, unlike a sampled range partitioner); after the
+    last file the engine's automatic no-data micro-batch
+    (spark.sql.streaming.noDataMicroBatches, default on) advances the
+    watermark to the final event time and fires the remaining eligible
+    timeouts — no sentinel needed (a far-future sentinel would push
+    the final watermark past EVERY user and evict all of them). The
+    oracle's visibility rule: a user is emitted iff last_ms + ttl_ms <
+    final watermark (ms-floored, strict — the engine's event-time
+    timeout predicate), with state always the user's FULL history (a
+    mid-stream evictee has no later events by construction; an
+    active-in-both-halves user cannot time out at the half boundary);
+    the recorded watermark is the half-boundary one for early
+    evictions, the global one otherwise."""
+    import os
+    import shutil
+    import time as _time
+
+    from ..sources import normalize_nano_ts
+    from ..streaming import write_foreach_batch
+    from ..streaming.stateful import ttl_inactivity_tracker
+
+    tag = sf_dir.rstrip("/").replace("/", "_")
+    base = f"/tmp/pbs_strttl{tag}"
+    out_dir = f"{base}/out"
+    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
+        shutil.rmtree(base, ignore_errors=True)
+        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = normalize_nano_ts(raw, ["ts"]).filter(
+            F.col("user_id").isNotNull()
+        ).select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+        lo, hi = ev.agg(
+            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+        ).collect()[0]
+        cut = (int(lo) + int(hi)) // 2
+        stages = [
+            ev.filter(F.unix_micros("ts") < cut),
+            ev.filter(F.unix_micros("ts") >= cut),
+        ]
+        os.makedirs(f"{base}/in", exist_ok=True)
+        for i, sdf in enumerate(stages):
+            tmp = f"{base}/stage{i}"
+            sdf.coalesce(1).write.parquet(tmp)
+            part = next(f for f in os.listdir(tmp)
+                        if f.endswith(".parquet"))
+            shutil.copy(f"{tmp}/{part}", f"{base}/in/b{i}.parquet")
+            _time.sleep(1.1)  # distinct whole-second mtimes
+        src = (spark.readStream.schema("user_id long, ts timestamp")
+               .option("maxFilesPerTrigger", 1).parquet(f"{base}/in"))
+        expired = ttl_inactivity_tracker(
+            src, key="user_id", ts_col="ts", ttl_sec=_TTL_SEC)
+
+        def sink(df, epoch_id):
+            df.write.mode("append").parquet(out_dir)
+
+        q = write_foreach_batch(
+            expired, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
+            output_mode="append").start()
+        q.awaitTermination(300)
+    return spark.read.parquet(out_dir).select(
+        "user_id", "first_seen_us", "last_seen_us", "n_events",
+        "expired_at_wm_ms")
+
+
 @query("stream_stream_join", oracle="""
 SELECT v.user_id AS user_id, v.event_id AS view_id,
        p.event_id AS purchase_id,

@@ -1,62 +1,60 @@
-"""Driver contract for bench.py stdout (VERDICT r4 #2).
+"""Contract for bench.py's stdout line and its bench_full.json sidecar.
 
-The round driver snapshots only the LAST 2000 characters of bench stdout
-(`tail` in BENCH_r*.json) and JSON-parses the final line. Round 4's line
-(cold dict + warm dict + ratio_vs_prev for 35 queries) overflowed that
-capture and the official record came back ``parsed: null``. These tests
-pin the stdout payload to a worst-case serialized size comfortably under
-the capture limit, for the CURRENT BENCH_QUERIES list — so adding bench
-queries without re-checking the budget fails CI, not the driver.
+The stdout line carries the totals and every ``BENCH_QUERIES`` entry's
+warm med3, so which names appear never depends on the timings. The
+sidecar carries the complete ``[cold, warm]`` record.
 """
 
 import json
 
+import pytest
+
 import bench
 
 
-def _worst_case_line() -> str:
-    # 4-digit integer part + 2 dp is the worst realistic width for a
-    # per-query timing at any SF the driver runs (9999.99 s/query)
-    cold = {name: 9999.99 for name in bench.BENCH_QUERIES}
-    warm = {name: 9999.99 for name in bench.BENCH_QUERIES}
+def _line(cold: dict, warm: dict) -> str:
     record = bench.build_stdout_record(cold, warm, "0.1")
     return json.dumps(record, separators=(",", ":"))
 
 
-def test_stdout_line_fits_driver_capture_with_headroom():
-    """Round-9 rotation decision (VERDICT r8 #5): the line must stay
-    under the driver's capture with >= STDOUT_HEADROOM chars (~20 future
-    entries) to spare, even at absurd per-query widths."""
-    line = _worst_case_line()
-    limit = bench.STDOUT_LINE_BUDGET - bench.STDOUT_HEADROOM
-    assert len(line) <= limit, (
-        f"bench stdout line would be {len(line)} chars; budget is "
-        f"{bench.STDOUT_LINE_BUDGET} minus {bench.STDOUT_HEADROOM} headroom"
-    )
-
-
 def test_stdout_record_shape():
-    line = _worst_case_line()
-    record = json.loads(line)
+    # 4-digit integer part + 2 dp: the widest realistic per-query timing
+    cold = {name: 9999.99 for name in bench.BENCH_QUERIES}
+    warm = {name: 9999.99 for name in bench.BENCH_QUERIES}
+    record = json.loads(_line(cold, warm))
     assert set(record) == {
         "metric", "value", "unit", "value_warm", "queries", "sf"}
     assert record["unit"] == "sec"
     assert record["sf"] == 0.1
-    # r7+ packing: per-query stdout is the OFFICIAL warm med3 scalar —
-    # the driver's spec'd {"queries": {name: sec}} shape; under the
-    # absurd 9999.99s-per-query width the budget valve may shed entries,
-    # so the stdout dict is a SUBSET while totals cover everything
     for name, warm_s in record["queries"].items():
         assert isinstance(warm_s, (int, float)), name
-    assert set(record["queries"]) <= set(bench.BENCH_QUERIES)
     # totals are sums of the per-query colds/warms (2 dp)
     assert record["value"] == round(
         sum(9999.99 for _ in bench.BENCH_QUERIES), 2)
 
 
+@pytest.mark.parametrize("timing", [
+    lambda i: 9999.99,
+    lambda i: 0.0,
+    lambda i: float(i),
+    lambda i: 9999.99 - 100.0 * i,
+    lambda i: (i * 7919 % 997) / 3.0,
+], ids=["widest", "zero", "ascending", "descending", "scrambled"])
+def test_stdout_queries_are_the_fixed_bench_set(timing):
+    """Every BENCH_QUERIES entry reaches stdout for any timings, and the
+    totals sum every entry."""
+    names = bench.BENCH_QUERIES
+    cold = {n: timing(i) + 1.0 for i, n in enumerate(names)}
+    warm = {n: timing(i) for i, n in enumerate(names)}
+    record = json.loads(_line(cold, warm))
+    assert set(record["queries"]) == set(names)
+    assert record["value"] == round(sum(cold.values()), 2)
+    assert record["value_warm"] == round(sum(warm.values()), 2)
+
+
 def test_sidecar_holds_complete_record(tmp_path):
     """The bench_full.json sidecar must carry EVERY query's [cold, warm]
-    — the stdout trim loses no information (no silent caps)."""
+    at 3 dp (stdout carries warm only)."""
     cold = {name: 1.234 for name in bench.BENCH_QUERIES}
     warm = {name: 0.567 for name in bench.BENCH_QUERIES}
     path = bench.write_full_sidecar(
@@ -66,43 +64,3 @@ def test_sidecar_holds_complete_record(tmp_path):
     assert set(payload["queries"]) == set(bench.BENCH_QUERIES)
     assert all(v == [1.234, 0.567] for v in payload["queries"].values())
     assert payload["total_cold"] == round(sum(cold.values()), 3)
-
-
-def test_prev_round_timings_handles_both_schemas(tmp_path, monkeypatch):
-    """_prev_round_timings must read scalar snapshots (r1-r4 cold, r7+
-    warm) AND the r5-r6 {name: [cold, warm]} packing — taking the
-    official number (warm) from the pair."""
-    old = {"n": 1, "parsed": {"queries": {"q1": 1.5}}}
-    new = {"n": 1, "parsed": {"queries": {"q1": [1.2, 0.7]}}}
-    (tmp_path / "BENCH_r03.json").write_text(json.dumps(old))
-    assert _timings_at(tmp_path, monkeypatch) == {"q1": 1.5}
-    (tmp_path / "BENCH_r05.json").write_text(json.dumps(new))
-    assert _timings_at(tmp_path, monkeypatch) == {"q1": 0.7}
-
-
-def _timings_at(tmp_path, monkeypatch):
-    import os
-
-    monkeypatch.setattr(
-        bench.os.path, "dirname", lambda p: str(tmp_path))
-    try:
-        return bench._prev_round_timings()
-    finally:
-        monkeypatch.undo()
-
-
-def test_stdout_budget_valve_drops_smallest_warm():
-    """VERDICT r7 #8: an oversized query set must shed its smallest-warm
-    entries from the official line (totals unchanged, heavies kept)
-    instead of overflowing the driver capture."""
-    names = [f"a_very_long_query_name_number_{i:04d}" for i in range(80)]
-    cold = {n: 9999.99 for n in names}
-    warm = {n: float(i) for i, n in enumerate(names)}
-    record = bench.build_stdout_record(cold, warm, "0.1")
-    line = json.dumps(record, separators=(",", ":"))
-    assert len(line) < bench.STDOUT_LINE_BUDGET
-    # totals still cover every query
-    assert record["value"] == round(sum(cold.values()), 2)
-    # the survivors are the LARGEST warm timings
-    kept = set(record["queries"])
-    assert names[-1] in kept and names[0] not in kept

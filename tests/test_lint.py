@@ -79,7 +79,7 @@ def test_fleiss_fixture_invariants():
     gets exactly 4 ratings), and (c) never NULLs event_type (the
     operator drops NULL values, the oracle does not). Pin the
     invariants so a data-generator change fails HERE, loudly, instead
-    of as a ValueError inside the driver's window run."""
+    of as a ValueError inside a gate run."""
     import duckdb
 
     for sf in ("sf0.001", "sf0.01"):
@@ -107,6 +107,25 @@ def test_legacy_allowlist_not_stale():
         assert n == allowed, (
             f"{name}: allowlist says {allowed} legacy sites, found {n} — "
             f"update _LEGACY_BARE_TOKENS to match")
+
+
+def test_every_query_module_is_registered():
+    """Each ``queries/*.py`` gate module is imported by
+    ``queries/__init__.py``: a module nothing imports registers no gate,
+    so its gates and oracles are dead code that no check runs."""
+    with open(os.path.join(QUERIES_DIR, "__init__.py")) as fh:
+        tree = ast.parse(fh.read())
+    imported = {
+        alias.name for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.level == 1
+        and node.module is None for alias in node.names}
+    modules = {
+        os.path.basename(p)[:-3]
+        for p in glob.glob(os.path.join(QUERIES_DIR, "*.py"))} - {
+        "__init__", "base"}
+    assert modules <= imported, (
+        f"query modules not imported by queries/__init__.py: "
+        f"{sorted(modules - imported)}")
 
 
 # frozen raw materialization calls: path under puffbird_spark/ -> count

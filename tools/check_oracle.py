@@ -3,7 +3,7 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet tables, then compares
 row count, column names, and an order-insensitive canonicalized value
-multiset. Use while iterating so CORRECTNESS_r{N}.json holds no surprises.
+multiset.
 
 Usage:
     python tools/check_oracle.py [--sf-dir /root/testdata/sf0.01] [names...]
@@ -162,25 +162,13 @@ def main() -> int:
         "--lint-types", action="store_true",
         help="registry-wide oracle output-type lint (no Spark, no data "
              "scan): fail on any DECIMAL oracle output column")
-    ap.add_argument(
-        "--window", action="store_true",
-        help="check exactly the committed verify_window.txt names (what "
-             "the driver will drive next round)")
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    if args.window:
-        window_path = os.path.join(
-            REPO, "puffbird_spark", "queries", "verify_window.txt")
-        with open(window_path) as fh:
-            names = [ln.strip() for ln in fh
-                     if ln.strip() and not ln.startswith("#")]
-        names += args.names
-    else:
-        names = args.names or list(queries)
+    names = args.names or list(queries)
 
     con = duckdb.connect()
     for t in TABLES:

@@ -6,8 +6,10 @@ ships or after its operator changes, run it at 10x the bench scale and
 look for walls — six real scale bugs were caught this way (single-task
 windows, all-pairs joins in disguise, interpreted HOF folds over 1e8
 pairs, prefix-filter collapse, JVM OOM, zipf hot types). This runner
-formalizes the ad-hoc scripts: cold + warm wall-clock per gate, row
-count, kernel telemetry, and a nonzero exit if any gate exceeds
+formalizes the ad-hoc scripts: each gate is timed by ``bench.time_gate``
+(cold run, then warm med3, with the Python fleet kept alive and pinned
+blocks released after every run), and the runner prints row count and
+kernel telemetry, with a nonzero exit if any gate's cold run exceeds
 ``--wall`` seconds (so a rehearsal can gate a commit). The session is
 ``local[$SPARK_GRAFT_CPUS]`` (default: every CPU of the host), shuffle
 partitions 2x that — the ``bench.py`` convention.
@@ -15,7 +17,6 @@ partitions 2x that — the ``bench.py`` convention.
 Usage:
     python tools/rehearse.py gate_a gate_b ...          # named gates
     python tools/rehearse.py --all                      # whole registry
-    python tools/rehearse.py --window                   # current verify window
     python tools/rehearse.py --sf-dir /root/testdata/sf0.1 --wall 120 ...
 
 Gates whose tables are absent from the SF dir (the synthetic corpus has
@@ -26,8 +27,8 @@ from __future__ import annotations
 
 import argparse
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,8 +37,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("gates", nargs="*", help="gate names to rehearse")
     ap.add_argument("--all", action="store_true", help="whole registry")
-    ap.add_argument("--window", action="store_true",
-                    help="gates in queries/verify_window.txt")
     ap.add_argument("--sf-dir", default="/tmp/pbs_sf1")
     ap.add_argument("--wall", type=float, default=300.0,
                     help="per-gate cold wall-clock budget in seconds")
@@ -46,24 +45,16 @@ def main() -> int:
                          "quadratic-by-design verifiers)")
     args = ap.parse_args()
 
+    from bench import time_gate
     from puffbird_spark import get_spark
     from puffbird_spark.queries import QUERIES
-    from puffbird_spark.telemetry import drain_kernels
 
     if args.all:
         names = [n for n in QUERIES if n not in set(args.skip)]
-    elif args.window:
-        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        path = os.path.join(
-            here, "puffbird_spark", "queries", "verify_window.txt")
-        with open(path) as fh:
-            names = [ln.strip() for ln in fh
-                     if ln.strip() and not ln.startswith("#")]
-        names = [n for n in names if n not in set(args.skip)]
     else:
         names = args.gates
     if not names:
-        ap.error("no gates: pass names, --all, or --window")
+        ap.error("no gates: pass names or --all")
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
     spark = get_spark(
@@ -77,11 +68,9 @@ def main() -> int:
             print(f"{name}: UNKNOWN gate", flush=True)
             walls.append(name)
             continue
-        fn = QUERIES[name]
-        drain_kernels()
-        t0 = time.time()
         try:
-            n = fn(spark, args.sf_dir).count()
+            n, cold, samples, kern = time_gate(
+                spark, QUERIES[name], args.sf_dir, cpus)
         except Exception as e:  # missing table, fixture-only path, ...
             msg = str(e).splitlines()[0][:100]
             skip = ("PATH_NOT_FOUND" in msg or "cannot resolve" in msg
@@ -91,18 +80,14 @@ def main() -> int:
             if not skip:
                 walls.append(name)
             continue
-        cold = time.time() - t0
-        t0 = time.time()
-        fn(spark, args.sf_dir).count()
-        warm = time.time() - t0
-        kern = drain_kernels()
         tag = f" kernels={kern}" if kern else ""
         flag = ""
         if cold > args.wall:
             walls.append(name)
             flag = f"  ** WALL (> {args.wall:.0f}s)"
-        print(f"{name}: cold {cold:.1f}s warm {warm:.1f}s rows {n}"
-              f"{tag}{flag}", flush=True)
+        print(f"{name}: cold {cold:.2f}s warm {statistics.median(samples):.2f}s"
+              f" med3 [{','.join(f'{s:.2f}' for s in sorted(samples))}]"
+              f" rows {n}{tag}{flag}", flush=True)
     if walls:
         print(f"\n{len(walls)} gate(s) over budget or failed: {walls}",
               file=sys.stderr)
