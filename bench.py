@@ -220,30 +220,11 @@ def _bloom_probe_raw(spark, sf_dir):
         F2.col("bloom_hit"))
 
 
-def _training_shards_write_raw(spark, sf_dir):
-    """Bench twin of the sink_training_shards GATE: the gate caches its
-    write (first call writes, later calls only read back) so its warm
-    samples would time the read path; a SINK bench must time the write.
-    Each invocation rewrites a bench-local path, then returns the
-    read-back frame the count() forces."""
-    import shutil
-
-    from puffbird_spark.operators.layout import write_training_shards
-
-    path = "/tmp/pbs_bench/training_shards"
-    shutil.rmtree(path, ignore_errors=True)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    write_training_shards(docs, path, key="doc_id", n_shards=8, seed="shard")
-    return spark.read.parquet(path).select("shard", "shuffle_rank")
-
-
 #: bench-local overrides: raw operator plans for gates that now emit
 #: assertion booleans instead of operator output.
 BENCH_OVERRIDES = {
     "dedup_minhash_lsh": _minhash_lsh_raw,
     "text_decontaminate_bloom": _bloom_probe_raw,
-    "sink_training_shards": _training_shards_write_raw,
 }
 
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..plans import _release
+
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Distinct whitespace words with occurrence counts — the
@@ -84,7 +86,9 @@ def bpe_train(
     ordered merge list; driver traffic is ONE (a, b, count) row per
     round regardless of corpus size. Stops early when no pair is left.
     Ties break deterministically: highest count, then lexicographic
-    (a, b) — the same rule the oracle and the reference replay."""
+    (a, b) — the same rule the oracle and the reference replay. Each
+    round's encodings are released once the next round's are
+    materialized, and the last before returning: nothing stays pinned."""
     enc = word_counts(df, text_col).select(
         "word", "wc", F.split(F.col("word"), "").alias("s"))
     enc = enc.localCheckpoint(eager=True)
@@ -100,8 +104,11 @@ def bpe_train(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        enc = enc.withColumn("s", _merge_fold(F.col("s"), a, b))
-        enc = enc.localCheckpoint(eager=True)
+        nxt = enc.withColumn(
+            "s", _merge_fold(F.col("s"), a, b)).localCheckpoint(eager=True)
+        _release(enc)
+        enc = nxt
+    _release(enc)
     return merges
 
 

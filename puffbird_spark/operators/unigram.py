@@ -54,6 +54,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..plans import _release
 from .bpe import word_counts
 
 #: score a character absent from the piece table (guarantees every
@@ -225,6 +226,7 @@ def unigram_train(
             p: counts.get(p, 1 if len(p) == 1 else 0)
             for p in vocab
             if len(p) == 1 or counts.get(p, 0) > 0}
+    _release(words)  # the rest is driver-side
 
     ranked = sorted(
         vocab.items(), key=lambda kv: (-kv[1], kv[0]))

@@ -18,6 +18,8 @@ Float policy (the reason the oracles hash-match):
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -70,6 +72,21 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     from ..sources import load_table
 
     return load_table(spark, sf_dir, table)
+
+
+def scratch_dir(sf_dir: str, gate: str) -> str:
+    """An empty directory for one call of the registered gate ``gate``:
+    ``/tmp/pbs_<gate><tag>``, where the tag is ``sf_dir`` with its slashes
+    made underscores. Whatever an earlier call wrote there is deleted
+    first, so a gate that writes its fixture or sink here runs its
+    operator on every call and never reads back an older call's files.
+    The directory is named after the gate, so no two gates share one."""
+    if gate not in QUERIES:
+        raise ValueError(f"{gate!r} is not a registered gate")
+    path = f"/tmp/pbs_{gate}{sf_dir.rstrip('/').replace('/', '_')}"
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def dec(col: str | Column, precision: int = 12, scale: int = 2) -> Column:

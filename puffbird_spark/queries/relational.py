@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.asof import asof_join
-from .base import avg_exact, dec, load, query
+from .base import avg_exact, dec, load, query, scratch_dir
 
 # --------------------------------------------------------------------- #
 # TPC-H-style analytical queries
@@ -1076,19 +1076,15 @@ def agg_hll_incremental(spark, sf_dir):
     (per-register max), so replayed state is bit-identical to one-shot
     sketching (unit-tested); the gate self-checks each group's estimate
     within 5% of the oracle-verified exact distinct over the FULL data."""
-    import os
-
     from ..operators.sketch import hll_merge_increment, hll_sketch_state
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_custkey")
     old = orders.filter(F.col("o_orderkey") % 10 != 0)
     new = orders.filter(F.col("o_orderkey") % 10 == 0)
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/hll_state_parquet"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        hll_sketch_state(old, "o_custkey", ["o_orderpriority"]).write.mode(
-            "overwrite").parquet(path)
+    path = scratch_dir(sf_dir, "agg_hll_incremental")
+    hll_sketch_state(old, "o_custkey", ["o_orderpriority"]).write.mode(
+        "overwrite").parquet(path)
     state = spark.read.parquet(path)
     merged = hll_merge_increment(state, new, "o_custkey",
                                  ["o_orderpriority"])

@@ -1,37 +1,28 @@
 """Source/sink formats (SURVEY §2.2 scans/sinks rows) + remaining engine
 ops (R5 expand_col, R11 to_puffy) exercised in the correctness gate.
 
-Format queries materialize a table once to /tmp in the target format, read
-it back through the engine's source readers, and aggregate — the oracle
-computes the same aggregate from the original parquet, so any
-read/write/schema bug breaks the hash.
+Format queries write a table in the target format to the gate's scratch
+directory (``base.scratch_dir``, emptied on every call), read it back
+through the engine's source readers, and aggregate — the oracle computes
+the same aggregate from the original parquet, so any read/write/schema
+bug breaks the hash.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from ..engine import FrameEngine
 from ..operators.splits import hash_hex_threshold
 from ..sources import read_csv, read_json
-from .base import dec, load, query
+from .base import dec, load, query, scratch_dir
 
 
-def _materialize(df, path: str, fmt: str, **options) -> str:
-    """Write once, reuse thereafter; a partial/corrupt directory (missing
-    _SUCCESS or no data files) is rewritten, not silently scanned as empty."""
-    def _complete() -> bool:
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return False
-        return any(
-            f.startswith("part-") and not f.endswith(".crc")
-            for f in os.listdir(path)
-        )
-
-    if not _complete():
-        df.write.mode("overwrite").options(**options).format(fmt).save(path)
+def _materialize(df, sf_dir: str, gate: str, fmt: str, **options) -> str:
+    """Write ``df`` in ``fmt`` to ``gate``'s scratch directory; returns
+    the directory."""
+    path = scratch_dir(sf_dir, gate)
+    df.write.mode("overwrite").options(**options).format(fmt).save(path)
     return path
 
 
@@ -43,9 +34,8 @@ FROM part GROUP BY p_brand
 def scan_csv(spark, sf_dir):
     """CSV sink + schema'd CSV scan round-trip: results must equal the
     parquet original."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
     path = _materialize(
-        load(spark, sf_dir, "part"), f"/tmp/pbs_fmt{tag}/part_csv", "csv",
+        load(spark, sf_dir, "part"), sf_dir, "scan_csv", "csv",
         header="true",
     )
     schema = ("p_partkey long, p_name string, p_brand string, p_type string, "
@@ -64,11 +54,8 @@ FROM customer GROUP BY c_mktsegment
 """)
 def scan_json(spark, sf_dir):
     """JSON-lines sink + schema'd JSON scan round-trip."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
     path = _materialize(
-        load(spark, sf_dir, "customer"), f"/tmp/pbs_fmt{tag}/customer_json",
-        "json",
-    )
+        load(spark, sf_dir, "customer"), sf_dir, "scan_json", "json")
     schema = ("c_custkey long, c_name string, c_nationkey int, "
               "c_acctbal double, c_mktsegment string")
     df = read_json(spark, path, schema=schema)
@@ -321,12 +308,10 @@ def scan_parquet_partitioned(spark, sf_dir):
     data col) — any partition-encoding or pruning bug breaks the hash.
     The filter-less read still exercises partition-column reconstruction
     (segment comes from directory names, not file data)."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/customer_part_parquet"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load(spark, sf_dir, "customer").write.mode("overwrite").partitionBy(
-            "c_mktsegment"
-        ).parquet(path)
+    path = scratch_dir(sf_dir, "scan_parquet_partitioned")
+    load(spark, sf_dir, "customer").write.mode("overwrite").partitionBy(
+        "c_mktsegment"
+    ).parquet(path)
     df = spark.read.parquet(path)
     return df.groupBy("c_mktsegment", "c_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
@@ -662,16 +647,14 @@ def scan_schema_evolution(spark, sf_dir):
     the originating table. mergeSchema costs a per-file footer read at
     planning time, so production tables should pin the union schema in
     the catalog — the gate exercises the reconciliation path itself."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_evolving_parquet"
-    if not os.path.exists(os.path.join(path, "gen2", "_SUCCESS")):
-        docs = load(spark, sf_dir, "documents")
-        docs.filter(F.col("doc_id") % 2 == 0).select(
-            "doc_id", "n_chars"
-        ).write.mode("overwrite").parquet(f"{path}/gen1")
-        docs.filter(F.col("doc_id") % 2 == 1).select(
-            "doc_id", "n_chars", F.upper("lang").alias("lang_up")
-        ).write.mode("overwrite").parquet(f"{path}/gen2")
+    path = scratch_dir(sf_dir, "scan_schema_evolution")
+    docs = load(spark, sf_dir, "documents")
+    docs.filter(F.col("doc_id") % 2 == 0).select(
+        "doc_id", "n_chars"
+    ).write.parquet(f"{path}/gen1")
+    docs.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id", "n_chars", F.upper("lang").alias("lang_up")
+    ).write.parquet(f"{path}/gen2")
     return spark.read.option("mergeSchema", "true").parquet(
         f"{path}/gen1", f"{path}/gen2"
     ).select("doc_id", "n_chars", "lang_up")
@@ -856,11 +839,8 @@ def scan_orc(spark, sf_dir):
     Spark's ORC reader has the same pushdown/pruning surface). DuckDB
     cannot read ORC, so the oracle aggregates the ORIGINAL parquet — any
     write/read/schema bug on the ORC path breaks the hash."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
     path = _materialize(
-        load(spark, sf_dir, "supplier"), f"/tmp/pbs_fmt{tag}/supplier_orc",
-        "orc",
-    )
+        load(spark, sf_dir, "supplier"), sf_dir, "scan_orc", "orc")
     df = spark.read.orc(path)
     return df.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
@@ -880,26 +860,17 @@ def sink_compact_small_files(spark, sf_dir):
     only, no data read. The gate hash-checks that every row survives
     compaction byte-identically and self-checks ``compact_ok``: the
     rewrite actually reduced the file count to the computed target."""
-    import os
-
     from ..operators.layout import compact_small_files
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_fmt{tag}/compact"
+    base = scratch_dir(sf_dir, "sink_compact_small_files")
     frag, packed = f"{base}/frag", f"{base}/packed"
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars")
-    marker = f"{base}/_DONE"
-    if not os.path.exists(marker):
-        docs.repartition(64).write.mode("overwrite").parquet(frag)
-        stats = compact_small_files(
-            spark, frag, packed, target_file_bytes=1 << 20)
-        ok = (stats["n_files_in"] == 64
-              and stats["n_files_out"] < stats["n_files_in"])
-        with open(marker, "w") as fh:
-            fh.write("1" if ok else "0")
-    with open(marker) as fh:
-        ok = fh.read().strip() == "1"
+    docs.repartition(64).write.parquet(frag)
+    stats = compact_small_files(
+        spark, frag, packed, target_file_bytes=1 << 20)
+    ok = (stats["n_files_in"] == 64
+          and stats["n_files_out"] < stats["n_files_in"])
     return spark.read.parquet(packed).select(
         "doc_id", "source", "n_chars", F.lit(ok).alias("compact_ok"))
 
@@ -917,16 +888,13 @@ def scan_time_travel(spark, sf_dir):
     manifest isolates the snapshot from later appends. At 100 TB this
     is what makes "train run X used corpus snapshot v12" a metadata
     statement instead of a table copy."""
-    from ..operators.layout import (
-        read_snapshot, snapshot_versions, write_snapshot)
+    from ..operators.layout import read_snapshot, write_snapshot
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_snapshots"
-    if len(snapshot_versions(spark, path)) < 2:
-        docs = load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars")
-        write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 0), path)
-        write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 1), path)
+    path = scratch_dir(sf_dir, "scan_time_travel")
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars")
+    write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 0), path)
+    write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 1), path)
     return read_snapshot(spark, path, version=1).select(
         "doc_id", "source", "n_chars")
 
@@ -950,21 +918,18 @@ def table_vacuum(spark, sf_dir):
     version read back from the vacuumed table (%3 in {1,2} — the
     overwrite semantics must survive retention) and pins
     `retention_ok`: exactly the last two versions remain and the
-    vacuumed v1 is unreadable. Stateless booleans, so replays (bench
-    warm runs) see the already-vacuumed table and still hash-match."""
+    vacuumed v1 is unreadable."""
     from ..operators.layout import (
         read_snapshot, snapshot_versions, vacuum_snapshots, write_snapshot)
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_vacuum_snapshots"
-    if not snapshot_versions(spark, path):
-        docs = load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars")
-        write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 0), path)
-        write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 1), path)
-        write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 2), path,
-                       mode="overwrite")
-        write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 1), path)
+    path = scratch_dir(sf_dir, "table_vacuum")
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars")
+    write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 0), path)
+    write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 1), path)
+    write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 2), path,
+                   mode="overwrite")
+    write_snapshot(spark, docs.filter(F.col("doc_id") % 3 == 1), path)
     vacuum_snapshots(spark, path, keep_last=2)
     versions = snapshot_versions(spark, path)
     v1_unreadable = False
@@ -1017,15 +982,12 @@ def scan_bloom_skipping(spark, sf_dir):
     an int-vs-bigint probe is a silent false negative, caught during
     development). The index is file-count-sized metadata, refreshed
     per-append for new files only."""
-    import os
-
     from ..operators.layout import bloom_pruned_lookup, file_bloom_index
+    from ..plans import _release
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_bloom_scatter"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load(spark, sf_dir, "documents").repartition(
-            8, "doc_id").write.mode("overwrite").parquet(path)
+    path = _materialize(
+        load(spark, sf_dir, "documents").repartition(8, "doc_id"), sf_dir,
+        "scan_bloom_skipping", "parquet")
     index = file_bloom_index(spark, path, "doc_id").localCheckpoint(
         eager=True)
     out = []
@@ -1039,6 +1001,7 @@ def scan_bloom_skipping(spark, sf_dir):
         ).collect()[0]
         pruned_ok = (n_read < n_total) if row["n_rows"] > 0 else (n_read == 0)
         out.append((probe, row["n_rows"], row["sum_chars"], bool(pruned_ok)))
+    _release(index)  # the result below is built from driver rows
     return spark.createDataFrame(
         out, "probe_id long, n_rows long, sum_chars long, "
              "files_pruned_ok boolean")
@@ -1060,20 +1023,17 @@ def scan_schema_diff(spark, sf_dir):
     come from parquet footers via mergeSchema reconciliation and the
     comparison is column-count-sized — the migration audit run before
     pointing consumers at a new corpus version, at any table size."""
-    from ..operators.layout import (
-        snapshot_schema_diff, snapshot_versions, write_snapshot)
+    from ..operators.layout import snapshot_schema_diff, write_snapshot
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_schema_diff_snapshots"
-    if len(snapshot_versions(spark, path)) < 2:
-        docs = load(spark, sf_dir, "documents")
-        write_snapshot(
-            spark, docs.select("doc_id", "source", "n_chars"), path)
-        write_snapshot(
-            spark,
-            docs.select("doc_id", "lang",
-                        F.col("n_chars").cast("int").alias("n_chars")),
-            path, mode="overwrite")
+    path = scratch_dir(sf_dir, "scan_schema_diff")
+    docs = load(spark, sf_dir, "documents")
+    write_snapshot(
+        spark, docs.select("doc_id", "source", "n_chars"), path)
+    write_snapshot(
+        spark,
+        docs.select("doc_id", "lang",
+                    F.col("n_chars").cast("int").alias("n_chars")),
+        path, mode="overwrite")
     return snapshot_schema_diff(spark, path, 1, 2)
 
 
@@ -1099,14 +1059,12 @@ def scan_data_skipping(spark, sf_dir):
     scan into a handful of file reads."""
     from ..operators.layout import file_stats, pruned_read
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/lineitem_shipdate_ranged"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (load(spark, sf_dir, "lineitem")
-         .select("l_shipdate", "l_returnflag", "l_quantity")
-         .repartitionByRange(8, "l_shipdate")
-         .sortWithinPartitions("l_shipdate")
-         .write.mode("overwrite").parquet(path))
+    path = _materialize(
+        load(spark, sf_dir, "lineitem")
+        .select("l_shipdate", "l_returnflag", "l_quantity")
+        .repartitionByRange(8, "l_shipdate")
+        .sortWithinPartitions("l_shipdate"),
+        sf_dir, "scan_data_skipping", "parquet")
     import datetime
 
     # the testdata stores l_shipdate as a timestamp; midnight bounds
@@ -1142,21 +1100,18 @@ def snapshot_diff_cdc(spark, sf_dir):
     path — new shards only, no join — is plan-asserted in unit tests.)
     Incremental consumers read this feed instead of rescanning the
     table; at 100 TB the normal append diff never touches old data."""
-    from ..operators.layout import (
-        snapshot_diff, snapshot_versions, write_snapshot)
+    from ..operators.layout import snapshot_diff, write_snapshot
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_cdc_snapshots"
-    if len(snapshot_versions(spark, path)) < 2:
-        docs = load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars")
-        write_snapshot(
-            spark, docs.filter(F.col("doc_id") % 4 < 3), path)
-        v2 = docs.filter(F.col("doc_id") % 4 > 0).withColumn(
-            "n_chars",
-            F.when(F.col("doc_id") % 4 == 2, F.col("n_chars") + 1)
-            .otherwise(F.col("n_chars")))
-        write_snapshot(spark, v2, path, mode="overwrite")
+    path = scratch_dir(sf_dir, "snapshot_diff_cdc")
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars")
+    write_snapshot(
+        spark, docs.filter(F.col("doc_id") % 4 < 3), path)
+    v2 = docs.filter(F.col("doc_id") % 4 > 0).withColumn(
+        "n_chars",
+        F.when(F.col("doc_id") % 4 == 2, F.col("n_chars") + 1)
+        .otherwise(F.col("n_chars")))
+    write_snapshot(spark, v2, path, mode="overwrite")
     return snapshot_diff(spark, path, 1, 2, ["doc_id"])
 
 
@@ -1364,12 +1319,10 @@ def sink_training_shards(spark, sf_dir):
     oracle replays the whole order in SQL."""
     from ..operators.layout import write_training_shards
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/documents_training_shards"
-    if not os.path.exists(path) or not os.listdir(path):
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        write_training_shards(docs, path, key="doc_id", n_shards=8,
-                              seed="shard")
+    path = scratch_dir(sf_dir, "sink_training_shards")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    write_training_shards(docs, path, key="doc_id", n_shards=8,
+                          seed="shard")
     back = spark.read.parquet(path)
     return (
         back.groupBy("shard")
@@ -1496,13 +1449,9 @@ def scan_xml(spark, sf_dir):
     reads back through an explicit schema, joins nation, aggregates —
     the oracle computes the same aggregate from the parquet original,
     so any XML write/read/schema bug breaks the hash."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/supplier_xml"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (load(spark, sf_dir, "supplier")
-         .write.mode("overwrite")
-         .option("rootTag", "suppliers").option("rowTag", "supplier")
-         .format("xml").save(path))
+    path = _materialize(
+        load(spark, sf_dir, "supplier"), sf_dir, "scan_xml", "xml",
+        rootTag="suppliers", rowTag="supplier")
     schema = ("s_suppkey long, s_name string, s_nationkey int, "
               "s_acctbal double")
     df = (spark.read.option("rowTag", "supplier")
@@ -1532,22 +1481,17 @@ def scan_json_corrupt(spark, sf_dir):
     misparse) while the valid rows aggregate exactly. A reader that
     crashes (FAILFAST-style), drops corrupt rows silently, or
     half-parses them breaks the count or the hash."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = f"/tmp/pbs_fmt{tag}/customer_corrupt_jsonl"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        cust = load(spark, sf_dir, "customer").select(
-            "c_custkey", "c_acctbal")
-        line = F.to_json(F.struct("c_custkey", "c_acctbal"))
-        corrupted = F.when(
-            F.col("c_custkey") % 10 == 0,
-            F.substring(line, 1, 12),   # truncated mid-record
-        ).otherwise(line)
-        cust.select(corrupted.alias("value")).write.mode(
-            "overwrite").text(path)
+    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    line = F.to_json(F.struct("c_custkey", "c_acctbal"))
+    corrupted = F.when(
+        F.col("c_custkey") % 10 == 0,
+        F.substring(line, 1, 12),   # truncated mid-record
+    ).otherwise(line)
+    path = _materialize(cust.select(corrupted.alias("value")), sf_dir,
+                        "scan_json_corrupt", "text")
     df = spark.read.schema(
         "c_custkey long, c_acctbal double, _corrupt_record string"
     ).json(path)
-    df = df.cache()  # SPARK-21610: corrupt-column queries need the raw rows
     return df.agg(
         F.count(F.when(F.col("_corrupt_record").isNull(), 1))
         .cast("long").alias("n_valid"),
@@ -2379,19 +2323,13 @@ def scan_binary_files(spark, sf_dir):
     breaks the hash. Scale: binaryFile splits per FILE (never inside
     one), so partition parallelism = file count; the decode stages
     downstream are Arrow-batched mapInPandas."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    root = f"/tmp/pbs_bin{tag}"
+    root = scratch_dir(sf_dir, "scan_binary_files")
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    if not (
-        os.path.isdir(root)
-        and sum(f.endswith(".bin") for f in os.listdir(root)) == 40
-    ):
-        os.makedirs(root, exist_ok=True)
-        for r in docs.select("doc_id", "text").collect():
-            with open(f"{root}/doc_{r.doc_id:05d}.bin", "wb") as fh:
-                fh.write(r.text.encode("utf-8"))
-        with open(f"{root}/decoy.tmp", "wb") as fh:
-            fh.write(b"not a doc")
+    for r in docs.select("doc_id", "text").collect():
+        with open(f"{root}/doc_{r.doc_id:05d}.bin", "wb") as fh:
+            fh.write(r.text.encode("utf-8"))
+    with open(f"{root}/decoy.tmp", "wb") as fh:
+        fh.write(b"not a doc")
     bin_df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -2666,17 +2604,15 @@ def scan_csv_quoted(spark, sf_dir):
     scanning trades input split parallelism for correctness — at
     scale, prefer escaping newlines at WRITE time, which restores
     per-line splits.) The oracle recomputes from the origin table."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
     docs = load(spark, sf_dir, "documents")
     tricky = F.concat(
         F.substring("text", 1, 10), F.lit(',"x\ny",'), F.col("lang"))
     src = docs.select("doc_id", tricky.alias("tricky"))
-    path = f"/tmp/pbs_fmt{tag}/docs_quoted_csv"
     # escape must be the quote char on BOTH sides: the writer then
     # doubles embedded quotes (RFC 4180) instead of backslash-escaping,
     # which the multiLine reader would mis-split on
-    _materialize(src, path, "csv", header="true", quoteAll="true",
-                 escape='"')
+    path = _materialize(src, sf_dir, "scan_csv_quoted", "csv",
+                        header="true", quoteAll="true", escape='"')
     back = (
         spark.read.schema("doc_id long, tricky string")
         .options(header="true", multiLine="true", quote='"', escape='"')
@@ -3044,13 +2980,11 @@ def scan_text_lines(spark, sf_dir):
     LINE-SORTED content (text files carry no row order across
     part-files — sorting by content is the only portable identity).
     The oracle recomputes from the origin table."""
-    tag = sf_dir.rstrip("/").replace("/", "_")
     docs = load(spark, sf_dir, "documents")
     src = docs.select(
         F.concat(F.col("doc_id").cast("string"), F.lit("|"),
                  F.substring("text", 1, 40)).alias("value"))
-    path = f"/tmp/pbs_fmt{tag}/docs_text_lines"
-    _materialize(src, path, "text")
+    path = _materialize(src, sf_dir, "scan_text_lines", "text")
     back = spark.read.text(path)
     vals = F.array_sort(F.collect_list("value"))
     return back.agg(

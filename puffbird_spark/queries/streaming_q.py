@@ -6,10 +6,72 @@ over ``readStream`` — see ``puffbird_spark/streaming/`` and
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .base import dec, load, query
+from .base import dec, load, query, scratch_dir
+
+#: how long a gate's stream replay may take to drain its staged batches
+_REPLAY_TIMEOUT_S = 300
+
+
+def _stage_batches(in_dir: str, frames) -> str:
+    """Stage the input of a ``maxFilesPerTrigger=1`` file stream, one
+    parquet file per micro-batch, and return ``in_dir``: the part files
+    of each frame in ``frames`` (frame by frame, then in part-file, that
+    is partition, order) become ``in_dir/b0.parquet``, ``b1``, ...
+
+    The file source takes the oldest-modified file first, and the part
+    files of one write can share an mtime, so the order is set here:
+    file ``b<i>`` is stamped ``i`` seconds after ``b0`` (``os.utime``).
+    Gates whose result depends on batch order (an ascending range split
+    under a watermark, per-key batch monotonicity, an order-dependent
+    sketch) replay the same order on every call."""
+    os.makedirs(in_dir)
+    t0 = int(time.time())
+    n = 0
+    for k, frame in enumerate(frames):
+        tmp = f"{in_dir}_stage{k}"
+        frame.write.parquet(tmp)
+        for part in sorted(
+                f for f in os.listdir(tmp) if f.endswith(".parquet")):
+            dst = f"{in_dir}/b{n}.parquet"
+            os.rename(f"{tmp}/{part}", dst)
+            os.utime(dst, (t0 + n, t0 + n))
+            n += 1
+        shutil.rmtree(tmp)
+    return in_dir
+
+
+def _replay(stream, base: str, sink=None, output_mode: str = "update"):
+    """Run ``stream`` over everything staged (``availableNow``) through
+    ``write_foreach_batch``, checkpointing under ``<base>/ckpt``, and
+    return ``<base>/out``, where the default sink appends every
+    micro-batch as parquet. A query that fails, or has not drained
+    within ``_REPLAY_TIMEOUT_S``, is stopped and raises, so a gate never
+    reads a partial sink."""
+    from ..streaming import write_foreach_batch
+
+    out_dir = f"{base}/out"
+    if sink is None:
+        def sink(df, epoch_id):
+            df.write.mode("append").parquet(out_dir)
+
+    q = write_foreach_batch(
+        stream, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
+        output_mode=output_mode).start()
+    try:
+        if not q.awaitTermination(_REPLAY_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream replay in {base} has not drained after "
+                f"{_REPLAY_TIMEOUT_S} s")
+    finally:
+        q.stop()
+    return out_dir
 
 
 @query("stream_tumbling", oracle="""
@@ -233,44 +295,25 @@ def stream_foreach_batch(spark, sf_dir):
     foreachBatch parquet sink (availableNow), and the SINK's contents are
     what the oracle checks. One staged file = one micro-batch, so update
     mode emits each window exactly once."""
-    import os
-    import shutil
-
     from ..sources import normalize_nano_ts
-    from ..streaming import read_parquet_stream, tumbling_agg, write_foreach_batch
+    from ..streaming import read_parquet_stream, tumbling_agg
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_stream{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir = f"{base}/in"
-        os.makedirs(in_dir)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{in_dir}/events.parquet")
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = normalize_nano_ts(
-            read_parquet_stream(spark, in_dir, raw_schema), ["ts"]
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        agg = tumbling_agg(
-            stream, ts_col="ts", window="1 hour", watermark="2 hours",
-            keys=["event_type"],
-            aggs=[
-                F.count(F.lit(1)).alias("n"),
-                F.sum(dec("value")).cast("double").alias("sum_value"),
-            ],
-        )
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            agg, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-        ).start()
-        q.awaitTermination(300)
-        # mark completion for idempotent re-runs (parquet append has its
-        # own _SUCCESS per write; one write here)
+    base = scratch_dir(sf_dir, "stream_foreach_batch")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    in_dir = _stage_batches(f"{base}/in", [raw.coalesce(1)])
+    stream = normalize_nano_ts(
+        read_parquet_stream(spark, in_dir, raw.schema), ["ts"]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    agg = tumbling_agg(
+        stream, ts_col="ts", window="1 hour", watermark="2 hours",
+        keys=["event_type"],
+        aggs=[
+            F.count(F.lit(1)).alias("n"),
+            F.sum(dec("value")).cast("double").alias("sum_value"),
+        ],
+    )
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(_replay(agg, base))
         .withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
         .select("win_start", "event_type", "n", "sum_value")
     )
@@ -333,42 +376,21 @@ def stream_stateful_count(spark, sf_dir):
     the final (= max, counts only grow) emitted total per user against
     the batch COUNT(*) — evidence the custom state machine both shuffles
     to the key and survives micro-batch boundaries."""
-    import os
-    import shutil
-
-    from ..streaming import read_parquet_stream, write_foreach_batch
+    from ..streaming import read_parquet_stream
     from ..streaming.stateful import running_count
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_stateful{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir = f"{base}/in"
-        os.makedirs(in_dir)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
-            F.col("user_id").isNotNull()
-        )
-        # two files -> two micro-batches; both halves hit most users so
-        # the counter genuinely accumulates across the boundary
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-            f"{in_dir}/half0")
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-            f"{in_dir}/half1")
-        schema = ev.schema
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", 1).parquet(f"{in_dir}/half*")
-        totals = running_count(stream.select("user_id"), key="user_id")
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            totals, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-        ).start()
-        q.awaitTermination(300)
+    base = scratch_dir(sf_dir, "stream_stateful_count")
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+        F.col("user_id").isNotNull()
+    )
+    # two files -> two micro-batches; both halves hit most users so
+    # the counter genuinely accumulates across the boundary
+    in_dir = _stage_batches(f"{base}/in", [
+        ev.filter(F.col("event_id") % 2 == i).coalesce(1) for i in (0, 1)])
+    stream = read_parquet_stream(spark, in_dir, ev.schema)
+    totals = running_count(stream.select("user_id"), key="user_id")
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(_replay(totals, base))
         .groupBy("user_id")
         .agg(F.max("total").alias("total"))
     )
@@ -417,52 +439,28 @@ def stream_state_ttl(spark, sf_dir):
     active-in-both-halves user cannot time out at the half boundary);
     the recorded watermark is the half-boundary one for early
     evictions, the global one otherwise."""
-    import os
-    import shutil
-    import time as _time
-
     from ..sources import normalize_nano_ts
-    from ..streaming import write_foreach_batch
+    from ..streaming import read_parquet_stream
     from ..streaming.stateful import ttl_inactivity_tracker
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_strttl{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev = normalize_nano_ts(raw, ["ts"]).filter(
-            F.col("user_id").isNotNull()
-        ).select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).collect()[0]
-        cut = (int(lo) + int(hi)) // 2
-        stages = [
-            ev.filter(F.unix_micros("ts") < cut),
-            ev.filter(F.unix_micros("ts") >= cut),
-        ]
-        os.makedirs(f"{base}/in", exist_ok=True)
-        for i, sdf in enumerate(stages):
-            tmp = f"{base}/stage{i}"
-            sdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp)
-                        if f.endswith(".parquet"))
-            shutil.copy(f"{tmp}/{part}", f"{base}/in/b{i}.parquet")
-            _time.sleep(1.1)  # distinct whole-second mtimes
-        src = (spark.readStream.schema("user_id long, ts timestamp")
-               .option("maxFilesPerTrigger", 1).parquet(f"{base}/in"))
-        expired = ttl_inactivity_tracker(
-            src, key="user_id", ts_col="ts", ttl_sec=_TTL_SEC)
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            expired, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-            output_mode="append").start()
-        q.awaitTermination(300)
-    return spark.read.parquet(out_dir).select(
+    base = scratch_dir(sf_dir, "stream_state_ttl")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = normalize_nano_ts(raw, ["ts"]).filter(
+        F.col("user_id").isNotNull()
+    ).select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+    lo, hi = ev.agg(
+        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+    ).collect()[0]
+    cut = (int(lo) + int(hi)) // 2
+    in_dir = _stage_batches(f"{base}/in", [
+        ev.filter(F.unix_micros("ts") < cut).coalesce(1),
+        ev.filter(F.unix_micros("ts") >= cut).coalesce(1),
+    ])
+    src = read_parquet_stream(spark, in_dir, "user_id long, ts timestamp")
+    expired = ttl_inactivity_tracker(
+        src, key="user_id", ts_col="ts", ttl_sec=_TTL_SEC)
+    return spark.read.parquet(
+        _replay(expired, base, output_mode="append")).select(
         "user_id", "first_seen_us", "last_seen_us", "n_events",
         "expired_at_wm_ms")
 
@@ -483,61 +481,39 @@ def stream_stream_join(spark, sf_dir):
     minutes of EVENT time. The hard streaming primitive the stream-static
     join can't express — both sides buffer in watermark-bounded state.
     Oracle replays the interval self-join in batch."""
-    import os
-    import shutil
-
     from ..sources import normalize_nano_ts
-    from ..streaming import write_foreach_batch
+    from ..streaming import read_parquet_stream
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_ssjoin{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev = normalize_nano_ts(raw, ["ts"]).withColumn(
-            "ts", F.col("ts").cast("timestamp"))
-        for kind in ("view", "purchase"):
-            ev.filter(F.col("event_type") == kind).coalesce(1).write.parquet(
-                f"{base}/in_{kind}")
-        schema = ev.schema
+    base = scratch_dir(sf_dir, "stream_stream_join")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = normalize_nano_ts(raw, ["ts"]).withColumn(
+        "ts", F.col("ts").cast("timestamp"))
 
-        def read(kind):
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{base}/in_{kind}")
-                .withWatermark("ts", "2 hours")
-            )
+    def read(kind):
+        in_dir = _stage_batches(f"{base}/in_{kind}", [
+            ev.filter(F.col("event_type") == kind).coalesce(1)])
+        return read_parquet_stream(spark, in_dir, ev.schema).withWatermark(
+            "ts", "2 hours")
 
-        v = read("view").select(
-            F.col("user_id").alias("v_user"), F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"))
-        p = read("purchase").select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"))
-        joined = v.join(
-            p,
-            (F.col("v_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("view_ts"))
-            & (F.col("purchase_ts")
-               <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
-        ).select(
-            F.col("v_user").alias("user_id"),
-            "view_id", "purchase_id", "view_ts", "purchase_ts",
-        )
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            joined, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-            output_mode="append",
-        ).start()
-        q.awaitTermination(300)
+    v = read("view").select(
+        F.col("user_id").alias("v_user"), F.col("event_id").alias("view_id"),
+        F.col("ts").alias("view_ts"))
+    p = read("purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"))
+    joined = v.join(
+        p,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts")
+           <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
+    ).select(
+        F.col("v_user").alias("user_id"),
+        "view_id", "purchase_id", "view_ts", "purchase_ts",
+    )
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(_replay(joined, base, output_mode="append"))
         .withColumn("view_ts", F.col("view_ts").cast("timestamp_ntz"))
         .withColumn("purchase_ts", F.col("purchase_ts").cast("timestamp_ntz"))
         .select("user_id", "view_id", "purchase_id", "view_ts", "purchase_ts")
@@ -560,60 +536,40 @@ def stream_incremental_dedup(spark, sf_dir):
     the WHOLE corpus — which is exactly what the oracle computes. The
     digest state is the only thing reread per batch: 16 bytes/doc, not
     the corpus."""
-    import os
-    import shutil
-
     from ..operators.dedup import incremental_dedup
-    from ..streaming import read_parquet_stream, write_foreach_batch
+    from ..streaming import read_parquet_stream
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_stream{tag}/incr_dedup"
-    out_dir = f"{base}/out"
-    done = f"{base}/_DONE"
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir, state_dir = f"{base}/in", f"{base}/state"
-        os.makedirs(in_dir)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text")
-        half = docs.agg((F.max("doc_id") / 2).cast("long")).collect()[0][0]
-        # two staged files == two ordered micro-batches (the file source
-        # picks oldest-modified first, so stage b0 before b1)
-        for i, part in enumerate((
-            docs.filter(F.col("doc_id") <= half),
-            docs.filter(F.col("doc_id") > half),
-        )):
-            tmp = f"{base}/stage{i}"
-            part.coalesce(1).write.parquet(tmp)
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            shutil.copy(os.path.join(tmp, src), f"{in_dir}/b{i}.parquet")
-            shutil.rmtree(tmp)
-        schema = docs.schema
+    base = scratch_dir(sf_dir, "stream_incremental_dedup")
+    out_dir, state_dir = f"{base}/out", f"{base}/state"
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text")
+    half = docs.agg((F.max("doc_id") / 2).cast("long")).collect()[0][0]
+    # two staged files == two id-ordered micro-batches
+    in_dir = _stage_batches(f"{base}/in", [
+        docs.filter(F.col("doc_id") <= half).coalesce(1),
+        docs.filter(F.col("doc_id") > half).coalesce(1),
+    ])
 
-        def sink(batch, epoch_id):
-            sess = batch.sparkSession
-            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-                state = sess.read.parquet(state_dir)
-            else:
-                state = sess.createDataFrame([], "digest string")
-            out = incremental_dedup(batch, state, "text", "doc_id")
-            out.persist()
-            out.select("doc_id", "digest").write.mode("append").parquet(
-                out_dir)
-            state.unionByName(out.select("digest")).distinct().write.mode(
-                "overwrite").parquet(state_dir + "_next")
-            out.unpersist()
-            # atomic-enough swap for a single-writer availableNow replay
-            shutil.rmtree(state_dir, ignore_errors=True)
-            os.rename(state_dir + "_next", state_dir)
+    def sink(batch, epoch_id):
+        sess = batch.sparkSession
+        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
+            state = sess.read.parquet(state_dir)
+        else:
+            state = sess.createDataFrame([], "digest string")
+        out = incremental_dedup(batch, state, "text", "doc_id")
+        out.persist()
+        out.select("doc_id", "digest").write.mode("append").parquet(
+            out_dir)
+        state.unionByName(out.select("digest")).distinct().write.mode(
+            "overwrite").parquet(state_dir + "_next")
+        out.unpersist()
+        # atomic-enough swap for a single-writer availableNow replay
+        shutil.rmtree(state_dir, ignore_errors=True)
+        os.rename(state_dir + "_next", state_dir)
 
-        stream = read_parquet_stream(spark, in_dir, schema)
-        q = write_foreach_batch(
-            stream, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-        ).start()
-        q.awaitTermination(300)
-        open(done, "w").close()
-    return spark.read.parquet(out_dir).select("doc_id", "digest")
+    stream = read_parquet_stream(spark, in_dir, docs.schema)
+    return spark.read.parquet(_replay(stream, base, sink)).select(
+        "doc_id", "digest")
 
 
 @query("timeseries_gap_fill", oracle="""
@@ -693,79 +649,45 @@ def stream_stream_outer_join(spark, sf_dir):
     exactly the state-eviction boundary a real cluster would hold.
     Unflushable trailing state is the documented cost of outer joins
     on unbounded streams, not an artifact of the replay."""
-    import os
-    import shutil
-
     from ..sources import normalize_nano_ts
-    from ..streaming import write_foreach_batch
+    from ..streaming import read_parquet_stream
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_ssouter{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev = normalize_nano_ts(raw, ["ts"]).withColumn(
-            "ts", F.col("ts").cast("timestamp"))
-        for kind in ("view", "purchase"):
-            # two files per side -> multiple micro-batches -> the
-            # watermark moves and the final no-data batch flushes state.
-            # Batch ORDER must be deterministic (the file source sorts
-            # by mtime, which two parts of one write job share): stage
-            # ascending-range files with distinct names AND mtimes, the
-            # stream_sessionize recipe — an inverted order would make
-            # the early half arrive behind the watermark and be dropped
-            # as late data
-            stage = f"{base}/stage_{kind}"
+    base = scratch_dir(sf_dir, "stream_stream_outer_join")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = normalize_nano_ts(raw, ["ts"]).withColumn(
+        "ts", F.col("ts").cast("timestamp"))
+
+    def read(kind):
+        # two ascending-range files per side -> multiple micro-batches ->
+        # the watermark moves and the final no-data batch flushes state;
+        # an inverted order would make the early half arrive behind the
+        # watermark and be dropped as late data
+        in_dir = _stage_batches(f"{base}/in_{kind}", [
             ev.filter(F.col("event_type") == kind).repartitionByRange(
-                2, "ts").write.parquet(stage)
-            parts = sorted(
-                f for f in os.listdir(stage) if f.endswith(".parquet"))
-            os.makedirs(f"{base}/in_{kind}", exist_ok=True)
-            import time as _time
+                2, "ts")])
+        return read_parquet_stream(spark, in_dir, ev.schema).withWatermark(
+            "ts", "2 hours")
 
-            for i, p in enumerate(parts):
-                shutil.copy(f"{stage}/{p}",
-                            f"{base}/in_{kind}/b{i}.parquet")
-                _time.sleep(1.1)
-        schema = ev.schema
-
-        def read(kind):
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{base}/in_{kind}")
-                .withWatermark("ts", "2 hours")
-            )
-
-        v = read("view").select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"))
-        p = read("purchase").select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"))
-        joined = v.join(
-            p,
-            (F.col("v_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("view_ts"))
-            & (F.col("purchase_ts")
-               <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
-            "left_outer",
-        ).select(
-            F.col("v_user").alias("user_id"), "view_id", "purchase_id",
-        )
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            joined, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-            output_mode="append",
-        ).start()
-        q.awaitTermination(300)
-    return spark.read.parquet(out_dir).select(
+    v = read("view").select(
+        F.col("user_id").alias("v_user"),
+        F.col("event_id").alias("view_id"),
+        F.col("ts").alias("view_ts"))
+    p = read("purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"))
+    joined = v.join(
+        p,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts")
+           <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
+        "left_outer",
+    ).select(
+        F.col("v_user").alias("user_id"), "view_id", "purchase_id",
+    )
+    return spark.read.parquet(
+        _replay(joined, base, output_mode="append")).select(
         "user_id", "view_id", "purchase_id")
 
 
@@ -926,60 +848,49 @@ def stream_psi_monitor(spark, sf_dir):
     batch 1's 'error' row must read drifted, everything else stable at
     the driver SF. Oracle replays BOTH batches' PSI closed-form; the
     full monitor table is in the hash."""
-    import os
-    import shutil
-
     from ..operators.drift import psi_against_reference, psi_reference_state
-    from ..streaming import read_parquet_stream, write_foreach_batch
+    from ..plans import _release
+    from ..streaming import read_parquet_stream
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_stream{tag}/psi_monitor"
+    base = scratch_dir(sf_dir, "stream_psi_monitor")
     out_dir = f"{base}/out"
-    done = f"{base}/_DONE"
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir = f"{base}/in"
-        os.makedirs(in_dir)
-        ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-        block = (F.col("event_id") / 16).cast("long") % 2
-        odd = ev.filter(block == 1)
-        half = ev.agg(
-            F.floor(F.max("event_id") / 2).cast("long")).collect()[0][0]
-        b0 = odd.filter(F.col("event_id") <= half).select(
-            "event_type", "value")
-        b1 = odd.filter(F.col("event_id") > half).select(
-            "event_type",
-            F.when(F.col("event_type") == "error", F.col("value") * 3)
-            .otherwise(F.col("value")).alias("value"))
-        for i, part in enumerate((b0, b1)):
-            tmp = f"{base}/stage{i}"
-            part.withColumn("batch", F.lit(i)).coalesce(1).write.parquet(tmp)
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            shutil.copy(os.path.join(tmp, src), f"{in_dir}/b{i}.parquet")
-            shutil.rmtree(tmp)
+    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    block = (F.col("event_id") / 16).cast("long") % 2
+    odd = ev.filter(block == 1)
+    half = ev.agg(
+        F.floor(F.max("event_id") / 2).cast("long")).collect()[0][0]
+    b0 = odd.filter(F.col("event_id") <= half).select(
+        "event_type", "value")
+    b1 = odd.filter(F.col("event_id") > half).select(
+        "event_type",
+        F.when(F.col("event_type") == "error", F.col("value") * 3)
+        .otherwise(F.col("value")).alias("value"))
+    in_dir = _stage_batches(f"{base}/in", [
+        part.withColumn("batch", F.lit(i)).coalesce(1)
+        for i, part in enumerate((b0, b1))])
 
-        ref = ev.filter(block == 0).select("event_type", "value")
-        edges, ref_c, nb = psi_reference_state(
-            ref, ["event_type"], "value")
-        # the monitor state: computed once, reused every batch
-        state = (edges.localCheckpoint(eager=True),
-                 ref_c.localCheckpoint(eager=True), nb)
+    ref = ev.filter(block == 0).select("event_type", "value")
+    edges, ref_c, nb = psi_reference_state(
+        ref, ["event_type"], "value")
+    # the monitor state: computed once, reused every batch
+    state = (edges.localCheckpoint(eager=True),
+             ref_c.localCheckpoint(eager=True), nb)
 
-        def sink(batch, epoch_id):
-            bid = batch.agg(F.max("batch")).collect()[0][0]
-            out = psi_against_reference(
-                state, batch, ["event_type"], "value")
-            out.withColumn("batch", F.lit(int(bid)).cast("int")).select(
-                "event_type", "batch", "psi", "drifted"
-            ).write.mode("append").parquet(out_dir)
+    def sink(batch, epoch_id):
+        bid = batch.agg(F.max("batch")).collect()[0][0]
+        out = psi_against_reference(
+            state, batch, ["event_type"], "value")
+        out.withColumn("batch", F.lit(int(bid)).cast("int")).select(
+            "event_type", "batch", "psi", "drifted"
+        ).write.mode("append").parquet(out_dir)
 
-        schema = "event_type string, value double, batch int"
-        stream = read_parquet_stream(spark, in_dir, schema)
-        q = write_foreach_batch(
-            stream, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-            output_mode="append").start()
-        q.awaitTermination(180)
-        open(done, "w").close()
+    schema = "event_type string, value double, batch int"
+    stream = read_parquet_stream(spark, in_dir, schema)
+    try:
+        _replay(stream, base, sink, output_mode="append")
+    finally:
+        _release(state[0])
+        _release(state[1])
     return spark.read.parquet(out_dir)
 
 
@@ -1100,53 +1011,24 @@ def stream_sessionize(spark, sf_dir):
     in state at stream end — the same visibility rule the outer
     stream-stream join pins. Every closed session's start, end, and
     event count hash-checked."""
-    import os
-    import shutil
-
     from ..sources import normalize_nano_ts
-    from ..streaming import write_foreach_batch
+    from ..streaming import read_parquet_stream
     from ..streaming.stateful import session_tracker
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_strsess{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev = normalize_nano_ts(raw, ["ts"]).select(
-            "user_id", "event_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
-        (ev.repartitionByRange(2, "ts_us")
-         .write.parquet(f"{base}/stage"))
-        # per-key batch monotonicity needs DETERMINISTIC batch order:
-        # the file source orders by modification time, and both range
-        # parts share one write job's mtime — re-stage them as
-        # individually named files copied in ascending-range order so
-        # name AND mtime order agree (the unit test's recipe)
-        parts = sorted(
-            f for f in os.listdir(f"{base}/stage")
-            if f.endswith(".parquet"))
-        os.makedirs(f"{base}/in", exist_ok=True)
-        import time as _time
-
-        for i, p in enumerate(parts):
-            shutil.copy(f"{base}/stage/{p}", f"{base}/in/b{i}.parquet")
-            _time.sleep(1.1)  # distinct whole-second mtimes
-        src = (
-            spark.readStream.schema("user_id long, event_id long, ts_us long")
-            .option("maxFilesPerTrigger", 1).parquet(f"{base}/in"))
-        sessions = session_tracker(
-            src, key="user_id", ts_us_col="ts_us",
-            tiebreak_col="event_id", gap_sec=900)
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            sessions, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-            output_mode="append").start()
-        q.awaitTermination(300)
-    return spark.read.parquet(out_dir).select(
+    base = scratch_dir(sf_dir, "stream_sessionize")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = normalize_nano_ts(raw, ["ts"]).select(
+        "user_id", "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
+    # per-key batch monotonicity: the ascending range parts replay in order
+    in_dir = _stage_batches(f"{base}/in", [ev.repartitionByRange(2, "ts_us")])
+    src = read_parquet_stream(
+        spark, in_dir, "user_id long, event_id long, ts_us long")
+    sessions = session_tracker(
+        src, key="user_id", ts_us_col="ts_us",
+        tiebreak_col="event_id", gap_sec=900)
+    return spark.read.parquet(
+        _replay(sessions, base, output_mode="append")).select(
         "user_id", "session_start_us", "session_end_us", "n_events")
 
 
@@ -1167,50 +1049,30 @@ def stream_exactly_once_sink(spark, sf_dir):
     over the source hash-matches. A duplicate slipping through would
     double rows; a lost epoch would drop them — either breaks the
     hash."""
-    import os
-    import shutil
-
     from ..operators.layout import read_snapshot, snapshot_versions
     from ..sources import normalize_nano_ts
-    from ..streaming import (
-        read_parquet_stream, snapshot_epoch_sink, write_foreach_batch)
+    from ..streaming import read_parquet_stream, snapshot_epoch_sink
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_e1sink{tag}"
+    base = scratch_dir(sf_dir, "stream_exactly_once_sink")
     table = f"{base}/table"
-    done = f"{base}/.done"
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir = f"{base}/in"
-        os.makedirs(in_dir)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        # three deterministic staged files = three micro-batch epochs
-        for i in range(3):
-            tmp = f"{base}/stage{i}"
-            ev.filter(F.col("event_id") % 3 == i).coalesce(1) \
-                .write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp)
-                        if f.endswith(".parquet"))
-            shutil.copy(f"{tmp}/{part}", f"{in_dir}/b{i}.parquet")
-        raw_schema = ev.schema
-        stream = normalize_nano_ts(
-            read_parquet_stream(spark, in_dir, raw_schema), ["ts"])
-        proj = stream.select(
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    # three staged files = three micro-batch epochs
+    in_dir = _stage_batches(f"{base}/in", [
+        ev.filter(F.col("event_id") % 3 == i).coalesce(1) for i in range(3)])
+    stream = normalize_nano_ts(
+        read_parquet_stream(spark, in_dir, ev.schema), ["ts"])
+    proj = stream.select(
+        "event_id", "event_type", F.col("value").cast("double"))
+    sink = snapshot_epoch_sink(table)
+    _replay(proj, base, sink, output_mode="append")
+    n_versions = len(snapshot_versions(spark, table))
+    # at-least-once recovery simulation: re-deliver every epoch
+    for i in range(3):
+        batch = spark.read.parquet(f"{in_dir}/b{i}.parquet").select(
             "event_id", "event_type", F.col("value").cast("double"))
-        sink = snapshot_epoch_sink(table)
-        q = write_foreach_batch(
-            proj, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-            output_mode="append").start()
-        q.awaitTermination(300)
-        n_versions = len(snapshot_versions(spark, table))
-        # at-least-once recovery simulation: re-deliver every epoch
-        for i in range(3):
-            batch = spark.read.parquet(f"{in_dir}/b{i}.parquet").select(
-                "event_id", "event_type", F.col("value").cast("double"))
-            sink(batch, i)
-        assert len(snapshot_versions(spark, table)) == n_versions, \
-            "replayed epochs must not commit new versions"
-        open(done, "w").write("ok")
+        sink(batch, i)
+    assert len(snapshot_versions(spark, table)) == n_versions, \
+        "replayed epochs must not commit new versions"
     return read_snapshot(spark, table).select(
         "event_id", "event_type", "value")
 
@@ -1524,11 +1386,7 @@ def stream_heavy_hitters(spark, sf_dir):
     rule, lost state, or batch-order regression flips a bit and the
     hash. SELF-CHECKING (the sketch itself is order-dependent by
     design; the guarantee is not)."""
-    import os
-    import shutil
-    import time as _time
-
-    from ..streaming import write_foreach_batch
+    from ..streaming import read_parquet_stream
     from ..streaming.stateful import heavy_hitters_tracker
 
     item = F.when(
@@ -1536,36 +1394,18 @@ def stream_heavy_hitters(spark, sf_dir):
         F.concat(F.lit("heavy_"), (F.col("user_id") % 2).cast("string")),
     ).otherwise(
         F.concat(F.lit("tail_"), (F.col("user_id") % 997).cast("string")))
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base = f"/tmp/pbs_strhh{tag}"
-    out_dir = f"{base}/out"
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-              .filter(F.col("user_id").isNotNull())
-              .select("event_type", "event_id", item.alias("item")))
-        ev.repartitionByRange(3, "event_id").write.parquet(f"{base}/stage")
-        parts = sorted(f for f in os.listdir(f"{base}/stage")
-                       if f.endswith(".parquet"))
-        os.makedirs(f"{base}/in", exist_ok=True)
-        for i, p in enumerate(parts):
-            shutil.copy(f"{base}/stage/{p}", f"{base}/in/b{i}.parquet")
-            _time.sleep(1.1)       # distinct mtimes = deterministic order
-        src = (spark.readStream
-               .schema("event_type string, event_id long, item string")
-               .option("maxFilesPerTrigger", 1).parquet(f"{base}/in"))
-        sketch = heavy_hitters_tracker(
-            src.select("event_type", "item"),
-            key="event_type", item_col="item", capacity=8)
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = write_foreach_batch(
-            sketch, sink, checkpoint=f"{base}/ckpt", trigger_once=True,
-        ).start()
-        q.awaitTermination(300)
-    emitted = spark.read.parquet(out_dir)
+    base = scratch_dir(sf_dir, "stream_heavy_hitters")
+    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
+          .filter(F.col("user_id").isNotNull())
+          .select("event_type", "event_id", item.alias("item")))
+    in_dir = _stage_batches(
+        f"{base}/in", [ev.repartitionByRange(3, "event_id")])
+    src = read_parquet_stream(
+        spark, in_dir, "event_type string, event_id long, item string")
+    sketch = heavy_hitters_tracker(
+        src.select("event_type", "item"),
+        key="event_type", item_col="item", capacity=8)
+    emitted = spark.read.parquet(_replay(sketch, base))
     from pyspark.sql.window import Window as W
     last = (emitted.withColumn(
         "__mx", F.max("seq").over(W.partitionBy("event_type")))

@@ -146,7 +146,7 @@ _LEGACY_MATERIALIZE = {
     "operators/unigram.py": 1,
     "queries/llm_q.py": 2,
     "queries/relational.py": 3,
-    "queries/sources_q.py": 2,
+    "queries/sources_q.py": 1,
     "queries/streaming_q.py": 6,
 }
 

@@ -4341,6 +4341,28 @@ def test_graph_rounds_do_not_leak_checkpoints(spark):
         assert pinned(lambda: op(2)) == pinned(lambda: op(8)), name
 
 
+def test_tokenizer_trainers_do_not_leak_checkpoints(spark):
+    """``bpe_train`` and ``unigram_train`` return driver lists, so they
+    leave no RDD pinned: each BPE round is released once its successor
+    is materialized, and the last round and the word table before the
+    trainers return."""
+    from puffbird_spark.operators.bpe import bpe_train
+    from puffbird_spark.operators.unigram import unigram_train
+
+    jsc = spark.sparkContext._jsc
+    df = spark.createDataFrame(
+        [("low lower lowest",), ("newer wider newest",)], "text string")
+    for name, train in {
+        "bpe_train": lambda: bpe_train(df, "text", rounds=5),
+        "unigram_train": lambda: unigram_train(
+            df, "text", vocab_size=8, seed_size=16),
+    }.items():
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        train()
+        after = set(jsc.getPersistentRDDs().keySet().toArray())
+        assert after - before == set(), name
+
+
 def test_ivf_pq_full_probe_high_overfetch_is_near_exact(spark):
     """IVF+PQ sanity: probing ALL cells with a large overfetch must
     recover (nearly) the exact top-k — cells stop filtering and the

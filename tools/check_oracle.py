@@ -3,7 +3,8 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet tables, then compares
 row count, column names, and an order-insensitive canonicalized value
-multiset.
+multiset. The session is ``local[$SPARK_GRAFT_CPUS]`` (default: every CPU
+of the host), shuffle partitions 2x that — the ``bench.py`` convention.
 
 Usage:
     python tools/check_oracle.py [--sf-dir /root/testdata/sf0.01] [names...]
@@ -186,8 +187,9 @@ def main() -> int:
 
     from puffbird_spark.session import get_spark
 
-    spark = get_spark(app_name="check-oracle", master="local[8]",
-                      shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+    spark = get_spark(app_name="check-oracle", master=f"local[{cpus}]",
+                      shuffle_partitions=cpus * 2)
 
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
