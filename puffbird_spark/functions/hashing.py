@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import RELEASE_DP
+
 __all__ = [
     "md5_hex_int",
     "md5_uniform",
@@ -75,14 +77,14 @@ def md5_sign(key: str | Column, start: int = 17) -> Column:
     )
 
 
-def laplace_noise(key: str | Column, scale: float, round_dp: int = 6) -> Column:
+def laplace_noise(key: str | Column, scale: float) -> Column:
     """Laplace(0, scale) noise via the inverse CDF of the md5 uniform:
     ``-scale * sign(u - .5) * ln(1 - 2|u - .5|)``, rounded so the libm
     ``ln`` agrees across engines at the comparison precision."""
     u = md5_uniform(key)
     centered = u - F.lit(0.5)
     mag = F.log(F.lit(1.0) - F.lit(2.0) * F.abs(centered))
-    return F.round(F.lit(-float(scale)) * F.signum(centered) * mag, round_dp)
+    return F.round(F.lit(-float(scale)) * F.signum(centered) * mag, RELEASE_DP)
 
 
 # --- DuckDB oracle fragments (keep in lockstep with the Columns above) ---
@@ -105,25 +107,25 @@ def oracle_uniform(key_sql: str) -> str:
     )
 
 
-def oracle_laplace(key_sql: str, scale: float, round_dp: int = 6) -> str:
+def oracle_laplace(key_sql: str, scale: float) -> str:
     u = oracle_uniform(key_sql)
     return (
         f"round(-({float(scale)!r}) * sign({u} - 0.5)"
-        f" * ln(1 - 2 * abs({u} - 0.5)), {round_dp})"
+        f" * ln(1 - 2 * abs({u} - 0.5)), {RELEASE_DP})"
     )
 
 
-def gumbel_noise(key: str | Column, round_dp: int = 9) -> Column:
+def gumbel_noise(key: str | Column) -> Column:
     """Standard Gumbel(0, 1) noise via the inverse CDF of the md5
     uniform: ``-ln(-ln(u))`` — the Gumbel-max trick makes
     ``argmax(score + gumbel)`` an EXACT sample from the exponential
     mechanism's softmax over scores, without ever materializing the
-    normalizing constant. Rounded (9 dp default) so the libm ``ln``
+    normalizing constant. Rounded at 9 dp so the libm ``ln``
     agrees across engines at the comparison precision."""
     u = md5_uniform(key)
-    return F.round(-F.log(-F.log(u)), round_dp)
+    return F.round(-F.log(-F.log(u)), 9)
 
 
-def oracle_gumbel(key_sql: str, round_dp: int = 9) -> str:
+def oracle_gumbel(key_sql: str) -> str:
     u = oracle_uniform(key_sql)
-    return f"round(-ln(-ln({u})), {round_dp})"
+    return f"round(-ln(-ln({u})), 9)"

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import RELEASE_DP
+
 #: Small per-language stopword lists for the n-gram/stopword language
 #: heuristic. Order matters: ties resolve by this precedence.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -374,7 +376,7 @@ def readability_counts(text: str | Column) -> tuple[Column, Column, Column]:
     return sentences, words, syllables
 
 
-def flesch_reading_ease(text: str | Column, round_dp: int = 6) -> Column:
+def flesch_reading_ease(text: str | Column) -> Column:
     """Flesch reading ease: ``206.835 - 1.015*(words/sentences) -
     84.6*(syllables/words)`` — exact integer counts, one double
     expression, rounded at the comparison precision."""
@@ -383,7 +385,7 @@ def flesch_reading_ease(text: str | Column, round_dp: int = 6) -> Column:
         F.lit(_FLESCH_BASE)
         - F.lit(_FLESCH_WPS) * (words.cast("double") / sentences)
         - F.lit(_FLESCH_SPW) * (syllables.cast("double") / words),
-        round_dp,
+        RELEASE_DP,
     )
 
 
@@ -399,7 +401,7 @@ CODE_KEYWORD_PATTERN = (
 CODE_CAMEL_PATTERN = r"[a-z][A-Z]"
 
 
-def code_likeness(text: str | Column, round_dp: int = 6) -> dict[str, Column]:
+def code_likeness(text: str | Column) -> dict[str, Column]:
     """Code-detection features for a text/code router (StarCoder/The-
     Stack-style corpus splitting): per-char density of code symbols,
     indented-line starts, reserved-word hits, and camelCase humps —
@@ -417,7 +419,7 @@ def code_likeness(text: str | Column, round_dp: int = 6) -> dict[str, Column]:
         + F.lit(40.0) * ind / n
         + F.lit(20.0) * kw / n
         + F.lit(5.0) * camel / n,
-        round_dp,
+        RELEASE_DP,
     )
     return {
         "symbol_count": sym.cast("long"),

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import RELEASE_DP
+
 
 def as_double(vec: str | Column) -> Column:
     c = F.col(vec) if isinstance(vec, str) else vec
@@ -51,13 +53,13 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_rounded(a: Column, b: Column, dp: int = 6) -> Column:
+def cosine_rounded(a: Column, b: Column) -> Column:
     """Cosine rounded for cross-engine comparison and deterministic
     ranking (ties then break on an id column)."""
-    return F.round(cosine(a, b), dp)
+    return F.round(cosine(a, b), RELEASE_DP)
 
 
-def cosine_rounded_arrow(dp: int = 6):
+def cosine_rounded_arrow():
     """Arrow-batched twin of :func:`cosine_rounded`: one numpy einsum per
     batch instead of an interpreted HOF fold per row.
 
@@ -70,7 +72,7 @@ def cosine_rounded_arrow(dp: int = 6):
     import numpy as np
     import pandas as pd
 
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def kernel(a, b):
         if not len(a):

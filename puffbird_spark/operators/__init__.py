@@ -5,6 +5,7 @@ similarity search (brute-force / SRP-LSH / IVF), cluster resolution
 rollups, skew tooling, z-order layout, Count-Min sketch, multimodal
 column plumbing."""
 
+from ..functions import RELEASE_DP
 from .asof import asof_join  # noqa: F401
 from .dedup import (  # noqa: F401
     exact_dedup,
@@ -61,13 +62,13 @@ def warn_missing_tiebreak(operator: str) -> None:
         f"to make the order total", stacklevel=3)
 
 
-def nano_release(units_col: str, dp: int = 6):
+def nano_release(units_col: str):
     """Shared release step of the NANO-UNIT LADDER (r14: born in
     anderson_darling_two_sample, reused by benford_first_digit and
     changepoint_variance — one definition so the precision-critical
     constants cannot drift between copies, the _require_indicator
     lesson): given a LONG column of floor(value·1e9) units, return
-    the pure-integer HALF_UP release at ``dp`` as a double.
+    the pure-integer HALF_UP release at 6 dp as a double.
 
     ``units_col`` is a SQL expression STRING (a column name or an
     aggregate like ``sum(__cu)``) — the division MUST be Spark's
@@ -81,12 +82,12 @@ def nano_release(units_col: str, dp: int = 6):
     exact binary value; SQL engines scale-and-round). ``floor(t·1e9)``
     of identical doubles is identical everywhere, and everything
     after it is integer arithmetic. The SQL twin of this release is
-    ``CAST((units + {half}) // {div} AS DOUBLE) / 10^dp``."""
+    ``CAST((units + {half}) // {div} AS DOUBLE) / 10^6``."""
     from pyspark.sql import functions as F
 
-    half, div = 10 ** (9 - dp) // 2, 10 ** (9 - dp)
+    half, div = 10 ** (9 - RELEASE_DP) // 2, 10 ** (9 - RELEASE_DP)
     return (F.expr(f"(({units_col}) + {half}) div {div}")
-            .cast("double") / float(10 ** dp))
+            .cast("double") / float(10 ** RELEASE_DP))
 
 
 def drop_nan_rows(df, *cols):

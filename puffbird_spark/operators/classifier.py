@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import RELEASE_DP
+
 #: 2^32 — the draw denominator for 8 hex chars.
 _HEX8 = 4294967296.0
 
@@ -112,7 +114,6 @@ def target_encode_loo(
     cat_col: str,
     target_col: str,
     smoothing: float = 10.0,
-    dp: int = 6,
 ) -> DataFrame:
     """Leave-one-out target encoding with additive smoothing (the
     Micci-Barreca 2001 categorical encoder every gradient-boosting
@@ -145,7 +146,7 @@ def target_encode_loo(
     enc = F.round(
         ((F.col("__s") - y).cast("double")
          + F.lit(smoothing) * prior)
-        / ((F.col("__n") - 1).cast("double") + F.lit(smoothing)), dp)
+        / ((F.col("__n") - 1).cast("double") + F.lit(smoothing)), RELEASE_DP)
     return (
         base.join(F.broadcast(stats), cat_col)
         .crossJoin(F.broadcast(glob))

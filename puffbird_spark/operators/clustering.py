@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import telemetry
+from ..functions import RELEASE_DP
 from ..functions.vectors import as_double, dot
 
 #: k * dim above which assignment always takes the Arrow kernel (from its
@@ -46,9 +47,7 @@ from ..functions.vectors import as_double, dot
 ARROW_ASSIGN_KDIM = 2048
 
 
-def _assign_arrow(
-    e: DataFrame, cents: list[list[float]], dp: int = 6,
-) -> DataFrame:
+def _assign_arrow(e: DataFrame, cents: list[list[float]]) -> DataFrame:
     """Arrow twin of the literal assignment (the PQ-einsum pattern,
     `similarity.py` ``_pq_encode_udf``): centroids ride the UDF closure,
     each batch computes all k distances at once. Bit-equality with the
@@ -66,7 +65,7 @@ def _assign_arrow(
     cc = np.zeros(k)
     for i in range(dim):
         cc += C[:, i] * C[:, i]
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def kernel(vs):
         if not len(vs):
@@ -319,12 +318,11 @@ def standardize_embeddings(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-dimension z-score standardization of an embedding column —
     the preprocessing step before distance-based curation (k-means,
     cosine ANN, SemDeDup) when dimensions have wildly different scales:
-    ``z[i] = (x[i] - mean[i]) / std[i]``, rounded to ``dp``.
+    ``z[i] = (x[i] - mean[i]) / std[i]``, rounded to 6 dp.
 
     Two-phase, like the centroid operators: ONE (pos)-keyed aggregation
     computes per-dimension mean and E[x^2] with decimal-snapped sums
@@ -366,7 +364,7 @@ def standardize_embeddings(
             F.element_at(s_lit, i + 1) > 0,
             F.round(
                 (x - F.element_at(m_lit, i + 1))
-                / F.element_at(s_lit, i + 1), dp),
+                / F.element_at(s_lit, i + 1), RELEASE_DP),
         ).otherwise(F.lit(0.0)),
     )
     return e.select(F.col("__id").alias(id_col), z.alias("zvec"))
@@ -410,7 +408,6 @@ def random_projection(
     in_dim: int,
     out_dim: int = 16,
     seed: str = "rp",
-    dp: int = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction by a random SIGN
     projection (Achlioptas, 2001: +-1 entries preserve pairwise
@@ -456,7 +453,7 @@ def random_projection(
             # precision is never at risk)
             lambda a, x: (a + x).cast("decimal(38,12)"),
         )
-        comps.append(F.round(acc.cast("double") / root, dp))
+        comps.append(F.round(acc.cast("double") / root, RELEASE_DP))
     return df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.array(*comps).alias("zvec"))
 
@@ -745,7 +742,6 @@ def pca_fit_project(
     id_col: str,
     vec_col: str,
     k: int = 4,
-    dp: int = 6,
     return_loadings: bool = False,
 ):
     """PCA fit + projection over an embedding column (Pearson 1901 /
@@ -770,7 +766,7 @@ def pca_fit_project(
     `embedding_covariance` gate).
 
     Returns ``(scores_df, eigenvalues)``: the DataFrame has ``id_col``
-    and ``pc_1..pc_k`` scalar columns (rounded to ``dp``);
+    and ``pc_1..pc_k`` scalar columns (rounded to 6 dp);
     ``eigenvalues`` is the length-k list of explained variances
     (descending). With ``return_loadings=True`` a third element — the
     d×k numpy loading matrix — is appended so callers can assert the
@@ -824,7 +820,7 @@ def pca_fit_project(
     def _project_fn(vs):
         x = np.stack(vs.to_numpy()).astype(np.float64)
         sc = (x - mean[None, :]) @ w
-        return pd.Series(list(np.round(sc, dp)))
+        return pd.Series(list(np.round(sc, RELEASE_DP)))
 
     _project = pandas_udf(_project_fn, "array<double>")
 

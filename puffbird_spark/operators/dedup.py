@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import telemetry
+from ..functions import RELEASE_DP
 from ..functions.text import char_shingles, shingles, tokens
 
 
@@ -931,7 +932,6 @@ def dedup_weights(
     text_col: str,
     id_col: str,
     weight_col: str = "weight",
-    dp: int = 6,
 ) -> DataFrame:
     """Soft dedup: KEEP every document but weight it ``1 / n`` where
     ``n`` is its exact-duplicate cluster size — so each distinct
@@ -944,7 +944,7 @@ def dedup_weights(
     One digest-keyed count + one digest-keyed join back — 16-byte
     digests shuffle, text never does. NULL-text rows form one cluster
     (they share the NULL digest) via a null-safe join. Weights are
-    ``dp``-rounded for engine portability.
+    6-dp-rounded for engine portability.
     """
     d = df.withColumn("__dg", F.md5(F.col(text_col)))
     sizes = d.groupBy("__dg").agg(F.count(F.lit(1)).alias("__n"))
@@ -952,7 +952,7 @@ def dedup_weights(
         F.col("__dg").alias("__dg2"), F.col("__n"))
     return (
         d.join(s2, d["__dg"].eqNullSafe(s2["__dg2"]))
-        .withColumn(weight_col, F.round(1.0 / F.col("__n"), dp))
+        .withColumn(weight_col, F.round(1.0 / F.col("__n"), RELEASE_DP))
         .drop("__dg", "__dg2", "__n")
     )
 

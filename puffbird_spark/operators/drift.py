@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import RELEASE_DP, SNAP_SCALE
+
 
 def _require_indicator(df: DataFrame, g, fn_name: str) -> None:
     """Plan-time type contract shared by every two-sample operator in
@@ -45,7 +47,6 @@ def distribution_psi(
     value_col: str,
     n_buckets: int = 10,
     drift_threshold: float = 0.25,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-key PSI of ``current`` against ``reference`` over quantile
     buckets of the REFERENCE distribution (so "no change" always reads
@@ -73,7 +74,7 @@ def distribution_psi(
     state = psi_reference_state(reference, key_cols, value_col, n_buckets)
     return psi_against_reference(
         state, current, key_cols, value_col,
-        drift_threshold=drift_threshold, dp=dp)
+        drift_threshold=drift_threshold)
 
 
 def _keyed_join(left: DataFrame, right: DataFrame, keys: list,
@@ -138,7 +139,6 @@ def psi_against_reference(
     key_cols: list[str],
     value_col: str,
     drift_threshold: float = 0.25,
-    dp: int = 6,
 ) -> DataFrame:
     """PSI of ``current`` against a precomputed
     :func:`psi_reference_state` — the per-batch half of the monitor."""
@@ -168,7 +168,7 @@ def psi_against_reference(
         .agg(
             F.max("__ta").cast("long").alias("n_ref"),
             F.max("__tb").cast("long").alias("n_cur"),
-            F.round(F.sum(term), dp).alias("psi"),
+            F.round(F.sum(term), RELEASE_DP).alias("psi"),
         )
         .withColumn(
             "drifted",
@@ -184,7 +184,6 @@ def categorical_psi(
     key_cols: list[str],
     cat_col: str,
     drift_threshold: float = 0.25,
-    dp: int = 6,
 ) -> DataFrame:
     """PSI for a CATEGORICAL column — the share-shift monitor ("did the
     language / license / domain mix change?"): categories are the
@@ -228,7 +227,7 @@ def categorical_psi(
             F.max("__ta").cast("long").alias("n_ref"),
             F.max("__tb").cast("long").alias("n_cur"),
             F.max("__ncat").cast("long").alias("n_categories"),
-            F.round(F.sum(term), dp).alias("psi"),
+            F.round(F.sum(term), RELEASE_DP).alias("psi"),
         )
         .withColumn(
             "drifted",
@@ -243,7 +242,6 @@ def ks_two_sample(
     group_col,
     value_col: str,
     key_cols: list[str] | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic per key — the
     distribution-free drift test next to PSI (:func:`distribution_psi`
@@ -255,7 +253,7 @@ def ks_two_sample(
     RANGE-frame cumulative counts (ties included on both sides —
     the part a ROWS frame silently gets wrong) give
     ``|cum_a·n_b − cum_b·n_a|``, whose maximum divides ONCE by
-    ``n_a·n_b`` at ``dp`` — no float accumulates anywhere, so the
+    ``n_a·n_b`` at 6 dp — no float accumulates anywhere, so the
     statistic replays exactly on any engine. ``group_col`` is a
     boolean Column (True = sample a). One value-ordered window + one
     per-key totals window + one keyed agg. Returns
@@ -293,7 +291,8 @@ def ks_two_sample(
                 F.max(F.abs(
                     F.col("__ca") * F.col("__nb")
                     - F.col("__cb") * F.col("__na"))).cast("double")
-                / (F.max("__na") * F.max("__nb")), dp).alias("ks_stat"),
+                / (F.max("__na") * F.max("__nb")),
+                RELEASE_DP).alias("ks_stat"),
         )
     )
 
@@ -302,7 +301,6 @@ def chi_square_independence(
     df: DataFrame,
     row_col,
     col_col,
-    dp: int = 6,
 ) -> DataFrame:
     """Pearson chi-square test of independence between two categoricals
     — the drift/association test for label-vs-segment style questions
@@ -353,15 +351,16 @@ def chi_square_independence(
         F.max("__nr").cast("int").alias("n_row_levels"),
         F.max("__nc").cast("int").alias("n_col_levels"),
         dof.cast("int").alias("dof"),
-        F.round(chi2, dp).alias("chi2"),
+        F.round(chi2, RELEASE_DP).alias("chi2"),
         # a 1-level axis has dof 0 and no effect size — NULL, not a
         # divide-by-zero under ANSI
         F.when(
             F.least(F.max("__nr"), F.max("__nc")) > 1,
             F.round(F.sqrt(
-                F.round(chi2, dp)
+                F.round(chi2, RELEASE_DP)
                 / (F.max("__n")
-                   * (F.least(F.max("__nr"), F.max("__nc")) - 1))), dp))
+                   * (F.least(F.max("__nr"), F.max("__nc")) - 1))),
+                RELEASE_DP))
         .alias("cramers_v"),
     )
 
@@ -371,7 +370,6 @@ def mann_whitney_u(
     group_col,
     value_col: str,
     key_cols: list[str] | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Exact Mann-Whitney U rank-sum test per key (Mann & Whitney
     1947) — the nonparametric mean-shift complement to
@@ -386,7 +384,7 @@ def mann_whitney_u(
       sum an exact integer over per-value counts;
 
     only the final ``z = (U_a − n_a·n_b/2)/σ`` divides/roots floats,
-    rounded at ``dp`` — the whole test replays exactly. One
+    rounded at 6 dp — the whole test replays exactly. One
     value-ordered window + one per-(key,value) tie window + one keyed
     agg (same shuffle shape as KS). Returns
     ``(*key_cols, n_a, n_b, u_stat, z)``; keys with an empty side or
@@ -448,7 +446,7 @@ def mann_whitney_u(
             # not an ANSI divide-by-zero
             F.when(var > 0, F.round(
                 (u - nanb / 2.0)
-                / F.sqrt(var), dp)).alias("z"),
+                / F.sqrt(var), RELEASE_DP)).alias("z"),
         )
         .filter(F.col("z").isNotNull())
     )
@@ -458,7 +456,6 @@ def jensen_shannon(
     df: DataFrame,
     group_col,
     cat_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Jensen-Shannon divergence (Lin 1991) between the categorical
     distributions of two samples — the SYMMETRIC, always-finite
@@ -525,20 +522,18 @@ def jensen_shannon(
     return folded.filter(
         (F.col("n_a") + F.col("n_b")) > 0).select(
         "n_a", "n_b", "k_categories",
-        F.when(ok, F.round(jsd, dp)).alias("jsd_nats"),
-        F.when(ok, F.round(jsd / F.lit(math.log(2.0)), dp))
+        F.when(ok, F.round(jsd, RELEASE_DP)).alias("jsd_nats"),
+        F.when(ok, F.round(jsd / F.lit(math.log(2.0)), RELEASE_DP))
         .alias("jsd_bits"),
         F.when(ok, F.round(
             F.sqrt(F.greatest(jsd, F.lit(0.0)) / F.lit(math.log(2.0))),
-            dp)).alias("js_distance"))
+            RELEASE_DP)).alias("js_distance"))
 
 
 def welch_t_test(
     df: DataFrame,
     group_col,
     value_col: str,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Welch's unequal-variance t-test (Welch 1947) — the two-sample
     mean comparison that drops Student's equal-variance assumption
@@ -556,7 +551,7 @@ def welch_t_test(
     plan-time type contract).
 
     Determinism: the :func:`effect_size` moment ladder verbatim —
-    values snap to decimal(20,scale); per-side n/Σx are exact decimal
+    values snap to decimal(20,6); per-side n/Σx are exact decimal
     sums; Σx² pools in the scaled-integer domain as decimal(38,0)
     (|x| < ~1e7 at scale 6 stays under 38 digits past 1e9 rows);
     the release combines those exact pools in one double expression.
@@ -567,13 +562,13 @@ def welch_t_test(
     ``(n_a, n_b, mean_a, mean_b, t_stat, df_welch)``."""
     g = group_col if not isinstance(group_col, str) else F.col(group_col)
     _require_indicator(df, g, "welch_t_test")
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     base = df.select(
         F.col(value_col).cast(decv).alias("__v"),
         g.cast("boolean").alias("__a"),
     ).filter(F.col("__v").isNotNull() & F.col("__a").isNotNull())
     ia = F.when(F.col("__a"), 1).otherwise(0)
-    vi = (F.col("__v") * F.lit(10 ** scale)).cast("decimal(38,0)")
+    vi = (F.col("__v") * F.lit(10 ** SNAP_SCALE)).cast("decimal(38,0)")
     sq = vi * vi
     per = base.groupBy().agg(
         F.sum(ia).cast("long").alias("n_a"),
@@ -584,7 +579,7 @@ def welch_t_test(
         .alias("__qa"),
         F.sum(F.when(~F.col("__a"), sq)).cast("decimal(38,0)")
         .alias("__qb"))
-    desc = float(10 ** (2 * scale))
+    desc = float(10 ** (2 * SNAP_SCALE))
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     sa, sb = F.col("__sa").cast("double"), F.col("__sb").cast("double")
     qa = F.col("__qa").cast("double") / desc
@@ -600,10 +595,10 @@ def welch_t_test(
     return per.filter(
         (F.col("n_a") + F.col("n_b")) > 0).select(
         "n_a", "n_b",
-        F.when(F.col("n_a") > 0, F.round(sa / na, dp)).alias("mean_a"),
-        F.when(F.col("n_b") > 0, F.round(sb / nb, dp)).alias("mean_b"),
-        F.when(ok, F.round(t, dp)).alias("t_stat"),
-        F.when(ok, F.round(dfw, dp)).alias("df_welch"))
+        F.when(F.col("n_a") > 0, F.round(sa / na, RELEASE_DP)).alias("mean_a"),
+        F.when(F.col("n_b") > 0, F.round(sb / nb, RELEASE_DP)).alias("mean_b"),
+        F.when(ok, F.round(t, RELEASE_DP)).alias("t_stat"),
+        F.when(ok, F.round(dfw, RELEASE_DP)).alias("df_welch"))
 
 
 def friedman_test(
@@ -611,7 +606,6 @@ def friedman_test(
     block_col: str,
     treatment_col: str,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Friedman test (Friedman 1937) — the rank-based REPEATED-
     MEASURES k-treatment test beside :func:`kruskal_wallis`
@@ -699,7 +693,7 @@ def friedman_test(
     return num.select(
         F.col("__nmax").cast("long").alias("n_blocks"),
         F.lit(k).cast("long").alias("k"),
-        F.when(den > 0, F.round(q, dp)).alias("q_stat"))
+        F.when(den > 0, F.round(q, RELEASE_DP)).alias("q_stat"))
 
 
 def cochran_q(
@@ -707,7 +701,6 @@ def cochran_q(
     block_col: str,
     treatment_col: str,
     success_col,
-    dp: int = 6,
 ) -> DataFrame:
     """Cochran's Q test (Cochran 1950) — the BINARY repeated-measures
     k-treatment test: :func:`friedman_test` for pass/fail outcomes
@@ -782,7 +775,7 @@ def cochran_q(
     den = (F.lit(k) * F.col("__t1") - F.col("__rsq")).cast("double")
     return one.select(
         "n_blocks", F.lit(k).cast("long").alias("k"),
-        F.when(den > 0, F.round(num.cast("double") / den, dp))
+        F.when(den > 0, F.round(num.cast("double") / den, RELEASE_DP))
         .alias("q_stat"))
 
 
@@ -790,7 +783,6 @@ def cliffs_delta(
     df: DataFrame,
     group_col,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Cliff's delta (Cliff 1993) — the ORDINAL effect size beside
     :func:`effect_size`'s Cohen's d: the probability a sample-a value
@@ -812,7 +804,7 @@ def cliffs_delta(
     Also releases the Romano et al. 2006 magnitude band on |δ|:
     ``negligible`` < 0.147 ≤ ``small`` < 0.33 ≤ ``medium`` < 0.474 ≤
     ``large`` (the conventional report line; banding applies to the
-    ``dp``-rounded release, so the label replays exactly).
+    6-dp-rounded release, so the label replays exactly).
 
     Scale shape — the DISTINCT-VALUE reduction (``spearman_corr``
     discipline): one value-keyed count agg (total + sample-a counts
@@ -853,7 +845,7 @@ def cliffs_delta(
     two_u = F.col("__2ra") - na * (na + 1)
     delta = F.round(
         (two_u - na * nb).cast("double")
-        / (na.cast("double") * nb.cast("double")), dp)
+        / (na.cast("double") * nb.cast("double")), RELEASE_DP)
     mag = F.when(
         F.abs(delta) < 0.147, F.lit("negligible")
     ).when(F.abs(delta) < 0.33, F.lit("small")
@@ -870,8 +862,6 @@ def brown_forsythe(
     df: DataFrame,
     group_col,
     value_col: str,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Brown-Forsythe test (Brown & Forsythe 1974) — variance
     homogeneity across k groups, the robust (median-centered) Levene
@@ -890,15 +880,15 @@ def brown_forsythe(
     Exact group MEDIANS come from the distinct-value reduction: per
     (group, value) counts, one group-keyed cumulative window over the
     distinct frame, the median straddle rows picked by position
-    (even n averages the two central values — exact at scale+1
+    (even n averages the two central values — exact at scale 7
     decimals). No approx-percentile enters the contract.
 
-    Determinism: values snap to decimal(20,scale); deviations are
-    exact decimals at scale+1; per-group Σz/Σz² pool exactly
+    Determinism: values snap to decimal(20,6); deviations are
+    exact decimals at scale 7; per-group Σz/Σz² pool exactly
     (scaled-integer squares, the ``effect_size`` rule); cross-group
-    SSB/SSW terms snap to 2-dp decimals before pooling (NOT ``dp`` —
+    SSB/SSW terms snap to 2-dp decimals before pooling (NOT 6 dp —
     the ``diag_anova`` lesson: these terms reach ~1e12 at scale, and
-    a snap is only engine-portable while term·10^dp stays inside the
+    a snap is only engine-portable while term·10^6 stays inside the
     double exact-integer range). Degenerate inputs release NULL W
     (k < 2, N ≤ k, or zero within-group deviation).
 
@@ -910,7 +900,7 @@ def brown_forsythe(
     from pyspark.sql.window import Window
 
     g = group_col if not isinstance(group_col, str) else F.col(group_col)
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     base = df.select(
         g.cast("string").alias("__g"),
         F.col(value_col).cast(decv).alias("__v"),
@@ -933,7 +923,7 @@ def brown_forsythe(
                      F.col("__v"))).alias("__mlo"),
         F.max(F.when((F.col("__prev") < hi) & (hi <= F.col("__cum")),
                      F.col("__v"))).alias("__mhi"))
-    decm = f"decimal(22,{scale + 1})"
+    decm = f"decimal(22,{SNAP_SCALE + 1})"
     med = med.select(
         "__g",
         ((F.col("__mlo") + F.col("__mhi")) / 2).cast(decm)
@@ -942,12 +932,12 @@ def brown_forsythe(
     z = base.join(med, "__g").select(
         "__g",
         F.abs(F.col("__v").cast(decm) - F.col("__med")).alias("__z"))
-    zi = (F.col("__z") * F.lit(10 ** (scale + 1))).cast("decimal(38,0)")
+    zi = (F.col("__z") * F.lit(10 ** (SNAP_SCALE + 1))).cast("decimal(38,0)")
     per = z.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__z").alias("__s"),
         F.sum(zi * zi).cast("decimal(38,0)").alias("__q"))
-    desc = float(10 ** (2 * (scale + 1)))
+    desc = float(10 ** (2 * (SNAP_SCALE + 1)))
     sg = F.col("__s").cast("double")
     qg = F.col("__q").cast("double") / desc
     ng = F.col("__n").cast("double")
@@ -969,14 +959,13 @@ def brown_forsythe(
     w_stat = (ssb / (kk - 1.0)) / (ssw / (nn - kk))
     ok = (F.col("k") >= 2) & (F.col("n") > F.col("k")) & (ssw > 0)
     return folded.filter(F.col("n") > 0).select(
-        "n", "k", F.when(ok, F.round(w_stat, dp)).alias("w_stat"))
+        "n", "k", F.when(ok, F.round(w_stat, RELEASE_DP)).alias("w_stat"))
 
 
 def kruskal_wallis(
     df: DataFrame,
     group_col,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Kruskal-Wallis H test (Kruskal & Wallis 1952) — the rank-based
     k-group location test beside :func:`mann_whitney_u` (its k=2
@@ -1006,7 +995,7 @@ def kruskal_wallis(
     (rank sums reach ~n² — LONG overflows past ~3e9 rows, the r12
     audit rule); each group's squared-deviation term is an identical
     double snapped at 9 dp and pooled as decimal(38,9) so the
-    cross-group sum is order-independent; H releases at ``dp``.
+    cross-group sum is order-independent; H releases at 6 dp.
 
     Returns ONE row: ``(n, k, h, h_adj)``."""
     from pyspark.sql import types as T
@@ -1059,8 +1048,8 @@ def kruskal_wallis(
     return folded.filter(F.col("k") > 0).select(
         F.col("__nmax").cast("long").alias("n"),
         "k",
-        F.when(F.col("k") >= 2, F.round(h, dp)).alias("h"),
-        F.when((F.col("k") >= 2) & (c > 0), F.round(h / c, dp))
+        F.when(F.col("k") >= 2, F.round(h, RELEASE_DP)).alias("h"),
+        F.when((F.col("k") >= 2) & (c > 0), F.round(h / c, RELEASE_DP))
         .alias("h_adj"))
 
 
@@ -1069,7 +1058,6 @@ def runs_test(
     value_col: str,
     order_col,
     key_cols: list[str] | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Wald-Wolfowitz runs test per key (Wald & Wolfowitz 1940) — is a
     sequence random, or does it trend/oscillate? Each observation
@@ -1125,7 +1113,7 @@ def runs_test(
             *keys, "n_above", "n_below", "n_runs",
             F.when(var > 0, F.round(
                 (F.col("n_runs").cast("double") - mu) / F.sqrt(var),
-                dp)).alias("z"))
+                RELEASE_DP)).alias("z"))
         .filter(F.col("z").isNotNull())
     )
 
@@ -1135,8 +1123,6 @@ def effect_size(
     group_col,
     value_col: str,
     key_cols: list[str] | None = None,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Cohen's d and Hedges' g per key — the standardized mean
     difference that turns :func:`mann_whitney_u`'s "is there a shift"
@@ -1149,14 +1135,14 @@ def effect_size(
 
     ``group_col`` is a boolean sample-a indicator (same plan-time type
     contract as mann_whitney_u — string labels pass an explicit
-    comparison). Determinism: values snap to ``decimal(20,scale)``;
+    comparison). Determinism: values snap to ``decimal(20,6)``;
     per-side n/Σx/Σx² are EXACT (decimal sums; the decimal cast
     maps NaN to NULL, so NaN values are excluded with the NULLs); variances and the
     release combine those sums in one double expression with factors
     cast to double BEFORE multiplying (the overflow-audit rule).
     Sides with n < 2, or zero pooled variance, release NULL d/g.
 
-    Σx² pools in the SCALED-INTEGER domain — ``(x·10^scale)²`` as
+    Σx² pools in the SCALED-INTEGER domain — ``(x·10^6)²`` as
     decimal(38,0), descaled once in the double combine — because a
     decimal(20,s)² exceeds Spark's 38-digit cap and the precision-loss
     rule would silently round the SCALE (a lossy product; the r12
@@ -1169,13 +1155,13 @@ def effect_size(
     keys = list(key_cols or [])
     g = group_col if not isinstance(group_col, str) else F.col(group_col)
     _require_indicator(df, g, "effect_size")
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     base = df.select(
         *keys, F.col(value_col).cast(decv).alias("__v"),
         g.cast("boolean").alias("__a"),
     ).filter(F.col("__v").isNotNull() & F.col("__a").isNotNull())
     ia = F.when(F.col("__a"), 1).otherwise(0)
-    vi = (F.col("__v") * F.lit(10 ** scale)).cast("decimal(38,0)")
+    vi = (F.col("__v") * F.lit(10 ** SNAP_SCALE)).cast("decimal(38,0)")
     sq = vi * vi
     per = base.groupBy(*keys).agg(
         F.sum(ia).cast("long").alias("n_a"),
@@ -1186,7 +1172,7 @@ def effect_size(
         .alias("__qa"),
         F.sum(F.when(~F.col("__a"), sq)).cast("decimal(38,0)")
         .alias("__qb"))
-    desc = float(10 ** (2 * scale))
+    desc = float(10 ** (2 * SNAP_SCALE))
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     sa, sb = F.col("__sa").cast("double"), F.col("__sb").cast("double")
     qa = F.col("__qa").cast("double") / desc
@@ -1199,10 +1185,10 @@ def effect_size(
     ok = (F.col("n_a") >= 2) & (F.col("n_b") >= 2)
     return per.select(
         *keys, "n_a", "n_b",
-        F.when(F.col("n_a") > 0, F.round(sa / na, dp)).alias("mean_a"),
-        F.when(F.col("n_b") > 0, F.round(sb / nb, dp)).alias("mean_b"),
-        F.when(ok & (pooled > 0), F.round(d, dp)).alias("cohens_d"),
-        F.when(ok & (pooled > 0), F.round(d * corr, dp))
+        F.when(F.col("n_a") > 0, F.round(sa / na, RELEASE_DP)).alias("mean_a"),
+        F.when(F.col("n_b") > 0, F.round(sb / nb, RELEASE_DP)).alias("mean_b"),
+        F.when(ok & (pooled > 0), F.round(d, RELEASE_DP)).alias("cohens_d"),
+        F.when(ok & (pooled > 0), F.round(d * corr, RELEASE_DP))
         .alias("hedges_g"))
 
 
@@ -1211,7 +1197,6 @@ def anderson_darling_two_sample(
     group_col,
     value_col: str,
     key_cols: list[str] | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Exact two-sample Anderson-Darling statistic per key (Scholz &
     Stephens 1987, the k-sample A²_kN of their eq. 3 at k = 2 —
@@ -1234,7 +1219,7 @@ def anderson_darling_two_sample(
     decimal(38,0) FACTORS before one double division per term (the
     roc_auc overflow rule — a LONG product would wrap silently at
     large N), terms snap at 9 dp into decimal(38,9) order-free sums,
-    release at ``dp``. NULL values and NaN values are excluded
+    release at 6 dp. NULL values and NaN values are excluded
     (complete-case); keys where either sample is empty are omitted
     (no distribution to compare, the KS convention).
 
@@ -1306,7 +1291,7 @@ def anderson_darling_two_sample(
     return per.select(
         *keys, "n_a", F.col("__nbv").alias("n_b"),
         (F.col("__nd") + 1).alias("n_distinct"),
-        nano_release("__s", dp).alias("a2"))
+        nano_release("__s").alias("a2"))
 
 
 def kendalls_w(
@@ -1314,7 +1299,6 @@ def kendalls_w(
     block_col: str,
     treatment_col: str,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Kendall's coefficient of concordance W (Kendall & Babington
     Smith 1939) — HOW STRONGLY do the n blocks (raters) agree on the
@@ -1328,28 +1312,28 @@ def kendalls_w(
 
     (Kendall's tie-corrected W and the tie-corrected Friedman Q are
     the same statistic on different scales — Conover 1999). Computed
-    by COMPOSITION from the RELEASED ``dp``-rounded Q (the
+    by COMPOSITION from the RELEASED 6-dp-rounded Q (the
     textrank→pagerank / PACF convention: both engines fold the
     identical released double, no second precision ladder), then
-    released at ``dp``. All of friedman's contracts apply unchanged
+    released at 6 dp. All of friedman's contracts apply unchanged
     (complete design validated on a pinned lineage, NULL on all-tied
     input).
 
     Returns ONE row: ``(n_blocks, k, q_stat, w)``."""
-    q = friedman_test(df, block_col, treatment_col, value_col, dp=dp)
+    q = friedman_test(df, block_col, treatment_col, value_col)
     # Q/D is a rational with a SMALL denominator, so a round(double)
     # release sits on half boundaries by construction (the
-    # anderson_darling lesson) — recover Q's exact dp-grain integer
-    # (floor(q·10^dp + 0.5) is engine-free: IEEE multiply + floor of
+    # anderson_darling lesson) — recover Q's exact 6-dp-grain integer
+    # (floor(q·10^6 + 0.5) is engine-free: IEEE multiply + floor of
     # identical doubles), then divide HALF_UP in pure integers
     return q.select(
         "n_blocks", "k", "q_stat",
         F.when(
             F.col("q_stat").isNotNull(),
-            F.expr(f"(2 * floor(q_stat * {float(10 ** dp)!r} + 0.5)"
+            F.expr(f"(2 * floor(q_stat * {float(10 ** RELEASE_DP)!r} + 0.5)"
                    " + (n_blocks * (k - 1)))"
                    " div (2 * n_blocks * (k - 1))").cast("double")
-            / float(10 ** dp)).alias("w"))
+            / float(10 ** RELEASE_DP)).alias("w"))
 
 
 def esd_outlier_rounds(
@@ -1358,8 +1342,6 @@ def esd_outlier_rounds(
     value_col: str,
     id_col: str,
     n_rounds: int = 3,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Generalized extreme Studentized deviate outlier rounds per
     group (Rosner 1983, the iterative Grubbs) — the masked-outlier
@@ -1376,13 +1358,13 @@ def esd_outlier_rounds(
     point is the argmax by (|deviation| desc, id asc): the id
     tiebreak makes tied extremes engine-deterministic.
 
-    Determinism: values snap to decimal(20,scale) and scale to exact
+    Determinism: values snap to decimal(20,6) and scale to exact
     integers (the changepoint_variance rule — never square a
     nonzero-scale decimal in Spark); per-round moments are exact
     decimal(38,0) sums; the deviation ranking compares |n·x − Σx|
     in EXACT integers (the same ordering as |x − x̄| — no float
     enters the argmax); R_r is one double expression over exact
-    integers released at ``dp``. Groups shrink by exactly one row
+    integers released at 6 dp. Groups shrink by exactly one row
     per round; rounds with n < 3 or zero variance release NULL R
     and stop removing (NULL id/value).
 
@@ -1398,8 +1380,8 @@ def esd_outlier_rounds(
     d0 = "decimal(38,0)"
     from . import drop_nan_rows
 
-    u = (F.col(value_col).cast(f"decimal(20,{scale})")
-         * (10 ** scale)).cast(d0)
+    u = (F.col(value_col).cast(f"decimal(20,{SNAP_SCALE})")
+         * (10 ** SNAP_SCALE)).cast(d0)
     cur = drop_nan_rows(df, value_col).filter(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
         & F.col(id_col).isNotNull()
@@ -1407,7 +1389,7 @@ def esd_outlier_rounds(
         F.col(group_col).alias("__g"), u.alias("__u"),
         F.col(id_col).alias("__id"))
     out_frames = []
-    down = float(10 ** scale)
+    down = float(10 ** SNAP_SCALE)
     for rnd in range(1, int(n_rounds) + 1):
         mom = cur.groupBy("__g").agg(
             F.count(F.lit(1)).cast("long").alias("__n"),
@@ -1425,7 +1407,7 @@ def esd_outlier_rounds(
         nd = F.col("__n").cast("double")
         # sample variance numerator n·Σx² − (Σx)² as an EXACT decimal
         # integer (its double twin can read tiny-nonzero past 2^53);
-        # s² = num / (n(n−1)), descaled by 10^2·scale
+        # s² = num / (n(n−1)), descaled by 10^12
         var_num = (F.col("__n").cast(d0) * F.col("__q")
                    - F.col("__s") * F.col("__s"))
         var = var_num.cast("double") / (nd * (nd - 1.0))
@@ -1436,7 +1418,7 @@ def esd_outlier_rounds(
             F.col("__g").alias(group_col),
             F.lit(rnd).alias("round"),
             F.col("__n").alias("n_remaining"),
-            F.when(r_ok, F.round(r_stat, dp)).alias("r_stat"),
+            F.when(r_ok, F.round(r_stat, RELEASE_DP)).alias("r_stat"),
             F.when(r_ok, F.col("__id")).alias("removed_id"),
             F.when(r_ok, F.col("__u").cast("double") / down)
             .alias("removed_value"))
@@ -1456,7 +1438,6 @@ def jarque_bera(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Jarque-Bera normality screen per group (Jarque & Bera 1980)
     — the is-this-even-Gaussian gate that belongs BEFORE any test
@@ -1515,7 +1496,7 @@ def jarque_bera(
         jb_units.alias("__ju")
     ).select(
         group_col, "n", "skewness", "kurtosis_excess",
-        nano_release("__ju", dp).alias("jb"))
+        nano_release("__ju").alias("jb"))
 
 
 def page_test(
@@ -1607,7 +1588,6 @@ def mcnemar_test(
     df: DataFrame,
     x_col,
     y_col,
-    dp: int = 6,
 ) -> DataFrame:
     """McNemar's test for paired binary outcomes (McNemar 1947) —
     the 2-treatment special case of :func:`cochran_q`, in the form
@@ -1632,7 +1612,7 @@ def mcnemar_test(
     no shuffle beyond the scalar combine. Counts are exact LONGs
     (cell counts are row-bounded, no product terms — the overflow
     audit passes trivially); each release is one double division
-    rounded at ``dp``.
+    rounded at 6 dp.
 
     Returns ONE row: ``(n_pairs, both_pos, both_neg, only_x, only_y,
     chi2, chi2_corrected, odds_ratio)``."""
@@ -1655,10 +1635,10 @@ def mcnemar_test(
     adiff = F.abs(b - c).cast("double")
     return one.select(
         "n_pairs", "both_pos", "both_neg", "only_x", "only_y",
-        F.when(disc > 0, F.round(diff * diff / disc, dp))
+        F.when(disc > 0, F.round(diff * diff / disc, RELEASE_DP))
         .alias("chi2"),
         F.when(disc > 0,
-               F.round((adiff - 1) * (adiff - 1) / disc, dp))
+               F.round((adiff - 1) * (adiff - 1) / disc, RELEASE_DP))
         .alias("chi2_corrected"),
         F.when(c > 0, F.round(b.cast("double") / c.cast("double"),
-                              dp)).alias("odds_ratio"))
+                              RELEASE_DP)).alias("odds_ratio"))

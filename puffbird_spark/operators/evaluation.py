@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import RELEASE_DP, SNAP_SCALE
+
 
 def ir_metrics(
     results: DataFrame,
@@ -98,7 +100,6 @@ def pr_curve(
     score_col: str,
     label_col: str,
     thresholds: list[float] | None = None,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Precision/recall/F1 at a fixed threshold grid — the operating-
     point companion of the threshold-free AUC scorecard: one row per
@@ -109,7 +110,7 @@ def pr_curve(
     sort — an exact-sorted PR curve needs a global rank; a fixed grid
     is what monitoring dashboards pin anyway), then a tiny literal
     threshold table cross-joined against the 1-row totals. All counts
-    integral, ratios exact divisions rounded at ``round_dp``;
+    integral, ratios exact divisions rounded at 6 dp;
     zero-denominator cells read NULL (no predictions / no positives is
     "undefined", not 0)."""
     ts = thresholds or [round(0.1 * i, 1) for i in range(1, 10)]
@@ -126,11 +127,11 @@ def pr_curve(
         tp = F.col(f"__tp{i}")
         pp = F.col(f"__pp{i}")
         pos = F.col("__pos")
-        prec = F.when(pp > 0, F.round(tp.cast("double") / pp, round_dp))
-        rec = F.when(pos > 0, F.round(tp.cast("double") / pos, round_dp))
+        prec = F.when(pp > 0, F.round(tp.cast("double") / pp, RELEASE_DP))
+        rec = F.when(pos > 0, F.round(tp.cast("double") / pos, RELEASE_DP))
         f1 = F.when(
             (pp + pos) > 0,
-            F.round(2.0 * tp.cast("double") / (pp + pos), round_dp),
+            F.round(2.0 * tp.cast("double") / (pp + pos), RELEASE_DP),
         )
         structs.append(F.struct(
             F.lit(float(t)).alias("threshold"),
@@ -734,7 +735,6 @@ def rouge_l(
     cand_tokens,
     ref_tokens,
     id_col: str = "doc_id",
-    dp: int = 6,
 ) -> DataFrame:
     """Per-row ROUGE-L (Lin, ACL 2004 Workshop §3.1) — the LCS-based
     member of the ROUGE family beside ``rouge_n``'s fixed-order gram
@@ -779,7 +779,7 @@ def rouge_l(
 
     Determinism: LCS and lengths are exact ints; P/R are exact
     int-ratio doubles snapped at 9 dp (decimal) before the F fold;
-    release rounds at ``dp`` — the house ladder.
+    release rounds at 6 dp — the house ladder.
 
     Scale shape: row-local, zero shuffle, Arrow-batched — but
     per-row cost is O(|c|·|r|) DP cells, so this is for SHORT fields
@@ -837,9 +837,9 @@ def rouge_l(
         clen.cast("long").alias("cand_len"),
         rlen.cast("long").alias("ref_len"),
         lcs.cast("long").alias("lcs"),
-        F.round(pd_, dp).alias("rouge_l_p"),
-        F.round(rd, dp).alias("rouge_l_r"),
-        F.round(f1, dp).alias("rouge_l_f"))
+        F.round(pd_, RELEASE_DP).alias("rouge_l_p"),
+        F.round(rd, RELEASE_DP).alias("rouge_l_r"),
+        F.round(f1, RELEASE_DP).alias("rouge_l_f"))
 
 
 def edit_distance_metrics(
@@ -847,7 +847,6 @@ def edit_distance_metrics(
     cand_col,
     ref_col,
     id_col: str = "doc_id",
-    dp: int = 6,
 ) -> DataFrame:
     """Per-row Levenshtein edit distance and its normalized forms —
     the ASR / OCR / transcription scorecard:
@@ -878,10 +877,10 @@ def edit_distance_metrics(
     c, r = _col(cand_col), _col(ref_col)
     cl, rl = F.length(c), F.length(r)
     dist = F.levenshtein(c, r)
-    cer = F.when(rl > 0, F.round(dist.cast("double") / rl, dp))
+    cer = F.when(rl > 0, F.round(dist.cast("double") / rl, RELEASE_DP))
     mx = F.greatest(cl, rl)
     sim = F.when(mx > 0, F.round(
-        F.lit(1.0) - dist.cast("double") / mx, dp)
+        F.lit(1.0) - dist.cast("double") / mx, RELEASE_DP)
     ).otherwise(F.when(cl.isNotNull() & rl.isNotNull(), F.lit(1.0)))
     return df.select(
         F.col(id_col),
@@ -897,7 +896,6 @@ def isotonic_calibration(
     score_col,
     label_col,
     n_bins: int = 20,
-    dp: int = 6,
 ) -> DataFrame:
     """Isotonic calibration over a fixed score grid (pool-adjacent-
     violators; Ayer et al. 1955, Zadrozny & Elkan KDD'02) — the
@@ -920,7 +918,7 @@ def isotonic_calibration(
     from the output (no fabricated rates).
 
     Returns one row per NON-EMPTY bin: ``(bin, n, pos, rate_raw,
-    rate_iso)`` with both rates released at ``dp``."""
+    rate_iso)`` with both rates released at 6 dp."""
     if int(n_bins) < 2:
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
     b = int(n_bins)
@@ -964,7 +962,7 @@ def isotonic_calibration(
     # diverges at exact boundaries like 1/128 = 0.0078125
     from decimal import ROUND_HALF_UP, Decimal
 
-    quantum = Decimal(1).scaleb(-dp)
+    quantum = Decimal(1).scaleb(-RELEASE_DP)
 
     def _r(num: int, den: int) -> float:
         return float(
@@ -1040,7 +1038,6 @@ def cohens_kappa(
     df: DataFrame,
     rater_a: str,
     rater_b: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Cohen's kappa (Cohen 1960) — inter-annotator agreement beyond
     chance over two categorical label columns, the label-quality gate
@@ -1057,7 +1054,7 @@ def cohens_kappa(
 
     Rows where either label is NULL are excluded (an unlabeled item
     has no agreement reading). All three released values are exact
-    int-ratio doubles rounded at ``dp``.
+    int-ratio doubles rounded at 6 dp.
 
     Scale shape: one row-local agree flag + global count, two tiny
     per-category marginal aggregations joined on category (outer —
@@ -1095,9 +1092,10 @@ def cohens_kappa(
         .filter(n > 0)
         .select(
             n.alias("n_items"),
-            F.round(po, dp).alias("po"),
-            F.round(pe, dp).alias("pe"),
-            F.when(pe < 1.0, F.round((po - pe) / (F.lit(1.0) - pe), dp))
+            F.round(po, RELEASE_DP).alias("po"),
+            F.round(pe, RELEASE_DP).alias("pe"),
+            F.when(pe < 1.0,
+                   F.round((po - pe) / (F.lit(1.0) - pe), RELEASE_DP))
             .alias("kappa")))
 
 
@@ -1105,7 +1103,6 @@ def krippendorff_alpha(
     df: DataFrame,
     unit_col: str,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Krippendorff's alpha (nominal metric; Krippendorff 2004) — the
     multi-rater agreement coefficient that, unlike Cohen's kappa,
@@ -1125,7 +1122,7 @@ def krippendorff_alpha(
     Numerators/denominators are exact integer sums (decimal(38,6) for
     the per-unit rational terms — each n_uc·(n_u - n_uc)/(n_u - 1)
     snaps to 6-dp decimal so the cross-partition sum is exact and
-    order-independent); released values round at ``dp``.
+    order-independent); released values round at 6 dp.
 
     Scale shape: one (unit, value) count aggregation, one per-unit
     rollup, one per-value rollup, three broadcast-sized folds —
@@ -1168,9 +1165,9 @@ def krippendorff_alpha(
         .select(
             F.col("__n_units").alias("n_units"),
             n.alias("n_ratings"),
-            F.round(do, dp).alias("d_obs"),
-            F.round(de, dp).alias("d_exp"),
-            F.when(de > 0, F.round(F.lit(1.0) - do / de, dp))
+            F.round(do, RELEASE_DP).alias("d_obs"),
+            F.round(de, RELEASE_DP).alias("d_exp"),
+            F.when(de > 0, F.round(F.lit(1.0) - do / de, RELEASE_DP))
             .alias("alpha")))
 
 
@@ -1178,7 +1175,6 @@ def fleiss_kappa(
     df: DataFrame,
     unit_col: str,
     value_col: str,
-    dp: int = 6,
     n_raters: int | None = None,
 ) -> DataFrame:
     """Fleiss' kappa (Fleiss 1971) — agreement among a FIXED-SIZE
@@ -1194,7 +1190,7 @@ def fleiss_kappa(
 
     Determinism: per-unit P_u is an exact int ratio snapped to 9-dp
     decimal before the mean (order-independent); p_c² sums over exact
-    HUGEINT-class category totals; release rounds at ``dp``.
+    HUGEINT-class category totals; release rounds at 6 dp.
 
     Scale shape: one (unit, value) count aggregation, one per-unit
     fold, one per-category fold — linear, map-side combinable.
@@ -1288,11 +1284,11 @@ def fleiss_kappa(
             *[
                 F.when(F.col("__panel_bad") == 0, c).alias(a)
                 for c, a in (
-                    (F.round(pbar, dp), "p_bar"),
-                    (F.round(pe, dp), "p_e"),
+                    (F.round(pbar, RELEASE_DP), "p_bar"),
+                    (F.round(pe, RELEASE_DP), "p_e"),
                     (F.when(pe < 1.0,
                             F.round((pbar - pe) / (F.lit(1.0) - pe),
-                                    dp)), "kappa"),
+                                    RELEASE_DP)), "kappa"),
                 )
             ]))
 
@@ -1301,7 +1297,6 @@ def mcc_binary(
     df: DataFrame,
     label_col,
     pred_col,
-    dp: int = 6,
 ) -> DataFrame:
     """Matthews correlation coefficient for binary classification
     (Matthews 1975) — the single-number confusion-matrix summary that,
@@ -1315,7 +1310,7 @@ def mcc_binary(
     with a NULL label or prediction are excluded. The four cells are
     exact longs from ONE aggregation pass; the product goes through
     double sqrt (IEEE-exact for identical inputs on both engines);
-    release rounds at ``dp``.
+    release rounds at 6 dp.
 
     Returns ONE row: ``(tp, fp, tn, fn, mcc)``."""
     y = _col(label_col).cast("boolean")
@@ -1340,14 +1335,13 @@ def mcc_binary(
         * (tn + fp).cast("double") * (tn + fn).cast("double"))
     return tot.select(
         "tp", "fp", "tn", "fn",
-        F.when(den > 0, F.round(num / den, dp)).alias("mcc"))
+        F.when(den > 0, F.round(num / den, RELEASE_DP)).alias("mcc"))
 
 
 def roc_auc(
     df: DataFrame,
     score_col,
     label_col,
-    dp: int = 6,
 ) -> DataFrame:
     """ROC AUC for a binary classifier score, the exact rank (Mann-
     Whitney) formulation — AUC is the probability a random positive
@@ -1363,7 +1357,7 @@ def roc_auc(
     ``2·midrank = 2·rank() + ties - 1`` stays integral; the positive
     sum pools in decimal(38,0) (a LONG Σ2r reaches ~n², overflowing
     past ~3e9 rows — the documented 100 TB shape); only the final
-    ratio divides doubles, released at ``dp`` with its Gini twin
+    ratio divides doubles, released at 6 dp with its Gini twin
     ``2·AUC - 1`` (derived from the ROUNDED AUC so both engines fold
     identically). Rows with a NULL score or label are excluded; a
     single-class corpus (P=0 or N=0) releases NULL AUC/Gini — the
@@ -1419,17 +1413,17 @@ def roc_auc(
            - p_.cast(d38) * (p_ + 1).cast(d38)).cast("double")
     auc = F.when(
         (p_ > 0) & (n_ > 0),
-        F.round(num / (2.0 * p_.cast("double") * n_.cast("double")), dp))
+        F.round(num / (2.0 * p_.cast("double") * n_.cast("double")),
+                RELEASE_DP))
     return tot.select(
         "n_pos", "n_neg", auc.alias("auc"),
-        F.round(2.0 * auc - 1.0, dp).alias("gini"))
+        F.round(2.0 * auc - 1.0, RELEASE_DP).alias("gini"))
 
 
 def probabilistic_scores(
     df: DataFrame,
     prob_col,
     label_col,
-    dp: int = 6,
     eps: float = 1e-15,
 ) -> DataFrame:
     """Brier score and log loss (cross-entropy) for a probabilistic
@@ -1448,7 +1442,7 @@ def probabilistic_scores(
     Determinism: each per-row term rounds to 9 dp and pools as
     decimal(38,9) (order-free exact sum — ln is the BLEU 9-dp
     transcendental ladder); the mean divides doubles, released at
-    ``dp``. Scale shape: ONE aggregation pass, map-side combinable.
+    6 dp. Scale shape: ONE aggregation pass, map-side combinable.
 
     Returns ONE row: ``(n, n_pos, brier, log_loss)``."""
     p0 = _col(prob_col).cast("double")
@@ -1477,9 +1471,9 @@ def probabilistic_scores(
     n = F.col("n")
     return tot.select(
         "n", "n_pos",
-        F.when(n > 0, F.round(F.col("__sb").cast("double") / n, dp))
+        F.when(n > 0, F.round(F.col("__sb").cast("double") / n, RELEASE_DP))
         .alias("brier"),
-        F.when(n > 0, F.round(F.col("__sl").cast("double") / n, dp))
+        F.when(n > 0, F.round(F.col("__sl").cast("double") / n, RELEASE_DP))
         .alias("log_loss"))
 
 
@@ -1597,7 +1591,6 @@ def cronbach_alpha(
     subject_col: str,
     item_col: str,
     value_col: str,
-    scale: int = 6,
 ) -> DataFrame:
     """Cronbach's alpha internal-consistency coefficient (Cronbach
     1951) — do the k items of a rating instrument measure one
@@ -1613,8 +1606,8 @@ def cronbach_alpha(
     subject holds every item exactly once — an incomplete design
     silently biases both variance pools, so fail loud.
 
-    All-integer algebra: values snap to decimal(20,scale) and scale
-    to exact integers u = v·10^scale; with population variances the
+    All-integer algebra: values snap to decimal(20,6) and scale
+    to exact integers u = v·10^6; with population variances the
     n² denominators cancel, so
 
         α = k/(k−1) · (1 − A/B),
@@ -1646,8 +1639,8 @@ def cronbach_alpha(
         raise ValueError("cronbach_alpha needs >= 2 items")
 
     d38 = "decimal(38,0)"
-    u = (F.col("__v").cast(f"decimal(20,{scale})")
-         * (10 ** scale)).cast(d38)
+    u = (F.col("__v").cast(f"decimal(20,{SNAP_SCALE})")
+         * (10 ** SNAP_SCALE)).cast(d38)
     scaled = base.select("__s", "__i", u.alias("__u"))
     per_item = scaled.groupBy("__i").agg(
         F.sum("__u").cast(d38).alias("__si"),
@@ -1678,7 +1671,6 @@ def icc_two_way(
     subject_col: str,
     item_col: str,
     value_col: str,
-    scale: int = 6,
 ) -> DataFrame:
     """Intraclass correlation ICC(2,1) (Shrout & Fleiss 1979; the
     two-way random-effects, single-rater, absolute-agreement form) —
@@ -1697,7 +1689,7 @@ def icc_two_way(
     probe on a pinned lineage).
 
     All sums of squares are EXACT: values scale to integers
-    u = v·10^scale (the never-square-a-decimal rule) and every SS
+    u = v·10^6 (the never-square-a-decimal rule) and every SS
     is a combination of decimal(38,0) integer sums — SS_rows =
     (n·ΣR_i² − T²)/(nk) etc. stay as exact integer NUMERATORS
     until the final mean-square ratios, whose common scaling
@@ -1722,8 +1714,8 @@ def icc_two_way(
         raise ValueError("icc_two_way needs >= 2 subjects and items")
 
     d38 = "decimal(38,0)"
-    u = (F.col("__v").cast(f"decimal(20,{scale})")
-         * (10 ** scale)).cast(d38)
+    u = (F.col("__v").cast(f"decimal(20,{SNAP_SCALE})")
+         * (10 ** SNAP_SCALE)).cast(d38)
     scaled = base.select("__s", "__i", u.alias("__u"))
     tot = scaled.agg(
         F.sum("__u").cast(d38).alias("__t"),
@@ -1847,7 +1839,6 @@ def concordance_ccc(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    scale: int = 6,
 ) -> DataFrame:
     """Lin's concordance correlation coefficient (Lin 1989) — the
     model-vs-gold CONTINUOUS agreement score: Pearson's r asks "do
@@ -1864,8 +1855,8 @@ def concordance_ccc(
         CCC = 2·(nΣxy − ΣxΣy) /
               (nΣx² − (Σx)² + nΣy² − (Σy)² + (Σx − Σy)²)
 
-    over values scaled to integers u = v·10^scale (the
-    never-square-a-decimal rule; the common 10^2·scale cancels),
+    over values scaled to integers u = v·10^6 (the
+    never-square-a-decimal rule; the common 10^12 cancels),
     pooled as decimal(38,0) — released as the raw double of the
     ratio (the cronbach convention). Pairwise-complete: a row with
     either side NULL (or NaN on double inputs) is excluded. NULL
@@ -1886,9 +1877,9 @@ def concordance_ccc(
                       (T.DoubleType, T.FloatType)):
             base = base.filter(~F.isnan(c))
     d38 = "decimal(38,0)"
-    dec = f"decimal(20,{scale})"
-    u = (F.col("__x").cast(dec) * (10 ** scale)).cast(d38)
-    v = (F.col("__y").cast(dec) * (10 ** scale)).cast(d38)
+    dec = f"decimal(20,{SNAP_SCALE})"
+    u = (F.col("__x").cast(dec) * (10 ** SNAP_SCALE)).cast(d38)
+    v = (F.col("__y").cast(dec) * (10 ** SNAP_SCALE)).cast(d38)
     sc = base.select(u.alias("__u"), v.alias("__v"))
     agg = sc.agg(
         F.count(F.lit(1)).cast(d38).alias("__n"),
@@ -1913,7 +1904,6 @@ def average_precision(
     df: DataFrame,
     score_col,
     label_col,
-    dp: int = 6,
 ) -> DataFrame:
     """Average precision — the area under the precision-recall curve
     in the step-interpolated form (the `scikit-learn`
@@ -1980,5 +1970,5 @@ def average_precision(
     return tot.select(
         "n_pos", "n_neg",
         F.when(F.col("n_pos") > 0, nano_release(
-            "__units div CAST(n_pos AS DECIMAL(38,0))", dp))
+            "__units div CAST(n_pos AS DECIMAL(38,0))"))
         .alias("ap"))

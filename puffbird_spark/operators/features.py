@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import RELEASE_DP
 from ..functions.hashing import md5_bucket, md5_sign
 
 __all__ = ["hashed_features", "woe_encoding"]
@@ -56,7 +57,6 @@ def woe_encoding(
     cat_col: str,
     label_col: str,
     alpha: float = 0.5,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Weight-of-evidence category encoding: ``ln(((pos_c + a) /
     (POS + 2a)) / ((neg_c + a) / (NEG + 2a)))`` per category, with
@@ -84,5 +84,5 @@ def woe_encoding(
         )
     )
     return j.select(
-        cat_col, "n", "n_pos", F.round(woe, round_dp).alias("woe")
+        cat_col, "n", "n_pos", F.round(woe, RELEASE_DP).alias("woe")
     )

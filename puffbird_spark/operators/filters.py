@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions import RELEASE_DP
+
 #: audit row name for documents that pass every rule
 KEPT = "__kept"
 
@@ -102,7 +104,6 @@ def gopher_rules(
     max_symbol_ratio: float = 0.1,
     min_stopwords: int = 2,
     max_top_bigram_char_frac: float = 0.2,
-    dp: int = 6,
 ) -> DataFrame:
     """The Gopher quality-rule battery (Rae et al. 2021, Table A1 —
     the pretraining filter set MassiveText/RefinedWeb/FineWeb all
@@ -143,9 +144,9 @@ def gopher_rules(
         F.col(id_col).alias("__id"),
         F.col(text_col).alias("__t"),
         nw.alias("n_words"),
-        F.round(mwl, dp).alias("mean_word_len"),
-        F.round(alpha, dp).alias("alpha_word_frac"),
-        F.round(symr, dp).alias("symbol_ratio"),
+        F.round(mwl, RELEASE_DP).alias("mean_word_len"),
+        F.round(alpha, RELEASE_DP).alias("alpha_word_frac"),
+        F.round(symr, RELEASE_DP).alias("symbol_ratio"),
         nstop.alias("n_stopwords"),
         chars.alias("__chars"),
     )
@@ -174,7 +175,7 @@ def gopher_rules(
             "__id",
             F.round(
                 (F.col("c") * (F.length("bg") - 1)).cast("double")
-                / F.col("__chars"), dp).alias("top_bigram_char_frac"))
+                / F.col("__chars"), RELEASE_DP).alias("top_bigram_char_frac"))
     )
     out = base.drop("__t", "__chars").join(top_bi, "__id", "left") \
         .withColumn("top_bigram_char_frac",

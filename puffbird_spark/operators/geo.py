@@ -28,6 +28,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import RELEASE_DP
+
 GEOHASH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 __all__ = ["geohash_encode", "haversine_km", "geo_knn_join",
@@ -178,7 +180,6 @@ def geo_radius_join(
     radius_km: float,
     key: str = "point_id",
     lat_max: float = 80.0,
-    dp: int = 4,
 ) -> DataFrame:
     """All unordered pairs of ``points`` within ``radius_km`` of each
     other — the LARGE-x-LARGE spatial join (the kNN join's broadcast
@@ -196,7 +197,7 @@ def geo_radius_join(
        key, so this is a plain hash join: no cross product, no
        nested-loop, ~9x amplification of one side, and skew follows
        spatial density (salt hot cells upstream if needed).
-    3. Exact haversine filter, rounded to ``dp`` BEFORE the compare so
+    3. Exact haversine filter, rounded to 4 dp BEFORE the compare so
        the predicate is engine-portable.
 
     Longitude cells live on a ring (``% n_lon``) so pairs straddling
@@ -248,7 +249,7 @@ def geo_radius_join(
     )
     d = F.round(
         haversine_km(F.col("__alat"), F.col("__alon"),
-                     F.col("__blat"), F.col("__blon")), dp
+                     F.col("__blat"), F.col("__blon")), 4
     )
     return (
         probe.join(
@@ -324,7 +325,6 @@ def trajectory_stats(
     lat_col: str,
     lon_col: str,
     order_tiebreak: str | None = None,
-    dp: int = 4,
 ) -> DataFrame:
     """Per-entity trajectory rollup over timestamped GPS points — the
     telemetry-curation primitive (drive logs, fleet traces, mobility
@@ -342,7 +342,7 @@ def trajectory_stats(
     LEG snaps to 4-dp decimal (0.1 m — the module's documented
     trig-rounding grain; finer grains hit cross-engine libm-ulp
     rounding boundaries measurably often) before the per-entity sum
-    (exact, order-independent); released kilometers round at ``dp``.
+    (exact, order-independent); released kilometers round at 4 dp.
     ``order_tiebreak`` (default: the entity's own point column order
     is undefined on ties — pass a unique column) joins ``ts_col`` in
     the window order so the leg sequence is a total order.
@@ -379,9 +379,9 @@ def trajectory_stats(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_points"),
             F.round(F.coalesce(
-                F.sum("__leg").cast("double"), F.lit(0.0)), dp)
+                F.sum("__leg").cast("double"), F.lit(0.0)), 4)
             .alias("total_km"),
-            F.round(F.max("__leg").cast("double"), dp)
+            F.round(F.max("__leg").cast("double"), 4)
             .alias("max_leg_km"),
             (F.unix_timestamp(F.max("__ts"))
              - F.unix_timestamp(F.min("__ts"))).cast("long")
@@ -396,7 +396,6 @@ def polygon_area_centroid(
     df: DataFrame,
     xs_col: str,
     ys_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Planar polygon area and centroid via the shoelace formula
     (Gauss) over parallel vertex-coordinate ARRAY columns — the
@@ -421,7 +420,7 @@ def polygon_area_centroid(
     shuffle, whole-stage codegen.
 
     Returns input columns plus ``(n_vertices, area, winding,
-    centroid_x, centroid_y)``, rounded at ``dp``."""
+    centroid_x, centroid_y)``, rounded at 6 dp."""
     xs, ys = F.col(xs_col), F.col(ys_col)
     n = F.size(xs)
     idx = F.sequence(F.lit(0), n - 1)
@@ -449,7 +448,7 @@ def polygon_area_centroid(
     return df.select(
         "*",
         n.cast("int").alias("n_vertices"),
-        F.when(n >= 3, F.round(F.abs(a2) / 2.0, dp)).alias("area"),
+        F.when(n >= 3, F.round(F.abs(a2) / 2.0, RELEASE_DP)).alias("area"),
         F.when(ok, F.signum(a2).cast("int")).alias("winding"),
-        F.when(ok, F.round(sx / (3.0 * a2), dp)).alias("centroid_x"),
-        F.when(ok, F.round(sy / (3.0 * a2), dp)).alias("centroid_y"))
+        F.when(ok, F.round(sx / (3.0 * a2), RELEASE_DP)).alias("centroid_x"),
+        F.when(ok, F.round(sy / (3.0 * a2), RELEASE_DP)).alias("centroid_y"))

@@ -30,6 +30,7 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import RELEASE_DP
 from ..plans import iterate
 
 
@@ -286,7 +287,6 @@ def canonical_by_priority(
     id_col: str = "doc_id",
     cluster_col: str = "cluster_id",
     priority_col: str = "priority",
-    dp: int = 6,
 ) -> DataFrame:
     """Re-elect each dedup cluster's canonical survivor by QUALITY
     instead of min-id (round 8): production dedup keeps the BEST
@@ -299,7 +299,7 @@ def canonical_by_priority(
     Cost: one keyed join (id) + one cluster-keyed argmax — both shuffle
     id/score pairs only. Returns ``(id_col, cluster_col, priority_col,
     is_canonical)``."""
-    p = F.round(F.col(priority_col).cast("double"), dp)
+    p = F.round(F.col(priority_col).cast("double"), RELEASE_DP)
     j = clusters.select(id_col, cluster_col).join(
         scores.select(id_col, p.alias("__p")), id_col)
     best = j.groupBy(cluster_col).agg(
@@ -324,7 +324,6 @@ def pagerank(
     dst: str = "dst",
     n_iter: int = 8,
     damping: float = 0.85,
-    dp: int = 9,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank (Brin & Page) over a directed edge list — the classic
@@ -344,7 +343,7 @@ def pagerank(
     Vertices are everything appearing as source OR target.
 
     Engine-portable float policy: each iteration's rank rounds at
-    ``dp`` (HALF_UP via ``F.round``), and every ORDER-FREE SUM — the
+    9 dp (HALF_UP via ``F.round``), and every ORDER-FREE SUM — the
     per-vertex inflow and the dangling total — adds 1e12-scaled LONG
     terms, not raw doubles (ADVICE r8 #4: a raw double sum is
     partial-aggregation-order dependent, the same hazard the
@@ -398,7 +397,7 @@ def pagerank(
                  / F.col("ns")).alias("tel"))
         )
     base = base.select(
-        "vertex", "outdeg", "tel", F.round("tel", dp).alias("rank")
+        "vertex", "outdeg", "tel", F.round("tel", 9).alias("rank")
     ).localCheckpoint(eager=True)
     # Order-free sums via 1e12-scaled LONG arithmetic (ADVICE r8 #4):
     # each term snaps to the nearest integer multiple of 1e-12 BEFORE the
@@ -437,7 +436,7 @@ def pagerank(
                     (1.0 - damping) * F.col("tel")
                     + damping * (F.coalesce("inflow", F.lit(0.0))
                                  + F.col("dangling") * F.col("tel")),
-                    dp).alias("rank"))
+                    9).alias("rank"))
         )
 
     return iterate(base, step, n_iter).select("vertex", "rank")
@@ -498,7 +497,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 4,
-    dp: int = 9,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     list — the complement to :func:`pagerank` when the question is
@@ -512,7 +510,7 @@ def hits(
         a(v) ← Σ_{u→v} h(u), then a ← a / Σa
         h(u) ← Σ_{u→v} a(v), then h ← h / Σh
 
-    Each normalized score rounds at ``dp`` (the engine-portable float
+    Each normalized score rounds at 9 dp (the engine-portable float
     policy — inflow addition order is unguaranteed everywhere, the
     :func:`pagerank` rule), so a SQL oracle unrolling the same rounds
     replays value-for-value. Returns ``(vertex, hub, authority)``.
@@ -528,8 +526,8 @@ def hits(
     scores = (
         verts.crossJoin(F.broadcast(n))
         .select("vertex",
-                F.round(F.lit(1.0) / F.col("n"), dp).alias("hub"),
-                F.round(F.lit(1.0) / F.col("n"), dp).alias("auth"))
+                F.round(F.lit(1.0) / F.col("n"), 9).alias("hub"),
+                F.round(F.lit(1.0) / F.col("n"), 9).alias("auth"))
         .localCheckpoint(eager=True)
     )
     dec0 = F.lit(0).cast("decimal(18,12)")
@@ -558,7 +556,7 @@ def hits(
                 "vertex", old,
                 F.round(
                     F.coalesce(F.col("__raw"), dec0).cast("double")
-                    / F.col("__tot").cast("double"), dp
+                    / F.col("__tot").cast("double"), 9
                 ).alias(new))
         )
 
@@ -596,7 +594,6 @@ def clustering_coefficient(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    dp: int = 6,
 ) -> DataFrame:
     """Local clustering coefficient — ``2·T(v) / (d(v)·(d(v)−1))``,
     the fraction of a vertex's neighbor pairs that are themselves
@@ -604,7 +601,7 @@ def clustering_coefficient(
     :func:`triangle_count`, and the standard link-farm/organic-
     neighborhood discriminator (farms interlink densely; organic
     hubs do not). Vertices with degree < 2 read 0 (no wedge to
-    close). Exact integer counts, one ``dp``-rounded division.
+    close). Exact integer counts, one 6-dp-rounded division.
     Returns ``(vertex, degree, n_triangles, coefficient)``."""
     return _triangles(_canonical_edges(edges, src, dst)).select(
         "vertex", "degree", "n_triangles",
@@ -612,7 +609,7 @@ def clustering_coefficient(
             F.col("degree") >= 2,
             F.round(
                 2.0 * F.col("n_triangles")
-                / (F.col("degree") * (F.col("degree") - 1)), dp))
+                / (F.col("degree") * (F.col("degree") - 1)), RELEASE_DP))
         .otherwise(F.lit(0.0)).alias("coefficient"))
 
 
@@ -757,7 +754,6 @@ def adamic_adar_links(
     dst: str = "dst",
     top: int = 20,
     max_center_degree: int | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar 2003) — score every
     NON-adjacent pair by its common neighbors, each weighted by how
@@ -800,7 +796,7 @@ def adamic_adar_links(
             und.select(F.col("a").alias("x"), F.col("b").alias("y")),
             ["x", "y"], "left_anti")
         .groupBy(F.col("x").alias("id_a"), F.col("y").alias("id_b"))
-        .agg(F.round(F.sum("__w").cast("double"), dp).alias("score"))
+        .agg(F.round(F.sum("__w").cast("double"), RELEASE_DP).alias("score"))
     )
     return pairs.orderBy(
         F.desc("score"), F.asc("id_a"), F.asc("id_b")).limit(top)
@@ -812,7 +808,6 @@ def jaccard_links(
     dst: str = "dst",
     top: int = 20,
     max_center_degree: int | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Jaccard-coefficient link prediction — score every NON-adjacent
     pair by neighborhood overlap::
@@ -869,7 +864,7 @@ def jaccard_links(
                 F.col("common_neighbors").cast("double")
                 / (F.col("__dx") + F.col("__dy")
                    - F.col("common_neighbors")),
-                dp).alias("score"),
+                RELEASE_DP).alias("score"),
         )
     )
     return scored.orderBy(
@@ -883,7 +878,6 @@ def modularity_communities(
     dst: str = "dst",
     vertex_col: str = "vertex",
     label_col: str = "label",
-    dp: int = 6,
 ) -> DataFrame:
     """Newman-Girvan modularity per community (Newman & Girvan 2004)
     — the quality score OF a partition (from
@@ -939,7 +933,7 @@ def modularity_communities(
             F.round(
                 (F.col("__mc2") * F.col("__t")
                  - F.col("__dc") * F.col("__dc")).cast("double")
-                / (F.col("__t") * F.col("__t")), dp)
+                / (F.col("__t") * F.col("__t")), RELEASE_DP)
             .alias("contribution"),
         )
         .orderBy("community")
@@ -1158,7 +1152,6 @@ def degree_assortativity(
     edges: DataFrame,
     src_col: str,
     dst_col: str,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of endpoint degrees across UNDIRECTED edges — positive
@@ -1202,6 +1195,6 @@ def degree_assortativity(
     den = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
     return s.select(
         (F.col("m2") / 2).cast("long").alias("n_edges"),
-        F.when(den > 0, F.round(num / den, round_dp))
+        F.when(den > 0, F.round(num / den, RELEASE_DP))
         .alias("assortativity"),
     )

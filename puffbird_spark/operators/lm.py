@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import RELEASE_DP
+
 
 def _bigrams(
     df: DataFrame, text_col: str, extra: list[str],
@@ -207,7 +209,6 @@ def zipf_fit(
     df: DataFrame,
     text_col: str = "text",
     top_n: int = 200,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Zipf's-law fit over the corpus token distribution (Zipf 1949):
     OLS of ``ln(count)`` on ``ln(rank)`` over the exact top-``top_n``
@@ -268,10 +269,10 @@ def zipf_fit(
     yvar_ok = F.col("ymin") != F.col("ymax")
     return s.select(
         F.col("n").alias("n_ranks"),
-        F.when(fit_ok, F.round(slope, round_dp)).alias("slope"),
+        F.when(fit_ok, F.round(slope, RELEASE_DP)).alias("slope"),
         F.when(
-            fit_ok, F.round((sy - slope * sx) / n, round_dp)
+            fit_ok, F.round((sy - slope * sx) / n, RELEASE_DP)
         ).alias("intercept"),
         F.when(
-            fit_ok & yvar_ok, F.round(r2, round_dp)).alias("r2"),
+            fit_ok & yvar_ok, F.round(r2, RELEASE_DP)).alias("r2"),
     )

@@ -51,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import RELEASE_DP
+
 #: metadata struct carried next to every media blob
 MEDIA_META = T.StructType([
     T.StructField("media_type", T.StringType()),     # image|audio|video
@@ -965,7 +967,6 @@ def audio_stats(
     content_col: str = "content",
     path_col: str = "path",
     window: int = 64,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-window audio feature extraction over WAV-standing binary
     columns — the audio twin of :func:`sample_frames`: one huge blob
@@ -975,12 +976,12 @@ def audio_stats(
     ``(path, sample_rate, n_channels, n_frames, duration_ms,
     window_idx, n_in_window, peak, rms)`` with ``peak = max(|s|)``
     (exact int over the mono fold) and ``rms = round(sqrt(sum(s^2)/n),
-    dp)`` — integer sums, so the value is engine-replayable (rounding
+    6)`` — integer sums, so the value is engine-replayable (rounding
     is the HALF_UP replay, the `vectors.cosine_rounded_arrow`
     convention, not Python's half-even ``round``)."""
     import math as _math
 
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def rows(blob: bytes):
         rate, n_ch, _bits, frames = decode_wav_pcm(blob)
@@ -1151,7 +1152,6 @@ def image_pixel_stats(
     df: DataFrame,
     content_col: str = "content",
     path_col: str = "path",
-    dp: int = 6,
 ) -> DataFrame:
     """PIXEL-LEVEL feature extraction over image blobs: full decode via
     :func:`decode_image_gray` (PNG / GIF / JPEG incl. color and
@@ -1160,10 +1160,10 @@ def image_pixel_stats(
     overexposure detection, brightness balance), where
     :func:`decode_features`'s byte histogram is the decode-free
     approximation. Integer pixel sums make the mean engine-replayable
-    (HALF_UP rounded at ``dp``)."""
+    (HALF_UP rounded at 6 dp)."""
     import math as _math
 
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def rows(blob: bytes):
         fmt, _, _ = parse_image_header(blob)
@@ -1642,14 +1642,13 @@ def video_scene_cuts(
     threshold: float = 40.0,
     content_col: str = "content",
     path_col: str = "path",
-    dp: int = 6,
 ) -> DataFrame:
     """Scene-change detection over video blobs — the segmentation step
     video curation runs before frame sampling (sample per SCENE, not
     per fixed stride, or a 10-minute static shot floods the batch):
     per consecutive frame pair, the exact integer sum of absolute luma
     differences (SAD), its per-pixel mean (MAD, exact int division
-    rounded at ``dp``), a cut flag at ``MAD >= threshold``, and the
+    rounded at 6 dp), a cut flag at ``MAD >= threshold``, and the
     running ``scene_id`` (cut count so far — frame 0 opens scene 0).
 
     Decodes through the REAL codecs (:func:`_video_frames`); everything
@@ -1660,7 +1659,7 @@ def video_scene_cuts(
 
     import numpy as np
 
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def rows(blob: bytes):
         prev = None
@@ -1925,7 +1924,6 @@ def audio_spectral_probe(
     content_col: str = "content",
     path_col: str = "path",
     window: int = 64,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-window EXACT-ARITHMETIC spectral probes over WAV-standing
     blobs — the frequency-domain companion of :func:`audio_stats`'s
@@ -1952,7 +1950,7 @@ def audio_spectral_probe(
                          f"got {window}")
     import math as _math
 
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def rows(blob: bytes):
         _rate, _n_ch, _bits, frames = decode_wav_pcm(blob)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import RELEASE_DP
+
 __all__ = [
     "k_anonymity_audit",
     "suppress_small_classes",
@@ -95,7 +97,6 @@ def dp_noisy_counts(
     group_cols: list[str],
     salt: str,
     epsilon: float = 1.0,
-    round_dp: int = 6,
     include_exact: bool = False,
 ) -> DataFrame:
     """Differentially-private group counts (Dwork 2006): count per
@@ -134,7 +135,7 @@ def dp_noisy_counts(
     agg = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("exact_count")
     )
-    noise = laplace_noise(key, scale=1.0 / float(epsilon), round_dp=round_dp)
+    noise = laplace_noise(key, scale=1.0 / float(epsilon))
     released = agg.select(
         *group_cols,
         "exact_count",
@@ -142,7 +143,7 @@ def dp_noisy_counts(
             F.greatest(
                 F.col("exact_count").cast("double") + noise, F.lit(0.0)
             ),
-            round_dp,
+            RELEASE_DP,
         ).alias("noisy_count"),
     )
     if include_exact:
@@ -157,7 +158,6 @@ def dp_noisy_mean(
     clamp: float,
     salt: str,
     epsilon: float = 1.0,
-    round_dp: int = 6,
     include_exact: bool = False,
 ) -> DataFrame:
     """Differentially-private group means via the clamp-and-noise
@@ -197,13 +197,11 @@ def dp_noisy_mean(
         *[F.col(c).cast("string") for c in group_cols])
     noisy_sum = (
         F.col("__sum").cast("double")
-        + laplace_noise(key_sum, scale=float(clamp) / eps_half,
-                        round_dp=round_dp)
+        + laplace_noise(key_sum, scale=float(clamp) / eps_half)
     )
     noisy_n = F.greatest(
         F.col("__n").cast("double")
-        + laplace_noise(key_cnt, scale=1.0 / eps_half,
-                        round_dp=round_dp),
+        + laplace_noise(key_cnt, scale=1.0 / eps_half),
         F.lit(1.0),
     )
     mean = F.least(
@@ -211,7 +209,7 @@ def dp_noisy_mean(
     released = agg.select(
         *group_cols,
         F.col("__n").alias("exact_n"),
-        F.round(mean, round_dp).alias("noisy_mean"),
+        F.round(mean, RELEASE_DP).alias("noisy_mean"),
     )
     if include_exact:
         return released
@@ -227,7 +225,6 @@ def dp_quantiles(
     lo: float = 0.0,
     hi: float = 1.0,
     n_bins: int = 256,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Differentially-private quantiles via the EXPONENTIAL MECHANISM
     over a fixed candidate grid (McSherry & Talwar 2007; Smith 2011
@@ -322,7 +319,7 @@ def dp_quantiles(
             F.round(
                 F.lit(lo_f) + F.col("__j").cast("double")
                 * (F.lit(hi_f) - F.lit(lo_f)) / F.lit(float(nb)),
-                round_dp).alias("value"))
+                RELEASE_DP).alias("value"))
     )
 
 
@@ -424,7 +421,6 @@ def entropy_l_diversity_audit(
     quasi_cols: list[str],
     sensitive_col: str,
     ell: float = 2.0,
-    dp: int = 6,
 ) -> DataFrame:
     """Entropy l-diversity audit (Machanavajjhala et al. 2007 §3) —
     the strengthening of DISTINCT l-diversity already flagged by
@@ -480,10 +476,10 @@ def entropy_l_diversity_audit(
     agg = agg.withColumn(
         "__h", F.greatest(hn, F.lit(0).cast(d38)))
     ln_ell_nano = math.floor(math.log(float(ell)) * 1e9)
-    ent = nano_release("__h", dp)
+    ent = nano_release("__h")
     return agg.select(
         *quasi_cols, "class_size", "l_distinct",
         ent.alias("entropy"),
-        F.round(F.exp(ent), dp).alias("entropy_l"),
+        F.round(F.exp(ent), RELEASE_DP).alias("entropy_l"),
         (F.col("__h") < F.lit(ln_ell_nano).cast(d38))
         .alias("l_violation"))

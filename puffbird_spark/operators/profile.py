@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import RELEASE_DP, SNAP_SCALE
+
 
 def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Per-column profile of ``df``: one row per column with
@@ -191,21 +193,19 @@ def equi_depth_histogram(
 def correlation_matrix(
     df: DataFrame,
     cols: list[str],
-    scale: int = 2,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Pairwise Pearson correlations over ``cols`` in ONE aggregation
     pass — the profiling matrix that feeds feature selection and
     redundancy pruning (C(k,2) correlations without C(k,2) scans):
     every sum/sum-of-squares/cross-product accumulates as an exact
-    decimal of the inputs' ``scale`` (order-free), the correlation is
+    decimal(18,2) — the inputs' two decimals (order-free), the correlation is
     one closed-form double expression per pair, rounded at
-    ``round_dp``. Rows with a NULL in ANY of ``cols`` are excluded
+    6 dp. Rows with a NULL in ANY of ``cols`` are excluded
     (complete-case, the convention dropna-matrix profilers use) so
     every pair shares one n. Returns (col_a, col_b, n, corr)."""
     if len(cols) < 2:
         raise ValueError("need at least two columns")
-    t = f"decimal(18,{scale})"
+    t = "decimal(18,2)"
     complete = df
     for c in cols:
         complete = complete.filter(F.col(c).isNotNull())
@@ -235,7 +235,7 @@ def correlation_matrix(
                 F.lit(cols[i]).alias("col_a"),
                 F.lit(cols[j]).alias("col_b"),
                 F.col("__n").alias("n"),
-                F.when(den > 0, F.round(num / den, round_dp))
+                F.when(den > 0, F.round(num / den, RELEASE_DP))
                 .alias("corr"),
             ))
     return tot.select(
@@ -246,7 +246,6 @@ def spearman_corr(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Spearman rank correlation (Spearman 1904), tie-aware — Pearson
     over MIDRANKS, the monotone-association profiler that, unlike
@@ -261,7 +260,7 @@ def spearman_corr(
     ρ). The six pooled sums are EXACT decimal(38,0) (each ≤ 4n³ — safe
     past 1e11 rows); they combine in one closed-form double expression
     (IEEE-identical on identical sums across engines), rounded at
-    ``dp``. Complete-case: rows with a NULL (or NaN) in either
+    6 dp. Complete-case: rows with a NULL (or NaN) in either
     column are excluded. A constant column has zero rank variance and releases
     NULL (undefined, not 0).
 
@@ -316,14 +315,12 @@ def spearman_corr(
         (n * F.col("__suu").cast("double") - su * su)
         * (n * F.col("__svv").cast("double") - sv * sv))
     return tot.select(
-        "n", F.when(den > 0, F.round(num / den, dp)).alias("rho"))
+        "n", F.when(den > 0, F.round(num / den, RELEASE_DP)).alias("rho"))
 
 
 def gini_coefficient(
     df: DataFrame,
     value_col: str,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Gini coefficient (Gini 1912) of a non-negative value column —
     the inequality/concentration diagnostic for dataset curation
@@ -338,7 +335,7 @@ def gini_coefficient(
     rows strictly below contributes ``x·c·(2bb + c − n)`` exactly —
     one value-keyed count agg, one cumulative window over the
     distinct frame, one fold. All pools are exact decimals (values
-    snap to decimal(20,scale); a decimal NaN maps to NULL, excluding
+    snap to decimal(20,6); a decimal NaN maps to NULL, excluding
     NaN with the NULLs).
 
     Contract: NEGATIVE values make the coefficient meaningless (the
@@ -349,7 +346,7 @@ def gini_coefficient(
     Returns ONE row: ``(n, total, mean, min_value, gini)``."""
     from pyspark.sql.window import Window
 
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     base = df.select(
         F.col(value_col).cast(decv).alias("__v")
     ).filter(F.col("__v").isNotNull())
@@ -357,7 +354,7 @@ def gini_coefficient(
         F.count(F.lit(1)).cast("long").alias("__c"))
     w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.partitionBy()
-    d38s = f"decimal(38,{scale})"
+    d38s = f"decimal(38,{SNAP_SCALE})"
     per = vc.select(
         "__v", "__c",
         F.coalesce(F.sum("__c").over(w), F.lit(0)).alias("__bb"),
@@ -375,10 +372,10 @@ def gini_coefficient(
     g = F.col("__num").cast("double") / (nd * tot)
     return folded.filter(F.col("n") > 0).select(
         "n",
-        F.round(tot, dp).alias("total"),
-        F.round(tot / nd, dp).alias("mean"),
+        F.round(tot, RELEASE_DP).alias("total"),
+        F.round(tot / nd, RELEASE_DP).alias("mean"),
         F.col("__min").cast("double").alias("min_value"),
-        F.when((F.col("__min") >= 0) & (tot > 0), F.round(g, dp))
+        F.when((F.col("__min") >= 0) & (tot > 0), F.round(g, RELEASE_DP))
         .alias("gini"))
 
 
@@ -457,7 +454,6 @@ def kendall_tau_b(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Kendall's tau-b (Kendall 1945), tie-corrected — the OTHER
     standard rank correlation beside :func:`spearman_corr`: the
@@ -493,7 +489,7 @@ def kendall_tau_b(
 
     Determinism: every count is exact decimal(38,0) (n0 ~ n² — LONG
     overflows past ~4e9 rows, the r12 overflow-audit rule); the
-    closed form combines identical doubles, rounded at ``dp``.
+    closed form combines identical doubles, rounded at 6 dp.
 
     Returns ONE row: ``(n, concordant, discordant, tau_b)``. The
     released pair COUNTS are LONG for ergonomics (NULL past ~9e18
@@ -510,14 +506,13 @@ def kendall_tau_b(
         nn.cast("long").alias("n"),
         F.col("__cc").cast("long").alias("concordant"),
         F.col("__dd").cast("long").alias("discordant"),
-        F.when(den > 0, F.round(num / den, dp)).alias("tau_b"))
+        F.when(den > 0, F.round(num / den, RELEASE_DP)).alias("tau_b"))
 
 
 def ordinal_association(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """The ordinal-association battery beside :func:`kendall_tau_b` —
     the three classical pair-concordance measures a contingency-table
@@ -547,7 +542,7 @@ def ordinal_association(
 
     Determinism: every pool is exact decimal(38,0) (the overflow-
     audit rule — n² past LONG at ~4e9 rows); each release combines
-    the exact pools in ONE double division, rounded at ``dp``.
+    the exact pools in ONE double division, rounded at 6 dp.
 
     Returns ONE row: ``(n, n_x_levels, n_y_levels, concordant,
     discordant, gamma, somers_d_yx, somers_d_xy, tau_c)``."""
@@ -567,20 +562,19 @@ def ordinal_association(
         F.col("__nc").cast("long").alias("n_y_levels"),
         cc.cast("long").alias("concordant"),
         dd.cast("long").alias("discordant"),
-        F.when(gden > 0, F.round(num / gden, dp)).alias("gamma"),
+        F.when(gden > 0, F.round(num / gden, RELEASE_DP)).alias("gamma"),
         F.when(dyx_den > 0,
-               F.round(num / dyx_den, dp)).alias("somers_d_yx"),
+               F.round(num / dyx_den, RELEASE_DP)).alias("somers_d_yx"),
         F.when(dxy_den > 0,
-               F.round(num / dxy_den, dp)).alias("somers_d_xy"),
+               F.round(num / dxy_den, RELEASE_DP)).alias("somers_d_xy"),
         F.when(tc_den > 0,
-               F.round(2 * m * num / tc_den, dp)).alias("tau_c"))
+               F.round(2 * m * num / tc_den, RELEASE_DP)).alias("tau_c"))
 
 
 def zipf_fit(
     df: DataFrame,
     text_col: str,
     top_n: int = 1000,
-    dp: int = 6,
 ) -> DataFrame:
     """Zipf rank-frequency fit over a corpus vocabulary — the
     log-log OLS line through the top-``top_n`` token frequencies,
@@ -596,7 +590,7 @@ def zipf_fit(
     (transcendental ladder); cross-terms are 9-dp-snapped DOUBLE
     products pooled as decimal(38,9) exact sums; the closed-form
     slope/intercept/corr combine those sums in doubles, released at
-    ``dp``. A degenerate fit (fewer than 2 distinct ranks, or zero x
+    6 dp. A degenerate fit (fewer than 2 distinct ranks, or zero x
     variance) reads NULL.
 
     Scale shape: one explode + one token-count aggregation (corpus-
@@ -636,11 +630,11 @@ def zipf_fit(
     dxy = n * F.col("__sxy").cast("double") - sx * sy
     dxx = n * F.col("__sxx").cast("double") - sx * sx
     dyy = n * F.col("__syy").cast("double") - sy * sy
-    slope = F.when(dxx > 0, F.round(dxy / dxx, dp))
+    slope = F.when(dxx > 0, F.round(dxy / dxx, RELEASE_DP))
     intercept = F.when(
-        dxx > 0, F.round((sy - (dxy / dxx) * sx) / n, dp))
+        dxx > 0, F.round((sy - (dxy / dxx) * sx) / n, RELEASE_DP))
     corr = F.when(
-        (dxx > 0) & (dyy > 0), F.round(dxy / F.sqrt(dxx * dyy), dp))
+        (dxx > 0) & (dyy > 0), F.round(dxy / F.sqrt(dxx * dyy), RELEASE_DP))
     return tot.select(
         "n_vocab", "n_fit", slope.alias("slope"),
         intercept.alias("intercept"), corr.alias("corr"))
@@ -658,7 +652,6 @@ BENFORD_P = [
 def benford_first_digit(
     df: DataFrame,
     value_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Benford's-law first-significant-digit conformity test (Newcomb
     1881, Benford 1938; Nigrini 2012 forensic practice) — the
@@ -686,7 +679,7 @@ def benford_first_digit(
     the nano-unit ladder (floor(t·1e9) longs — the
     anderson_darling_two_sample lesson: round(double, 9) straddles
     half boundaries differently per engine, IEEE product + floor
-    never does), released pure-integer HALF_UP at ``dp``.
+    never does), released pure-integer HALF_UP at 6 dp.
 
     Scale shape: one scan + one 9-group aggregation + a 9-row
     literal join — nothing bigger than the digit grid ever
@@ -734,9 +727,9 @@ def benford_first_digit(
 
     return ranked.groupBy().agg(
         F.max("__n").alias("n"),
-        nano_release("sum(__cu)", dp).alias("chi2"),
-        nano_release("sum(__du) div 9", dp).alias("mad"),
+        nano_release("sum(__cu)").alias("chi2"),
+        nano_release("sum(__du) div 9").alias("mad"),
         F.max(F.when(F.col("__rk") == 1, F.col("__d"))).alias(
             "worst_digit"),
-        nano_release("max(case when __rk = 1 then __du end)", dp)
+        nano_release("max(case when __rk = 1 then __du end)")
         .alias("worst_dev"))

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import text as TXT
+from ..functions import RELEASE_DP, text as TXT
 
 
 def bm25_topk(
@@ -37,7 +37,6 @@ def bm25_topk(
     k: int = 5,
     k1: float = 1.2,
     b: float = 0.75,
-    dp: int = 6,
     drop_empty: bool = False,
 ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25.
@@ -45,7 +44,7 @@ def bm25_topk(
     ``score(q, D) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·|D|/avgdl))``
     with the Lucene always-positive ``idf(t) = ln(1 + (N-df+0.5)/(df+0.5))``.
 
-    Per-term contributions round at ``dp`` BEFORE the per-document sum
+    Per-term contributions round at 6 dp BEFORE the per-document sum
     and the sum rounds again — the engine-portable float policy
     (queries/base.py): rounded inputs keep the final sum far from
     half-ulp boundaries, so the score replays bit-for-bit across
@@ -105,11 +104,11 @@ def bm25_topk(
     tf = F.col("tf").cast("double")
     contrib = F.round(
         idf * tf * (1.0 + k1)
-        / (tf + k1 * (1.0 - b + b * F.col("dl") / avgdl)), dp)
+        / (tf + k1 * (1.0 - b + b * F.col("dl") / avgdl)), RELEASE_DP)
     scored = (
         hits.select(qid_col, id_col, contrib.alias("contrib"))
         .groupBy(qid_col, id_col)
-        .agg(F.round(F.sum("contrib"), dp).alias("score"))
+        .agg(F.round(F.sum("contrib"), RELEASE_DP).alias("score"))
     )
     w = Window.partitionBy(qid_col).orderBy(
         F.desc("score"), F.asc(id_col))
@@ -127,7 +126,6 @@ def rrf_fuse(
     rank_col: str = "rank",
     k: int = 60,
     top: int = 5,
-    dp: int = 6,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR
     2009) — the standard hybrid-retrieval combiner: given several
@@ -140,7 +138,7 @@ def rrf_fuse(
     results. RRF needs no score calibration across systems — ranks
     only — which is why it is the default fusion everywhere.
 
-    Engine-portable float policy: each reciprocal rounds at ``dp``
+    Engine-portable float policy: each reciprocal rounds at 6 dp
     and the sum rounds again (the BM25 two-stage convention), so SQL
     oracles replay the fusion regardless of addition order. Ties
     break on ascending id. Scale shape: one union of rank tables
@@ -155,7 +153,8 @@ def rrf_fuse(
     parts = [
         r.select(
             F.col(qid_col), F.col(id_col),
-            F.round(1.0 / (F.lit(k) + F.col(rank_col)), dp).alias("__c"))
+            F.round(1.0 / (F.lit(k) + F.col(rank_col)), RELEASE_DP)
+            .alias("__c"))
         for r in rankings
     ]
     u = parts[0]
@@ -163,7 +162,7 @@ def rrf_fuse(
         u = u.unionByName(p)
     fused = (
         u.groupBy(qid_col, id_col)
-        .agg(F.round(F.sum("__c"), dp).alias("rrf_score"),
+        .agg(F.round(F.sum("__c"), RELEASE_DP).alias("rrf_score"),
              F.count(F.lit(1)).cast("int").alias("n_systems"))
     )
     w = Window.partitionBy(qid_col).orderBy(
@@ -181,7 +180,6 @@ def rake_keywords(
     stopwords: list[str],
     top: int = 20,
     min_occurrences: int = 1,
-    dp: int = 6,
 ) -> DataFrame:
     """RAKE keyword extraction (Rose, Engel, Cramer & Cowley 2010) —
     corpus-level: candidate phrases are maximal runs of non-stopword
@@ -243,7 +241,7 @@ def rake_keywords(
         .join(scores, "__w")
         .groupBy("phrase")
         .agg(F.max("n_words").alias("n_words"),
-             F.round(F.sum("__ws").cast("double"), dp).alias("score"))
+             F.round(F.sum("__ws").cast("double"), RELEASE_DP).alias("score"))
     )
     occ = phrases.groupBy("phrase").agg(
         F.count(F.lit(1)).cast("long").alias("n_occurrences"))
@@ -265,7 +263,6 @@ def bm25f_topk(
     qtext_col: str = "query_text",
     k: int = 5,
     k1: float = 1.2,
-    dp: int = 6,
     drop_empty: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents per query under BM25F (Zaragoza, Craswell,
@@ -284,7 +281,7 @@ def bm25f_topk(
     frequency (a term occurs in a document if it occurs in any field).
 
     Determinism: ``tf~`` rounds to 9-dp decimal before per-(doc, term)
-    summation across fields, per-term contributions round at ``dp``
+    summation across fields, per-term contributions round at 6 dp
     before the per-doc sum, the sum rounds again — the engine-portable
     float policy. Ties break on ascending doc id.
 
@@ -369,11 +366,11 @@ def bm25f_topk(
         + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5)))
     tff = F.col("__tf").cast("double")
-    contrib = F.round(idf * tff / (F.lit(float(k1)) + tff), dp)
+    contrib = F.round(idf * tff / (F.lit(float(k1)) + tff), RELEASE_DP)
     scored = (
         hits.select(qid_col, id_col, contrib.alias("contrib"))
         .groupBy(qid_col, id_col)
-        .agg(F.round(F.sum("contrib"), dp).alias("score"))
+        .agg(F.round(F.sum("contrib"), RELEASE_DP).alias("score"))
     )
     w_rank = Window.partitionBy(qid_col).orderBy(
         F.desc("score"), F.asc(id_col))
@@ -393,7 +390,6 @@ def fused_topk(
     dense_score: str = "cosine",
     sparse_score: str = "score",
     top: int = 5,
-    dp: int = 6,
 ) -> DataFrame:
     """Convex score fusion of a dense (vector) and a sparse (BM25)
     candidate list — the normalized-score hybrid that outranks RRF when
@@ -406,7 +402,7 @@ def fused_topk(
 
     over the UNION of candidates (missing from one system = 0 on that
     side). Per-query min/max ride windows over the bounded candidate
-    lists — nothing corpus-sized. Normalized parts round at ``dp``
+    lists — nothing corpus-sized. Normalized parts round at 6 dp
     before combining (engine-portable), ties break on ascending doc
     id. Returns ``(query_id, rank, doc_id, fused_score)``."""
     if not (0.0 <= alpha <= 1.0):
@@ -419,14 +415,14 @@ def fused_topk(
         nrm = F.when(
             mx > mn, (s - mn) / (mx - mn)).otherwise(F.lit(0.0))
         return df_.select(
-            qid_col, id_col, F.round(nrm, dp).alias(out))
+            qid_col, id_col, F.round(nrm, RELEASE_DP).alias(out))
     d = norm(dense, dense_score, "__dn")
     s = norm(sparse, sparse_score, "__sn")
     both = d.join(s, [qid_col, id_col], "full_outer")
     fused = F.round(
         F.lit(float(alpha)) * F.coalesce("__dn", F.lit(0.0))
         + F.lit(1.0 - float(alpha)) * F.coalesce("__sn", F.lit(0.0)),
-        dp)
+        RELEASE_DP)
     w_rank = Window.partitionBy(qid_col).orderBy(
         F.desc("fused_score"), F.asc(id_col))
     return (

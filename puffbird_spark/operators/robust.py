@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import RELEASE_DP
+
 #: scale factor making MAD a consistent sigma estimator under normality
 MAD_SIGMA = 1.4826
 
@@ -26,7 +28,6 @@ def robust_stats(
     key_cols: list[str],
     value_col: str,
     z: float = 3.0,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-key ``(n, median, mad, n_outliers, frac_outliers)`` where an
     outlier is ``|x - median| > z * 1.4826 * mad`` (the robust z-score
@@ -58,8 +59,8 @@ def robust_stats(
         .groupBy(*key_cols)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.max("__med"), dp).alias("median"),
-            F.round(F.max("__mad"), dp).alias("mad"),
+            F.round(F.max("__med"), RELEASE_DP).alias("median"),
+            F.round(F.max("__mad"), RELEASE_DP).alias("mad"),
             F.sum(
                 (F.abs(F.col("__v") - F.col("__med")) > band).cast("long")
             ).cast("long").alias("n_outliers"),
@@ -67,7 +68,7 @@ def robust_stats(
     )
     return out.withColumn(
         "frac_outliers",
-        F.round(F.col("n_outliers") / F.col("n"), dp))
+        F.round(F.col("n_outliers") / F.col("n"), RELEASE_DP))
 
 
 def quantile_normalize(
@@ -75,7 +76,6 @@ def quantile_normalize(
     group_cols: list[str],
     value_col: str,
     grid_points: int = 21,
-    dp: int = 6,
 ) -> DataFrame:
     """Map each group's value distribution onto the GLOBAL one — the
     cross-domain score alignment step before any global threshold: a
@@ -125,9 +125,9 @@ def quantile_normalize(
     lo = F.element_at(grid, cell + 1)
     hi = F.element_at(grid, cell + 2)
     return (
-        base.withColumn("pct_in_group", F.round(p, dp))
+        base.withColumn("pct_in_group", F.round(p, RELEASE_DP))
         .withColumn(
-            "value_normalized", F.round(lo + (hi - lo) * frac, dp))
+            "value_normalized", F.round(lo + (hi - lo) * frac, RELEASE_DP))
     )
 
 

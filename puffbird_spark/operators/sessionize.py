@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import RELEASE_DP
+
 
 def sessionize(
     df: DataFrame,
@@ -169,7 +171,6 @@ def cohort_retention(
     ts_col: str = "ts",
     anchor_date: str = "2024-01-01",
     bucket_days: int = 7,
-    dp: int = 6,
 ) -> DataFrame:
     """Cohort retention matrix — the classic product-analytics
     complement to :func:`funnel_conversion`: users cohort by their
@@ -186,7 +187,7 @@ def cohort_retention(
     AQE-friendly), then a cohort-keyed count. No self-join over
     events, nothing quadratic in users. Returns
     ``(cohort_bucket, age_buckets, n_cohort, n_active, retention_rate)``
-    with the rate an exact-integer division rounded at ``dp``."""
+    with the rate an exact-integer division rounded at 6 dp."""
     if bucket_days <= 0:
         raise ValueError("bucket_days must be positive")
     bucket = (
@@ -216,7 +217,8 @@ def cohort_retention(
             F.col("n_cohort").cast("long").alias("n_cohort"),
             F.col("n_active").cast("long").alias("n_active"),
             F.round(
-                F.col("n_active").cast("double") / F.col("n_cohort"), dp
+                F.col("n_active").cast("double") / F.col("n_cohort"),
+                RELEASE_DP,
             ).alias("retention_rate"),
         )
     )
@@ -230,7 +232,6 @@ def attribution_credit(
     ts_col: str = "ts",
     type_col: str = "event_type",
     model: str = "linear",
-    dp: int = 6,
 ) -> DataFrame:
     """Multi-touch attribution — split each conversion's credit over
     the touchpoints that preceded it (since the user's previous
@@ -248,8 +249,8 @@ def attribution_credit(
     (unattributable — callers count them via the conversion total).
     Returns per ``(channel := touch event_type)``:
     ``(channel, n_conversions_touched, credit)`` with credit the
-    ``dp``-rounded sum of per-touch shares (each share rounds at
-    ``dp`` first — order-independent sums, the float policy).
+    6-dp-rounded sum of per-touch shares (each share rounds at
+    6 dp first — order-independent sums, the float policy).
 
     Scale shape: ONE window over (user, ts) assigns each touch to the
     NEXT conversion (running conversion counter walked backwards), a
@@ -309,11 +310,11 @@ def attribution_credit(
         touches.select(
             F.col("__t").alias("channel"),
             F.struct("__u", "__conv").alias("__cid"),
-            F.round(share, dp).alias("__s"))
+            F.round(share, RELEASE_DP).alias("__s"))
         .groupBy("channel")
         .agg(
             F.countDistinct("__cid").cast("long")
             .alias("n_conversions_touched"),
-            F.round(F.sum("__s"), dp).alias("credit"),
+            F.round(F.sum("__s"), RELEASE_DP).alias("credit"),
         )
     )

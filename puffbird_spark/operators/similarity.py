@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import telemetry
+from ..functions import RELEASE_DP
 from ..functions.vectors import (  # noqa: F401
     as_double,
     cosine_rounded,
@@ -1013,7 +1014,6 @@ def mmr_rerank(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.7,
-    dp: int = 6,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998) — the retrieval-diversification step after any ANN stage:
@@ -1027,7 +1027,7 @@ def mmr_rerank(
     ``(query_id, rank, cand_id, mmr_score)``.
 
     Determinism: relevance and candidate-candidate similarities both
-    snap to ``dp`` before the greedy loop, the step score is the one
+    snap to 6 dp before the greedy loop, the step score is the one
     fixed expression ``λ·rel − (1−λ)·ms`` on those snapped doubles,
     and ties break on ascending candidate id — so the whole greedy
     trajectory replays exactly (the oracle unrolls it step by step in
@@ -1045,7 +1045,7 @@ def mmr_rerank(
     grp = rel.join(cvecs, "cand_id")
     one_minus = 1.0 - lam
 
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def _hu(x):
         # HALF_UP replay of SQL round() — numpy/python round is
@@ -1096,7 +1096,6 @@ def count_profile_topk_pairs(
     type_col: str,
     k: int = 3,
     block_rows: int = 4096,
-    dp: int = 6,
     max_types: int = 4096,
 ) -> DataFrame:
     """Top-k most-similar HIGHER-ID partners per entity by cosine over
@@ -1125,7 +1124,7 @@ def count_profile_topk_pairs(
     NORM (they are real events in the profile) but never to a dot
     product (NULL joins nothing) — kept as a separate norm-only
     component so an SQL oracle replays exactly. Integer dots are exact
-    in float64; rounding replays Spark's HALF_UP at ``dp``.
+    in float64; rounding replays Spark's HALF_UP at 6 dp.
 
     Returns ``(id_a, id_b, cosine)``, the exact result of the join
     formulation (differential-tested against it)."""
@@ -1174,7 +1173,7 @@ def count_profile_topk_pairs(
         "bi", "bj", "__role", "__id", "__v", "__nulln")
     id_type = dict(prof.dtypes)["__id"]
     kk = int(k)
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def _block_kernel(key, pdf):
         import numpy as np
@@ -1269,7 +1268,6 @@ def profile_topk_pairs_sparse(
     id_col: str,
     type_col: str,
     k: int = 3,
-    dp: int = 6,
     max_df: int | None = None,
 ) -> DataFrame:
     """The WIDE-VOCABULARY twin of :func:`count_profile_topk_pairs` —
@@ -1301,7 +1299,7 @@ def profile_topk_pairs_sparse(
 
     Exactness: dots are sums of long products (order-free exact
     integer arithmetic), the cosine divides once in float64 and rounds
-    HALF_UP at ``dp`` — bit-identical to the dense kernel's replay.
+    HALF_UP at 6 dp — bit-identical to the dense kernel's replay.
     Scale bound (r12 overflow audit): a single long product caps at
     ~3e9 events for ONE (entity, type) cell — beyond that the pair
     join needs a decimal variant (deliberately not paid here: decimal
@@ -1359,7 +1357,7 @@ def profile_topk_pairs_sparse(
     # exact binary expansion, which on rare values disagrees with the
     # float-multiply replay at the .5 boundary and would flip a 6-dp
     # tie-break between the twins; bit-identical twins is the contract
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
     cos_raw = F.col("__dot").cast("double") / (F.col("__ra") * F.col("__rb"))
     cos_rep = F.floor(cos_raw * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
     return (
@@ -1377,7 +1375,6 @@ def cosine_pairs_exact(
     threshold: float = 0.45,
     dim: int | None = None,
     block_rows: int = 4096,
-    dp: int = 6,
 ) -> DataFrame:
     """EXACT all-pairs cosine join: every (id_a < id_b) pair whose 6-dp
     HALF_UP-rounded cosine reaches ``threshold`` — the verifier kernel
@@ -1392,7 +1389,7 @@ def cosine_pairs_exact(
     pairs materialized only ABOVE the threshold (output-sized). The
     round-9 sf1 rehearsal measured the HOF fold at ~40µs/pair grinding
     2×10⁸ pairs; the blocked kernel does the same exact arithmetic at
-    matmul speed (both kernels replay HALF_UP at ``dp`` —
+    matmul speed (both kernels replay HALF_UP at 6 dp —
     differential-pinned equal)."""
     import math
 
@@ -1411,7 +1408,7 @@ def cosine_pairs_exact(
                 F.col("a.__id").alias("id_a"),
                 F.col("b.__id").alias("id_b"),
                 cosine_rounded(
-                    F.col("a.__v"), F.col("b.__v"), dp=dp).alias("cosine"),
+                    F.col("a.__v"), F.col("b.__v")).alias("cosine"),
             )
             .filter(F.col("cosine") >= thr)
         )
@@ -1431,7 +1428,7 @@ def cosine_pairs_exact(
     both = a_side.unionByName(b_side).select(
         "bi", "bj", "__role", "__id", "__v")
     id_type = dict(e.dtypes)["__id"]
-    scale = float(10 ** dp)
+    scale = float(10 ** RELEASE_DP)
 
     def _block_kernel(key, pdf):
         import numpy as np

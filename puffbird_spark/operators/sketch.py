@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import RELEASE_DP
+
 
 def _bucket(col: Column, row: int, width: int, seed: int) -> Column:
     return F.pmod(F.xxhash64(col, F.lit(seed + row)), F.lit(width))
@@ -595,13 +597,12 @@ def theta_estimate(
     sketch: DataFrame,
     group_cols: Sequence[str] = (),
     est_col: str = "distinct_est",
-    round_dp: int = 6,
 ) -> DataFrame:
     """``|retained| / θ`` per group, 6-dp DOUBLE."""
     gcols = list(group_cols)
     return sketch.groupBy(*gcols).agg(
         F.round(
-            F.count(F.lit(1)).cast("double") / F.min("__theta"), round_dp
+            F.count(F.lit(1)).cast("double") / F.min("__theta"), RELEASE_DP
         ).alias(est_col))
 
 
@@ -609,7 +610,6 @@ def theta_intersect_estimate(
     a: DataFrame, b: DataFrame,
     group_cols: Sequence[str] = (),
     est_col: str = "intersect_est",
-    round_dp: int = 6,
 ) -> DataFrame:
     """``|A ∩ B|`` estimate: keys retained on BOTH sides below
     ``θ = min(θ_a, θ_b)``, divided by θ. The error is governed by the
@@ -632,14 +632,13 @@ def theta_intersect_estimate(
         *gcols,
         F.round(
             F.coalesce(F.col("__c"), F.lit(0)).cast("double")
-            / F.col("__tmin"), round_dp).alias(est_col))
+            / F.col("__tmin"), RELEASE_DP).alias(est_col))
 
 
 def theta_difference_estimate(
     a: DataFrame, b: DataFrame,
     group_cols: Sequence[str] = (),
     est_col: str = "difference_est",
-    round_dp: int = 6,
 ) -> DataFrame:
     """``|A \\ B|`` estimate: A's retained keys below
     ``θ = min(θ_a, θ_b)`` that B's retained set does NOT contain,
@@ -659,7 +658,7 @@ def theta_difference_estimate(
         *gcols,
         F.round(
             F.coalesce(F.col("__c"), F.lit(0)).cast("double")
-            / F.col("__tmin"), round_dp).alias(est_col))
+            / F.col("__tmin"), RELEASE_DP).alias(est_col))
 
 
 # --------------------------------------------------------------------- #

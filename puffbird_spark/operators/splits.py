@@ -53,6 +53,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import RELEASE_DP
+
 #: hex digits of md5 prefix used for the uniform draw; 16 nibbles = 64 bits
 _PREFIX_LEN = 16
 
@@ -575,7 +577,6 @@ def temperature_allocation(
     domain: str,
     total: int,
     temperature: float = 1.0,
-    dp: int = 9,
 ) -> DataFrame:
     """Temperature-scaled per-domain sample allocation — the step that
     DERIVES a mixture (the budgets :func:`token_budget_sample`
@@ -595,9 +596,9 @@ def temperature_allocation(
     is visible as ``alloc < quota`` — callers wanting upsampling
     repeat epochs downstream).
 
-    Determinism: the power weight snaps to ``dp`` decimals (the
+    Determinism: the power weight snaps to 9-dp decimals (the
     transcendental ladder — JVM and C ``pow`` may differ in the last
-    ulp); the weight SUM pools as exact decimal(18,dp); quotas and
+    ulp); the weight SUM pools as exact decimal(18,9); quotas and
     remainders are identical doubles on every engine. If every
     snapped weight is 0 (very many similar domains under strong
     sharpening), the allocation falls back to UNIFORM weights — the
@@ -622,13 +623,13 @@ def temperature_allocation(
     nn = F.sum("n").over(Window.partitionBy())
     w = F.round(
         F.pow(F.col("n").cast("double") / nn.cast("double"),
-              F.lit(inv_t)), dp)
+              F.lit(inv_t)), 9)
     c = c.select(
-        domain, "n", w.cast(f"decimal(18,{dp})").alias("__w"))
+        domain, "n", w.cast("decimal(18,9)").alias("__w"))
     wsum = F.sum("__w").over(Window.partitionBy())
     # zero-pool guard (r14 self-review): with enough similar-sized
     # domains under strong sharpening, EVERY (n_d/N)^(1/T) can snap
-    # to 0 at dp decimals — total·0/0 would release NaN quotas and
+    # to 0 at 9 decimals — total·0/0 would release NaN quotas and
     # break the Σ alloc = total guarantee. Fall back to UNIFORM
     # weights (the T→∞ limit, the least-surprising degenerate read).
     kdom = F.count(F.lit(1)).over(Window.partitionBy())
@@ -761,7 +762,6 @@ def quantile_buckets(
     value_col: str,
     probs: tuple[float, ...] = (0.25, 0.5, 0.75),
     bucket_col: str = "bucket",
-    dp: int = 6,
 ) -> DataFrame:
     """Global quantile bucketing WITHOUT a global sort — the curriculum
     /difficulty-phase assignment (CCNet splits its corpus into
@@ -775,13 +775,13 @@ def quantile_buckets(
     (memory O(n) on one reducer — fine to tens of millions of rows);
     at 100 TB swap the boundary source for :func:`~.sketch.kmv_quantiles`
     or ``percentile_approx`` — the broadcast + scan-local assignment
-    stays identical. Boundaries are rounded to ``dp`` so bucket edges
+    stays identical. Boundaries are rounded to 6 dp so bucket edges
     are engine-portable.
     """
     arr = F.percentile(
         F.col(value_col), F.array(*[F.lit(p) for p in probs]))
     bounds = df.agg(arr.alias("__b")).select(*[
-        F.round(F.element_at("__b", i + 1), dp).alias(f"__b{i}")
+        F.round(F.element_at("__b", i + 1), RELEASE_DP).alias(f"__b{i}")
         for i in range(len(probs))
     ])
     bucket = F.lit(1)
@@ -879,7 +879,6 @@ def mixture_temperature_weights(
     group_cols: Sequence[str],
     alpha: float = 0.3,
     token_col: str | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Temperature-scaled training-mixture weights (the multilingual /
     multi-domain sampling rule of the big LLM corpora — mBERT/XLM-R's
@@ -923,11 +922,11 @@ def mixture_temperature_weights(
             *group_cols,
             F.col("__n").cast("long").alias("n"),
             F.when(ta_ok, F.round(
-                F.pow(F.col("__n"), F.lit(alpha)) / F.col("__ta"), dp
+                F.pow(F.col("__n"), F.lit(alpha)) / F.col("__ta"), RELEASE_DP
             )).alias("weight"),
             F.when(ta_ok & n_ok, F.round(
                 (F.pow(F.col("__n"), F.lit(alpha)) / F.col("__ta"))
-                / (F.col("__n") / F.col("__tn")), dp
+                / (F.col("__n") / F.col("__tn")), RELEASE_DP
             )).alias("oversample_factor"),
         )
     )
@@ -941,7 +940,6 @@ def dsir_log_weights(
     n_buckets: int = 256,
     alpha: float = 0.5,
     seed: str = "dsir",
-    dp: int = 6,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al., NeurIPS 2023: Data
     Selection for Language Models via Importance Resampling) — score
@@ -1021,7 +1019,8 @@ def dsir_log_weights(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
-            F.round(F.sum("__lr").cast("double"), dp).alias("log_weight"),
+            F.round(F.sum("__lr").cast("double"), RELEASE_DP)
+            .alias("log_weight"),
         )
     )
 

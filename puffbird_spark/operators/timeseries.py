@@ -32,6 +32,8 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import RELEASE_DP, SNAP_SCALE
+
 _STEP_INTERVAL = {
     "minute": "interval 1 minute",
     "hour": "interval 1 hour",
@@ -290,7 +292,6 @@ def rolling_zscore_anomalies(
     value_col: str,
     window_n: int = 20,
     z_thresh: float = 3.0,
-    dp: int = 6,
 ) -> DataFrame:
     """Trailing-window z-score anomaly detection — the monitoring
     staple next to CUSUM (:func:`cusum_alarms` finds sustained level
@@ -305,7 +306,7 @@ def rolling_zscore_anomalies(
     Engine-portable numerics: the trailing sum and sum-of-squares
     accumulate as exact decimals (partitioning/order independent),
     the variance/sqrt/ratio then computes in doubles identically
-    everywhere, and z rounds at ``dp``. ONE window per key — single
+    everywhere, and z rounds at 6 dp. ONE window per key — single
     exchange, the timeseries-family shape. Returns flagged rows:
     ``(key, ts, value, mean, std, zscore)``."""
     from pyspark.sql.window import Window
@@ -321,12 +322,12 @@ def rolling_zscore_anomalies(
     mean = s / n
     var = (ss - s * s / n) / (n - 1)
     std = F.sqrt(F.greatest(var, F.lit(0.0)))
-    z = F.round((F.col(value_col) - mean) / std, dp)
+    z = F.round((F.col(value_col) - mean) / std, RELEASE_DP)
     scored = df.select(
         F.col(key_col).alias("key"), F.col(ts_col).alias("ts"),
         F.col(value_col).alias("value"),
-        n.alias("__n"), F.round(mean, dp).alias("mean"),
-        F.round(std, dp).alias("std"), z.alias("zscore"),
+        n.alias("__n"), F.round(mean, RELEASE_DP).alias("mean"),
+        F.round(std, RELEASE_DP).alias("std"), z.alias("zscore"),
     )
     return (
         scored.filter(
@@ -374,7 +375,6 @@ def time_weighted_avg(
     ts_col: str,
     value_col: str,
     bucket: str = "1 hour",
-    dp: int = 6,
 ) -> DataFrame:
     """Time-weighted average per key and bucket (the TimescaleDB
     ``time_weight('LOCF')`` semantics): each observation's value
@@ -386,7 +386,7 @@ def time_weighted_avg(
 
     Exact arithmetic: weights are epoch-microsecond integer
     differences, the weighted sum accumulates value x micros as
-    decimal, and ONE division rounds at ``dp``. One lead window +
+    decimal, and ONE division rounds at 6 dp. One lead window +
     one keyed agg — two exchanges total. Returns
     ``(key, bucket_start, twa, n_obs)``."""
     from pyspark.sql.window import Window
@@ -417,7 +417,7 @@ def time_weighted_avg(
         .agg(
             F.round(
                 F.sum("__c").cast("double")
-                / F.sum("__w").cast("double"), dp).alias("twa"),
+                / F.sum("__w").cast("double"), RELEASE_DP).alias("twa"),
             F.count(F.lit(1)).cast("long").alias("n_obs"),
         )
     )
@@ -428,7 +428,6 @@ def theil_sen(
     key_cols: list[str],
     x_col: str,
     y_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Theil-Sen robust trend estimator per key (Theil 1950, Sen 1968):
     the slope is the MEDIAN of all pairwise slopes
@@ -448,7 +447,7 @@ def theil_sen(
     undefined). Slopes are identical doubles on any engine (one
     subtraction, one division); the median is the exact interpolated
     percentile (`F.percentile` == ``quantile_cont``), and the intercept
-    reuses the dp-rounded slope so both stages replay exactly. Returns
+    reuses the 6-dp-rounded slope so both stages replay exactly. Returns
     ``(*key_cols, n_points, n_pairs, slope, intercept)``; keys with
     fewer than two distinct x values are omitted."""
     keys = list(key_cols)
@@ -477,7 +476,7 @@ def theil_sen(
     )
     est = slopes.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.round(F.percentile("__m", F.lit(0.5)), dp).alias("slope"),
+        F.round(F.percentile("__m", F.lit(0.5)), RELEASE_DP).alias("slope"),
     )
     n_pts = pts.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n_points"))
@@ -489,7 +488,7 @@ def theil_sen(
         .groupBy(*keys)
         .agg(F.max("n_pairs").alias("n_pairs"),
              F.max("slope").alias("slope"),
-             F.round(F.percentile("__b", F.lit(0.5)), dp)
+             F.round(F.percentile("__b", F.lit(0.5)), RELEASE_DP)
              .alias("intercept"))
     )
     return (
@@ -505,7 +504,6 @@ def seasonal_decompose(
     y_col: str,
     period: int = 7,
     trend_window: int = 7,
-    dp: int = 6,
 ) -> DataFrame:
     """Classical additive seasonal decomposition per key
     (trend + seasonal + residual — the moving-average method of
@@ -565,13 +563,14 @@ def seasonal_decompose(
         det.join(F.broadcast(seas), keys + ["phase"])
         .select(
             *keys, "x", "phase",
-            F.round(F.col("__yd").cast("double"), dp).alias("y"),
-            F.round("__trend", dp).alias("trend"),
-            F.round("__seas", dp).alias("seasonal"),
+            F.round(F.col("__yd").cast("double"), RELEASE_DP).alias("y"),
+            F.round("__trend", RELEASE_DP).alias("trend"),
+            F.round("__seas", RELEASE_DP).alias("seasonal"),
             F.round(
-                F.round(F.col("__yd").cast("double"), dp)
-                - F.round("__trend", dp) - F.round("__seas", dp),
-                dp).alias("residual"),
+                F.round(F.col("__yd").cast("double"), RELEASE_DP)
+                - F.round("__trend", RELEASE_DP)
+                - F.round("__seas", RELEASE_DP),
+                RELEASE_DP).alias("residual"),
         )
     )
 
@@ -580,7 +579,6 @@ def kaplan_meier(
     df: DataFrame,
     duration_col: str,
     observed_col: str,
-    dp: int = 6,
 ) -> DataFrame:
     """Kaplan-Meier survival estimator (Kaplan & Meier 1958) — the
     right-censoring-aware answer to "how long until churn/failure?"
@@ -651,7 +649,7 @@ def kaplan_meier(
             F.col("__d").cast("long").alias("n_events"),
             F.col("__c").cast("long").alias("n_censored"),
             F.when(F.col("__dead") == 1, F.lit(0.0)).otherwise(
-                F.round(F.exp(F.col("__lnsum").cast("double")), dp))
+                F.round(F.exp(F.col("__lnsum").cast("double")), RELEASE_DP))
             .alias("survival"),
         )
         .orderBy("t")
@@ -739,7 +737,6 @@ def sax_symbolize(
     order_cols: list[str],
     value_col: str,
     n_segments: int = 4,
-    round_dp: int = 6,
 ) -> DataFrame:
     """SAX symbolization (Lin & Keogh 2003): per key, the ordered value
     series is z-normalized, piecewise-aggregate-approximated into
@@ -752,7 +749,7 @@ def sax_symbolize(
     every floating sum is ORDER-FREE — values pass through a
     ``decimal(18,6)`` cast, so n/sum/sum-of-squares are exact decimals
     whatever the partial-agg order; mean/var derive from those in one
-    double expression; z-scores and PAA means round at ``round_dp``
+    double expression; z-scores and PAA means round at 6 dp
     before the breakpoint compares, so boundary values quantize
     identically on every engine. Segment membership is ``floor(rank *
     n_segments / n)`` over the ``order_cols`` rank — ragged series get
@@ -788,16 +785,16 @@ def sax_symbolize(
             F.col("__rk") * F.lit(int(n_segments)) / F.col("n_points")
         ).cast("int").alias("segment"),
         F.round(
-            (F.col("__vd").cast("double") - mean) / std, round_dp
+            (F.col("__vd").cast("double") - mean) / std, RELEASE_DP
         ).alias("__z"),
     )
-    # z is already rounded at round_dp, so this decimal cast is exact
+    # z is already rounded at 6 dp, so this decimal cast is exact
     # and the segment sum stays order-free
     paa = segd.groupBy(*key_cols, "n_points", "segment").agg(
         F.round(
             F.sum(F.col("__z").cast("decimal(28,6)")).cast("double")
             / F.count(F.lit(1)),
-            round_dp,
+            RELEASE_DP,
         ).alias("paa_mean")
     )
     b1, b2, b3 = SAX_BREAKPOINTS_4
@@ -824,7 +821,6 @@ def ewma_time_decay(
     value_col: str,
     halflife_s: float,
     tiebreak_cols: list[str] | None = None,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Irregular-interval exponential smoothing — the time-decay EWMA
     (pandas ``ewm(times=...)``): each observation's weight decays by
@@ -870,7 +866,7 @@ def ewma_time_decay(
         F.col(ts_col),
         *[F.col(c) for c in tb],
         v.alias("value"),
-        F.when(growth > 0, F.round(num / den, round_dp)).alias("ewma"),
+        F.when(growth > 0, F.round(num / den, RELEASE_DP)).alias("ewma"),
     )
 
 
@@ -881,8 +877,6 @@ def autocorrelation(
     value_col: str,
     lags: tuple[int, ...] = (1, 2, 3),
     order_tiebreak: str | None = None,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity lag-k autocorrelation (the sample ACF, Box & Jenkins
     form with the FULL-series denominator) — the seasonality /
@@ -898,11 +892,11 @@ def autocorrelation(
     time pair by position, the standard ACF over an observation series.
 
     Determinism (the krippendorff per-term ladder): inputs snap to
-    ``decimal(20,scale)``; the per-entity mean divides two EXACT
+    ``decimal(20,6)``; the per-entity mean divides two EXACT
     aggregates (decimal sum / long count — one IEEE double, identical
     on identical inputs across engines); every centered product rounds
     to 9 dp and pools as decimal(38,9) (order-free exact sums); the
-    final ratio releases at ``dp``. A constant series has zero
+    final ratio releases at 6 dp. A constant series has zero
     denominator and reads NULL (undefined, not 0). NULL values AND
     NULL timestamps are excluded BEFORE sequencing (pairwise-complete
     positions; a NULL timestamp has no place in a time order, and the
@@ -918,7 +912,7 @@ def autocorrelation(
     ks = sorted(set(int(k) for k in lags))
     if not ks or ks[0] < 1:
         raise ValueError(f"lags must be positive ints, got {lags!r}")
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     order = [F.col(ts_col)]
     if order_tiebreak is not None:
         order.append(F.col(order_tiebreak))
@@ -972,7 +966,7 @@ def autocorrelation(
                 (F.col("__den").cast("double") > 0)
                 & (F.col(f"__m{k}") > 0),
                 F.round(F.col(f"__num{k}").cast("double")
-                        / F.col("__den").cast("double"), dp))
+                        / F.col("__den").cast("double"), RELEASE_DP))
             .alias("acf"))
         for k in ks
     ]
@@ -988,8 +982,6 @@ def partial_autocorrelation(
     ts_col: str,
     value_col: str,
     order_tiebreak: str | None = None,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity partial autocorrelation at lags 1..3 — the AR-order
     selector next to :func:`autocorrelation`'s raw persistence profile
@@ -1001,7 +993,7 @@ def partial_autocorrelation(
         φ21 = r1·(1 - φ22)
         φ33 = (r3 - φ21·r2 - φ22·r1) / (1 - φ21·r1 - φ22·r2)
 
-    computed from the RELEASED (``dp``-rounded) ACF values — both
+    computed from the RELEASED (6-dp-rounded) ACF values — both
     engines then fold identical doubles, so the closed form is
     engine-replayable without another precision ladder. Degenerate
     inputs release NULL: a constant series (NULL ACF), a too-short
@@ -1013,7 +1005,7 @@ def partial_autocorrelation(
     shuffles. Returns ``(entity_col, n, pacf1, pacf2, pacf3)``."""
     acf = autocorrelation(
         df, entity_col, ts_col, value_col, lags=(1, 2, 3),
-        order_tiebreak=order_tiebreak, scale=scale, dp=dp)
+        order_tiebreak=order_tiebreak)
     per = acf.groupBy(entity_col).agg(
         F.max("n").alias("n"),
         *[F.max(F.when(F.col("lag") == k, F.col("acf")))
@@ -1026,9 +1018,9 @@ def partial_autocorrelation(
     p33 = (r3 - p21 * r2 - p22 * r1) / den3
     return per.select(
         entity_col, "n",
-        F.round(r1, dp).alias("pacf1"),
-        F.when(den2 != 0, F.round(p22, dp)).alias("pacf2"),
-        F.when((den2 != 0) & (den3 != 0), F.round(p33, dp))
+        F.round(r1, RELEASE_DP).alias("pacf1"),
+        F.when(den2 != 0, F.round(p22, RELEASE_DP)).alias("pacf2"),
+        F.when((den2 != 0) & (den3 != 0), F.round(p33, RELEASE_DP))
         .alias("pacf3"))
 
 
@@ -1039,8 +1031,6 @@ def changepoint_binary(
     value_col: str,
     order_tiebreak: str | None = None,
     min_segment: int = 2,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Single-changepoint detection per entity by binary segmentation
     (Scott & Knott 1974; the first split of the classic binary-seg /
@@ -1059,11 +1049,11 @@ def changepoint_binary(
     (ts, order_tiebreak) sequence, NULL values and NULL timestamps
     excluded BEFORE sequencing, missing tiebreak warns.
 
-    Determinism: values snap to decimal(20,scale); prefix sums are
+    Determinism: values snap to decimal(20,6); prefix sums are
     exact decimal window folds; each candidate's gain is one double
     expression over exact sums, snapped at 9 dp BEFORE the argmax so
     the (gain desc, t asc) winner is engine-identical; release at
-    ``dp``. Entities with n < 2·min_segment release NULL split/gain
+    6 dp. Entities with n < 2·min_segment release NULL split/gain
     (no admissible cut).
 
     Scale shape: one keyed sequence window (row number + running
@@ -1077,7 +1067,7 @@ def changepoint_binary(
     if int(min_segment) < 1:
         raise ValueError(
             f"min_segment must be >= 1, got {min_segment}")
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     order = [F.col(ts_col)]
     if order_tiebreak is not None:
         order.append(F.col(order_tiebreak))
@@ -1125,11 +1115,11 @@ def changepoint_binary(
         F.col("__e").alias(entity_col),
         F.col("__n").cast("long").alias("n"),
         F.col("__t").cast("long").alias("split_t"),
-        F.round(F.col("__g"), dp).alias("gain"),
-        F.round(F.col("__sl").cast("double") / F.col("__t"), dp)
+        F.round(F.col("__g"), RELEASE_DP).alias("gain"),
+        F.round(F.col("__sl").cast("double") / F.col("__t"), RELEASE_DP)
         .alias("mean_left"),
         F.round((F.col("__s") - F.col("__sl")).cast("double")
-                / (F.col("__n") - F.col("__t")), dp)
+                / (F.col("__n") - F.col("__t")), RELEASE_DP)
         .alias("mean_right"))
     # entities too short for any admissible split still release a row
     short = tot.filter(F.col("__n") < 2 * ms).select(
@@ -1149,8 +1139,6 @@ def ljung_box(
     value_col: str,
     h: int = 3,
     order_tiebreak: str | None = None,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity Ljung-Box portmanteau statistic (Ljung & Box 1978)
     — the "is this series white noise?" test over the first ``h``
@@ -1165,7 +1153,7 @@ def ljung_box(
     caller's table lookup (the ``chi_square_independence``
     convention: no transcendental CDF enters the engine contract).
 
-    Computed from the RELEASED (``dp``-rounded) ACF values — the
+    Computed from the RELEASED (6-dp-rounded) ACF values — the
     :func:`partial_autocorrelation` discipline: both engines fold
     identical doubles, no extra precision ladder. Per-lag terms snap
     to 12-dp decimal before the cross-lag sum (order-free). NULL Q
@@ -1181,7 +1169,7 @@ def ljung_box(
     acf = autocorrelation(
         df, entity_col, ts_col, value_col,
         lags=tuple(range(1, int(h) + 1)),
-        order_tiebreak=order_tiebreak, scale=scale, dp=dp)
+        order_tiebreak=order_tiebreak)
     valid = F.col("acf").isNotNull() & (F.col("n") - F.col("lag") > 0)
     term = F.round(
         F.col("acf") * F.col("acf")
@@ -1196,7 +1184,7 @@ def ljung_box(
         entity_col, "n",
         F.when(
             F.col("__nvalid") == int(h),
-            F.round(nd * (nd + 2.0) * F.col("__s").cast("double"), dp)
+            F.round(nd * (nd + 2.0) * F.col("__s").cast("double"), RELEASE_DP)
         ).alias("q"))
 
 
@@ -1207,8 +1195,6 @@ def granger_lag1(
     cause_col: str,
     effect_col: str,
     order_tiebreak: str | None = None,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity lag-1 Granger causality F-test (Granger 1969) — does
     the history of ``cause_col`` improve the one-step prediction of
@@ -1237,12 +1223,12 @@ def granger_lag1(
     missing tiebreak warns.
 
     Determinism (the krippendorff per-term ladder): inputs snap to
-    ``decimal(20,scale)``; regression-row means divide exact decimal
+    ``decimal(20,6)``; regression-row means divide exact decimal
     sums by exact longs (one IEEE double each); every centered
     product rounds to 9 dp and pools as decimal(38,9) (order-free
     exact sums); SSRs snap at 9 dp; the F ratio's numerator clamps at
     0 (exact math guarantees SSR_r ≥ SSR_u; the release grain may dip
-    a hair below) and releases at ``dp``. NULL F when m ≤ 3 (no error
+    a hair below) and releases at 6 dp. NULL F when m ≤ 3 (no error
     df), when Suu or the Cramer determinant is ≤ 0 at the release
     grain (constant or collinear regressors), or when SSR_u ≤ 0 (a
     perfect fit has no error variance to test against).
@@ -1255,7 +1241,7 @@ def granger_lag1(
     Returns ``(entity_col, n, m, ssr_r, ssr_u, f_stat)`` — ``n`` the
     entity's complete-case observation count, ``m = max(n − 1, 0)``
     the regression rows."""
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     order = [F.col(ts_col)]
     if order_tiebreak is not None:
         order.append(F.col(order_tiebreak))
@@ -1326,9 +1312,9 @@ def granger_lag1(
     per = mom.select(
         "__e",
         F.col("__m").alias("m"),
-        F.when(ok_r, F.round(ssr_r, dp)).alias("ssr_r"),
-        F.when(ok_u, F.round(ssr_u, dp)).alias("ssr_u"),
-        F.when(f_ok, F.round(fnum / (ssr_u / (md - 3.0)), dp))
+        F.when(ok_r, F.round(ssr_r, RELEASE_DP)).alias("ssr_r"),
+        F.when(ok_u, F.round(ssr_u, RELEASE_DP)).alias("ssr_u"),
+        F.when(f_ok, F.round(fnum / (ssr_u / (md - 3.0)), RELEASE_DP))
         .alias("f_stat"))
     out = nobs.join(per, "__e", "left").select(
         F.col("__e").alias(entity_col), F.col("n"),
@@ -1344,8 +1330,6 @@ def changepoint_variance(
     value_col: str,
     order_tiebreak: str | None = None,
     min_segment: int = 5,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Single VARIANCE-changepoint detection per entity by binary
     segmentation — WHERE did the series' volatility shift, the
@@ -1364,8 +1348,8 @@ def changepoint_variance(
     (ts, order_tiebreak) sequence, NULL values and NULL timestamps
     excluded BEFORE sequencing, missing tiebreak warns.
 
-    Determinism: values snap to decimal(20,scale) and scale to EXACT
-    integers u = x·10^scale BEFORE squaring (a decimal·decimal
+    Determinism: values snap to decimal(20,6) and scale to EXACT
+    integers u = x·10^6 BEFORE squaring (a decimal·decimal
     product is silently rounded by Spark's allowPrecisionLoss — only
     integer squares are exact on every engine); prefix sums of u and
     u² are exact decimal(38,0) window folds; each span's variance is
@@ -1376,7 +1360,7 @@ def changepoint_variance(
     cost — no finite gain exists) are inadmissible; gains fold the
     snapped variances' logs and round at 9 dp BEFORE the argmax so
     the (gain desc, t asc) winner is engine-identical; variances
-    release pure-integer HALF_UP at ``dp``. Entities with no
+    release pure-integer HALF_UP at 6 dp. Entities with no
     admissible candidate (too short, or every cut leaves a constant
     side) release NULL split/gain.
 
@@ -1393,7 +1377,7 @@ def changepoint_variance(
     if int(min_segment) < 1:
         raise ValueError(
             f"min_segment must be >= 1, got {min_segment}")
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     d0 = "decimal(38,0)"
     order = [F.col(ts_col)]
     if order_tiebreak is not None:
@@ -1402,7 +1386,7 @@ def changepoint_variance(
         from . import warn_missing_tiebreak
 
         warn_missing_tiebreak("changepoint_variance")
-    # scale to EXACT integers u = x·10^scale BEFORE squaring: Spark
+    # scale to EXACT integers u = x·10^6 BEFORE squaring: Spark
     # evaluates decimal(20,s)·decimal(20,s) as decimal(38, <2s) under
     # allowPrecisionLoss — the product is silently ROUNDED, while a
     # SQL oracle keeps the exact scale-2s value (r14 self-review #1,
@@ -1410,7 +1394,7 @@ def changepoint_variance(
     # in decimal(38,0) on every engine.
     from . import drop_nan_rows
 
-    u = (F.col(value_col).cast(decv) * (10 ** scale)).cast(d0)
+    u = (F.col(value_col).cast(decv) * (10 ** SNAP_SCALE)).cast(d0)
     base = drop_nan_rows(df, value_col).filter(
         F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
     ).select(
@@ -1440,7 +1424,7 @@ def changepoint_variance(
     ql = F.col("__ql").cast("double")
     s = F.col("__s").cast("double")
     q = F.col("__q").cast("double")
-    down = float(10 ** (2 * scale))
+    down = float(10 ** (2 * SNAP_SCALE))
 
     def _var_units(qq, ss, mm):
         # biased-MLE variance in ORIGINAL units, snapped through the
@@ -1482,9 +1466,9 @@ def changepoint_variance(
         F.col("__e").alias(entity_col),
         F.col("__n").cast("long").alias("n"),
         F.col("__t").cast("long").alias("split_t"),
-        F.round(F.col("__g"), dp).alias("gain"),
-        nano_release("__vl", dp).alias("var_left"),
-        nano_release("__vr", dp).alias("var_right"))
+        F.round(F.col("__g"), RELEASE_DP).alias("gain"),
+        nano_release("__vl").alias("var_left"),
+        nano_release("__vr").alias("var_right"))
     # entities with NO admissible candidate still release a row
     short = tot.join(
         best.select("__e"), "__e", "left_anti"
@@ -1536,7 +1520,6 @@ def mann_kendall(
     ts_col: str,
     value_col: str,
     order_tiebreak: str | None = None,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity Mann-Kendall trend test (Mann 1945, Kendall 1975)
     — the distribution-free "is this series monotonically trending?"
@@ -1561,7 +1544,7 @@ def mann_kendall(
     parquet; ties are exact bit-equality, the only cross-engine-
     stable tie rule). NULL values, NULL timestamps, AND NaN values
     are excluded BEFORE sequencing (the rank/score NaN≡NULL
-    contract). Var and z release HALF_UP at ``dp`` (driver-side
+    contract). Var and z release HALF_UP at 6 dp (driver-side
     kernels must not use python's half-even ``round``); z is NULL
     when Var ≤ 0 (n < 2 or all values tied).
 
@@ -1602,7 +1585,7 @@ def mann_kendall(
         F.col(entity_col).cast("string").alias("__e"),
         F.col(value_col).cast("double").alias("__x"),
         *[c.alias(nm) for c, nm in zip(order, onames)])
-    quantum = Decimal(1).scaleb(-dp)
+    quantum = Decimal(1).scaleb(-RELEASE_DP)
 
     def _rel(v: float) -> float:
         return float(Decimal(v).quantize(quantum, ROUND_HALF_UP))
@@ -1701,8 +1684,6 @@ def dickey_fuller(
     ts_col: str,
     value_col: str,
     order_tiebreak: str | None = None,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity Dickey-Fuller unit-root test (Dickey & Fuller
     1979; the lag-0 "DF" regression with drift) — is each series a
@@ -1724,14 +1705,14 @@ def dickey_fuller(
     exactly: complete-case (ts, tiebreak) sequencing, decimal input
     snap (Δy is an EXACT decimal difference before any double), 9-dp
     decimal(38,9) centered-product pools, 9-dp moment snaps, release
-    at ``dp``. NULL ρ̂/DF when m < 3 (no error df), S_uu ≤ 0 at the
+    at 6 dp. NULL ρ̂/DF when m < 3 (no error df), S_uu ≤ 0 at the
     release grain (constant lag), or SSR ≤ 0 (a perfect fit).
 
     Scale shape: one keyed lag window + two keyed aggregations + one
     co-partitioned join — :func:`autocorrelation`'s plan. Returns
     ``(entity_col, n, m, rho, df_stat)`` — ``m = max(n − 1, 0)``
     regression rows."""
-    decv = f"decimal(20,{scale})"
+    decv = f"decimal(20,{SNAP_SCALE})"
     order = [F.col(ts_col)]
     if order_tiebreak is not None:
         order.append(F.col(order_tiebreak))
@@ -1781,9 +1762,9 @@ def dickey_fuller(
     se2 = ssr / (md - 2.0) / suu
     per = mom.select(
         "__e", F.col("__m").alias("m"),
-        F.when(ok, F.round(rho, dp)).alias("rho"),
+        F.when(ok, F.round(rho, RELEASE_DP)).alias("rho"),
         F.when(ok & (ssr > 0),
-               F.round(rho / F.sqrt(se2), dp)).alias("df_stat"))
+               F.round(rho / F.sqrt(se2), RELEASE_DP)).alias("df_stat"))
     return nobs.join(per, "__e", "left").select(
         F.col("__e").alias(entity_col), F.col("n"),
         F.coalesce(F.col("m"), F.lit(0).cast("long")).alias("m"),
@@ -1797,7 +1778,6 @@ def mase(
     actual_col: str,
     forecast_col: str,
     order_tiebreak: str | None = None,
-    scale: int = 6,
 ) -> DataFrame:
     """Per-entity Mean Absolute Scaled Error (Hyndman & Koehler
     2006) — THE scale-free forecast-accuracy metric: the forecast's
@@ -1829,9 +1809,9 @@ def mase(
     else:
         warn_missing_tiebreak("mase")
     d0 = "decimal(38,0)"
-    dec = f"decimal(20,{scale})"
-    y = (F.col(actual_col).cast(dec) * (10 ** scale)).cast(d0)
-    f_ = (F.col(forecast_col).cast(dec) * (10 ** scale)).cast(d0)
+    dec = f"decimal(20,{SNAP_SCALE})"
+    y = (F.col(actual_col).cast(dec) * (10 ** SNAP_SCALE)).cast(d0)
+    f_ = (F.col(forecast_col).cast(dec) * (10 ** SNAP_SCALE)).cast(d0)
     base = drop_nan_rows(df, actual_col, forecast_col).filter(
         F.col(ts_col).isNotNull()
         & F.col(actual_col).isNotNull()
@@ -1869,7 +1849,6 @@ def durbin_watson(
     ts_col: str,
     value_col: str,
     order_tiebreak: str | None = None,
-    scale: int = 6,
 ) -> DataFrame:
     """Per-entity Durbin-Watson statistic (Durbin & Watson 1950) —
     the classic first-order serial-correlation screen on a
@@ -1878,11 +1857,11 @@ def durbin_watson(
     negative::
 
         DW = Σ_{t≥2}(y_t − y_{t−1})² / Σ_t (y_t − ȳ)²
-           = n·Σ(Δu)² / (n·Σu² − (Σu)²)   over u = y·10^scale
+           = n·Σ(Δu)² / (n·Σu² − (Σu)²)   over u = y·10^6
 
     — one EXACT integer ratio (the never-square-a-decimal
     discipline: values scale to decimal(38,0) integers BEFORE any
-    product; the 10^scale factors cancel), released as the raw
+    product; the 10^6 factors cancel), released as the raw
     double of the ratio. Ordering and exclusion follow the
     :func:`autocorrelation` contract (complete-case ts/value
     NULL/NaN exclusion, tiebreak warns when missing). NULL DW when
@@ -1890,7 +1869,7 @@ def durbin_watson(
     (constant series).
 
     Exactness envelope (the overflow-audit register): (Σu)² caps the
-    form — with |value| ≤ 1e5 at scale=6 (u ≤ 1e11), per-entity
+    form — with |value| ≤ 1e5 at scale 6 (u ≤ 1e11), per-entity
     series up to ~1e7 rows stay inside decimal(38,0); beyond that
     the sums, not the data, overflow first. Per-ENTITY length is the
     bound, not corpus size.
@@ -1905,8 +1884,8 @@ def durbin_watson(
     else:
         warn_missing_tiebreak("durbin_watson")
     d0 = "decimal(38,0)"
-    dec = f"decimal(20,{scale})"
-    u = (F.col(value_col).cast(dec) * (10 ** scale)).cast(d0)
+    dec = f"decimal(20,{SNAP_SCALE})"
+    u = (F.col(value_col).cast(dec) * (10 ** SNAP_SCALE)).cast(d0)
     base = drop_nan_rows(df, value_col).filter(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(
@@ -1941,8 +1920,6 @@ def forecast_accuracy(
     entity_col: str,
     actual_col: str,
     forecast_col: str,
-    scale: int = 6,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-entity forecast-accuracy battery (Hyndman & Koehler 2006
     taxonomy) — the three standard error summaries beside
@@ -1962,7 +1939,7 @@ def forecast_accuracy(
 
     Determinism — the ALL-INTEGER ladder (one step beyond the
     nano-unit ladder: no double enters at all): values scale to
-    decimal(38,0) integers u = x·10^scale; each per-row term floors
+    decimal(38,0) integers u = x·10^6; each per-row term floors
     to nano units by INTEGER division ``(|Δu|·1e9) div denom``
     (exact rational floor, replayable verbatim as ``//`` in any
     engine); unit sums pool as decimal(38,0); the per-entity mean is
@@ -1981,9 +1958,9 @@ def forecast_accuracy(
     from . import drop_nan_rows, nano_release
 
     d0 = "decimal(38,0)"
-    dec = f"decimal(20,{scale})"
-    uy = (F.col(actual_col).cast(dec) * (10 ** scale)).cast(d0)
-    uf = (F.col(forecast_col).cast(dec) * (10 ** scale)).cast(d0)
+    dec = f"decimal(20,{SNAP_SCALE})"
+    uy = (F.col(actual_col).cast(dec) * (10 ** SNAP_SCALE)).cast(d0)
+    uf = (F.col(forecast_col).cast(dec) * (10 ** SNAP_SCALE)).cast(d0)
     base = drop_nan_rows(df, actual_col, forecast_col).filter(
         F.col(actual_col).isNotNull()
         & F.col(forecast_col).isNotNull()
@@ -2022,7 +1999,7 @@ def forecast_accuracy(
                F.col("__sae").cast("double")
                / F.col("__say").cast("double")).alias("wape"),
         F.when(F.col("__nm") > 0, nano_release(
-            "__smu div __nm", dp)).alias("mape"),
+            "__smu div __nm")).alias("mape"),
         F.when(F.col("__ns") > 0, nano_release(
-            "__ssu div __ns", dp)).alias("smape"))
+            "__ssu div __ns")).alias("smape"))
     return out

@@ -13,7 +13,11 @@ Float policy (the reason the oracles hash-match):
 - Averages are expressed as ``CAST(decimal_sum AS DOUBLE) / count`` — exact
   division of identical doubles — never engine-native ``avg`` over doubles.
 - Genuinely approximate values (cosine similarity, log, sqrt) are rounded
-  identically on both sides before comparison/ranking.
+  identically on both sides before comparison/ranking. The operators
+  under ``functions/`` and ``operators/`` read that precision from one
+  place: ``functions.RELEASE_DP`` (6 dp) for released values and
+  ``functions.SNAP_SCALE`` (6) for the ``decimal(20, 6)`` snap that moment
+  sums take before squaring; neither is an operator option.
 """
 
 from __future__ import annotations

@@ -2537,6 +2537,7 @@ def dedup_clusters_incremental(spark, sf_dir):
     from pyspark.sql import types as T
 
     from ..operators.graph import incremental_components
+    from ..plans import iterate
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     hi = docs.agg(F.max("doc_id")).collect()[0][0]
@@ -2553,10 +2554,11 @@ def dedup_clusters_incremental(spark, sf_dir):
         T.StructField("vertex", T.LongType()),
         T.StructField("component", T.LongType()),
     ]))
-    for b in range(3):
-        batch = edges.filter(F.col("id_a") % 3 == b)
-        state = incremental_components(batch, state)
-        state = state.localCheckpoint(eager=True)
+    state = iterate(
+        state,
+        lambda st, k: incremental_components(
+            edges.filter(F.col("id_a") % 3 == k - 1), st),
+        3)
     return state.select(
         F.col("vertex").alias("doc_id"),
         F.col("component").alias("cluster_id"),

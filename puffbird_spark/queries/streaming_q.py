@@ -1609,6 +1609,8 @@ def events_markov_stationary(spark, sf_dir):
     bounded by the event-type vocabulary, not the event count."""
     from pyspark.sql.window import Window as W
 
+    from ..plans import iterate
+
     ev = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1629,8 +1631,9 @@ def events_markov_stationary(spark, sf_dir):
         F.round(F.lit(1.0) / F.lit(float(n_states)), 9)
         .cast("decimal(20,9)").alias("v"),
     )
-    for _ in range(6):
-        v = (
+
+    def step(v, _k):
+        return (
             v.join(p, v["s"] == p["f"])
             .join(F.broadcast(states.select(F.col("s").alias("__t"))),
                   F.col("t") == F.col("__t"))
@@ -1646,8 +1649,9 @@ def events_markov_stationary(spark, sf_dir):
                 ).cast("decimal(20,9)").alias("v")
             )
             .select(F.col("s2").alias("s"), "v")
-            .localCheckpoint()
         )
+
+    v = iterate(v, step, 6)
     return v.select(
         F.col("s").alias("state"),
         F.round(F.col("v").cast("double"), 6).alias("pi"),

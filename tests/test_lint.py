@@ -15,10 +15,15 @@ Kernel choice is one policy (``telemetry.arrow_kernel`` over
 kernel option, and no operator reaches into ``similarity`` for its old
 private size estimators or threshold.
 
+Release precision is one policy too (``functions.RELEASE_DP`` and
+``functions.SNAP_SCALE``): no public function under ``functions/`` or
+``operators/`` takes a ``dp``, ``round_dp`` or integer ``scale`` option,
+except ``geo_knn_join``'s ``dp``, which its gate sets to 4.
+
 Raw materialization calls (``localCheckpoint``, ``checkpoint``,
 ``persist``, ``cache``) outside ``puffbird_spark/plans/`` are frozen the
 same way, per file: they pin blocks nothing releases, and ROADMAP
-direction 2 moves them behind one scoped helper. Removing a call lowers
+direction 4 moves them behind one scoped helper. Removing a call lowers
 the count (tighten the freeze then); adding one anywhere fails here.
 """
 
@@ -144,10 +149,10 @@ _LEGACY_MATERIALIZE = {
     "operators/sketch.py": 3,
     "operators/splits.py": 1,
     "operators/unigram.py": 1,
-    "queries/llm_q.py": 2,
+    "queries/llm_q.py": 1,
     "queries/relational.py": 3,
     "queries/sources_q.py": 1,
-    "queries/streaming_q.py": 6,
+    "queries/streaming_q.py": 5,
 }
 
 
@@ -210,3 +215,41 @@ def test_operators_take_no_kernel_option():
                     found.append((name, "import", sorted(bad)))
     assert not found, (
         "kernel choice belongs to telemetry.arrow_kernel: " + repr(found))
+
+
+# (module, function, parameter) precision options a caller sets
+_PRECISION_OPTION_KEEP = {("geo.py", "geo_knn_join", "dp")}
+
+
+def test_operators_take_no_precision_option():
+    """No public function under ``functions/`` or ``operators/`` takes a
+    release-precision option: ``dp``, ``round_dp``, or a ``scale`` whose
+    default is an integer (a decimal snap scale; ``laplace_noise``'s
+    float noise ``scale`` is not one)."""
+    found = []
+    for sub in ("functions", "operators"):
+        for path in sorted(glob.glob(os.path.join(PACKAGE_DIR, sub, "*.py"))):
+            name = os.path.basename(path)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if (not isinstance(node, (ast.FunctionDef,
+                                          ast.AsyncFunctionDef))
+                        or node.name.startswith("_")):
+                    continue
+                a = node.args
+                pos = a.posonlyargs + a.args
+                defaults = ([None] * (len(pos) - len(a.defaults))
+                            + list(a.defaults))
+                for arg, d in (list(zip(pos, defaults))
+                               + list(zip(a.kwonlyargs, a.kw_defaults))):
+                    int_default = (isinstance(d, ast.Constant)
+                                   and type(d.value) is int)
+                    if ((arg.arg in ("dp", "round_dp")
+                         or (arg.arg == "scale" and int_default))
+                            and (name, node.name, arg.arg)
+                            not in _PRECISION_OPTION_KEEP):
+                        found.append((name, node.name, arg.arg))
+    assert not found, (
+        "release precision is functions.RELEASE_DP / SNAP_SCALE, not an "
+        "operator option: " + repr(found))

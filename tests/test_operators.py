@@ -4341,6 +4341,23 @@ def test_graph_rounds_do_not_leak_checkpoints(spark):
         assert pinned(lambda: op(2)) == pinned(lambda: op(8)), name
 
 
+def test_markov_stationary_rounds_do_not_leak_checkpoints(spark, sf_dir):
+    """``events_markov_stationary``'s six power-iteration rounds run on
+    ``plans.iterate``: after ``collect()`` only the transition frame,
+    the state frame and the last round stay pinned, not one RDD per
+    round."""
+    from puffbird_spark.queries.streaming_q import events_markov_stationary
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    events_markov_stationary(spark, sf_dir).collect()
+    new = {k: r for k, r in jsc.getPersistentRDDs().items()
+           if k not in before}
+    for rdd in new.values():
+        rdd.unpersist(True)
+    assert len(new) <= 3, len(new)
+
+
 def test_tokenizer_trainers_do_not_leak_checkpoints(spark):
     """``bpe_train`` and ``unigram_train`` return driver lists, so they
     leave no RDD pinned: each BPE round is released once its successor
